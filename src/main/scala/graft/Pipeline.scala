@@ -12,8 +12,9 @@ import graft.sink.Sinks
   * composed: the reference hands each phase a file written by the previous
   * one (raw dir → processed dir → output dir); here each phase hands the
   * next a DataFrame, so Catalyst sees the whole plan per output and the
-  * only materializations are the sinks themselves (plus the two statistics
-  * jobs inside the cleaner). Phase-skip flags mirror main.py:140-147.
+  * only materializations are the sinks themselves; the cleaner's two 1-row
+  * statistics jobs run once, in `Ingest.transform`. Phase-skip flags mirror
+  * main.py:140-147.
   */
 object Pipeline {
 

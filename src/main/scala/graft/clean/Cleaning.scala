@@ -10,21 +10,33 @@ import org.apache.spark.sql.functions._
   * → impute **post-nulling** median (order matters, transform.py:188); then
   * categorical null-fill.
   *
-  * Plan shape: two small aggregation jobs (bounds, medians) whose 1-row
-  * results are broadcast-cross-joined back — the classic two-pass
-  * statistics-dependent rewrite. No `collect()` is strictly needed for the
-  * lineage, and the broadcasts are single rows, so the pattern is unchanged
-  * at 100 TB; the only scale switch is exact `percentile`/`median` →
+  * Plan shape: like the reference's pandas `quantile`/`median`, each
+  * statistic is computed once, when the frame is built. Each step runs one
+  * small aggregate job whose 1-row result is collected and placed into the
+  * returned plan as literals, so every consumer of the cleaned frame is a
+  * scan plus a map-side projection and no consumer re-derives the fences or
+  * medians. The only scale switch is exact `percentile`/`median` →
   * `percentile_approx` (`exact = false`).
   *
-  * Streaming note (SURVEY §7.4 risk 4): on a stream these global statistics
-  * become per-window aggregates or a periodically refreshed broadcast —
-  * see graft.streaming.StreamingClean.
+  * Batch only: the functions here run jobs when called. On a stream these
+  * global statistics become per-window aggregates or a periodically
+  * refreshed broadcast — see graft.streaming.StreamingClean (SURVEY §7.4
+  * risk 4).
   */
 object Cleaning {
 
+  /** Runs the 1-row aggregate over `df` and returns each of its values as a
+    * literal of the aggregate's own type; a null statistic stays a typed
+    * null, so the columns built on it keep their type.
+    */
+  private def statistics(df: DataFrame, aggs: Seq[Column]): Seq[Column] = {
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    row.schema.map(_.dataType).zipWithIndex.map { case (t, i) => lit(row.get(i)).cast(t) }
+  }
+
   /** Null out values outside [q_lo − k·iqr, q_hi + k·iqr] per column.
-    * One aggregation job + a broadcast cross join (1 row).
+    * One aggregation job, run when called; the fences enter the plan as
+    * literals.
     */
   def nullOutliers(df: DataFrame, cols: Seq[String], lo: Double = 0.05,
                    hi: Double = 0.95, k: Double = 1.5,
@@ -35,80 +47,39 @@ object Cleaning {
       else percentile_approx(col(c), lit(p), lit(10000))
     val boundAggs = cols.flatMap { c =>
       val q1 = pct(c, lo); val q3 = pct(c, hi)
-      Seq((q1 - lit(k) * (q3 - q1)).as(s"__${c}_lb"),
-          (q3 + lit(k) * (q3 - q1)).as(s"__${c}_ub"))
+      Seq(q1 - lit(k) * (q3 - q1), q3 + lit(k) * (q3 - q1))
     }
-    val bounds = df.agg(boundAggs.head, boundAggs.tail: _*)
-    val joined = df.crossJoin(broadcast(bounds))
-    val nulled = cols.foldLeft(joined) { (d, c) =>
-      d.withColumn(c,
-        when(col(c) < col(s"__${c}_lb") || col(c) > col(s"__${c}_ub"), lit(null))
-          .otherwise(col(c)))
+    val bounds = statistics(df, boundAggs).grouped(2)
+    cols.zip(bounds).foldLeft(df) { case (d, (c, Seq(lb, ub))) =>
+      d.withColumn(c, when(col(c) < lb || col(c) > ub, lit(null)).otherwise(col(c)))
     }
-    nulled.drop(cols.flatMap(c => Seq(s"__${c}_lb", s"__${c}_ub")): _*)
   }
 
   /** Fill nulls in each column with that column's median computed on the
     * CURRENT (post-nulling) data — reference transform.py:188 semantics.
+    * One aggregation job, run when called; the medians enter the plan as
+    * literals.
     */
   def imputeMedians(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
     if (cols.isEmpty) return df
     def med(c: String) =
       if (exact) median(col(c)) else percentile_approx(col(c), lit(0.5), lit(10000))
-    val medAggs = cols.map(c => med(c).as(s"__${c}_med"))
-    val meds = df.agg(medAggs.head, medAggs.tail: _*)
-    val joined = df.crossJoin(broadcast(meds))
-    val imputed = cols.foldLeft(joined) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), col(s"__${c}_med")))
+    val meds = statistics(df, cols.map(med))
+    cols.zip(meds).foldLeft(df) { case (d, (c, m)) =>
+      d.withColumn(c, coalesce(col(c), m))
     }
-    imputed.drop(cols.map(c => s"__${c}_med"): _*)
   }
 
-  /** Full §2.9 composite: outlier-null → median-impute → categorical fill.
-    *
-    * NOT phrased as nullOutliers-then-imputeMedians: that shape aggregates
-    * the post-nulling intermediate, so the medians job re-evaluates the
-    * whole nulling projection (a second full pass over wide rows, or a
-    * cache of the entire table). Instead the post-nulling median of column
-    * c is computed directly off the BASE table as
-    * `median(CASE WHEN in-fence THEN c END)` — aggregate-ignores-nulls
-    * makes it identical to the median of the nulled column — with the
-    * 1-row bounds frame broadcast in. The bounds subtree is byte-identical
-    * in the medians job and the final projection, so ReuseExchange runs it
-    * once. Net: bounds pass + conditional-medians pass + final map-side
-    * projection; nothing materialized, nothing cached — the shape that
-    * holds at 100 TB.
+  /** Full §2.9 composite, in the reference's order: outlier-null →
+    * median-impute (on the nulled data) → categorical fill. Two
+    * aggregation jobs, run when called.
     */
   def twoPassClean(df: DataFrame, numericCols: Seq[String],
                    categoricalDefaults: Map[String, String] = Map.empty,
                    lo: Double = 0.05, hi: Double = 0.95, k: Double = 1.5,
                    exact: Boolean = true): DataFrame = {
-    if (numericCols.isEmpty) {
-      return if (categoricalDefaults.isEmpty) df else df.na.fill(categoricalDefaults)
-    }
-    def pct(c: Column, p: Double) =
-      if (exact) percentile(c, lit(p)) else percentile_approx(c, lit(p), lit(10000))
-    val boundAggs = numericCols.flatMap { c =>
-      val q1 = pct(col(c), lo); val q3 = pct(col(c), hi)
-      Seq((q1 - lit(k) * (q3 - q1)).as(s"__${c}_lb"),
-          (q3 + lit(k) * (q3 - q1)).as(s"__${c}_ub"))
-    }
-    val bounds = df.agg(boundAggs.head, boundAggs.tail: _*)
-    def fenced(c: String): Column =
-      when(col(c) < col(s"__${c}_lb") || col(c) > col(s"__${c}_ub"), lit(null))
-        .otherwise(col(c))
-    val medAggs = numericCols.map { c =>
-      val m = if (exact) median(fenced(c))
-              else percentile_approx(fenced(c), lit(0.5), lit(10000))
-      m.as(s"__${c}_med")
-    }
-    val meds = df.crossJoin(broadcast(bounds)).agg(medAggs.head, medAggs.tail: _*)
-    val joined = df.crossJoin(broadcast(bounds)).crossJoin(broadcast(meds))
-    val imputed = numericCols.foldLeft(joined) { (d, c) =>
-      d.withColumn(c, coalesce(fenced(c), col(s"__${c}_med")))
-    }
-    val out = imputed.drop(
-      numericCols.flatMap(c => Seq(s"__${c}_lb", s"__${c}_ub", s"__${c}_med")): _*)
+    val out = imputeMedians(nullOutliers(df, numericCols, lo, hi, k, exact),
+      numericCols, exact)
     if (categoricalDefaults.isEmpty) out else out.na.fill(categoricalDefaults)
   }
 }

@@ -63,6 +63,10 @@ object Ingest {
   /** Full transform composite (transform.py:207-244): flatten → §2.9
     * two-pass clean → categorical fill → derived time features (F6) +
     * temp_range (F9). Output schema = WeatherSchema.clean.
+    *
+    * Batch only: the cleaner's two 1-row statistics jobs (fences, then
+    * post-nulling medians) run here, once, so every consumer of the
+    * returned frame is a scan plus a map-side projection.
     */
   def transform(raw: DataFrame, exact: Boolean = true): DataFrame = {
     val flat = flatten(raw)

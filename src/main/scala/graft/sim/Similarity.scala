@@ -844,6 +844,14 @@ object Similarity {
     round4(dot / (math.sqrt(na) * math.sqrt(nb)))
   }
 
+  /** The MMR arg-max order: higher score first, ties on the lower
+    * neighbor_id, and a NaN score last — it never displaces a number and
+    * any number displaces it.
+    */
+  private def ranksAbove(score: Double, id: Long, bestScore: Double, bestId: Long): Boolean =
+    if (score.isNaN) bestScore.isNaN && id < bestId
+    else bestScore.isNaN || score > bestScore || (score == bestScore && id < bestId)
+
   /** MMR-diversified top-k (Carbonell & Goldstein 1998, Maximal Marginal
     * Relevance): greedily pick k of the kCand exact-cosine candidates,
     * each step maximizing λ·cos(q,c) − (1−λ)·max_{s∈selected} sim(c,s) —
@@ -916,8 +924,8 @@ object Similarity {
                 val score =
                   if (out.isEmpty) cs(i).cos
                   else lambdaRel * cs(i).cos - mu * maxSim(i)
-                if (best < 0 || score > bestScore ||
-                    (score == bestScore && cs(i).neighbor_id < cs(best).neighbor_id)) {
+                if (best < 0 || ranksAbove(score, cs(i).neighbor_id,
+                                           bestScore, cs(best).neighbor_id)) {
                   best = i; bestScore = score
                 }
               }

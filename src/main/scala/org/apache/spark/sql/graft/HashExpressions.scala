@@ -92,19 +92,29 @@ object HashImpl {
     * banding error), and the exchange carries longs instead of
     * 20-40-byte grams. Element order/multiplicity preserved (the
     * consumer's Set construction is where collision collapse, if ever,
-    * happens). Null elements hash like the empty string does NOT —
-    * they stay null-free by the WordShingles contract (never emits
-    * nulls), so a plain per-element loop suffices.
+    * happens). Null elements are skipped, as in [[minhash]]: the output
+    * holds one hash per non-null element.
     */
   def elementHashes(shingles: ArrayData, seed: Long): ArrayData = {
     val n = shingles.numElements()
-    val out = new Array[Long](n)
+    val out = new Array[Long](nonNull(shingles))
     var j = 0
+    var o = 0
     while (j < n) {
-      out(j) = xx(shingles.getUTF8String(j), seed)
+      if (!shingles.isNullAt(j)) {
+        out(o) = xx(shingles.getUTF8String(j), seed)
+        o += 1
+      }
       j += 1
     }
     new GenericArrayData(out)
+  }
+
+  private def nonNull(a: ArrayData): Int = {
+    var c = 0
+    var j = 0
+    while (j < a.numElements()) { if (!a.isNullAt(j)) c += 1; j += 1 }
+    c
   }
 
   /** [[lshBands]] and [[elementHashes]] in ONE pass over the shingles:
@@ -112,8 +122,9 @@ object HashImpl {
     * computing them separately re-hashes every gram a third time. The
     * struct's fields are bit-identical to the two standalone
     * expressions (`bands` == lshBands, `hashes` == elementHashes at
-    * the same seed); an empty shingle set yields (empty, empty) — the
-    * exploded-empty exclusion semantics are unchanged.
+    * the same seed, null elements skipped by both); an empty shingle
+    * set yields (empty, empty) — the exploded-empty exclusion semantics
+    * are unchanged.
     */
   def lshBandsAndHashes(shingles: ArrayData, bands: Int, rowsPerBand: Int,
                         seed: Long): org.apache.spark.sql.catalyst.InternalRow = {
@@ -124,18 +135,22 @@ object HashImpl {
     val k = bands * rowsPerBand
     val sig = new Array[Long](k)
     java.util.Arrays.fill(sig, Long.MaxValue)
-    val hashes = new Array[Long](n)
+    val hashes = new Array[Long](nonNull(shingles))
     var j = 0
+    var o = 0
     while (j < n) {
-      val s = shingles.getUTF8String(j)
-      val h1 = xx(s, seed)
-      val h2 = xx(s, seed + 1)
-      hashes(j) = h1
-      var i = 0
-      while (i < k) {
-        val g = h1 + i * h2
-        if (g < sig(i)) sig(i) = g
-        i += 1
+      if (!shingles.isNullAt(j)) {
+        val s = shingles.getUTF8String(j)
+        val h1 = xx(s, seed)
+        val h2 = xx(s, seed + 1)
+        hashes(o) = h1
+        o += 1
+        var i = 0
+        while (i < k) {
+          val g = h1 + i * h2
+          if (g < sig(i)) sig(i) = g
+          i += 1
+        }
       }
       j += 1
     }

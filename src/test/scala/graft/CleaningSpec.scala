@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.types._
 import graft.clean.Cleaning
 
 class CleaningSpec extends SparkTestBase {
@@ -43,5 +44,43 @@ class CleaningSpec extends SparkTestBase {
     assert(Cleaning.twoPassClean(df, Seq.empty).collect().map(_.getDouble(0)).toSeq === Seq(1.0))
     val empty = Seq.empty[Double].toDF("v")
     assert(Cleaning.twoPassClean(empty, Seq("v")).count() === 0)
+  }
+
+  // Edge cases. Each pins the output schema (imputed columns are double)
+  // and the values of the reference's order: null the out-of-fence values,
+  // then impute the median of what is left.
+  private def types(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => f.name -> f.dataType)
+
+  // 1..20, one wild outlier and one null: p05 = 2, p95 = 20, so the fences
+  // are [-25, 47]; the outlier goes, and the post-nulling median is 10.5
+  // (the median with the outlier kept would be 11)
+  private val dirty = (1 to 20).map(Option(_)) ++ Seq(Some(1000000), None)
+  private val cleaned = (1 to 20).map(_.toDouble) ++ Seq(10.5, 10.5)
+
+  test("twoPassClean edge case: an all-null numeric column stays null") {
+    val df = dirty.zipWithIndex
+      .map { case (w, i) => (i.toLong, Option.empty[Double], w.map(_.toDouble)) }
+      .toDF("id", "v", "w")
+    val out = Cleaning.twoPassClean(df, Seq("v", "w"))
+    assert(types(out) === Seq("id" -> LongType, "v" -> DoubleType, "w" -> DoubleType))
+    val rows = out.orderBy("id").collect()
+    assert(rows.forall(_.isNullAt(1)), "no statistic exists, so nothing is imputed")
+    assert(rows.map(_.getDouble(2)).toSeq === cleaned)
+  }
+
+  test("twoPassClean edge case: a zero-row frame") {
+    val df = Seq.empty[(Long, Double, Int)].toDF("id", "v", "n")
+    val out = Cleaning.twoPassClean(df, Seq("v", "n"))
+    assert(types(out) === Seq("id" -> LongType, "v" -> DoubleType, "n" -> DoubleType))
+    assert(out.count() === 0)
+  }
+
+  test("twoPassClean edge case: an integer-typed numeric column") {
+    val df = dirty.zipWithIndex.map { case (n, i) => (i.toLong, n) }.toDF("id", "n")
+    assert(types(df) === Seq("id" -> LongType, "n" -> IntegerType))
+    val out = Cleaning.twoPassClean(df, Seq("n"))
+    assert(types(out) === Seq("id" -> LongType, "n" -> DoubleType))
+    assert(out.orderBy("id").collect().map(_.getDouble(1)).toSeq === cleaned)
   }
 }

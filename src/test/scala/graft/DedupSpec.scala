@@ -564,6 +564,36 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
+  test("shingleHashes / lshBandsAndHashes skip null elements, interpreted and codegen") {
+    import org.apache.spark.sql.graft.HashFunctions
+    // row 0 holds a null between the grams of row 3; row 1 is all-null
+    val lists = Seq(Seq("x y", null, "z w"), Seq(null), Seq.empty[String], Seq("x y", "z w"))
+    val sh = element_at(typedLit(lists), col("id").cast("int") + 1)
+    for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) {
+      // no whole-stage codegen, so the projection is built by the factory
+      // the mode selects; spark.range keeps the input non-foldable
+      val confs = Map("spark.sql.codegen.factoryMode" -> mode,
+                      "spark.sql.codegen.wholeStage" -> "false")
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val got = try {
+        spark.range(lists.length).select(col("id"),
+            HashFunctions.shingleHashes(sh).as("hh"),
+            HashFunctions.lshBandsAndHashes(sh, 8, 4).as("bh"),
+            HashFunctions.lshBandBuckets(sh, 8, 4).as("bands"),
+            transform(filter(sh, _.isNotNull), xxhash64(_)).as("want"))
+          .orderBy(col("id")).collect()
+      } finally confs.keys.foreach(spark.conf.unset)
+      got.foreach { r =>
+        assert(r.getSeq[Long](1) === r.getSeq[Long](4), s"$mode: hashes keep only non-null elements")
+        assert(r.getStruct(2).getSeq[Long](1) === r.getSeq[Long](1), s"$mode: fused hashes")
+        assert(r.getStruct(2).getSeq[Long](0) === r.getSeq[Long](3), s"$mode: fused bands")
+      }
+      assert(got(1).getSeq[Long](1).isEmpty, s"$mode: an all-null set hashes to []")
+      assert(got(0).getSeq[Long](3) === got(3).getSeq[Long](3),
+        s"$mode: a null element does not move the bands")
+    }
+  }
+
   test("HashLedger append + compact: membership answers unchanged, fewer files") {
     import graft.dedup.HashLedger
     val dir = "/root/testdata/sf0.001"

@@ -73,4 +73,21 @@ class IngestSpec extends SparkTestBase {
     assert(tokyo.getAs[Double]("temp_max") === 16.1)
     assert(out.columns.forall(c => out.filter(col(c).isNull).count() === 0))
   }
+
+  test("transform computes fences and medians once: consumer plans only scan and project") {
+    // 30 London polls plus one wild temperature, so the fences null a value
+    val polls = (0 until 30).map(i => goodEpoch.replace("\"temp\": 14.2", s"\"temp\": ${10 + i % 7}.5")) :+
+      goodEpoch.replace("\"temp\": 14.2", "\"temp\": 999.0")
+    val raw = readRaw(polls :+ noDtIso: _*)
+    def perCity(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("city").agg(avg("temperature"), max("temperature"), avg("humidity"))
+    val agg = perCity(Ingest.transform(raw))
+    val plan = agg.queryExecution.executedPlan.toString.toLowerCase
+    assert(!plan.contains("percentile"), plan)
+    assert(!plan.contains("broadcastnestedloopjoin"), plan)
+    val fresh = perCity(Ingest.transform(raw)).collect().toSet
+    assert(agg.collect().toSet === fresh)
+    assert(agg.collect().toSet === fresh)
+    assert(fresh.forall(r => r.getDouble(2) < 999.0), "the outlier was nulled and imputed")
+  }
 }

@@ -284,8 +284,8 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("twoPassClean == literal nullOutliers-then-imputeMedians composition") {
-    // pins the single-pass conditional-median rewrite against the textbook
-    // two-step composition on data with outliers AND pre-existing nulls
+    // pins the composite to the textbook two-step composition (medians of
+    // the nulled data) on data with outliers AND pre-existing nulls
     val base = Gen.listOfN(400, Gen.choose(-50.0, 50.0)).sample.get.map(Option(_))
     val dirty = base ++ Seq(Some(1e9), Some(-1e9), None, None)
     val df = rng.shuffle(dirty).zipWithIndex

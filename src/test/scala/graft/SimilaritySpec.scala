@@ -72,6 +72,26 @@ class SimilaritySpec extends SparkTestBase {
     assert(brute === Set(1L, 2L))
   }
 
+  test("mmrTopK: a NaN-scored candidate ranks last, never displacing a number") {
+    // cosines run over the common prefix, so the 2-dim query gives b a
+    // finite cosine (0.9939) while b's NaN third component makes its
+    // similarity to the first pick a — and so its MMR score — NaN.
+    // c scores 0.7·0.7071 − 0.3·0.7071 = 0.2828 and must outrank b.
+    val vecs = Seq(
+      (100L, Array(1.0f, 0.0f)),               // query
+      (1L, Array(1.0f, 0.0f, 0.0f)),           // a — picked first (cos 1)
+      (2L, Array(0.9f, 0.1f, Float.NaN)),      // b — NaN score after a
+      (3L, Array(0.5f, 0.5f, 0.0f))            // c
+    ).toDF("vec_id", "embedding")
+    val got = Similarity.mmrTopK(vecs, vecs.filter(col("vec_id") === 100L),
+        kCand = 3, k = 3).collect()
+      .map(r => r.getAs[Long]("mmr_rank") -> (r.getAs[Long]("neighbor_id"), r.getAs[Double]("score")))
+      .toMap
+    assert(got(1L)._1 === 1L)
+    assert(got(2L)._1 === 3L, "a finite score must displace a NaN one")
+    assert(got(3L)._1 === 2L && got(3L)._2.isNaN)
+  }
+
   test("labelCentroids: per-dimension mean by label") {
     val emb = Seq(
       (0L, Seq(1.0f, 3.0f), 7),
