@@ -1824,7 +1824,7 @@ object SparkEntry {
     // vector batch by pure re-encode against the FROZEN codebooks — no
     // re-train, no corpus re-scan; a replayed batch key overwrites its
     // own generation (idempotent), a batch folded by compact() no-ops
-    // on the keys ledger. Scanning the appended table == scanning a
+    // on the folded keys. Scanning the appended table == scanning a
     // cold same-codebook encode of corpus ∪ batch (SimilaritySpec gates
     // the bit equality); the rescore stage is dump-replay oracled like
     // s10

@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * what is an O(batch) operation at a deployment. With the store, the
   * seed state is a content-stamped artifact built once ([[ensure]]),
   * each fold's output can land as its own epoch snapshot ([[advance]],
-  * idempotent per epoch key, invisible until its `_SUCCESS` commits),
+  * idempotent per epoch key, invisible until its [[StoreLog]] manifest
+  * commits),
   * and [[latest]] hands the next fold its standing input without
   * touching the log.
   *
@@ -29,8 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StateStore {
 
-  /** Bump when the layout changes. */
-  private val version = "v1"
+  /** Bump when the layout changes. v2: seed and epoch directories
+    * listed by a [[StoreLog]] manifest. */
+  private val version = "v2"
 
   private def src(dir: String, table: String): String =
     new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString
@@ -54,25 +56,26 @@ object StateStore {
   def ensure(spark: SparkSession, dir: String, table: String, name: String,
              state: => DataFrame): DataFrame = synchronized {
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
-    val seed = new java.io.File(base, "seed")
-    if (!new java.io.File(seed, "_SUCCESS").isFile) {
+    val log = StoreLog.open(spark, base)
+    val s = if (log.snapshot.leaves.contains("seed")) log.snapshot else {
       ArtifactKey.dropSuperseded(
         base.getParentFile.getParentFile,
         ArtifactKey.pathKey(src(dir, table)) + "_", base.getParentFile.getName)
-      state.write.mode("overwrite").parquet(seed.getPath)
+      val seed = log.fresh("seed")
+      state.write.parquet(log.path(seed).toString)
+      log.commit(StoreSnapshot(leaves = Map("seed" -> seed)))
     }
-    ReadCache.parquetLocal(spark, seed)
+    ReadCache.parquetLocal(spark, new java.io.File(base, s.leaves("seed")))
   }
 
   /** Persist one fold's OUTPUT as the next standing snapshot — its own
     * epoch directory beside the seed, so the fold loop is: take
     * [[latest]], fold the batch, [[advance]] with the batch's key.
-    * IDEMPOTENT per `epochKey` (an at-least-once replay overwrites its
-    * own epoch; a crash mid-write leaves no `_SUCCESS`, so the
-    * half-epoch is invisible to [[latest]] until the replay completes
-    * it — the SrpIndex generation contract). Epoch keys must sort in
-    * fold order (zero-padded sequence numbers, ISO dates): [[latest]]
-    * takes the lexicographic max.
+    * IDEMPOTENT per `epochKey`: an at-least-once replay writes a fresh
+    * directory that the manifest then names for the key, so a crash
+    * mid-replay leaves the committed epoch in place. Epoch keys must
+    * sort in fold order (zero-padded sequence numbers, ISO dates):
+    * [[latest]] takes the lexicographic max.
     */
   def advance(spark: SparkSession, dir: String, table: String, name: String,
               epochKey: String, state: DataFrame): DataFrame = synchronized {
@@ -80,44 +83,25 @@ object StateStore {
       c.isLetterOrDigit || c == '-' || c == '_'),
       s"epochKey must be a [A-Za-z0-9_-]+ label; got '$epochKey'")
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
-    require(new java.io.File(new java.io.File(base, "seed"), "_SUCCESS").isFile,
+    val log = StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("seed"),
       s"advance requires a seeded state — ensure() first ($base)")
-    val epoch = new java.io.File(base, s"epoch_$epochKey")
-    if (!new java.io.File(epoch, "_SUCCESS").isFile) {
-      // first write: a crash leaves no _SUCCESS, the half-epoch is
-      // invisible to [[latest]] until the replay completes it
-      state.write.mode("overwrite").parquet(epoch.getPath)
-    } else {
-      // replay of a COMMITTED epoch: mode("overwrite") in place would
-      // delete the committed snapshot before writing, so a crash
-      // mid-replay silently regresses [[latest]] to an older epoch.
-      // Write beside it and swap — the committed snapshot stays present
-      // for all but the two metadata renames. The tmp name must NOT
-      // match the `epoch_` prefix or latest() could pick a half-swap.
-      val tmp = new java.io.File(base, s"__replay_epoch_$epochKey")
-      ArtifactKey.rmRecursive(tmp)
-      state.write.mode("overwrite").parquet(tmp.getPath)
-      ArtifactKey.rmRecursive(epoch)
-      require(tmp.renameTo(epoch), s"epoch replay swap failed: $tmp -> $epoch")
-    }
-    ReadCache.parquetLocal(spark, epoch)
+    val epoch = log.fresh(s"epoch_$epochKey")
+    state.write.parquet(log.path(epoch).toString)
+    log.commit(s.copy(keys = s.keys + (epochKey -> epoch)))
+    ReadCache.parquetLocal(spark, new java.io.File(base, epoch))
   }
 
-  /** The newest committed snapshot for (source, name): the
-    * lexicographically-last completed epoch, else the seed, else None
+  /** The newest committed snapshot for (source, name): the epoch with
+    * the lexicographically greatest key, else the seed, else None
     * (nothing ensured yet).
     */
   def latest(spark: SparkSession, dir: String, table: String,
              name: String): Option[DataFrame] = synchronized {
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
-    val epochs = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("epoch_") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .sortBy(_.getName)
-    val pick = epochs.lastOption.orElse {
-      val seed = new java.io.File(base, "seed")
-      if (new java.io.File(seed, "_SUCCESS").isFile) Some(seed) else None
-    }
-    pick.map(ReadCache.parquetLocal(spark, _))
+    val s = StoreLog.open(spark, base).snapshot
+    val pick = if (s.keys.nonEmpty) Some(s.keys.maxBy(_._1)._2) else s.leaves.get("seed")
+    pick.map(d => ReadCache.parquetLocal(spark, new java.io.File(base, d)))
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * any broadcast — so membership must be a partition-pruned probe of a
   * persisted layout, not a per-run corpus re-hash.
   *
-  * Layout (under target/hash_ledger/v1/<tag>/<subset>):
+  * Layout (under target/hash_ledger/v2/<tag>/<subset>):
   *  - `hashes`: (content_md5) partitioned by
   *    `__grp = pmod(xxhash64(content_md5), groups)` — the ledger stores
   *    only the address, no ids and no text (membership is the question
@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *    hashes; with the batch side broadcast into an INNER join, dynamic
   *    partition pruning drops every hash-group the batch never touches
   *    at scan time.
-  *  - `meta`: (groups, n, id_col, text_col) — layout + provenance.
+  *  - the manifest's meta: (groups, n, id_col, text_col) — layout +
+  *    provenance.
   *
   * Probe shape note ([[Dedup.incrementalExactNewIndexed]]): the natural
   * formulation — batch LEFT ANTI ledger — is semantically prunable
@@ -31,8 +32,8 @@ import org.apache.spark.sql.functions._
   * as INNER (ledger ⋈ broadcast batch hashes, DPP fires) to find the
   * batch's DUPLICATE ids, then a tiny batch-side anti join on those ids.
   *
-  * Reuse ladder and keying follow [[LshIndex]]: `_SUCCESS` on disk →
-  * read back; nothing → build; [[graft.ContentStamp]] in the tag forces
+  * Reuse ladder and keying follow [[LshIndex]]: a committed
+  * [[graft.StoreLog]] manifest → read back; none → build; [[graft.ContentStamp]] in the tag forces
   * a rebuild when the source regenerates; empty corpora are memoized per
   * (session, stamped path).
   */
@@ -41,8 +42,9 @@ object HashLedger {
   final case class Handle(hashes: DataFrame, groups: Int,
                           idCol: String, textCol: String)
 
-  /** Bump when the layout or hashing semantics change. */
-  private val version = "v1"
+  /** Bump when the layout or hashing semantics change. v2: directories
+    * and group count listed by a [[graft.StoreLog]] manifest. */
+  private val version = "v2"
 
   /** Same directory-count economics as [[LshIndex.autoGroups]]: one
     * distinct content per corpus row at worst.
@@ -94,161 +96,117 @@ object HashLedger {
     * ride the same persisted layout, DPP probe shape, and reuse ladder.
     * `hashes` must expose a `content_md5` string column and is only
     * evaluated on a cold build; `idCol`/`textCol` are provenance labels
-    * recorded in meta.
+    * recorded in the manifest.
     */
-  /** The two leaves [[compact]] swaps under one commit marker: `meta`
-    * first — it carries the group count the `hashes` layout is hashed
-    * by (the [[LshIndex.compactLeaves]] rationale).
-    */
-  private val compactLeaves = Seq("meta", "hashes")
-
   def ensureHashes(spark: SparkSession, dir: String, hashes: => DataFrame,
                    idCol: String, textCol: String,
                    subset: String): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
-    val hashesPath = new java.io.File(base, "hashes").getPath
-    val metaPath = new java.io.File(base, "meta").getPath
-    if (!new java.io.File(hashesPath, "_SUCCESS").isFile ||
-        !new java.io.File(metaPath, "_SUCCESS").isFile) {
-      sessionMemo(spark).get(base.getPath) match {
-        case Some(h) => return h
-        case None =>
-      }
-      graft.ArtifactKey.dropSuperseded(
-        base.getParentFile, graft.ArtifactKey.pathKey(dir) + "_", base.getName)
-      // materialize the address frame ONCE: the count below and the
-      // layout write would otherwise each evaluate the derivation — for
-      // a text corpus that is two cheap scans, but for an opaque
-      // derivation (the media digest ledger's per-blob codec decode,
-      // which Catalyst cannot prune out of a count) it would pay the
-      // dominant build cost twice
-      val df = hashes.localCheckpoint()
-      val n = df.count()
-      if (n == 0) {
-        val h = Handle(
-          df.select(col("content_md5"))
-            .withColumn("__grp", grpOf(col("content_md5"), 16)),
-          16, idCol, textCol)
-        sessionMemo(spark)(base.getPath) = h
-        return h
-      }
-      val groups = autoGroups(n)
-      import spark.implicits._
-      Seq((groups, n, idCol, textCol)).toDF("groups", "n", "id_col", "text_col")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath)
-      // one corpus pass: hash → distinct addresses (map-side partial
-      // dedup — a corpus with heavy duplication shuffles one row per
-      // distinct content per map task), then the one-file-per-group
-      // repartition alignment shared with LshIndex/SrpIndex/IvfIndex
-      df.select(col("content_md5")).distinct()
-        .withColumn("__grp", grpOf(col("content_md5"), groups))
-        .repartition(groups, col("__grp"))
-        .write.mode("overwrite").partitionBy("__grp").parquet(hashesPath)
+    val log = graft.StoreLog.open(spark, base)
+    if (log.snapshot.leaves.contains("hashes")) return handle(spark, base, log.snapshot)
+    sessionMemo(spark).get(base.getPath) match {
+      case Some(h) => return h
+      case None =>
     }
-    val meta = readMeta(spark, metaPath)
-    Handle(graft.ReadCache.parquetLocal(spark, new java.io.File(hashesPath)),
-      meta.getAs[Int]("groups"),
-      meta.getAs[String]("id_col"), meta.getAs[String]("text_col"))
+    graft.ArtifactKey.dropSuperseded(
+      base.getParentFile, graft.ArtifactKey.pathKey(dir) + "_", base.getName)
+    // materialize the address frame ONCE: the count below and the
+    // layout write would otherwise each evaluate the derivation — for
+    // a text corpus that is two cheap scans, but for an opaque
+    // derivation (the media digest ledger's per-blob codec decode,
+    // which Catalyst cannot prune out of a count) it would pay the
+    // dominant build cost twice
+    val df = hashes.localCheckpoint()
+    val n = df.count()
+    if (n == 0) {
+      val h = Handle(
+        df.select(col("content_md5"))
+          .withColumn("__grp", grpOf(col("content_md5"), 16)),
+        16, idCol, textCol)
+      sessionMemo(spark)(base.getPath) = h
+      return h
+    }
+    val groups = autoGroups(n)
+    val hashesDir = log.fresh("hashes")
+    writeHashes(df, groups, log.path(hashesDir).toString)
+    handle(spark, base, log.commit(graft.StoreSnapshot(
+      leaves = Map("hashes" -> hashesDir),
+      meta = Map("groups" -> groups.toString, "n" -> n.toString,
+        "id_col" -> idCol, "text_col" -> textCol))))
   }
 
-  /** The persisted geometry row, memoized per (session, path, content
-    * fingerprint) — [[graft.ReadCache]] — so a warm ensure/append/probe
-    * pays a metadata walk, not a read + collect job, per access.
+  /** Write distinct addresses in the ledger layout: map-side partial
+    * dedup (a corpus with heavy duplication shuffles one row per
+    * distinct content per map task), then the one-file-per-group
+    * repartition alignment shared with LshIndex/SrpIndex/IvfIndex.
     */
-  private def readMeta(spark: SparkSession, metaPath: String): org.apache.spark.sql.Row =
-    graft.ReadCache.collectedLocal(spark, new java.io.File(metaPath))(_.collect()(0))
+  private def writeHashes(hashes: DataFrame, groups: Int, path: String): Unit =
+    hashes.select(col("content_md5")).distinct()
+      .withColumn("__grp", grpOf(col("content_md5"), groups))
+      .repartition(groups, col("__grp"))
+      .write.partitionBy("__grp").parquet(path)
+
+  /** The committed ledger: the base leaf plus every [[append]]
+    * generation, one read per root unioned (per-root scans keep the
+    * group pruning per generation), and the group count from the
+    * manifest.
+    */
+  private def handle(spark: SparkSession, base: java.io.File,
+                     s: graft.StoreSnapshot): Handle =
+    Handle(graft.StoreLog.readLocal(spark, base, s.generations("hashes")),
+      s.meta("groups").toInt, s.meta("id_col"), s.meta("text_col"))
 
   /** Append a batch's content addresses to the standing ledger — the
     * daily-ingest seam: after [[Dedup.incrementalExactNewIndexed]] finds
     * the batch's NOVEL rows, their addresses join the ledger here so
     * tomorrow's batch dedups against today's too. Addresses are deduped
-    * within the batch and land in the SAME `__grp` layout (group key and
-    * count come from the persisted meta), so the DPP probe shape is
-    * unchanged the moment the append commits. Each append adds ≤ 1 file
-    * per touched group; a year of daily batches is ~365 small files per
-    * group — run [[compact]] periodically to fold them (and to re-size
-    * `groups` for the grown ledger). Caller sends novel addresses only;
-    * a re-sent address is harmless for membership answers (the probe is
-    * an inner-join existence check) until compact() folds duplicates.
+    * within the batch and land as their own generation in the SAME
+    * `__grp` layout (group key and count come from the manifest), so
+    * the DPP probe shape is unchanged the moment the append commits.
+    * Each append adds ≤ 1 file per touched group; a year of daily
+    * batches is ~365 small files per group — run [[compact]]
+    * periodically to fold them (and to re-size `groups` for the grown
+    * ledger). Caller sends novel addresses only; a re-sent address is
+    * harmless for membership answers (the probe is an inner-join
+    * existence check) until compact() folds duplicates.
     */
   def append(spark: SparkSession, dir: String, newHashes: DataFrame,
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
-    val hashesPath = new java.io.File(base, "hashes").getPath
-    val metaPath = new java.io.File(base, "meta").getPath
-    require(new java.io.File(hashesPath, "_SUCCESS").isFile,
-      s"append requires a persisted ledger — ensure() first ($hashesPath)")
-    val meta = readMeta(spark, metaPath)
-    val groups = meta.getAs[Int]("groups")
-    newHashes.select(col("content_md5")).distinct()
-      .withColumn("__grp", grpOf(col("content_md5"), groups))
-      .repartition(groups, col("__grp"))
-      .write.mode("append").partitionBy("__grp").parquet(hashesPath)
-    Handle(graft.ReadCache.parquetLocal(spark, new java.io.File(hashesPath)), groups,
-      meta.getAs[String]("id_col"), meta.getAs[String]("text_col"))
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("hashes"),
+      s"append requires a persisted ledger — ensure() first ($base)")
+    val gen = log.fresh("append")
+    writeHashes(newHashes, s.meta("groups").toInt, log.path(gen).toString)
+    handle(spark, base, log.commit(s.copy(keys = s.keys + (gen -> gen))))
   }
 
-  /** Fold the per-batch append files into one file per group and re-size
+  /** Fold the append generations into one file per group and re-size
     * the group count for the ledger as it stands — the maintenance pass
     * that keeps the DPP probe cost flat after a year of [[append]]s
     * (file-open overhead, not bytes, is what grows: every appended batch
     * adds a file per touched group). Re-derives the layout from scratch:
     * distinct addresses (folding any re-sent ones), `groups` re-sized by
-    * [[autoGroups]] of the CURRENT address count, meta rewritten to
-    * match. Membership answers are identical before and after
-    * (parity-gated in DedupSpec).
-    *
-    * Crash safety (r20 hardening — the [[LshIndex.compact]] note
-    * verbatim): both leaves write fully beside the live tree, an
-    * explicit marker commits the two swaps, and
-    * [[graft.sim.IndexMaintenance.recoverMarked]] at every entry point
-    * rolls an interrupted compact forward or back. The old
-    * delete-then-rename + rewrite-meta-after flow could lose every
-    * appended batch's addresses to a silent source rebuild, or leave
-    * probes hashing `__grp` with a stale group count. Run offline
-    * (probes holding the old Handle keep reading the old files until
-    * they re-ensure).
+    * [[autoGroups]] of the CURRENT address count, and the layout and its
+    * group count commit in ONE manifest. Membership answers are
+    * identical before and after (parity-gated in DedupSpec). Run
+    * offline: a probe holding the old Handle loses its files when the
+    * commit sweeps them.
     */
-  def compact(spark: SparkSession, dir: String, subset: String = "all",
-              failpoint: String => Unit = _ => ()): Handle = synchronized {
+  def compact(spark: SparkSession, dir: String, subset: String = "all"): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
-    val hashesDir = new java.io.File(base, "hashes")
-    val metaPath = new java.io.File(base, "meta").getPath
-    require(new java.io.File(hashesDir, "_SUCCESS").isFile,
-      s"compact requires a persisted ledger — ensure() first ($hashesDir)")
-    val meta = readMeta(spark, metaPath)
-    val distinctAddrs = graft.ReadCache.parquetLocal(spark, hashesDir)
-      .select(col("content_md5")).distinct()
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("hashes"),
+      s"compact requires a persisted ledger — ensure() first ($base)")
+    val distinctAddrs = handle(spark, base, s).hashes.select(col("content_md5")).distinct()
     val n = distinctAddrs.count()
     val groups = autoGroups(n)
-    val tmpH = new java.io.File(base, "hashes__compact")
-    graft.ArtifactKey.rmRecursive(tmpH)
-    // source and destination are different directories, so the rewrite
-    // streams old files into new ones — no checkpoint, no driver state
-    distinctAddrs
-      .withColumn("__grp", grpOf(col("content_md5"), groups))
-      .repartition(groups, col("__grp"))
-      .write.mode("overwrite").partitionBy("__grp").parquet(tmpH.getPath)
-    import spark.implicits._
-    val tmpM = new java.io.File(base, "meta__compact")
-    graft.ArtifactKey.rmRecursive(tmpM)
-    Seq((groups, n, meta.getAs[String]("id_col"), meta.getAs[String]("text_col")))
-      .toDF("groups", "n", "id_col", "text_col")
-      .coalesce(1).write.mode("overwrite").parquet(tmpM.getPath)
-    val marker = graft.sim.IndexMaintenance.markerFile(base)
-    require(marker.createNewFile() || marker.isFile,
-      s"compact commit-marker create failed: $marker")
-    failpoint("committed")
-    // destructive phase — mirror of recoverMarked's roll-forward order
-    graft.sim.IndexMaintenance.swapLeaf(base, "meta")
-    failpoint("meta-swapped")
-    graft.sim.IndexMaintenance.swapLeaf(base, "hashes")
-    failpoint("hashes-swapped")
-    marker.delete()
-    Handle(graft.ReadCache.parquetLocal(spark, hashesDir), groups,
-      meta.getAs[String]("id_col"), meta.getAs[String]("text_col"))
+    val hashesDir = log.fresh("hashes")
+    writeHashes(distinctAddrs, groups, log.path(hashesDir).toString)
+    handle(spark, base, log.commit(s.copy(
+      leaves = Map("hashes" -> hashesDir), keys = Map.empty,
+      meta = s.meta ++ Map("groups" -> groups.toString, "n" -> n.toString))))
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * each new batch re-tokenizes and re-hashes the WHOLE corpus — at 100 TB
   * that corpus pass, not the candidate join, dominates the daily dedup.
   *
-  * Layout (under target/lsh_index/v3/<tag>/s<sh>_b<bands>_r<rows>):
+  * Layout (under target/lsh_index/v4/<tag>/s<sh>_b<bands>_r<rows>):
   *  - `buckets`: (id, band, bucket, bsize) partitioned by
   *    `__grp = pmod(xxhash64(band, bucket), groups)` — narrow rows (three
   *    longs); the shingle SETS are deliberately NOT persisted. The verify
@@ -24,12 +24,13 @@ import org.apache.spark.sql.functions._
   *    batch side broadcast, dynamic partition pruning drops every
   *    bucket-group the batch never touches at scan time (the SrpIndex /
   *    IvfIndex 100 TB shape).
-  *  - `meta`: (shingle, bands, rows, groups, n) — the banding geometry.
-  *    Probes MUST band with the exact geometry the corpus was indexed
-  *    with; reading it here keeps that true across JVMs.
+  *  - the manifest's meta: (shingle, bands, rows, groups, n, id_col,
+  *    text_col) — the banding geometry. Probes MUST band with the exact
+  *    geometry the corpus was indexed with; reading it here keeps that
+  *    true across JVMs.
   *
-  * Reuse ladder and keying follow [[graft.sim.SrpIndex]]: `_SUCCESS` on
-  * disk → read back; nothing → build. The tag embeds basename + path hash
+  * Reuse ladder and keying follow [[graft.sim.SrpIndex]]: a committed
+  * [[graft.StoreLog]] manifest → read back; none → build. The tag embeds basename + path hash
   * + [[graft.ContentStamp]], so a regenerated corpus forces a rebuild;
   * a cold build drops superseded stamps of the same source. Builds are
   * serialized per JVM (Verify's 4-thread pool).
@@ -37,7 +38,7 @@ import org.apache.spark.sql.functions._
 object LshIndex {
 
   /** `idCol`/`textCol` record which columns the index was BUILT over (from
-    * the persisted meta row): a probe must join the standing side on the
+    * the manifest meta): a probe must join the standing side on the
     * build-time id column, not whatever the probe batch happens to call
     * its own — see [[Dedup.incrementalCandidatePairsIndexed]].
     */
@@ -51,8 +52,10 @@ object LshIndex {
     *     denormalized at build so a probe's bucket-occupancy cap
     *     ([[Dedup.defaultBucketCap]]) is a map-side scan filter instead
     *     of a per-probe aggregation over the standing corpus.
+    * v4: directories and geometry listed by a [[graft.StoreLog]]
+    *     manifest; appends land as their own generations.
     */
-  private val version = "v3"
+  private val version = "v4"
 
   /** Same directory-count economics as [[graft.sim.SrpIndex]]: groups are
     * one-file directories, so size them by rows (N·bands exploded rows)
@@ -105,187 +108,133 @@ object LshIndex {
   /** Build-or-reuse the index of `<dir>`'s corpus. `corpus` is only
     * evaluated (and scanned) on a cold build.
     */
-  /** The two leaves [[compact]] swaps under one commit marker: `meta`
-    * FIRST is deliberate — it carries the group count the `buckets`
-    * layout is hashed by, and [[graft.sim.IndexMaintenance
-    * .recoverMarked]] heals any crash window between the two before a
-    * probe can read a mismatched pair.
-    */
-  private val compactLeaves = Seq("meta", "buckets")
-
   def ensure(spark: SparkSession, dir: String, corpus: => DataFrame,
              idCol: String = "doc_id", textCol: String = "text",
              shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
-    val bucketsPath = new java.io.File(base, "buckets").getPath
-    val metaPath = new java.io.File(base, "meta").getPath
-    def emptyHandle(df: DataFrame): Handle = Handle(
-      Dedup.lshBuckets(df, idCol, textCol, shingleSize, bands, rowsPerBand)
-        .withColumn("bsize", lit(0L))
-        .withColumn("__grp", grpOf(col("band"), col("bucket"), 16)),
-      shingleSize, bands, rowsPerBand, 16, idCol, textCol)
-    if (!new java.io.File(bucketsPath, "_SUCCESS").isFile ||
-        !new java.io.File(metaPath, "_SUCCESS").isFile) {
-      sessionMemo(spark).get(base.getPath) match {
-        case Some(h) => return h
-        case None =>
-      }
-      graft.ArtifactKey.dropSuperseded(
-        base.getParentFile.getParentFile,
-        graft.ArtifactKey.pathKey(dir) + "_", base.getParentFile.getName)
-      val df = corpus
-      val n = df.count()
-      if (n == 0) {
-        val h = emptyHandle(df)
-        sessionMemo(spark)(base.getPath) = h
-        return h
-      }
-      val groups = autoGroups(n * bands)
-      import spark.implicits._
-      Seq((shingleSize, bands, rowsPerBand, groups, n, idCol, textCol))
-        .toDF("shingle", "bands", "rows", "groups", "n", "id_col", "text_col")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath)
-      // one corpus pass: shingle → minhash → band buckets (all native
-      // expressions inside lshBuckets), a narrow (band, bucket) window
-      // to denormalize each bucket's occupancy onto its rows (`bsize` —
-      // what makes the probe-time occupancy cap a scan filter), then the
-      // one-file-per-group repartition alignment shared with
-      // SrpIndex/IvfIndex/BucketedMirror
-      Dedup.lshBuckets(df, idCol, textCol, shingleSize, bands, rowsPerBand)
-        .withColumn("bsize", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
-        .withColumn("__grp", grpOf(col("band"), col("bucket"), groups))
-        .repartition(groups, col("__grp"))
-        .write.mode("overwrite").partitionBy("__grp").parquet(bucketsPath)
+    val log = graft.StoreLog.open(spark, base)
+    if (log.snapshot.leaves.contains("buckets")) return handle(spark, base, log.snapshot)
+    sessionMemo(spark).get(base.getPath) match {
+      case Some(h) => return h
+      case None =>
     }
-    val meta = readMeta(spark, metaPath)
-    Handle(graft.ReadCache.parquetLocal(spark, new java.io.File(bucketsPath)),
-      meta.getAs[Int]("shingle"), meta.getAs[Int]("bands"),
-      meta.getAs[Int]("rows"), meta.getAs[Int]("groups"),
-      meta.getAs[String]("id_col"), meta.getAs[String]("text_col"))
+    graft.ArtifactKey.dropSuperseded(
+      base.getParentFile.getParentFile,
+      graft.ArtifactKey.pathKey(dir) + "_", base.getParentFile.getName)
+    val df = corpus
+    val n = df.count()
+    if (n == 0) {
+      val h = Handle(
+        Dedup.lshBuckets(df, idCol, textCol, shingleSize, bands, rowsPerBand)
+          .withColumn("bsize", lit(0L))
+          .withColumn("__grp", grpOf(col("band"), col("bucket"), 16)),
+        shingleSize, bands, rowsPerBand, 16, idCol, textCol)
+      sessionMemo(spark)(base.getPath) = h
+      return h
+    }
+    val groups = autoGroups(n * bands)
+    // one corpus pass: shingle → minhash → band buckets (all native
+    // expressions inside lshBuckets), then the occupancy and
+    // one-file-per-group layout of [[writeBuckets]]
+    val bucketsDir = log.fresh("buckets")
+    writeBuckets(Dedup.lshBuckets(df, idCol, textCol, shingleSize, bands, rowsPerBand),
+      groups, log.path(bucketsDir).toString)
+    handle(spark, base, log.commit(graft.StoreSnapshot(
+      leaves = Map("buckets" -> bucketsDir),
+      meta = Map("shingle" -> shingleSize.toString, "bands" -> bands.toString,
+        "rows" -> rowsPerBand.toString, "groups" -> groups.toString,
+        "n" -> n.toString, "id_col" -> idCol, "text_col" -> textCol))))
   }
 
-  /** The persisted geometry row, memoized per (session, path, content
-    * fingerprint) — [[graft.ReadCache]] — so a warm ensure/append/probe
-    * pays a metadata walk, not a read + collect job, per access.
+  /** Write (id, band, bucket) rows in the index layout: a narrow
+    * (band, bucket) window denormalizes each bucket's occupancy onto
+    * its rows (`bsize` — what makes the probe-time occupancy cap a scan
+    * filter), then the one-file-per-group repartition alignment shared
+    * with SrpIndex/IvfIndex/BucketedMirror.
     */
-  private def readMeta(spark: SparkSession, metaPath: String): org.apache.spark.sql.Row =
-    graft.ReadCache.collectedLocal(spark, new java.io.File(metaPath))(_.collect()(0))
+  private def writeBuckets(rows: DataFrame, groups: Int, path: String): Unit =
+    rows
+      .withColumn("bsize", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
+      .withColumn("__grp", grpOf(col("band"), col("bucket"), groups))
+      .repartition(groups, col("__grp"))
+      .write.partitionBy("__grp").parquet(path)
+
+  /** The committed index: the base buckets leaf plus every [[append]]
+    * generation, one read per root unioned (per-root scans keep the
+    * group pruning per generation), and the banding geometry from the
+    * manifest — a probe must band with exactly what the rows were
+    * indexed with, across JVMs.
+    */
+  private def handle(spark: SparkSession, base: java.io.File,
+                     s: graft.StoreSnapshot): Handle =
+    Handle(graft.StoreLog.readLocal(spark, base, s.generations("buckets")),
+      s.meta("shingle").toInt, s.meta("bands").toInt, s.meta("rows").toInt,
+      s.meta("groups").toInt, s.meta("id_col"), s.meta("text_col"))
 
   /** Append a batch's bucket assignments to the standing index — the
     * daily-ingest seam: new documents are banded with the PERSISTED
-    * geometry (shingle/bands/rows and group key all read from meta, so
-    * an appended row can never land off-layout) and join the index so
-    * tomorrow's probe sees today's corpus. `bsize` on appended rows is
-    * the occupancy WITHIN THIS BATCH only — the denormalized occupancy
-    * of standing rows is not rewritten per append (that would be a full
-    * index pass per day), so the probe-time occupancy cap
-    * ([[Dedup.defaultBucketCap]]) under-counts buckets that grew ACROSS
-    * epochs until [[compact]] re-derives exact occupancies. Caps are a
-    * hot-bucket pressure valve, not a correctness surface (capped-away
-    * mass is boilerplate by design), so the documented staleness trades
-    * a bounded cap error for O(batch) appends.
+    * geometry (shingle/bands/rows and group key all from the manifest,
+    * so an appended row can never land off-layout) and join the index
+    * as their own generation, so tomorrow's probe sees today's corpus.
+    * `bsize` on appended rows is the occupancy WITHIN THIS BATCH only —
+    * the denormalized occupancy of standing rows is not rewritten per
+    * append (that would be a full index pass per day), so the
+    * probe-time occupancy cap ([[Dedup.defaultBucketCap]])
+    * under-counts buckets that grew ACROSS epochs until [[compact]]
+    * re-derives exact occupancies. Caps are a hot-bucket pressure valve,
+    * not a correctness surface (capped-away mass is boilerplate by
+    * design), so the documented staleness trades a bounded cap error
+    * for O(batch) appends.
     */
   def append(spark: SparkSession, dir: String, newDocs: DataFrame,
              shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
-    val bucketsPath = new java.io.File(base, "buckets").getPath
-    val metaPath = new java.io.File(base, "meta").getPath
-    require(new java.io.File(bucketsPath, "_SUCCESS").isFile,
-      s"append requires a persisted index — ensure() first ($bucketsPath)")
-    val meta = readMeta(spark, metaPath)
-    val groups = meta.getAs[Int]("groups")
-    Dedup.lshBuckets(newDocs, meta.getAs[String]("id_col"),
-        meta.getAs[String]("text_col"), meta.getAs[Int]("shingle"),
-        meta.getAs[Int]("bands"), meta.getAs[Int]("rows"))
-      .withColumn("bsize", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
-      .withColumn("__grp", grpOf(col("band"), col("bucket"), groups))
-      .repartition(groups, col("__grp"))
-      .write.mode("append").partitionBy("__grp").parquet(bucketsPath)
-    Handle(graft.ReadCache.parquetLocal(spark, new java.io.File(bucketsPath)),
-      meta.getAs[Int]("shingle"), meta.getAs[Int]("bands"),
-      meta.getAs[Int]("rows"), groups,
-      meta.getAs[String]("id_col"), meta.getAs[String]("text_col"))
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("buckets"),
+      s"append requires a persisted index — ensure() first ($base)")
+    val h = handle(spark, base, s)
+    val gen = log.fresh("append")
+    writeBuckets(Dedup.lshBuckets(newDocs, h.idCol, h.textCol, h.shingleSize,
+      h.bands, h.rowsPerBand), h.groups, log.path(gen).toString)
+    handle(spark, base, log.commit(s.copy(keys = s.keys + (gen -> gen))))
   }
 
-  /** Fold per-batch append files into one file per group, RE-DERIVE the
+  /** Fold the append generations into one file per group, RE-DERIVE the
     * exact per-bucket occupancy (`bsize` — appends leave it per-epoch,
     * see [[append]]), and re-size the group count for the grown index —
     * the maintenance pass that keeps the DPP probe cost flat after a
     * year of daily appends. Probe candidate sets are identical before
     * and after when caps don't bind, and strictly more faithful to the
     * cap contract after (occupancy is exact again) — both gated in
-    * DedupSpec.
-    *
-    * Crash safety (r20 hardening, the [[graft.sim.SrpIndex.compact]]
-    * marker discipline): BOTH leaves — the re-grouped `buckets` layout
-    * AND the `meta` row that carries the group count probes hash by —
-    * are fully written beside the live tree first, then an explicit
-    * commit marker spans the two swaps (each two metadata renames).
-    * The old delete-then-rename + rewrite-meta-after flow had two
-    * silent-corruption windows: a crash between delete and rename left
-    * NO buckets leaf, so the next ensure() cold-rebuilt from the
-    * source slice and silently LOST every appended batch's rows; a
-    * crash between the rename and the meta rewrite left probes hashing
-    * `__grp` with the OLD group count against the NEW layout —
-    * silently missed candidates. [[graft.sim.IndexMaintenance
-    * .recoverMarked]] (run at every entry point) now rolls either
-    * window forward or back; crash injection gated in DedupSpec via
-    * `failpoint`. Run offline, like every maintenance pass here.
+    * DedupSpec. The re-grouped layout and the group count probes hash
+    * `__grp` by commit in ONE manifest, so no reader ever pairs the new
+    * layout with the old count. Run offline, like every maintenance
+    * pass here.
     */
   def compact(spark: SparkSession, dir: String,
               shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-              subset: String = "all",
-              failpoint: String => Unit = _ => ()): Handle = synchronized {
+              subset: String = "all"): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
-    val bucketsDir = new java.io.File(base, "buckets")
-    val metaPath = new java.io.File(base, "meta").getPath
-    require(new java.io.File(bucketsDir, "_SUCCESS").isFile,
-      s"compact requires a persisted index — ensure() first ($bucketsDir)")
-    val meta = readMeta(spark, metaPath)
-    val idColName = meta.getAs[String]("id_col")
-    val rows = graft.ReadCache.parquetLocal(spark, bucketsDir)
-      .select(col(idColName), col("band"), col("bucket")).distinct()
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("buckets"),
+      s"compact requires a persisted index — ensure() first ($base)")
+    val h = handle(spark, base, s)
+    val rows = h.buckets.select(col(h.idCol), col("band"), col("bucket")).distinct()
     val total = rows.count()
     val groups = autoGroups(total)
-    val tmpB = new java.io.File(base, "buckets__compact")
-    graft.ArtifactKey.rmRecursive(tmpB)
-    rows
-      .withColumn("bsize", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
-      .withColumn("__grp", grpOf(col("band"), col("bucket"), groups))
-      .repartition(groups, col("__grp"))
-      .write.mode("overwrite").partitionBy("__grp").parquet(tmpB.getPath)
-    import spark.implicits._
-    val bandsM = meta.getAs[Int]("bands")
-    val tmpM = new java.io.File(base, "meta__compact")
-    graft.ArtifactKey.rmRecursive(tmpM)
-    Seq((meta.getAs[Int]("shingle"), bandsM, meta.getAs[Int]("rows"), groups,
-         total / math.max(1, bandsM), meta.getAs[String]("id_col"),
-         meta.getAs[String]("text_col")))
-      .toDF("shingle", "bands", "rows", "groups", "n", "id_col", "text_col")
-      .coalesce(1).write.mode("overwrite").parquet(tmpM.getPath)
-    val marker = graft.sim.IndexMaintenance.markerFile(base)
-    require(marker.createNewFile() || marker.isFile,
-      s"compact commit-marker create failed: $marker")
-    failpoint("committed")
-    // destructive phase — mirror of recoverMarked's roll-forward order
-    graft.sim.IndexMaintenance.swapLeaf(base, "meta")
-    failpoint("meta-swapped")
-    graft.sim.IndexMaintenance.swapLeaf(base, "buckets")
-    failpoint("buckets-swapped")
-    marker.delete()
-    Handle(graft.ReadCache.parquetLocal(spark, bucketsDir),
-      meta.getAs[Int]("shingle"), bandsM, meta.getAs[Int]("rows"), groups,
-      meta.getAs[String]("id_col"), meta.getAs[String]("text_col"))
+    val bucketsDir = log.fresh("buckets")
+    writeBuckets(rows, groups, log.path(bucketsDir).toString)
+    handle(spark, base, log.commit(s.copy(
+      leaves = Map("buckets" -> bucketsDir), keys = Map.empty,
+      meta = s.meta ++ Map("groups" -> groups.toString,
+        "n" -> (total / math.max(1, h.bands)).toString))))
   }
 }

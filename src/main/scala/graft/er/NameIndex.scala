@@ -35,8 +35,9 @@ object NameIndex {
   /** Bump when the derivation (tokenization, cap semantics) changes.
     * v2: uncapped pairs + denormalized `__occ` persisted, cap filtered
     * at read — the [[append]]-exactness layout.
+    * v3: the pairs directory is listed by a [[graft.StoreLog]] manifest.
     */
-  private val version = "v2"
+  private val version = "v3"
 
   def root(dir: String, table: String, subset: String,
            blockCap: Int = EntityResolution.defaultBlockCap,
@@ -72,55 +73,28 @@ object NameIndex {
   /** The capped (token, name) frame for `standing`'s distinct names.
     * `standing` is only evaluated (and scanned) on a cold build.
     */
-  /** Finish or undo an interrupted [[append]] swap — run at every entry
-    * point. The merged rewrite at `<base>__compact` carries its own
-    * `_SUCCESS` as the commit marker: present → roll FORWARD (the
-    * append is applied even though its caller never got the ack —
-    * at-least-once is the contract, and a replay anti-joins to
-    * nothing); absent → roll BACK (discard the partial rewrite,
-    * restore a universe parked at `__precompact`). Without this, a
-    * crash between the swap renames would leave NO live index and the
-    * next ensure() would cold-rebuild from the source slice — silently
-    * losing every appended batch's names.
-    */
-  private def recover(base: java.io.File): Unit = {
-    val tmp = new java.io.File(base.getPath + "__compact")
-    val old = new java.io.File(base.getPath + "__precompact")
-    if (new java.io.File(tmp, "_SUCCESS").isFile) {
-      if (base.exists()) {
-        graft.ArtifactKey.rmRecursive(old)
-        require(base.renameTo(old), s"append recovery failed: $base -> $old")
-      }
-      require(tmp.renameTo(base), s"append recovery failed: $tmp -> $base")
-      graft.ArtifactKey.rmRecursive(old)
-    } else {
-      graft.ArtifactKey.rmRecursive(tmp)
-      if (old.exists()) {
-        if (!base.exists())
-          require(old.renameTo(base), s"append rollback failed: $old -> $base")
-        else graft.ArtifactKey.rmRecursive(old)
-      }
-    }
-  }
-
   def ensure(spark: SparkSession, dir: String, table: String, subset: String,
              standing: => DataFrame, nameCol: String,
              blockCap: Int = EntityResolution.defaultBlockCap): DataFrame = synchronized {
-    val conf = spark.sessionState.newHadoopConf()
-    val base = root(dir, table, subset, blockCap, conf)
-    recover(base)
-    if (!new java.io.File(base, "_SUCCESS").isFile) {
+    val base = root(dir, table, subset, blockCap, spark.sessionState.newHadoopConf())
+    val log = graft.StoreLog.open(spark, base)
+    val s = if (log.snapshot.leaves.contains("pairs")) log.snapshot else {
       val stampedDir = base.getParentFile
       graft.ArtifactKey.dropSuperseded(
         stampedDir.getParentFile,
         graft.ArtifactKey.pathKey(
           new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString) + "_",
         stampedDir.getName)
-      withOcc(uncappedPairs(standing, nameCol))
-        .write.mode("overwrite").parquet(base.getPath)
+      val pairs = log.fresh("pairs")
+      withOcc(uncappedPairs(standing, nameCol)).write.parquet(log.path(pairs).toString)
+      log.commit(graft.StoreSnapshot(leaves = Map("pairs" -> pairs)))
     }
-    capped(graft.ReadCache.parquetLocal(spark, base), blockCap)
+    capped(readPairs(spark, base, s), blockCap)
   }
+
+  private def readPairs(spark: SparkSession, base: java.io.File,
+                        s: graft.StoreSnapshot): DataFrame =
+    graft.ReadCache.parquetLocal(spark, new java.io.File(base, s.leaves("pairs")))
 
   /** Fold NEW names into the persisted universe — the maintenance rung
     * incremental ER was missing (new names could not land without a
@@ -133,40 +107,23 @@ object NameIndex {
     * token that crosses the cap only across the epoch seam). The
     * rewrite is pair-universe-sized — names × tokens, sublinear in
     * rows; the expensive term ensure amortizes (scanning the standing
-    * TABLE) is never re-paid.
-    *
-    * The merged rewrite commits via its own `_SUCCESS` and swaps in
-    * with two renames (live parked at `__precompact`, never deleted
-    * before the new universe is live); [[recover]] at every entry
-    * point rolls a crash at any point forward or back — the round's
-    * compact discipline, because a lost swap here would silently lose
-    * every appended batch's names to the next source rebuild.
+    * TABLE) is never re-paid. The merged universe lands in a fresh
+    * directory and replaces the old one in one manifest commit.
     */
   def append(spark: SparkSession, dir: String, table: String, subset: String,
              newNames: DataFrame, nameCol: String,
-             blockCap: Int = EntityResolution.defaultBlockCap,
-             failpoint: String => Unit = _ => ()): DataFrame = synchronized {
-    val conf = spark.sessionState.newHadoopConf()
-    val base = root(dir, table, subset, blockCap, conf)
-    recover(base)
-    require(new java.io.File(base, "_SUCCESS").isFile,
+             blockCap: Int = EntityResolution.defaultBlockCap): DataFrame = synchronized {
+    val base = root(dir, table, subset, blockCap, spark.sessionState.newHadoopConf())
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("pairs"),
       s"append requires a persisted index — ensure() first ($base)")
-    val old = graft.ReadCache.parquetLocal(spark, base).select("__sname", "__tok")
+    val old = readPairs(spark, base, s).select("__sname", "__tok")
     val batchPairs = uncappedPairs(newNames, nameCol)
       .join(old.select("__sname").distinct(), Seq("__sname"), "left_anti")
-    val merged = withOcc(old.unionByName(batchPairs))
-    val tmp = new java.io.File(base.getPath + "__compact")
-    graft.ArtifactKey.rmRecursive(tmp)
-    merged.write.mode("overwrite").parquet(tmp.getPath)
-    failpoint("committed")
-    // destructive phase — mirror of recover()'s roll-forward order
-    val oldDir = new java.io.File(base.getPath + "__precompact")
-    graft.ArtifactKey.rmRecursive(oldDir)
-    require(base.renameTo(oldDir), s"append stage failed: $base -> $oldDir")
-    failpoint("base-aside")
-    require(tmp.renameTo(base), s"append swap failed: $tmp -> $base")
-    failpoint("swapped")
-    graft.ArtifactKey.rmRecursive(oldDir)
-    capped(graft.ReadCache.parquetLocal(spark, base), blockCap)
+    val pairs = log.fresh("pairs")
+    withOcc(old.unionByName(batchPairs)).write.parquet(log.path(pairs).toString)
+    capped(readPairs(spark, base,
+      log.commit(s.copy(leaves = Map("pairs" -> pairs)))), blockCap)
   }
 }

@@ -16,9 +16,12 @@ import org.apache.spark.sql.functions._
   * invents time nor trusts wall clocks, so ordering is the caller's
   * contract (the same reason [[graft.analyze.Lifecycle.scd2ApplyBatch]]
   * takes the split from its caller). History volume is
-  * runs × checks rows — years of daily runs stay driver-trivial; the
-  * parquet append is one tiny file per run, and a periodic
-  * [[compact]] folds them (the ledger maintenance pass).
+  * runs × checks rows — years of daily runs stay driver-trivial; each
+  * append is one tiny file, and a periodic [[compact]] folds them.
+  *
+  * The store at `path` commits through a [[graft.StoreLog]] manifest
+  * that maps each period to the ONE directory authoritative for it, so
+  * readers never have to arbitrate between copies of a period.
   */
 object ReportStore {
 
@@ -28,97 +31,57 @@ object ReportStore {
     * deliberately not stored (history rows are observations; see
     * [[Checks.runByPeriod]]).
     *
-    * Idempotent PER PERIOD: each period writes its own subdirectory with
-    * overwrite semantics, so a replayed run (a restarted
-    * [[graft.streaming.Streaming.qualityDriftStream]] re-delivering a
-    * micro-batch under its own batch id) REPLACES its period instead of
-    * accumulating duplicate (period, check) rows that would double-count
-    * the trailing mean. [[load]] additionally collapses the
-    * replay-after-[[compact]] seam (old rows lifted to the top level by
-    * the fold) with the per-period subdirectory row winning — so a
-    * post-compact replay that CORRECTS a metric deterministically
-    * supersedes the compacted value.
+    * Idempotent PER PERIOD: the period's rows land in a fresh directory
+    * that the manifest then names as the period's source, so a replayed
+    * run (a restarted [[graft.streaming.Streaming.qualityDriftStream]]
+    * re-delivering a micro-batch under its own batch id) REPLACES its
+    * period instead of accumulating duplicate (period, check) rows that
+    * would double-count the trailing mean — also after a [[compact]]:
+    * a post-compact replay that CORRECTS a metric supersedes the
+    * compacted row.
     */
-  def append(report: DataFrame, path: String, period: String): Unit = {
+  def append(report: DataFrame, path: String, period: String): Unit = synchronized {
     require(period.nonEmpty && !period.contains("/") && !period.contains("\\"),
       s"period must be a plain path segment; got '$period'")
-    recover(report.sparkSession, path)
+    val log = open(report.sparkSession, path)
+    val s = log.snapshot
+    val dir = log.fresh("period")
     report.select(lit(period).as("period"), col("check_name"),
         col("col_name"), col("metric"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/$period")
+      .write.parquet(log.path(dir).toString)
+    log.commit(s.copy(keys = s.keys + (period -> dir)))
   }
 
-  /** Finish an interrupted [[compact]] before touching the store —
-    * called by EVERY entry point (append/load/compact), not just
-    * compact's preamble. Without this, a crash between compact's two
-    * swap renames (history parked at `__precompact`, live path absent)
-    * followed by the NEXT DAY's append would re-create the live path
-    * with one fresh period — and the next compact's "stale recovery
-    * copy" rule (old + live both present → drop old) would then delete
-    * the parked FULL HISTORY silently. Recovery first means the append
-    * lands on the restored store instead of a fresh one.
+  private def open(spark: SparkSession, path: String): graft.StoreLog =
+    graft.StoreLog.open(spark, new org.apache.hadoop.fs.Path(path))
+
+  /** The full metric history: (period, check_name, col_name, metric) —
+    * each period's rows read from the directory the manifest names for
+    * it.
     */
-  private def recover(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(old) && !fs.exists(p)) {
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"report-store recovery failed: $old -> $p")
-    }
+  def load(spark: SparkSession, path: String): DataFrame = synchronized {
+    read(spark, open(spark, path))
   }
 
-  /** The full metric history: (period, check_name, col_name, metric).
-    * Reads the per-period subdirectories and any compacted top-level
-    * files in one recursive scan. Duplicates from the replay-after-
-    * compact seam collapse DETERMINISTICALLY: a row whose file sits in
-    * its own `path/<period>/` subdirectory is a fresh (re-)append and
-    * wins over a compacted top-level row of the same (period, check,
-    * col) key — so a period replayed after a compact with a corrected
-    * metric always surfaces the correction, never an arbitrary survivor.
-    * (Metric is the final tie-break, so even a store whose files were
-    * hand-copied collapses reproducibly. Caveat: don't NAME the store
-    * directory itself like a period id — the parent-directory test is
-    * how freshness is recognized.)
-    */
-  def load(spark: SparkSession, path: String): DataFrame = {
-    recover(spark, path)
-    spark.read.option("recursiveFileLookup", "true").parquet(path)
-      .withColumn("__fresh",
-        element_at(split(input_file_name(), "/"), -2) === col("period"))
-      .groupBy("period", "check_name", "col_name")
-      .agg(max_by(col("metric"), struct(col("__fresh"), col("metric")))
-        .as("metric"))
+  private def read(spark: SparkSession, log: graft.StoreLog): DataFrame = {
+    require(log.snapshot.keys.nonEmpty, s"no report history at ${log.base}")
+    log.snapshot.keys.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, periods) =>
+      spark.read.parquet(log.path(dir).toString)
+        .filter(col("period").isin(periods.keys.toSeq.sorted: _*))
+    }.reduce(_.unionByName(_))
   }
 
   /** Rewrite the store as one compact file set (the HashLedger compact
-    * pass — a year of daily appends is 365 tiny files). Same two-rename
-    * swap discipline as [[graft.sink.ZOrderTable.compact]], including
-    * crash recovery from the `__precompact` copy.
+    * pass — a year of daily appends is 365 tiny files): every period
+    * then maps to the one folded directory.
     */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(old, p))
-          throw new java.io.IOException(s"report-store recovery failed: $old -> $p")
-      } else fs.delete(old, true)
-    }
-    load(spark, path).coalesce(1).write.parquet(tmp.toString)
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"report-store compact stage failed: $p -> $old")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p)
-      throw new java.io.IOException(s"report-store compact swap failed: $tmp -> $p")
-    }
-    fs.delete(old, true)
+  def compact(spark: SparkSession, path: String): Unit = synchronized {
+    val log = open(spark, path)
+    val s = log.snapshot
+    val dir = log.fresh("history")
+    read(spark, log).coalesce(1).write.parquet(log.path(dir).toString)
+    log.commit(s.copy(keys = s.keys.map { case (p, _) => p -> dir }))
   }
 
   /** Append `report` under `period`, then judge it against the stored

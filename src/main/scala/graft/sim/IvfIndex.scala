@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions.col
   * probing p cells of C reads p/C of the corpus bytes, not all of them
   * (the gate in PlanQualitySpec pins `dynamicpruning` in the s8 scan).
   *
-  * Reuse ladder (same as BucketedMirror): files on disk with `_SUCCESS`
-  * → read them back; nothing → build (the one-time scans). The index
+  * Reuse ladder: a committed [[graft.StoreLog]] manifest → read the
+  * directories it lists; none → build (the one-time scans) and commit.
+  * Builds, appends and compacts all commit through that log. The index
   * lives under target/ivf_index/<sf-tag> (untracked; deleting it forces
   * a rebuild — on a real cluster this is a warehouse table keyed by
   * corpus snapshot). Builds are serialized per JVM: Verify constructs
@@ -36,9 +37,10 @@ object IvfIndex {
     * otherwise silently serve stale cells. v2: per-`subset`
     * subdirectories (different indexed slices of one source must not
     * share a directory — the LshIndex convention) + idempotent
-    * [[append]] generations.
+    * [[append]] generations. v3: directories listed by a
+    * [[graft.StoreLog]] manifest.
     */
-  private val version = "v2"
+  private val version = "v3"
 
   /** Index root for a source dir — key scheme and its rationale in
     * [[graft.ArtifactKey]] (basename + path hash + content stamp).
@@ -56,10 +58,6 @@ object IvfIndex {
   def drop(dir: String, subset: String = "all"): Unit =
     graft.ArtifactKey.rmRecursive(root(dir, subset))
 
-  /** The (assigned corpus, centroids) pair for `<dir>`'s corpus:
-    * columns (idCol, vecCol, __qc, __sc, __cell) with __cell as the
-    * PARTITION column. `corpus` is only scanned on a cold build.
-    */
   /** Empty-corpus results memoized per (SparkSession, stamped base path):
     * nothing is persisted for an empty corpus, so the memo is what keeps
     * repeat ensure() calls from re-evaluating the by-name corpus and
@@ -78,90 +76,96 @@ object IvfIndex {
       : scala.collection.mutable.HashMap[String, (DataFrame, Seq[Seq[Double]])] =
     emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
 
+  /** The (assigned corpus, centroids) pair for `<dir>`'s corpus:
+    * columns (idCol, vecCol, __qc, __sc, __cell) with __cell as the
+    * PARTITION column. `corpus` is only scanned on a cold build.
+    */
   def ensure(spark: SparkSession, dir: String, corpus: => DataFrame,
              idCol: String = "vec_id", vecCol: String = "embedding",
              subset: String = "all"): (DataFrame, Seq[Seq[Double]]) = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    recover(base)
-    val corpusPath = new java.io.File(base, "corpus").getPath
-    val centsPath = new java.io.File(base, "centroids").getPath
-    if (!new java.io.File(corpusPath, "_SUCCESS").isFile ||
-        !new java.io.File(centsPath, "_SUCCESS").isFile) {
-      sessionMemo(spark).get(base.getPath) match {
-        case Some(h) => return h
-        case None =>
-      }
-      // a cold build supersedes every older stamp of the same source —
-      // without this each regeneration strands a full-size index copy
-      // (the whole stamped dir goes, all subsets: they are slices of
-      // the same now-stale content)
-      graft.ArtifactKey.dropSuperseded(
-        base.getParentFile.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
-        base.getParentFile.getName)
-      val df = corpus
-      val n = Similarity.countRows(df)
-      if (n == 0) {
-        // nothing to persist: an empty parquet dir can't be read back
-        // (no footer to infer a schema from), and repartition(0 cells)
-        // throws — return the inline paths' empty-corpus contract
-        // (empty assigned frame, no centroids) without writing an index
-        val h = (Similarity.assignCells(df, Seq.empty, idCol, vecCol),
-          Seq.empty[Seq[Double]])
-        sessionMemo(spark)(base.getPath) = h
-        return h
-      }
-      val cells = Similarity.autoCells(n)
-      // a cold build starts a fresh index lifetime: a folded-keys ledger
-      // surviving from a prior lifetime at this path would wrongly no-op
-      // appends that reuse a batch key — and a surviving generation dir
-      // would union a PRIOR lifetime's rows into the fresh index
-      foldedKeysFile(base).delete()
-      genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
-      val cents = Similarity.kmeansCentroids(df, cells, 0, idCol, vecCol)
-        .map(_.toSeq).toSeq
-      // centroids persist beside the corpus: probe selection must use the
-      // EXACT quantizer the cells were assigned with, across JVMs
-      import spark.implicits._
-      cents.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(centsPath)
-      // repartition by the cell id first: the hash layout puts each cell's
-      // rows in exactly one task, so partitionBy writes ONE file per cell
-      // directory (the BucketedMirror alignment trick)
-      Similarity.assignCells(df, cents, idCol, vecCol)
-        .repartition(cents.length, col("__cell"))
-        .write.mode("overwrite").partitionBy("__cell").parquet(corpusPath)
+    val log = graft.StoreLog.open(spark, base)
+    if (log.snapshot.leaves.contains("corpus")) return handle(spark, base, log.snapshot)
+    sessionMemo(spark).get(base.getPath) match {
+      case Some(h) => return h
+      case None =>
     }
-    (readAll(spark, base), readCents(spark, centsPath))
+    // a cold build supersedes every older stamp of the same source —
+    // without this each regeneration strands a full-size index copy
+    // (the whole stamped dir goes, all subsets: they are slices of
+    // the same now-stale content)
+    graft.ArtifactKey.dropSuperseded(
+      base.getParentFile.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
+      base.getParentFile.getName)
+    val df = corpus
+    val n = Similarity.countRows(df)
+    if (n == 0) {
+      // nothing to persist: an empty parquet dir can't be read back
+      // (no footer to infer a schema from), and repartition(0 cells)
+      // throws — return the inline paths' empty-corpus contract
+      // (empty assigned frame, no centroids) without writing an index
+      val h = (Similarity.assignCells(df, Seq.empty, idCol, vecCol),
+        Seq.empty[Seq[Double]])
+      sessionMemo(spark)(base.getPath) = h
+      return h
+    }
+    val cells = Similarity.autoCells(n)
+    val cents = Similarity.kmeansCentroids(df, cells, 0, idCol, vecCol)
+      .map(_.toSeq).toSeq
+    // centroids persist beside the corpus: probe selection must use the
+    // EXACT quantizer the cells were assigned with, across JVMs
+    import spark.implicits._
+    val centsDir = log.fresh("centroids")
+    cents.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("cell", "centroid")
+      .coalesce(1).write.parquet(log.path(centsDir).toString)
+    // repartition by the cell id first: the hash layout puts each cell's
+    // rows in exactly one task, so partitionBy writes ONE file per cell
+    // directory (the BucketedMirror alignment trick)
+    val corpusDir = log.fresh("corpus")
+    Similarity.assignCells(df, cents, idCol, vecCol)
+      .repartition(cents.length, col("__cell"))
+      .write.partitionBy("__cell").parquet(log.path(corpusDir).toString)
+    // a cold build starts a fresh index lifetime: no generations and no
+    // folded keys carry over from whatever the base held before
+    handle(spark, base, log.commit(graft.StoreSnapshot(
+      leaves = Map("corpus" -> corpusDir, "centroids" -> centsDir))))
   }
 
-  /** The persisted centroid matrix, memoized per (session, path, content
-    * fingerprint) — [[graft.ReadCache]] — so a warm ensure/append/search
-    * pays a metadata walk, not a read + collect job, per access.
+  /** The persisted centroid matrix of a committed index, memoized per
+    * (session, path, content fingerprint) — [[graft.ReadCache]] — so a
+    * warm ensure/append/search pays a metadata walk, not a read +
+    * collect job, per access.
     */
-  private def readCents(spark: SparkSession, centsPath: String): Seq[Seq[Double]] =
-    graft.ReadCache.collectedLocal(spark, new java.io.File(centsPath)) { df =>
+  private def readCents(spark: SparkSession, base: java.io.File,
+                        s: graft.StoreSnapshot): Seq[Seq[Double]] =
+    graft.ReadCache.collectedLocal(spark, new java.io.File(base, s.leaves("centroids"))) { df =>
       df.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1)
         .map(_._2).toSeq
     }
 
-  /** The assigned frame: base corpus plus every completed [[append]]
-    * generation (each its own cell-partitioned parquet root, so dynamic
-    * partition pruning applies to all of them alike).
+  /** The committed centroids of `<dir>`'s index — the quantizer
+    * [[IvfPqIndex]] assigns cells with. Fails loudly when the index was
+    * dropped: the composed index must never re-derive a quantizer.
     */
-  private def readAll(spark: SparkSession, base: java.io.File): DataFrame = {
-    val gens = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("append_") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getPath).sorted
-    // one read per root, unioned: a multi-path partitioned read trips
-    // partition-structure inference; per-root scans also keep partition
-    // (cell) pruning per generation. Handles are ReadCache-memoized: a
-    // rewritten root (overwrite, compact swap) re-reads, an unchanged one
-    // skips the per-read listing + schema-inference job.
-    (new java.io.File(base, "corpus") +: gens.toSeq.map(new java.io.File(_)))
-      .map(graft.ReadCache.parquetLocal(spark, _)).reduce(_.unionByName(_))
+  private[sim] def centroids(spark: SparkSession, dir: String,
+                             subset: String): Seq[Seq[Double]] = synchronized {
+    val base = root(dir, subset, spark.sessionState.newHadoopConf())
+    val s = graft.StoreLog.open(spark, base).snapshot
+    require(s.leaves.contains("centroids"),
+      s"missing sibling IVF centroids at $base — the composed index " +
+        "cannot assign cells without the exact quantizer it was built with")
+    readCents(spark, base, s)
   }
+
+  /** The assigned frame: base corpus plus every [[append]] generation
+    * (each its own cell-partitioned parquet root, so dynamic partition
+    * pruning applies to all of them alike), with the centroids.
+    */
+  private def handle(spark: SparkSession, base: java.io.File,
+                     s: graft.StoreSnapshot): (DataFrame, Seq[Seq[Double]]) =
+    (graft.StoreLog.readLocal(spark, base, s.generations("corpus")),
+      readCents(spark, base, s))
 
   /** Fold a batch of NEW vectors into the persisted index — the
     * index-MAINTENANCE rung (the LshIndex/HashLedger/EdgeIndex story
@@ -177,9 +181,10 @@ object IvfIndex {
     * centroids, so searching the appended index is IDENTICAL to
     * searching a cold index built over corpus ∪ batches with the same
     * centroids (SimilaritySpec gates the bit equality). IDEMPOTENT per
-    * `batchKey` — a replayed batch overwrites its own generation
-    * instead of double-counting (the ReportStore discipline), so
-    * at-least-once drivers are safe.
+    * `batchKey` — a replayed batch replaces its own generation instead
+    * of double-counting, and a replay of a batch [[compact]] already
+    * folded is a no-op (duplicate vector rows would rank one neighbor
+    * into two top-k slots), so at-least-once drivers are safe.
     *
     * Returns the refreshed (assigned frame incl. all generations,
     * centroids). Requires an existing index (there is no quantizer to
@@ -193,104 +198,54 @@ object IvfIndex {
       c.isLetterOrDigit || c == '-' || c == '_'),
       s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    recover(base)
-    val corpusPath = new java.io.File(base, "corpus").getPath
-    val centsPath = new java.io.File(base, "centroids").getPath
-    require(new java.io.File(corpusPath, "_SUCCESS").isFile &&
-      new java.io.File(centsPath, "_SUCCESS").isFile,
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("corpus"),
       s"no persisted index at $base — ensure() a base corpus before append()")
-    val cents = readCents(spark, centsPath)
-    // a batchKey whose generation was already FOLDED by [[compact]] must
-    // no-op, not re-append: its rows live in the corpus leaf now, and a
-    // re-created generation would double-count them (duplicate vector
-    // rows rank the same neighbor into two top-k slots). This closes the
-    // at-least-once window compact would otherwise reopen — the
-    // folded-keys ledger commits atomically with the fold itself.
-    if (readFoldedKeys(base).contains(batchKey)) return (readAll(spark, base), cents)
+    if (s.folded.contains(batchKey)) return handle(spark, base, s)
+    val cents = readCents(spark, base, s)
+    val gen = log.fresh(s"append_$batchKey")
     Similarity.assignCells(batch, cents, idCol, vecCol)
       .repartition(cents.length, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(new java.io.File(base, s"append_$batchKey").getPath)
-    (readAll(spark, base), cents)
+      .write.partitionBy("__cell").parquet(log.path(gen).toString)
+    handle(spark, base, log.commit(s.copy(keys = s.keys + (batchKey -> gen))))
   }
 
-  /** Single-leaf maintenance mechanics shared with [[PqIndex]] /
-    * [[IvfPqIndex]] — see [[IndexMaintenance]] for the crash-safety
-    * contract (recovery of an interrupted compact, the folded-keys
-    * replay ledger, the generation fold).
-    */
-  private def recover(base: java.io.File): Unit =
-    IndexMaintenance.recover(base, "corpus")
-
-  private def readFoldedKeys(base: java.io.File): Set[String] =
-    IndexMaintenance.readFoldedKeys(base)
-
-  private def foldedKeysFile(base: java.io.File): java.io.File =
-    IndexMaintenance.foldedKeysFile(base)
-
-  private def genDirs(base: java.io.File): Array[java.io.File] =
-    IndexMaintenance.genDirs(base)
-
-  /** Fold every completed [[append]] generation back into the base
-    * corpus leaf — the maintenance pass that keeps the probe's file
-    * economics flat after a year of daily appends (each generation is
-    * one small parquet file per touched cell directory; scan cost and
-    * the DPP directory pruning degrade with file COUNT, not bytes).
-    * After it the index is one file per cell in one root again, exactly
-    * as a cold build over corpus ∪ batches would have written it.
+  /** Fold every [[append]] generation back into the base corpus leaf —
+    * the maintenance pass that keeps the probe's file economics flat
+    * after a year of daily appends (each generation is one small parquet
+    * file per touched cell directory; scan cost and the DPP directory
+    * pruning degrade with file COUNT, not bytes). After it the index is
+    * one file per cell in one root again, exactly as a cold build over
+    * corpus ∪ batches would have written it.
     *
     * Rows are preserved exactly — compaction is a permutation, so
     * search results are bit-identical before and after (gated in
     * SimilaritySpec), and the centroids are untouched (re-sizing the
-    * quantizer is a rebuild: [[drop]] + [[ensure]], by definition).
-    * The folded batch keys land in a ledger file committed atomically
-    * with the fold, so [[append]] can no-op an at-least-once replay of
-    * a batch whose generation no longer exists — without it, the
-    * replay would re-create rows the fold already holds and duplicate
-    * vectors would rank one neighbor into two top-k slots.
-    *
-    * Crash safety follows [[graft.sink.ZOrderTable.compact]]'s
-    * two-rename discipline extended to the generation fold: the fresh
-    * layout is fully written beside the live tree first (its `_SUCCESS`
-    * is the commit point), and only then are generations deleted and
-    * the corpus leaf swapped (live → `__precompact`, fold → live, drop
-    * the parked copy). A crash at ANY point leaves a state [[recover]]
-    * — run by every entry — finishes or undoes; the swap window itself
-    * is two metadata renames. Run offline, like every maintenance pass
-    * here (concurrent cross-JVM appends during the fold are out of
-    * contract, same as HashLedger/LshIndex). `failpoint` is a test
-    * hook: SimilaritySpec throws from it at each phase label to prove
-    * the recovery claims against the REAL crash states.
+    * quantizer is a rebuild: [[drop]] + [[ensure]], by definition). The
+    * folded batch keys commit in the same manifest as the fold, so
+    * [[append]] no-ops an at-least-once replay of a folded batch. Run
+    * offline, like every maintenance pass here.
     */
-  def compact(spark: SparkSession, dir: String, subset: String = "all",
-              failpoint: String => Unit = _ => ()): (DataFrame, Seq[Seq[Double]]) = synchronized {
+  def compact(spark: SparkSession, dir: String,
+              subset: String = "all"): (DataFrame, Seq[Seq[Double]]) = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    recover(base)
-    val corpusDir = new java.io.File(base, "corpus")
-    val centsPath = new java.io.File(base, "centroids").getPath
-    require(new java.io.File(corpusDir, "_SUCCESS").isFile &&
-      new java.io.File(centsPath, "_SUCCESS").isFile,
-      s"compact requires a persisted index — ensure() first ($corpusDir)")
-    val cents = readCents(spark, centsPath)
-    val tmp = new java.io.File(base, "corpus__compact")
-    graft.ArtifactKey.rmRecursive(tmp)
-    // stage the folded-keys ledger FIRST (harmless alone — rollback
-    // discards it): mark exactly the COMPLETED generations the fold
-    // below reads, never incomplete ones (see IndexMaintenance)
-    IndexMaintenance.stageFoldedKeys(base, genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile).map(_.getName))
-    // source and destination are different directories, so the fold
-    // streams old files into new ones — no checkpoint, no driver state;
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("corpus"),
+      s"compact requires a persisted index — ensure() first ($base)")
+    val (all, cents) = handle(spark, base, s)
     // the same one-task-per-cell repartition alignment as the build
     // writes ONE file per cell directory. Replayed rows need no dedup
-    // here BY CONSTRUCTION: a pre-fold replay overwrites its own
-    // generation, a post-fold replay no-ops on the keys ledger — an
+    // here BY CONSTRUCTION: a pre-fold replay replaces its own
+    // generation, a post-fold replay no-ops on the folded keys — an
     // unconditional distinct() over array columns would be the fold's
     // dominant shuffle for zero rows removed.
-    readAll(spark, base)
-      .repartition(cents.length, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(tmp.getPath)
-    IndexMaintenance.finishCompact(base, "corpus", failpoint)
-    (readAll(spark, base), cents)
+    val corpusDir = log.fresh("corpus")
+    all.repartition(cents.length, col("__cell"))
+      .write.partitionBy("__cell").parquet(log.path(corpusDir).toString)
+    handle(spark, base, log.commit(s.copy(
+      leaves = s.leaves + ("corpus" -> corpusDir), keys = Map.empty,
+      folded = s.folded ++ s.keys.keys)))
   }
 }

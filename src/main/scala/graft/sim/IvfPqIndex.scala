@@ -17,13 +17,14 @@ import org.apache.spark.sql.functions.col
   * persist beside their own index) and pays one extra build-time
   * equi-join of the two frames on the vector id to lay codes out by
   * cell. Reuse ladder / artifact keying / empty-corpus memo identical
-  * to [[IvfIndex]]; [[append]]/[[compact]] maintenance mechanics are
-  * [[IndexMaintenance]]'s (shared with IvfIndex/PqIndex).
+  * to [[IvfIndex]]; [[append]]/[[compact]] commit through the same
+  * [[graft.StoreLog]] manifest as IvfIndex/PqIndex.
   */
 object IvfPqIndex {
 
-  /** v2: per-`subset` keying + idempotent [[append]] generations. */
-  private val version = "v2"
+  /** v2: per-`subset` keying + idempotent [[append]] generations.
+    * v3: directories listed by a [[graft.StoreLog]] manifest. */
+  private val version = "v3"
 
   def root(dir: String,
            hadoopConf: org.apache.hadoop.conf.Configuration =
@@ -44,20 +45,14 @@ object IvfPqIndex {
       : scala.collection.mutable.HashMap[String, (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]])] =
     emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
 
-  /** The cell-partitioned code table: base build plus every completed
-    * [[append]] generation (each its own cell-partitioned root, so
-    * dynamic partition pruning applies to all of them alike — the
-    * IvfIndex shape).
+  /** The cell-partitioned code table: base build plus every [[append]]
+    * generation (each its own cell-partitioned root, so dynamic
+    * partition pruning applies to all of them alike — the IvfIndex
+    * shape).
     */
-  private def readAll(spark: SparkSession, base: java.io.File): DataFrame = {
-    val gens = IndexMaintenance.genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile)
-      .sorted
-    // handles ReadCache-memoized like IvfIndex.readAll: unchanged roots
-    // skip the per-read listing + schema-inference job
-    (new java.io.File(base, "codes_by_cell") +: gens.toSeq)
-      .map(graft.ReadCache.parquetLocal(spark, _)).reduce(_.unionByName(_))
-  }
+  private def readAll(spark: SparkSession, base: java.io.File,
+                      s: graft.StoreSnapshot): DataFrame =
+    graft.StoreLog.readLocal(spark, base, s.generations("codes_by_cell"))
 
   /** The (cell-partitioned code table, IVF centroids, PQ codebooks)
     * triple for `<dir>`'s corpus: codes are (idCol, __codes, __cell)
@@ -74,34 +69,30 @@ object IvfPqIndex {
     val (codes, cb) = PqIndex.ensure(spark, dir, corpus,
       idCol = idCol, vecCol = vecCol, subset = subset)
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes_by_cell")
-    val joinedPath = new java.io.File(base, "codes_by_cell").getPath
-    if (!new java.io.File(joinedPath, "_SUCCESS").isFile) {
-      sessionMemo(spark).get(base.getPath) match {
-        case Some(h) => return h
-        case None =>
-      }
-      if (cb.isEmpty || cents.isEmpty) {
-        val h = (codes.select(col(idCol)).limit(0), cents, cb)
-        sessionMemo(spark)(base.getPath) = h
-        return h
-      }
-      graft.ArtifactKey.dropSuperseded(
-        base.getParentFile.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
-        base.getParentFile.getName)
-      // a cold build starts a fresh index lifetime (see IndexMaintenance):
-      // drop the ledger AND any prior lifetime's generation dirs (their
-      // rows would otherwise union into the fresh index)
-      IndexMaintenance.foldedKeysFile(base).delete()
-      IndexMaintenance.genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
-      // one build-time equi-join lays the codes out by cell; repartition
-      // on the cell first so partitionBy writes ONE file per cell
-      // directory (the IvfIndex alignment trick)
-      codes.join(assigned.select(col(idCol), col("__cell")), Seq(idCol))
-        .repartition(cents.length, col("__cell"))
-        .write.mode("overwrite").partitionBy("__cell").parquet(joinedPath)
+    val log = graft.StoreLog.open(spark, base)
+    if (log.snapshot.leaves.contains("codes_by_cell"))
+      return (readAll(spark, base, log.snapshot), cents, cb)
+    sessionMemo(spark).get(base.getPath) match {
+      case Some(h) => return h
+      case None =>
     }
-    (readAll(spark, base), cents, cb)
+    if (cb.isEmpty || cents.isEmpty) {
+      val h = (codes.select(col(idCol)).limit(0), cents, cb)
+      sessionMemo(spark)(base.getPath) = h
+      return h
+    }
+    graft.ArtifactKey.dropSuperseded(
+      base.getParentFile.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
+      base.getParentFile.getName)
+    // one build-time equi-join lays the codes out by cell; repartition
+    // on the cell first so partitionBy writes ONE file per cell
+    // directory (the IvfIndex alignment trick)
+    val joined = log.fresh("codes_by_cell")
+    codes.join(assigned.select(col(idCol), col("__cell")), Seq(idCol))
+      .repartition(cents.length, col("__cell"))
+      .write.partitionBy("__cell").parquet(log.path(joined).toString)
+    (readAll(spark, base, log.commit(graft.StoreSnapshot(
+      leaves = Map("codes_by_cell" -> joined)))), cents, cb)
   }
 
   /** Fold a batch of NEW vectors into the composed index — the s13/s15
@@ -113,7 +104,7 @@ object IvfPqIndex {
     * .append]], [[PqIndex.append]]) — this folds the batch into the
     * artifact the composed SEARCH actually scans. IDEMPOTENT per
     * `batchKey`; a replay of a batch [[compact]] already folded no-ops
-    * on the keys ledger. Requires an existing composed index (there are
+    * on the folded keys. Requires an existing composed index (there are
     * no quantizers to encode against otherwise) — seed with [[ensure]].
     */
   def append(spark: SparkSession, dir: String, batchKey: String,
@@ -124,17 +115,18 @@ object IvfPqIndex {
       c.isLetterOrDigit || c == '-' || c == '_'),
       s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes_by_cell")
-    require(new java.io.File(new java.io.File(base, "codes_by_cell"), "_SUCCESS").isFile,
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("codes_by_cell"),
       s"no persisted index at $base — ensure() a base corpus before append()")
     val (cents, cb) = quantizers(spark, dir, subset)
-    if (IndexMaintenance.readFoldedKeys(base).contains(batchKey))
-      return (readAll(spark, base), cents, cb)
+    if (s.folded.contains(batchKey)) return (readAll(spark, base, s), cents, cb)
     // ONE map-side pass derives codes AND cell per batch row (both are
     // pure per-row functions of the frozen quantizers over the same
-    // frame) — the previous encode-frame ⋈ assign-frame equi-join on the
-    // id re-scanned the batch twice and paid a join exchange to reunite
+    // frame) — an encode-frame ⋈ assign-frame equi-join on the id would
+    // re-scan the batch twice and pay a join exchange to reunite
     // columns that never needed separating
+    val gen = log.fresh(s"append_$batchKey")
     Similarity.withUnitNorm(batch, vecCol, "__unit")
       .select(col(idCol),
         org.apache.spark.sql.graft.PqFunctions
@@ -142,66 +134,39 @@ object IvfPqIndex {
         org.apache.spark.sql.graft.VectorFunctions
           .nearestCellsNative(col(vecCol), cents, 1).getItem(0).as("__cell"))
       .repartition(cents.length, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(new java.io.File(base, s"append_$batchKey").getPath)
-    (readAll(spark, base), cents, cb)
+      .write.partitionBy("__cell").parquet(log.path(gen).toString)
+    (readAll(spark, base, log.commit(s.copy(keys = s.keys + (batchKey -> gen)))), cents, cb)
   }
 
-  /** Fold every completed [[append]] generation back into the base
-    * leaf — one file per cell again ([[IvfIndex.compact]], applied to
-    * the composed layout). Rows preserved exactly; both quantizers
-    * untouched. Crash safety and the folded-keys ledger are
-    * [[IndexMaintenance]]'s. Run offline.
+  /** Fold every [[append]] generation back into the base leaf — one
+    * file per cell again ([[IvfIndex.compact]], applied to the composed
+    * layout). Rows preserved exactly; both quantizers untouched; the
+    * folded keys commit with the fold. Run offline.
     */
-  def compact(spark: SparkSession, dir: String, subset: String = "all",
-              failpoint: String => Unit = _ => ()
+  def compact(spark: SparkSession, dir: String, subset: String = "all"
              ): (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes_by_cell")
-    require(new java.io.File(new java.io.File(base, "codes_by_cell"), "_SUCCESS").isFile,
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("codes_by_cell"),
       s"compact requires a persisted index — ensure() first ($base)")
     val (cents, cb) = quantizers(spark, dir, subset)
-    val tmp = new java.io.File(base, "codes_by_cell__compact")
-    graft.ArtifactKey.rmRecursive(tmp)
-    IndexMaintenance.stageFoldedKeys(base, IndexMaintenance.genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile).map(_.getName))
-    readAll(spark, base)
+    val joined = log.fresh("codes_by_cell")
+    readAll(spark, base, s)
       .repartition(cents.length, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(tmp.getPath)
-    IndexMaintenance.finishCompact(base, "codes_by_cell", failpoint)
-    (readAll(spark, base), cents, cb)
+      .write.partitionBy("__cell").parquet(log.path(joined).toString)
+    (readAll(spark, base, log.commit(s.copy(
+      leaves = s.leaves + ("codes_by_cell" -> joined), keys = Map.empty,
+      folded = s.folded ++ s.keys.keys))), cents, cb)
   }
 
   /** The frozen quantizer pair, read from the SIBLING indexes'
-    * persisted artifacts (one quantizer discipline: the composed leaf
+    * committed artifacts (one quantizer discipline: the composed leaf
     * was laid out with exactly these; across JVMs the files are the
     * only truth). Fails loudly if a sibling was dropped out from under
     * the composed index.
     */
   private def quantizers(spark: SparkSession, dir: String,
-                         subset: String): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val centsPath = new java.io.File(IvfIndex.root(dir, subset, conf), "centroids")
-    val booksPath = new java.io.File(PqIndex.root(dir, hadoopConf = conf, subset = subset), "codebooks")
-    require(new java.io.File(centsPath, "_SUCCESS").isFile,
-      s"missing sibling IVF centroids at $centsPath — the composed index " +
-        "cannot assign cells without the exact quantizer it was built with")
-    require(new java.io.File(booksPath, "_SUCCESS").isFile,
-      s"missing sibling PQ codebooks at $booksPath — the composed index " +
-        "cannot encode without the exact quantizer it was built with")
-    // both sidecars memoized per (session, path, content fingerprint) —
-    // [[graft.ReadCache]] — so a warm append/compact pays two metadata
-    // walks, not two read + collect jobs
-    val cents = graft.ReadCache.collectedLocal(spark, centsPath) { df =>
-      df.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1)
-        .map(_._2).toSeq
-    }
-    val cb = graft.ReadCache.collectedLocal(spark, booksPath) { df =>
-      val books = df.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      books.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, rows) =>
-        rows.sortBy(_._2).map(_._3.toSeq).toSeq
-      }
-    }
-    (cents, cb)
-  }
+                         subset: String): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) =
+    (IvfIndex.centroids(spark, dir, subset), PqIndex.codebooks(spark, dir, subset))
 }

@@ -40,8 +40,9 @@ object PqIndex {
     * share a parent with. v3: per-`subset` keying (different indexed
     * slices of one source must not share a directory — the
     * LshIndex/IvfIndex convention) + idempotent [[append]] generations.
+    * v4: directories listed by a [[graft.StoreLog]] manifest.
     */
-  private val version = "v3"
+  private val version = "v4"
 
   /** Geometry leg of the artifact key: codes written at one (m, ksub)
     * must never be served to an ensure() asking for another — the ADC
@@ -84,74 +85,79 @@ object PqIndex {
              subset: String = "all"
             ): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes")
-    val codesPath = new java.io.File(base, "codes").getPath
-    val booksPath = new java.io.File(base, "codebooks").getPath
-    if (!new java.io.File(codesPath, "_SUCCESS").isFile ||
-        !new java.io.File(booksPath, "_SUCCESS").isFile) {
-      sessionMemo(spark).get(base.getPath) match {
-        case Some(h) => return h
-        case None =>
-      }
-      // superseded = older CONTENT stamps of the same source (siblings of
-      // the stamped dir); geometry variants live INSIDE one stamped dir
-      // and coexist
-      val stampedDir = base.getParentFile
-      graft.ArtifactKey.dropSuperseded(
-        stampedDir.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
-        stampedDir.getName)
-      val df = corpus
-      val cb = Similarity.pqTrain(df, m, ksub, iters = 2, idCol, vecCol)
-      if (cb.isEmpty) {
-        // empty corpus: nothing to persist (no parquet footer to read
-        // back) — return the inline paths' empty contract without
-        // writing an index
-        val h = (df.select(col(idCol)).limit(0), Seq.empty[Seq[Seq[Double]]])
-        sessionMemo(spark)(base.getPath) = h
-        return h
-      }
-      // a cold build starts a fresh index lifetime: a folded-keys ledger
-      // surviving from a prior lifetime would wrongly no-op appends that
-      // reuse a batch key — and a surviving generation dir would union a
-      // PRIOR lifetime's rows into the fresh index
-      IndexMaintenance.foldedKeysFile(base).delete()
-      IndexMaintenance.genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
-      // codebooks persist beside the codes: ADC LUTs must use the EXACT
-      // quantizer the codes were written with, across JVMs
-      import spark.implicits._
-      cb.zipWithIndex.flatMap { case (book, s) =>
-        book.zipWithIndex.map { case (cent, c) => (s, c, cent) }
-      }.toDF("sub", "cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(booksPath)
-      Similarity.pqEncode(df, cb, idCol, vecCol)
-        .write.mode("overwrite").parquet(codesPath)
+    val log = graft.StoreLog.open(spark, base)
+    if (log.snapshot.leaves.contains("codes")) return handle(spark, base, log.snapshot)
+    sessionMemo(spark).get(base.getPath) match {
+      case Some(h) => return h
+      case None =>
     }
-    (readAll(spark, base), readBooks(spark, booksPath))
+    // superseded = older CONTENT stamps of the same source (siblings of
+    // the stamped dir); geometry variants live INSIDE one stamped dir
+    // and coexist
+    val stampedDir = base.getParentFile
+    graft.ArtifactKey.dropSuperseded(
+      stampedDir.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
+      stampedDir.getName)
+    val df = corpus
+    val cb = Similarity.pqTrain(df, m, ksub, iters = 2, idCol, vecCol)
+    if (cb.isEmpty) {
+      // empty corpus: nothing to persist (no parquet footer to read
+      // back) — return the inline paths' empty contract without
+      // writing an index
+      val h = (df.select(col(idCol)).limit(0), Seq.empty[Seq[Seq[Double]]])
+      sessionMemo(spark)(base.getPath) = h
+      return h
+    }
+    // codebooks persist beside the codes: ADC LUTs must use the EXACT
+    // quantizer the codes were written with, across JVMs
+    import spark.implicits._
+    val booksDir = log.fresh("codebooks")
+    cb.zipWithIndex.flatMap { case (book, s) =>
+      book.zipWithIndex.map { case (cent, c) => (s, c, cent) }
+    }.toDF("sub", "cell", "centroid")
+      .coalesce(1).write.parquet(log.path(booksDir).toString)
+    val codesDir = log.fresh("codes")
+    Similarity.pqEncode(df, cb, idCol, vecCol).write.parquet(log.path(codesDir).toString)
+    // a cold build starts a fresh index lifetime (see IvfIndex.ensure)
+    handle(spark, base, log.commit(graft.StoreSnapshot(
+      leaves = Map("codes" -> codesDir, "codebooks" -> booksDir))))
   }
 
-  /** The persisted codebooks, memoized per (session, path, content
-    * fingerprint) — [[graft.ReadCache]] — so a warm ensure/append/search
-    * pays a metadata walk, not a read + collect job, per access.
+  /** The persisted codebooks of a committed index, memoized per
+    * (session, path, content fingerprint) — [[graft.ReadCache]] — so a
+    * warm ensure/append/search pays a metadata walk, not a read +
+    * collect job, per access.
     */
-  private def readBooks(spark: SparkSession, booksPath: String): Seq[Seq[Seq[Double]]] =
-    graft.ReadCache.collectedLocal(spark, new java.io.File(booksPath)) { df =>
+  private def readBooks(spark: SparkSession, base: java.io.File,
+                        s: graft.StoreSnapshot): Seq[Seq[Seq[Double]]] =
+    graft.ReadCache.collectedLocal(spark, new java.io.File(base, s.leaves("codebooks"))) { df =>
       val books = df.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
       books.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, rows) =>
         rows.sortBy(_._2).map(_._3.toSeq).toSeq
       }
     }
 
-  /** The code table: base build plus every completed [[append]]
-    * generation, one read per root unioned (the IvfIndex shape; handles
-    * ReadCache-memoized like IvfIndex.readAll).
+  /** The committed codebooks of `<dir>`'s auto-geometry index — the
+    * quantizer [[IvfPqIndex]] encodes with. Fails loudly when the index
+    * was dropped: the composed index must never re-derive a quantizer.
     */
-  private def readAll(spark: SparkSession, base: java.io.File): DataFrame = {
-    val gens = IndexMaintenance.genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile)
-      .sorted
-    (new java.io.File(base, "codes") +: gens.toSeq)
-      .map(graft.ReadCache.parquetLocal(spark, _)).reduce(_.unionByName(_))
+  private[sim] def codebooks(spark: SparkSession, dir: String,
+                             subset: String): Seq[Seq[Seq[Double]]] = synchronized {
+    val base = root(dir, hadoopConf = spark.sessionState.newHadoopConf(), subset = subset)
+    val s = graft.StoreLog.open(spark, base).snapshot
+    require(s.leaves.contains("codebooks"),
+      s"missing sibling PQ codebooks at $base — the composed index " +
+        "cannot encode without the exact quantizer it was built with")
+    readBooks(spark, base, s)
   }
+
+  /** The code table — base build plus every [[append]] generation (the
+    * IvfIndex shape) — with the codebooks.
+    */
+  private def handle(spark: SparkSession, base: java.io.File,
+                     s: graft.StoreSnapshot): (DataFrame, Seq[Seq[Seq[Double]]]) =
+    (graft.StoreLog.readLocal(spark, base, s.generations("codes")),
+      readBooks(spark, base, s))
 
   /** Fold a batch of NEW vectors into the persisted code table — the
     * [[IvfIndex.append]] rung for the compression path: batch rows
@@ -162,8 +168,8 @@ object PqIndex {
     * re-scanned and the ADC search scans the appended table exactly as
     * it would a cold same-codebook encode of corpus ∪ batches
     * (SimilaritySpec gates the bit equality). IDEMPOTENT per
-    * `batchKey` — a replay overwrites its own generation, and a replay
-    * of a batch [[compact]] already folded no-ops on the keys ledger.
+    * `batchKey` — a replay replaces its own generation, and a replay of
+    * a batch [[compact]] already folded no-ops on the folded keys.
     */
   def append(spark: SparkSession, dir: String, batchKey: String,
              batch: DataFrame, m: Int = 0, ksub: Int = 0,
@@ -173,59 +179,45 @@ object PqIndex {
       c.isLetterOrDigit || c == '-' || c == '_'),
       s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes")
-    val codesPath = new java.io.File(base, "codes").getPath
-    val booksPath = new java.io.File(base, "codebooks").getPath
-    require(new java.io.File(codesPath, "_SUCCESS").isFile &&
-      new java.io.File(booksPath, "_SUCCESS").isFile,
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("codes"),
       s"no persisted index at $base — ensure() a base corpus before append()")
-    val cb = readBooks(spark, booksPath)
-    if (IndexMaintenance.readFoldedKeys(base).contains(batchKey))
-      return (readAll(spark, base), cb)
+    if (s.folded.contains(batchKey)) return handle(spark, base, s)
+    val gen = log.fresh(s"append_$batchKey")
     // REBALANCE (AQE) sizes the generation's files (the SrpIndex.append
     // note): un-hinted, the codes land in the batch's input partitioning
     // — dozens of near-empty files per append at test scale
-    Similarity.pqEncode(batch, cb, idCol, vecCol).hint("rebalance")
-      .write.mode("overwrite")
-      .parquet(new java.io.File(base, s"append_$batchKey").getPath)
-    (readAll(spark, base), cb)
+    Similarity.pqEncode(batch, readBooks(spark, base, s), idCol, vecCol)
+      .hint("rebalance").write.parquet(log.path(gen).toString)
+    handle(spark, base, log.commit(s.copy(keys = s.keys + (batchKey -> gen))))
   }
 
-  /** Fold every completed [[append]] generation back into the base
-    * codes leaf — the [[IvfIndex.compact]] maintenance pass for the
-    * compression path (file count, not bytes, is what appends grow).
-    * Rows preserved exactly; codebooks untouched (re-sizing the
-    * quantizer is a rebuild). Crash safety and the folded-keys ledger
-    * are [[IndexMaintenance]]'s — a crash at any phase self-heals at
-    * the next entry point. Run offline.
+  /** Fold every [[append]] generation back into the base codes leaf —
+    * the [[IvfIndex.compact]] maintenance pass for the compression path
+    * (file count, not bytes, is what appends grow). Rows preserved
+    * exactly; codebooks untouched (re-sizing the quantizer is a
+    * rebuild); the folded keys commit with the fold. Run offline.
     */
   def compact(spark: SparkSession, dir: String, m: Int = 0, ksub: Int = 0,
-              subset: String = "all",
-              failpoint: String => Unit = _ => ()): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
+              subset: String = "all"): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes")
-    val codesDir = new java.io.File(base, "codes")
-    val booksPath = new java.io.File(base, "codebooks").getPath
-    require(new java.io.File(codesDir, "_SUCCESS").isFile &&
-      new java.io.File(booksPath, "_SUCCESS").isFile,
-      s"compact requires a persisted index — ensure() first ($codesDir)")
-    val cb = readBooks(spark, booksPath)
-    val tmp = new java.io.File(base, "codes__compact")
-    graft.ArtifactKey.rmRecursive(tmp)
-    IndexMaintenance.stageFoldedKeys(base, IndexMaintenance.genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile).map(_.getName))
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("codes"),
+      s"compact requires a persisted index — ensure() first ($base)")
     // size the fold by the on-disk bytes being folded (codes are m
     // bytes/vector — usually one file suffices at test scale)
-    val bytes = (codesDir +: IndexMaintenance.genDirs(base).toSeq)
+    val bytes = s.generations("codes").map(new java.io.File(base, _))
       .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
       .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
     val nFiles = math.max(1L, (bytes +
       graft.sink.BucketedMirror.targetBucketBytes - 1) /
       graft.sink.BucketedMirror.targetBucketBytes).toInt
-    readAll(spark, base)
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp.getPath)
-    IndexMaintenance.finishCompact(base, "codes", failpoint)
-    (readAll(spark, base), cb)
+    val codesDir = log.fresh("codes")
+    handle(spark, base, s)._1.repartition(nFiles).write.parquet(log.path(codesDir).toString)
+    handle(spark, base, log.commit(s.copy(
+      leaves = s.leaves + ("codes" -> codesDir), keys = Map.empty,
+      folded = s.folded ++ s.keys.keys)))
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * re-bucket and re-quantize the whole corpus per query batch — at 100 TB
   * that corpus pass, not the candidate math, is the dominant ANN cost.
   *
-  * Layout (under target/srp_index/v2/<tag>/t<nTables>_<subset>):
+  * Layout (under target/srp_index/v3/<tag>/t<nTables>_<subset>):
   *  - `buckets`:  (neighbor_id, __qc, __sc, __t, __b) partitioned by
   *    `__grp = pmod(xxhash64(__t, __b), groups)` — N·nTables narrow rows
   *    (8-byte id + 1-byte-per-dim quantized vector + one double; the raw
@@ -27,16 +27,16 @@ import org.apache.spark.sql.functions._
   *  - `vectors`:  (vec_id, embedding) — ONE row per vector, the
   *    full-precision side the exact cosine (s2) and the top-rerank
   *    rescore (s7) join back to by id.
-  *  - `meta`:     (planes, tables, groups, n) — the quantizer geometry.
-  *    Probes must hash with the EXACT plane count the corpus was
-  *    bucketed with, across JVMs; reading it here also means an indexed
-  *    search never runs the corpus-count job that inline auto-sizing
-  *    needs.
+  *  - the manifest's meta: (planes, tables, groups, n) — the quantizer
+  *    geometry. Probes must hash with the EXACT plane count the corpus
+  *    was bucketed with, across JVMs; reading it here also means an
+  *    indexed search never runs the corpus-count job that inline
+  *    auto-sizing needs.
   *
-  * Reuse ladder and keying follow [[IvfIndex]]: `_SUCCESS` files on disk
-  * → read back; nothing → build. The tag embeds basename + full-path
-  * hash + [[graft.ContentStamp]], so a corpus regenerated at the same
-  * path forces a rebuild. Builds are serialized per JVM (Verify runs the
+  * Reuse ladder and keying follow [[IvfIndex]]: a committed
+  * [[graft.StoreLog]] manifest → read back; none → build. The tag
+  * embeds basename + full-path hash + [[graft.ContentStamp]], so a
+  * corpus regenerated at the same path forces a rebuild. Builds are serialized per JVM (Verify runs the
   * query constructors from a 4-thread pool; s2 and s7 share one index).
   *
   * Reference analog: the SQLite index built once per load
@@ -54,8 +54,9 @@ object SrpIndex {
   /** Bump when the layout or bucketing semantics change. v2:
     * per-subset roots (different indexed slices of one source must not
     * share a directory — the LshIndex convention) + [[append]]
-    * generations. */
-  private val version = "v2"
+    * generations. v3: directories and geometry listed by a
+    * [[graft.StoreLog]] manifest. */
+  private val version = "v3"
 
   /** Target rows per bucket-group partition. Groups are DIRECTORIES (one
     * file each, the repartition alignment): too many of them at small
@@ -100,9 +101,6 @@ object SrpIndex {
   def drop(dir: String, nTables: Int, subset: String = "all"): Unit =
     graft.ArtifactKey.rmRecursive(root(dir, nTables, subset = subset))
 
-  /** Build-or-reuse the index for `<dir>`'s corpus. `corpus` is only
-    * evaluated (and scanned) on a cold build.
-    */
   /** Empty-corpus handles memoized per (SparkSession, stamped base path) —
     * same contract and staleness argument as [[IvfIndex]]: nothing
     * persists for an empty corpus, so the memo is what keeps repeat
@@ -119,124 +117,105 @@ object SrpIndex {
   private def sessionMemo(spark: SparkSession): scala.collection.mutable.HashMap[String, Handle] =
     emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
 
+  /** Build-or-reuse the index for `<dir>`'s corpus. `corpus` is only
+    * evaluated (and scanned) on a cold build.
+    */
   def ensure(spark: SparkSession, dir: String, corpus: => DataFrame, nTables: Int,
              idCol: String = "vec_id", vecCol: String = "embedding",
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    recover(base)
-    val bucketsPath = new java.io.File(base, "buckets").getPath
-    val vectorsPath = new java.io.File(base, "vectors").getPath
-    val metaPath = new java.io.File(base, "meta").getPath
-    if (!new java.io.File(bucketsPath, "_SUCCESS").isFile ||
-        !new java.io.File(vectorsPath, "_SUCCESS").isFile ||
-        !new java.io.File(metaPath, "_SUCCESS").isFile) {
-      sessionMemo(spark).get(base.getPath) match {
-        case Some(h) => return h
-        case None =>
-      }
-      // a cold build supersedes every older stamp of the same source
-      graft.ArtifactKey.dropSuperseded(
-        base.getParentFile.getParentFile,
-        graft.ArtifactKey.pathKey(dir) + "_", base.getParentFile.getName)
-      val df = corpus
-      val n = Similarity.countRows(df)
-      if (n == 0) {
-        // nothing to persist (an empty parquet dir can't be read back);
-        // hand out the inline paths' empty-corpus contract directly
-        val h = Handle(emptyBuckets(df, idCol, vecCol),
-          df.select(col(idCol), col(vecCol)),
-          Similarity.autoPlanes(0), nTables, 16)
-        sessionMemo(spark)(base.getPath) = h
-        return h
-      }
-      val planes = Similarity.autoPlanes(n)
-      val groups = autoGroups(n * nTables)
-      // a cold build starts a fresh index lifetime: a folded-keys ledger
-      // surviving from a prior lifetime would wrongly no-op appends that
-      // reuse a batch key — and a surviving generation dir would union a
-      // PRIOR lifetime's rows into the fresh index
-      foldedKeysFile(base).delete()
-      genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
-      import spark.implicits._
-      Seq((planes, nTables, groups, n)).toDF("planes", "tables", "groups", "n")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath)
-      // one corpus pass derives everything the candidate side ever needs:
-      // int8 pair below the generator (attributes pass through the
-      // Generate; computing them above it would re-run the O(dim)
-      // quantize once per emitted table row), buckets via the custom
-      // generator (no InferFiltersFromGenerate re-derivation in the scan)
-      val (q8c, sc) = Similarity.int8Candidate(col(vecCol))
-      val assigned = df
-        .select(col(idCol).as("neighbor_id"), q8c.as("__qc"), sc.as("__sc"), col(vecCol))
-        .select(col("neighbor_id"), col("__qc"), col("__sc"),
-          org.apache.spark.sql.graft.VectorFunctions
-            .srpBucketsNative(Similarity.toDouble(col(vecCol)), planes, nTables)
-            .as(Seq("__t", "__b")))
-        .withColumn("__grp", grpOf(col("__t"), col("__b"), groups))
-      // repartition by the group key first so each group's rows land in
-      // exactly one task → ONE file per partition directory (the
-      // BucketedMirror / IvfIndex alignment trick)
-      assigned.repartition(groups, col("__grp"))
-        .write.mode("overwrite").partitionBy("__grp").parquet(bucketsPath)
-      // the full-precision side, once per vector — exact scoring and the
-      // rescore join here by id instead of shipping 8·dim-byte doubles
-      // through the nTables-replicated bucket frame
-      df.select(col(idCol), col(vecCol)).write.mode("overwrite").parquet(vectorsPath)
+    val log = graft.StoreLog.open(spark, base)
+    if (log.snapshot.leaves.contains("buckets")) return handle(spark, base, log.snapshot)
+    sessionMemo(spark).get(base.getPath) match {
+      case Some(h) => return h
+      case None =>
     }
-    val (planes, tables, groups) = readMeta(spark, metaPath)
-    Handle(readAll(spark, base, "buckets"), readAll(spark, base, "vectors"),
-      planes, tables, groups)
+    // a cold build supersedes every older stamp of the same source
+    graft.ArtifactKey.dropSuperseded(
+      base.getParentFile.getParentFile,
+      graft.ArtifactKey.pathKey(dir) + "_", base.getParentFile.getName)
+    val df = corpus
+    val n = Similarity.countRows(df)
+    if (n == 0) {
+      // nothing to persist (an empty parquet dir can't be read back);
+      // hand out the inline paths' empty-corpus contract directly
+      val h = Handle(emptyBuckets(df, idCol, vecCol),
+        df.select(col(idCol), col(vecCol)),
+        Similarity.autoPlanes(0), nTables, 16)
+      sessionMemo(spark)(base.getPath) = h
+      return h
+    }
+    val planes = Similarity.autoPlanes(n)
+    val groups = autoGroups(n * nTables)
+    val bucketsDir = log.fresh("buckets")
+    val vectorsDir = log.fresh("vectors")
+    // one corpus pass derives everything the candidate side ever needs:
+    // int8 pair below the generator (attributes pass through the
+    // Generate; computing them above it would re-run the O(dim)
+    // quantize once per emitted table row), buckets via the custom
+    // generator (no InferFiltersFromGenerate re-derivation in the scan).
+    // Repartition by the group key first so each group's rows land in
+    // exactly one task → ONE file per partition directory (the
+    // BucketedMirror / IvfIndex alignment trick)
+    bucketRows(df, idCol, vecCol, planes, nTables, groups)
+      .repartition(groups, col("__grp"))
+      .write.partitionBy("__grp").parquet(log.path(bucketsDir).toString)
+    // the full-precision side, once per vector — exact scoring and the
+    // rescore join here by id instead of shipping 8·dim-byte doubles
+    // through the nTables-replicated bucket frame
+    df.select(col(idCol), col(vecCol)).write.parquet(log.path(vectorsDir).toString)
+    // a cold build starts a fresh index lifetime (see IvfIndex.ensure)
+    handle(spark, base, log.commit(graft.StoreSnapshot(
+      leaves = Map("buckets" -> bucketsDir, "vectors" -> vectorsDir),
+      meta = Map("planes" -> planes.toString, "tables" -> nTables.toString,
+        "groups" -> groups.toString, "n" -> n.toString))))
   }
 
-  /** The persisted geometry (planes, tables, groups), memoized per
-    * (session, path, content fingerprint) — [[graft.ReadCache]] — so a
-    * warm ensure/append pays a metadata walk, not a read + collect job.
+  /** The (neighbor_id, __qc, __sc, __t, __b, __grp) bucket rows of
+    * `df` under one geometry — the build's, the append's and (through
+    * the persisted rows) the probe's.
     */
-  private def readMeta(spark: SparkSession, metaPath: String): (Int, Int, Int) =
-    graft.ReadCache.collectedLocal(spark, new java.io.File(metaPath)) { df =>
-      val r = df.collect()(0)
-      (r.getAs[Int]("planes"), r.getAs[Int]("tables"), r.getAs[Int]("groups"))
-    }
+  private def bucketRows(df: DataFrame, idCol: String, vecCol: String,
+                         planes: Int, nTables: Int, groups: Int): DataFrame = {
+    val (q8c, sc) = Similarity.int8Candidate(col(vecCol))
+    df.select(col(idCol).as("neighbor_id"), q8c.as("__qc"), sc.as("__sc"), col(vecCol))
+      .select(col("neighbor_id"), col("__qc"), col("__sc"),
+        org.apache.spark.sql.graft.VectorFunctions
+          .srpBucketsNative(Similarity.toDouble(col(vecCol)), planes, nTables)
+          .as(Seq("__t", "__b")))
+      .withColumn("__grp", grpOf(col("__t"), col("__b"), groups))
+  }
 
   /** `leaf` ("buckets" | "vectors") of the base build plus every
-    * completed [[append]] generation, one read per root unioned (a
-    * multi-path partitioned read trips partition-structure inference;
-    * per-root scans also keep group pruning per generation).
+    * [[append]] generation. A generation's two leaves commit in one
+    * manifest, so a probe can never see bucket candidates whose ids the
+    * rescore join can't find in vectors.
     */
   private def readAll(spark: SparkSession, base: java.io.File,
-                      leaf: String): DataFrame = {
-    // a generation is visible only when BOTH leaves committed: gating each
-    // leaf on its own marker alone would, after a crash between the two
-    // writes, surface bucket candidates whose ids the rescore join can't
-    // find in vectors — silently wrong top-k until the batch is replayed.
-    // append() writes vectors first and buckets last, so buckets/_SUCCESS
-    // doubles as the generation's commit marker; checking both here also
-    // survives a manually truncated generation.
-    val gens = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("append_") &&
-        new java.io.File(new java.io.File(f, "buckets"), "_SUCCESS").isFile &&
-        new java.io.File(new java.io.File(f, "vectors"), "_SUCCESS").isFile)
-      .map(f => new java.io.File(f, leaf)).sorted
-    // handles ReadCache-memoized like IvfIndex.readAll: unchanged roots
-    // skip the per-read listing + schema-inference job
-    (new java.io.File(base, leaf) +: gens.toSeq)
-      .map(graft.ReadCache.parquetLocal(spark, _)).reduce(_.unionByName(_))
-  }
+                      s: graft.StoreSnapshot, leaf: String): DataFrame =
+    graft.StoreLog.readLocal(spark, base,
+      s.leaves(leaf) +: s.keys.toSeq.sorted.map(_._2 + "/" + leaf))
+
+  private def handle(spark: SparkSession, base: java.io.File,
+                     s: graft.StoreSnapshot): Handle =
+    Handle(readAll(spark, base, s, "buckets"), readAll(spark, base, s, "vectors"),
+      s.meta("planes").toInt, s.meta("tables").toInt, s.meta("groups").toInt)
 
   /** Fold a batch of NEW vectors into the persisted index — the
     * [[IvfIndex.append]] rung for SRP search: batch rows bucket with
-    * the PERSISTED geometry (planes/tables/groups read from meta, and
-    * the hyperplanes are a pure function of (planes, dim, fixed seed) —
-    * an appended row can never land off-layout) and write their own
-    * group-partitioned generation beside the base, the full-precision
-    * vectors likewise for the rescore side. The corpus is never
-    * re-scanned; `planes`/`groups` stay at the base corpus' auto-sizing
-    * BY DESIGN (re-sizing the geometry is a rebuild — [[drop]] +
-    * [[ensure]] — by definition), so searching the appended index is
-    * bit-identical to a cold build over corpus ∪ batches pinned to the
-    * same geometry (SimilaritySpec gates it). IDEMPOTENT per
-    * `batchKey`: a replayed batch overwrites its own generation (the
-    * ReportStore discipline). Returns the refreshed Handle.
+    * the PERSISTED geometry (planes/tables/groups from the manifest,
+    * and the hyperplanes are a pure function of (planes, dim, fixed
+    * seed) — an appended row can never land off-layout) and write their
+    * own group-partitioned generation beside the base, the
+    * full-precision vectors likewise for the rescore side. The corpus is
+    * never re-scanned; `planes`/`groups` stay at the base corpus'
+    * auto-sizing BY DESIGN (re-sizing the geometry is a rebuild —
+    * [[drop]] + [[ensure]] — by definition), so searching the appended
+    * index is bit-identical to a cold build over corpus ∪ batches pinned
+    * to the same geometry (SimilaritySpec gates it). IDEMPOTENT per
+    * `batchKey`: a replayed batch replaces its own generation, and a
+    * replay of a batch [[compact]] already folded is a no-op. Returns
+    * the refreshed Handle.
     */
   def append(spark: SparkSession, dir: String, nTables: Int, batchKey: String,
              batch: DataFrame, idCol: String = "vec_id",
@@ -246,24 +225,12 @@ object SrpIndex {
       c.isLetterOrDigit || c == '-' || c == '_'),
       s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    recover(base)
-    val metaPath = new java.io.File(base, "meta").getPath
-    require(new java.io.File(new java.io.File(base, "buckets"), "_SUCCESS").isFile &&
-      new java.io.File(metaPath, "_SUCCESS").isFile,
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("buckets"),
       s"no persisted index at $base — ensure() a base corpus before append()")
-    val (planes, tables, groups) = readMeta(spark, metaPath)
-    // a batchKey whose generation was already FOLDED by [[compact]] must
-    // no-op, not re-append — see the [[IvfIndex.append]] rationale
-    if (readFoldedKeys(base).contains(batchKey))
-      return Handle(readAll(spark, base, "buckets"), readAll(spark, base, "vectors"),
-        planes, tables, groups)
-    val gen = new java.io.File(base, s"append_$batchKey")
-    val (q8c, sc) = Similarity.int8Candidate(col(vecCol))
-    // vectors FIRST, buckets LAST: readAll keys a generation's visibility
-    // on both leaf markers, and this ordering makes buckets/_SUCCESS the
-    // effective commit point — a crash between the writes leaves only an
-    // invisible half-generation that the replayed batch overwrites, never
-    // bucket candidates the rescore join would silently drop.
+    if (s.folded.contains(batchKey)) return handle(spark, base, s)
+    val gen = log.fresh(s"append_$batchKey")
     // REBALANCE (AQE) sizes the output files: the batch arrives in the
     // caller's input partitioning (32 near-empty files at test scale,
     // unsized splits at corpus scale); the hinted exchange lets AQE
@@ -271,213 +238,71 @@ object SrpIndex {
     // SET unchanged, and readAll unions whole files, so placement is
     // semantics-free
     batch.select(col(idCol), col(vecCol)).hint("rebalance")
-      .write.mode("overwrite").parquet(new java.io.File(gen, "vectors").getPath)
-    batch
-      .select(col(idCol).as("neighbor_id"), q8c.as("__qc"), sc.as("__sc"), col(vecCol))
-      .select(col("neighbor_id"), col("__qc"), col("__sc"),
-        org.apache.spark.sql.graft.VectorFunctions
-          .srpBucketsNative(Similarity.toDouble(col(vecCol)), planes, nTables)
-          .as(Seq("__t", "__b")))
-      .withColumn("__grp", grpOf(col("__t"), col("__b"), groups))
+      .write.parquet(new java.io.File(new java.io.File(base, gen), "vectors").getPath)
+    val groups = s.meta("groups").toInt
+    bucketRows(batch, idCol, vecCol, s.meta("planes").toInt, nTables, groups)
       .repartition(groups, col("__grp"))
-      .write.mode("overwrite").partitionBy("__grp")
-      .parquet(new java.io.File(gen, "buckets").getPath)
-    Handle(readAll(spark, base, "buckets"), readAll(spark, base, "vectors"),
-      planes, nTables, groups)
+      .write.partitionBy("__grp")
+      .parquet(new java.io.File(new java.io.File(base, gen), "buckets").getPath)
+    handle(spark, base, log.commit(s.copy(keys = s.keys + (batchKey -> gen))))
   }
 
-  /** Every append-generation directory, completed or not (an incomplete
-    * generation was never VISIBLE — [[readAll]] gates on both leaf
-    * markers — so deleting it loses nothing a probe ever saw; the
-    * at-least-once driver replays the batch).
-    */
-  private def genDirs(base: java.io.File): Array[java.io.File] =
-    Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("append_"))
-
-  /** The batch keys [[compact]] has already folded into the base leaves
-    * — the [[IvfIndex]] ledger, same rationale: [[append]] must no-op
-    * an at-least-once replay of a folded batch (its generation is gone;
-    * re-creating it would double-count rows the fold already holds).
-    * Marks only COMPLETED generations — exactly the set [[readAll]]
-    * folds; marking an incomplete one would lose its replay.
-    */
-  private def foldedKeysFile(base: java.io.File): java.io.File =
-    new java.io.File(base, "folded_keys")
-
-  private def readFoldedKeys(base: java.io.File): Set[String] = {
-    val f = foldedKeysFile(base)
-    if (!f.isFile) Set.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.readAllLines(
-        f.toPath, java.nio.charset.StandardCharsets.UTF_8)
-        .asScala.filter(_.nonEmpty).toSet
-    }
-  }
-
-  /** Roll the staged folded-keys ledger in (idempotent under recovery
-    * replay).
-    */
-  private def commitFoldedKeys(base: java.io.File): Unit = {
-    val tmpK = new java.io.File(base, "folded_keys__compact")
-    if (tmpK.isFile) {
-      val live = foldedKeysFile(base)
-      live.delete()
-      require(tmpK.renameTo(live), s"compact keys swap failed: $tmpK -> $live")
-    }
-  }
-
-  /** [[compact]]'s commit marker: the fold touches TWO leaves
-    * (buckets + vectors), so no single tmp `_SUCCESS` can mark the
-    * destructive phase the way [[IvfIndex.compact]]'s one-leaf tmp can
-    * — a crash between the two leaf swaps would otherwise leave one
-    * leaf folded and the other not, with the folded generations already
-    * deleted. The marker is created only after BOTH tmp folds are fully
-    * written and removed only after both swaps land; [[recover]] keys
-    * roll-forward vs roll-back on it alone. Marker + swap mechanics are
-    * [[IndexMaintenance]]'s (shared with LshIndex/HashLedger).
-    */
-  private def markerFile(base: java.io.File): java.io.File =
-    IndexMaintenance.markerFile(base)
-
-  private def swapLeaf(base: java.io.File, leaf: String): Unit =
-    IndexMaintenance.swapLeaf(base, leaf)
-
-  /** Finish or undo an interrupted [[compact]] — run by every entry
-    * point (ensure/append/compact) so a crash mid-swap self-heals
-    * before any read or write touches the index. Marker present → both
-    * folds committed: roll FORWARD (delete the folded generations,
-    * finish both leaf swaps, drop the marker). Marker absent → the fold
-    * never committed: roll BACK (discard partial folds, restore any
-    * leaf parked at `__precompact`). Without this, ensure() after a
-    * crash between the swap renames would see a missing leaf marker and
-    * cold-REBUILD with fresh hyperplane sizing while surviving
-    * generations still carry the old geometry's buckets.
-    */
-  private def recover(base: java.io.File): Unit = {
-    if (markerFile(base).isFile) {
-      commitFoldedKeys(base)
-      genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
-      swapLeaf(base, "vectors")
-      swapLeaf(base, "buckets")
-      markerFile(base).delete()
-    } else {
-      new java.io.File(base, "folded_keys__compact").delete()
-      Seq("vectors", "buckets").foreach { leaf =>
-        graft.ArtifactKey.rmRecursive(new java.io.File(base, leaf + "__compact"))
-        val old = new java.io.File(base, leaf + "__precompact")
-        val live = new java.io.File(base, leaf)
-        if (old.exists()) {
-          if (!live.exists())
-            require(old.renameTo(live), s"compact rollback failed: $old -> $live")
-          else graft.ArtifactKey.rmRecursive(old)
-        }
-      }
-    }
-  }
-
-  /** Fold every completed [[append]] generation back into the base
-    * leaves — the maintenance pass that keeps the probe's file
-    * economics flat after a year of daily appends (each generation adds
-    * a small file per touched bucket-group directory; scan cost and the
-    * DPP group pruning degrade with file COUNT, not bytes). After it
-    * the index is one file per bucket-group plus a byte-sized vectors
-    * leaf in one root again, exactly as a cold build over
-    * corpus ∪ batches would have written it.
+  /** Fold every [[append]] generation back into the base leaves — the
+    * maintenance pass that keeps the probe's file economics flat after
+    * a year of daily appends (each generation adds a small file per
+    * touched bucket-group directory; scan cost and the DPP group
+    * pruning degrade with file COUNT, not bytes). After it the index is
+    * one file per bucket-group plus a byte-sized vectors leaf in one
+    * root again, exactly as a cold build over corpus ∪ batches would
+    * have written it.
     *
     * Rows are preserved exactly — compaction is a permutation, so
     * search results are bit-identical before and after (gated in
     * SimilaritySpec). The GEOMETRY — planes, tables, and the `groups`
     * count — is deliberately untouched: `groups` is part of the
-    * quantizer contract (probes derive `__grp` from meta, standing rows
-    * carry it in their directory layout), and re-sizing it here would
-    * open a crash window between the buckets swap and a meta rewrite in
-    * which probes hash `__grp` with one count against a layout written
-    * with another — silently missed candidates. Re-sizing is a rebuild
-    * ([[drop]] + [[ensure]]), by definition.
-    *
-    * The folded batch keys land in a ledger committed with the fold so
-    * [[append]] can no-op an at-least-once replay of a folded batch.
-    *
-    * Crash safety: both folds are fully written beside the live tree,
-    * then [[markerFile]] commits the destructive phase (generation
-    * delete + two leaf swaps, each two metadata renames). A crash at
-    * ANY point leaves a state [[recover]] finishes or undoes. Run
-    * offline, like every maintenance pass here. `failpoint` is a test
-    * hook: SimilaritySpec throws from it at each phase label to prove
-    * the recovery claims against the REAL crash states.
+    * quantizer contract (probes derive `__grp` from it, standing rows
+    * carry it in their directory layout); re-sizing it is a rebuild
+    * ([[drop]] + [[ensure]]), by definition. Both folded leaves and the
+    * folded batch keys commit in one manifest, so [[append]] no-ops an
+    * at-least-once replay of a folded batch. Run offline, like every
+    * maintenance pass here.
     */
   def compact(spark: SparkSession, dir: String, nTables: Int,
-              subset: String = "all",
-              failpoint: String => Unit = _ => ()): Handle = synchronized {
+              subset: String = "all"): Handle = synchronized {
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    recover(base)
-    val metaPath = new java.io.File(base, "meta").getPath
-    require(new java.io.File(new java.io.File(base, "buckets"), "_SUCCESS").isFile &&
-      new java.io.File(new java.io.File(base, "vectors"), "_SUCCESS").isFile &&
-      new java.io.File(metaPath, "_SUCCESS").isFile,
+    val log = graft.StoreLog.open(spark, base)
+    val s = log.snapshot
+    require(s.leaves.contains("buckets"),
       s"compact requires a persisted index — ensure() first ($base)")
-    val (planes, _, groups) = readMeta(spark, metaPath)
-    val tmpV = new java.io.File(base, "vectors__compact")
-    val tmpB = new java.io.File(base, "buckets__compact")
-    graft.ArtifactKey.rmRecursive(tmpV)
-    graft.ArtifactKey.rmRecursive(tmpB)
-    // stage the folded-keys ledger FIRST (harmless alone — rollback
-    // discards it): mark exactly the COMPLETED generations the folds
-    // below read, never incomplete ones (see foldedKeysFile). No row
-    // dedup in the folds themselves — a pre-fold replay overwrites its
-    // own generation, a post-fold replay no-ops on this ledger, so
-    // replayed rows cannot exist by construction.
-    val folded = readFoldedKeys(base) ++ genDirs(base)
-      .filter(f =>
-        new java.io.File(new java.io.File(f, "buckets"), "_SUCCESS").isFile &&
-        new java.io.File(new java.io.File(f, "vectors"), "_SUCCESS").isFile)
-      .map(_.getName.stripPrefix("append_"))
-    java.nio.file.Files.write(
-      new java.io.File(base, "folded_keys__compact").toPath,
-      folded.toSeq.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val groups = s.meta("groups").toInt
     // vectors: size the fold by the on-disk bytes being folded (no
-    // Spark job — a directory listing), one ~256 MB file per chunk
-    val vecBytes = (new java.io.File(base, "vectors") +:
-      genDirs(base).map(new java.io.File(_, "vectors")).toSeq)
+    // Spark job — a directory listing), one ~256 MB file per chunk.
+    // No row dedup in either fold: a pre-fold replay replaces its own
+    // generation, a post-fold replay no-ops on the folded keys, so
+    // replayed rows cannot exist by construction.
+    val vecBytes = (new java.io.File(base, s.leaves("vectors")) +:
+      s.keys.values.toSeq.map(g => new java.io.File(new java.io.File(base, g), "vectors")))
       .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
       .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
     val vecFiles = math.max(1L, (vecBytes +
       graft.sink.BucketedMirror.targetBucketBytes - 1) /
       graft.sink.BucketedMirror.targetBucketBytes).toInt
-    readAll(spark, base, "vectors")
+    val vectorsDir = log.fresh("vectors")
+    val bucketsDir = log.fresh("buckets")
+    readAll(spark, base, s, "vectors")
       .repartition(vecFiles)
-      .write.mode("overwrite").parquet(tmpV.getPath)
+      .write.parquet(log.path(vectorsDir).toString)
     // buckets: the same one-task-per-group repartition alignment as the
     // build writes ONE file per group directory again
-    readAll(spark, base, "buckets")
+    readAll(spark, base, s, "buckets")
       .repartition(groups, col("__grp"))
-      .write.mode("overwrite").partitionBy("__grp").parquet(tmpB.getPath)
-    require(markerFile(base).createNewFile() || markerFile(base).isFile,
-      s"compact commit-marker create failed: ${markerFile(base)}")
-    failpoint("committed")
-    // destructive phase — mirror of recover()'s roll-forward order
-    commitFoldedKeys(base)
-    failpoint("keys-swapped")
-    genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
-    failpoint("gens-deleted")
-    swapLeaf(base, "vectors")
-    failpoint("vectors-swapped")
-    swapLeaf(base, "buckets")
-    failpoint("buckets-swapped")
-    markerFile(base).delete()
-    Handle(readAll(spark, base, "buckets"), readAll(spark, base, "vectors"),
-      planes, nTables, groups)
+      .write.partitionBy("__grp").parquet(log.path(bucketsDir).toString)
+    handle(spark, base, log.commit(s.copy(
+      leaves = Map("buckets" -> bucketsDir, "vectors" -> vectorsDir),
+      keys = Map.empty, folded = s.folded ++ s.keys.keys)))
   }
 
   /** Empty frame with the buckets schema (for the empty-corpus path). */
-  private def emptyBuckets(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val (q8c, sc) = Similarity.int8Candidate(col(vecCol))
-    df.select(col(idCol).as("neighbor_id"), q8c.as("__qc"), sc.as("__sc"),
-        org.apache.spark.sql.graft.VectorFunctions
-          .srpBucketsNative(Similarity.toDouble(col(vecCol)), 4, 1).as(Seq("__t", "__b")))
-      .withColumn("__grp", grpOf(col("__t"), col("__b"), 16))
-  }
+  private def emptyBuckets(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    bucketRows(df, idCol, vecCol, planes = 4, nTables = 1, groups = 16)
 }

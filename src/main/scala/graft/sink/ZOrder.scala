@@ -65,14 +65,13 @@ object ZOrder {
     * preserved exactly (the layout is a permutation).
     */
   def writeZOrdered(df: DataFrame, cols: Seq[String], path: String,
-                    numFiles: Int, bits: Int = 8,
-                    mode: String = "overwrite"): Unit = {
+                    numFiles: Int, bits: Int = 8): Unit = {
     val cuts = quantileCuts(df, cols, bits)
     withZValue(df, cols, cuts, bits)
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode(mode).parquet(path)
+      .write.mode("overwrite").parquet(path)
   }
 }
 
@@ -86,89 +85,57 @@ object ZOrder {
   * year of daily batches every range query touches one file per day.
   * [[compact]] is the periodic layout pass that re-clusters the WHOLE
   * table onto one global curve (the OPTIMIZE ZORDER shape): reads
-  * everything once, one range shuffle, two-rename directory swap — after
-  * it, file count and per-file spans are as if the table had been
-  * written z-ordered in one shot (gated in ZOrderSpec).
+  * everything once, one range shuffle — after it, file count and
+  * per-file spans are as if the table had been written z-ordered in one
+  * shot (gated in ZOrderSpec).
+  *
+  * The table at `path` commits through a [[graft.StoreLog]] manifest:
+  * every batch and every compaction is a fresh directory, and [[read]]
+  * opens exactly the directories the latest manifest lists.
   */
 object ZOrderTable {
 
-  /** Append `df` as z-ordered files under `path` (batch-local quantile
+  private def open(spark: org.apache.spark.sql.SparkSession, path: String): graft.StoreLog =
+    graft.StoreLog.open(spark, new org.apache.hadoop.fs.Path(path))
+
+  /** Append `df` as z-ordered files of its own (batch-local quantile
     * cuts — the batch's own value distribution, which is what a daily
     * partition's readers filter by). Existing files are never touched.
-    *
-    * Runs [[recover]] first: without it, a crash between [[compact]]'s
-    * two swap renames (table parked at `__precompact`, live path
-    * absent) followed by the next day's append would re-create the
-    * live path holding ONE batch — and the next compact's
-    * stale-recovery-copy rule (old + live both present → drop old)
-    * would then delete the parked full table silently.
     */
   def append(df: DataFrame, cols: Seq[String], path: String,
-             numFiles: Int, bits: Int = 8): Unit = {
-    recover(df.sparkSession, path)
-    ZOrder.writeZOrdered(df, cols, path, numFiles, bits, mode = "append")
+             numFiles: Int, bits: Int = 8): Unit = synchronized {
+    val log = open(df.sparkSession, path)
+    val s = log.snapshot
+    val dir = log.fresh("batch")
+    ZOrder.writeZOrdered(df, cols, log.path(dir).toString, numFiles, bits)
+    log.commit(s.copy(keys = s.keys + (dir -> dir)))
   }
 
-  /** Restore a table a crashed [[compact]] left parked at
-    * `__precompact` with no live path — the roll-back half of compact's
-    * own preamble, exposed to every entry point that writes or reads
-    * the table outside compact.
-    */
-  def recover(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(old) && !fs.exists(p)) {
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"compact recovery failed: $old -> $p")
-    }
+  /** The table's rows: every directory the latest manifest lists. */
+  def read(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = synchronized {
+    read(spark, open(spark, path))
   }
 
-  /** Re-cluster the whole table onto one global curve and swap it in
-    * (write beside, rename live aside, rename new in, drop the old):
-    * global quantile cuts, one range shuffle, `numFiles` output files.
+  private def read(spark: org.apache.spark.sql.SparkSession, log: graft.StoreLog): DataFrame = {
+    val dirs = log.snapshot.dirs.toSeq.sorted
+    require(dirs.nonEmpty, s"no z-ordered table at ${log.base}")
+    spark.read.parquet(dirs.map(log.path(_).toString): _*)
+  }
+
+  /** Re-cluster the whole table onto one global curve: global quantile
+    * cuts, one range shuffle, `numFiles` output files in a fresh
+    * directory that replaces every listed one in one manifest commit.
     * Rows are preserved exactly — compaction is a permutation, like
-    * every other maintenance pass here. The swap is two metadata
-    * renames, NOT one atomic operation: a crash between them leaves the
-    * table at `path + "__precompact"` (rename it back); concurrent
-    * readers can observe a path-not-found during that instant — run
-    * compact in the table's maintenance window, like OPTIMIZE.
+    * every other maintenance pass here. Run it in the table's
+    * maintenance window, like OPTIMIZE: readers holding a frame over the
+    * old files lose them when the commit sweeps them.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              cols: Seq[String], numFiles: Int, bits: Int = 8): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // crash-recovery BEFORE cleanup: if a prior compact died between the
-    // two swap renames, the table's only copy lives at `old` — restore it
-    // rather than deleting it (the scaladoc's recovery promise, automated).
-    // `old` is a stale recovery copy (safe to drop) ONLY when the live
-    // path also exists.
-    if (fs.exists(old)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(old, p))
-          throw new java.io.IOException(
-            s"compact recovery failed: $old -> $p")
-      } else fs.delete(old, true)
-    }
-    ZOrder.writeZOrdered(spark.read.parquet(path), cols, tmp.toString,
-      numFiles, bits)
-    // two renames, never delete-then-rename: a crash between a delete
-    // and the swap would leave NO live table path. After rename(p, old)
-    // the worst crash point leaves the table recoverable at `old`
-    // (rename back), and the live path is absent only for the gap
-    // between two metadata renames — not for the whole rewrite
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compact stage failed: $p -> $old")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // restore the original table before failing
-      throw new java.io.IOException(s"compact swap failed: $tmp -> $p")
-    }
-    fs.delete(old, true)
+              cols: Seq[String], numFiles: Int, bits: Int = 8): Unit = synchronized {
+    val log = open(spark, path)
+    val dir = log.fresh("data")
+    ZOrder.writeZOrdered(read(spark, log), cols, log.path(dir).toString, numFiles, bits)
+    log.commit(graft.StoreSnapshot(leaves = Map("data" -> dir)))
   }
 }
 

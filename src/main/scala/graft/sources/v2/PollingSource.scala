@@ -99,30 +99,25 @@ private class PollingScan(options: CaseInsensitiveStringMap) extends Scan {
       // polls). This is exactly what the checkpointLocation argument is
       // for; real connectors derive latestOffset from the external system,
       // which is monotonic across restarts for the same reason.
-      private val fs = {
-        val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-        new org.apache.hadoop.fs.Path(checkpointLocation).getFileSystem(conf)
-      }
+      private val fm = org.apache.spark.sql.execution.streaming.checkpointing
+        .CheckpointFileManager.create(new org.apache.hadoop.fs.Path(checkpointLocation),
+          org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
       private val hwPath = new org.apache.hadoop.fs.Path(checkpointLocation, "graft-highwater")
+      fm.mkdirs(hwPath.getParent)
       @volatile private var highWater: Long =
-        if (fs.exists(hwPath)) {
-          val in = fs.open(hwPath)
+        if (fm.exists(hwPath)) {
+          val in = fm.open(hwPath)
           try in.readLong() finally in.close()
         } else 0L
       private def bump(o: Long): Unit = synchronized {
         if (o > highWater) {
           highWater = o
-          // write-then-rename: a crash mid-write must not leave a
-          // truncated file that breaks every future restart. The rename
-          // overwrites the destination atomically (FileContext.rename with
-          // OVERWRITE) — a delete-then-rename pair would have a window
-          // where neither file exists and a crash there replays polls.
-          val tmp = new org.apache.hadoop.fs.Path(checkpointLocation, "graft-highwater.tmp")
-          val out = fs.create(tmp, true)
-          try out.writeLong(o) finally out.close()
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri, fs.getConf)
-          fc.rename(fc.makeQualified(tmp), fc.makeQualified(hwPath),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+          // atomic replace (the checkpoint WALs' own primitive): a crash
+          // mid-write must not leave a truncated file that breaks every
+          // future restart, nor a window where no file exists
+          val out = fm.createAtomic(hwPath, overwriteIfPossible = true)
+          try { out.writeLong(o); out.close() }
+          catch { case e: Throwable => out.cancel(); throw e }
         }
       }
       override def initialOffset(): Offset = PollOffset(0L)

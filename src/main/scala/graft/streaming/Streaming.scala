@@ -816,7 +816,7 @@ object Streaming {
     * the batch form. State lives in the store, not the stream — the
     * query itself stays stateless and restart-safe: periods are batch
     * ids and [[graft.quality.ReportStore.append]] is idempotent PER
-    * PERIOD (each period overwrites its own subdirectory), so a replayed
+    * PERIOD (the store names one directory per period), so a replayed
     * micro-batch after a restart REPLACES its period's rows instead of
     * double-counting them into the trailing mean.
     */

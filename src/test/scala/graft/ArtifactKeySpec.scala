@@ -84,7 +84,7 @@ class ArtifactKeySpec extends SparkTestBase {
     IvfIndex.drop(src.getPath)
     IvfIndex.ensure(spark, src.getPath, corpus(0))
     val oldRoot = IvfIndex.root(src.getPath)
-    assert(new java.io.File(oldRoot, "corpus/_SUCCESS").isFile)
+    assert(new java.io.File(committedLeaf(oldRoot, "corpus"), "_SUCCESS").isFile)
     // regenerate the source (length change → new stamp)
     java.nio.file.Files.write(
       new java.io.File(src, "marker").toPath, Array[Byte](1, 2))
@@ -92,7 +92,7 @@ class ArtifactKeySpec extends SparkTestBase {
     assert(newRoot.getPath !== oldRoot.getPath,
       "a regenerated source must key a different index root")
     IvfIndex.ensure(spark, src.getPath, corpus(1))
-    assert(new java.io.File(newRoot, "corpus/_SUCCESS").isFile,
+    assert(new java.io.File(committedLeaf(newRoot, "corpus"), "_SUCCESS").isFile,
       "the rebuild must land under the new stamp")
     assert(!oldRoot.exists,
       "the cold build must GC the superseded stamp's index")

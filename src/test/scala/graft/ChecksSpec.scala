@@ -186,43 +186,10 @@ class ChecksSpec extends SparkTestBase {
     assert(drift.length === 1)
     assert(drift(0).getDouble(3) === 0.95 && drift(0).getBoolean(6))
     assert(ReportStore.load(spark, path).count() === 3)
-    // compact: one file set, same rows; then the crash-recovery retry
+    // compact: one file set, same rows (crash recovery of every
+    // committing operation is gated store-wide in StoreLogSpec)
     ReportStore.compact(spark, path)
     assert(ReportStore.load(spark, path).count() === 3)
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(path + "__precompact")))
-    ReportStore.compact(spark, path)
-    assert(ReportStore.load(spark, path).count() === 3,
-      "retry after mid-swap crash must recover the history")
-  }
-
-  test("ReportStore: an APPEND after a mid-swap crash restores the parked " +
-       "history first — the next compact can never prefer a fresh one-period store") {
-    import graft.quality.ReportStore
-    // the hole this pins: crash between compact's two renames parks the
-    // full history at __precompact; if the NEXT DAY'S append re-created
-    // the live path with one fresh period, compact's stale-recovery-copy
-    // rule (old + live both present → drop old) would delete the only
-    // full copy silently. Every entry point must recover first.
-    val path = java.nio.file.Files.createTempDirectory("graft_repstore2").toString + "/s"
-    def report(m: Double) =
-      Seq(("completeness", "v", m)).toDF("check_name", "col_name", "metric")
-    ReportStore.append(report(1.0), path, "2024-01-01")
-    ReportStore.append(report(0.9), path, "2024-01-02")
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(path + "__precompact")))
-    ReportStore.append(report(0.95), path, "2024-01-03")
-    assert(ReportStore.load(spark, path).collect().map(_.getString(0)).toSet ===
-      Set("2024-01-01", "2024-01-02", "2024-01-03"),
-      "the post-crash append must land on the RESTORED history")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__precompact")))
-    ReportStore.compact(spark, path)
-    assert(ReportStore.load(spark, path).count() === 3,
-      "compact after the recovered append folds the full history")
   }
 
   test("qualityDriftStream: per-batch drift vs the stored trailing batches; " +
@@ -372,22 +339,21 @@ class ChecksSpec extends SparkTestBase {
     assert(hist.length === 2, "replayed period must not duplicate history")
     assert(hist.find(_.getString(0) == "b000000000002").get
       .getAs[Double]("metric") === 0.92)
-    // after a compact lifts rows to the top level, a replay of an old
-    // period lands in its subdirectory again — load's row-key dedup absorbs
+    // after a compact folds every period into one directory, a replay of
+    // an old period becomes that period's source again
     ReportStore.compact(spark, path)
     ReportStore.append(report(0.92), path, "b000000000002")
     assert(ReportStore.load(spark, path).count() === 2,
-      "replay after compact must be absorbed by load's dedup")
+      "replay after compact must replace the period, not duplicate it")
     // the drift mean sees each period once
     val drift = ReportStore.appendAndDrift(report(0.95), path, "b000000000003", 0.05)
       .collect()
     assert(drift.length === 1)
     assert(drift(0).getDouble(4) === 0.01) // |0.95 - mean(1.0, 0.92)| rounded
     // the exact use case the per-period overwrite exists for: a
-    // post-compact replay that CORRECTS the metric. The fresh
-    // per-period-subdirectory row must win DETERMINISTICALLY over the
-    // compacted top-level row — an arbitrary dropDuplicates survivor
-    // would make the drift history flap between runs.
+    // post-compact replay that CORRECTS the metric. The replayed row
+    // must win DETERMINISTICALLY over the compacted row — an arbitrary
+    // survivor would make the drift history flap between runs.
     ReportStore.append(report(0.88), path, "b000000000002")
     val corrected = ReportStore.load(spark, path)
       .filter(col("period") === "b000000000002").collect()

@@ -620,10 +620,10 @@ class DedupSpec extends SparkTestBase {
           if (c.isDirectory) walk(c) else Seq(c))
       walk(f).count(_.getName.endsWith(".parquet"))
     }
-    val hashesDir = new java.io.File(HashLedger.root(dir, sub), "hashes")
-    val before = dataFiles(hashesDir)
+    val ledgerDir = HashLedger.root(dir, sub)
+    val before = dataFiles(ledgerDir)
     val hc = HashLedger.compact(spark, dir, subset = sub)
-    val after = dataFiles(hashesDir)
+    val after = dataFiles(ledgerDir)
     assert(after < before, s"compact must fold files: $before -> $after")
     assert(after <= hc.groups, "one file per group after compaction")
     val afterCompact = Dedup.incrementalExactNewIndexed(hc, probe, "doc_id", "text")
@@ -656,10 +656,10 @@ class DedupSpec extends SparkTestBase {
           if (c.isDirectory) walk(c) else Seq(c))
       walk(f).count(_.getName.endsWith(".parquet"))
     }
-    val bucketsDir = new java.io.File(LshIndex.root(dir, 3, 8, 4, sub), "buckets")
-    val before = dataFiles(bucketsDir)
+    val indexDir = LshIndex.root(dir, 3, 8, 4, sub)
+    val before = dataFiles(indexDir)
     val hc = LshIndex.compact(spark, dir, subset = sub)
-    val after = dataFiles(bucketsDir)
+    val after = dataFiles(indexDir)
     assert(after < before, s"compact must fold files: $before -> $after")
     assert(pairs(Dedup.incrementalCandidatePairsIndexed(hc, fresh, "doc_id", "text"))
       === inline, "compacted index must equal the inline path")
@@ -670,81 +670,6 @@ class DedupSpec extends SparkTestBase {
       .filter(col("bsize") =!= col("__true")).count()
     assert(bad === 0L, "compact must leave every bsize equal to the true occupancy")
     LshIndex.drop(dir, subset = sub)
-  }
-
-  test("LshIndex/HashLedger compact crash-safety: a crash at ANY phase " +
-       "self-heals at the next entry point — appended rows never lost to a " +
-       "silent rebuild, meta and layout never disagree on the group count") {
-    import graft.dedup.{HashLedger, LshIndex}
-    val dir = "/root/testdata/sf0.001"
-    val docs = graft.Tables.documents(spark, dir)
-    val corpus = docs.filter(pmod($"doc_id", lit(10)).isin(1, 2, 3, 4, 5, 6, 7))
-    val day1 = docs.filter(pmod($"doc_id", lit(10)) === 8)
-    val fresh = docs.filter(pmod($"doc_id", lit(10)) === 0)
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    // LshIndex — the probe-parity gate IS the corruption detector: a
-    // stale meta group count against a re-grouped layout hashes __grp
-    // differently on the two join sides and silently drops candidates
-    val subL = "crashspec"
-    LshIndex.drop(dir, subset = subL)
-    LshIndex.ensure(spark, dir, corpus, subset = subL)
-    LshIndex.append(spark, dir, day1, subset = subL)
-    val inline = pairs(Dedup.incrementalCandidatePairs(fresh,
-      corpus.union(day1), "doc_id", "text"))
-    // rollback: an UNCOMMITTED fold (junk tmp, no marker) is discarded
-    val baseL = LshIndex.root(dir, 3, 8, 4, subL)
-    val junk = new java.io.File(baseL, "buckets__compact")
-    assert(junk.mkdirs())
-    java.nio.file.Files.write(
-      new java.io.File(junk, "part-junk.parquet").toPath, Array[Byte](1))
-    val h0 = LshIndex.ensure(spark, dir,
-      { fail("recovery must not rebuild"); corpus }, subset = subL)
-    assert(!junk.exists(), "uncommitted fold must be rolled back")
-    assert(pairs(Dedup.incrementalCandidatePairsIndexed(h0, fresh,
-      "doc_id", "text")) === inline)
-    // roll-forward: crash at every destructive phase, then ANY entry point
-    Seq("committed", "meta-swapped", "buckets-swapped").foreach { phase =>
-      val boom = intercept[RuntimeException] {
-        LshIndex.compact(spark, dir, subset = subL,
-          failpoint = p => if (p == phase) throw new RuntimeException(s"boom-$phase"))
-      }
-      assert(boom.getMessage === s"boom-$phase")
-      val h = LshIndex.ensure(spark, dir,
-        { fail("recovery must not rebuild (appended rows would be lost)"); corpus },
-        subset = subL)
-      assert(pairs(Dedup.incrementalCandidatePairsIndexed(h, fresh,
-        "doc_id", "text")) === inline,
-        s"probe diverged after compact crash at $phase")
-      assert(h.buckets.filter(col("__grp") >= h.groups).count() === 0L,
-        s"layout rows outside the meta group count after crash at $phase")
-    }
-    LshIndex.drop(dir, subset = subL)
-
-    // HashLedger — same discipline, membership parity as the gate
-    val subH = "crashspec"
-    HashLedger.drop(dir, subset = subH)
-    val hl0 = HashLedger.ensure(spark, dir, corpus, subset = subH)
-    val novel1 = Dedup.incrementalExactNewIndexed(hl0, day1, "doc_id", "text")
-    HashLedger.append(spark, dir, novel1.select("content_md5"), subset = subH)
-    val probe = docs.filter(pmod($"doc_id", lit(10)).isin(0, 8))
-    val want = Dedup.incrementalExactNew(probe, corpus.union(day1), "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    Seq("committed", "meta-swapped", "hashes-swapped").foreach { phase =>
-      val boom = intercept[RuntimeException] {
-        HashLedger.compact(spark, dir, subset = subH,
-          failpoint = p => if (p == phase) throw new RuntimeException(s"boom-$phase"))
-      }
-      assert(boom.getMessage === s"boom-$phase")
-      val h = HashLedger.ensure(spark, dir,
-        { fail("recovery must not rebuild (appended addresses would be lost)"); corpus },
-        subset = subH)
-      assert(Dedup.incrementalExactNewIndexed(h, probe, "doc_id", "text")
-        .select("doc_id").collect().map(_.getLong(0)).toSet === want,
-        s"membership diverged after compact crash at $phase")
-    }
-    HashLedger.drop(dir, subset = subH)
   }
 
   test("minhashSpanningEdges honors the bucket occupancy cap like the clique form") {

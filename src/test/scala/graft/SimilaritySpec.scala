@@ -321,7 +321,7 @@ class SimilaritySpec extends SparkTestBase {
     val fakeDir = "/x/ivf_spec_corpus"
     IvfIndex.drop(fakeDir)
     val (_, c1) = IvfIndex.ensure(spark, fakeDir, emb)
-    val success = new java.io.File(IvfIndex.root(fakeDir), "corpus/_SUCCESS")
+    val success = new java.io.File(committedLeaf(IvfIndex.root(fakeDir), "corpus"), "_SUCCESS")
     assert(success.isFile)
     val stamp = success.lastModified
     // by-name corpus: the reuse path must not evaluate (or scan) it
@@ -415,37 +415,6 @@ class SimilaritySpec extends SparkTestBase {
     SrpIndex.drop(fakeDir, 4, subset = "inc")
   }
 
-  test("SrpIndex.append crash-safety: a half-committed generation is " +
-       "invisible on BOTH leaves until its replay completes it") {
-    import graft.sim.SrpIndex
-    val gen = new scala.util.Random(31)
-    val all = (0L until 100L).map(i => (i, Seq.fill(8)(gen.nextFloat())))
-    val corpus = all.filter(_._1 % 10 != 0).toDF("vec_id", "embedding")
-    val batch = all.filter(_._1 % 10 == 0).toDF("vec_id", "embedding")
-    val fakeDir = "/x/srp_crash_spec"
-    SrpIndex.drop(fakeDir, 4, subset = "crash")
-    SrpIndex.ensure(spark, fakeDir, corpus, nTables = 4, subset = "crash")
-    SrpIndex.append(spark, fakeDir, 4, "b1", batch, subset = "crash")
-    // simulate the crash window: vectors landed (they write first), the
-    // buckets commit marker did not
-    val base = SrpIndex.root(fakeDir, 4, spark.sessionState.newHadoopConf(), "crash")
-    val marker = new java.io.File(
-      new java.io.File(new java.io.File(base, "append_b1"), "buckets"), "_SUCCESS")
-    assert(marker.isFile)
-    assert(marker.delete())
-    val h = SrpIndex.ensure(spark, fakeDir, corpus, nTables = 4, subset = "crash")
-    // atomic visibility: were the half generation's VECTORS readable, the
-    // rescore side would carry ids no bucket emits (harmless but wasteful);
-    // were its BUCKETS readable, candidates would silently rescore to
-    // nothing — wrong top-k. Neither leaf may see it.
-    assert(h.buckets.count() === 90L * 4)
-    assert(h.vectors.count() === 90L)
-    // the at-least-once replay of the same batchKey restores it whole
-    val h2 = SrpIndex.append(spark, fakeDir, 4, "b1", batch, subset = "crash")
-    assert(h2.buckets.count() === 100L * 4 && h2.vectors.count() === 100L)
-    SrpIndex.drop(fakeDir, 4, subset = "crash")
-  }
-
   test("SrpIndex: builds once, reuses files, and indexed search equals the inline path") {
     import graft.sim.SrpIndex
     val gen = new scala.util.Random(29)
@@ -454,7 +423,7 @@ class SimilaritySpec extends SparkTestBase {
     val fakeDir = "/x/srp_spec_corpus"
     SrpIndex.drop(fakeDir, nTables = 4)
     val h1 = SrpIndex.ensure(spark, fakeDir, emb, nTables = 4)
-    val success = new java.io.File(SrpIndex.root(fakeDir, 4), "buckets/_SUCCESS")
+    val success = new java.io.File(committedLeaf(SrpIndex.root(fakeDir, 4), "buckets"), "_SUCCESS")
     assert(success.isFile)
     val stamp = success.lastModified
     // planes persisted = the auto sizing at this corpus; reuse must not
@@ -647,7 +616,7 @@ class SimilaritySpec extends SparkTestBase {
     val fakeDir = "/x/pq_spec_corpus"
     PqIndex.drop(fakeDir)
     val (codes1, cb1) = PqIndex.ensure(spark, fakeDir, emb)
-    val success = new java.io.File(PqIndex.root(fakeDir), "codes/_SUCCESS")
+    val success = new java.io.File(committedLeaf(PqIndex.root(fakeDir), "codes"), "_SUCCESS")
     assert(success.isFile)
     val stamp = success.lastModified
     // by-name corpus: the reuse path must not evaluate (or scan) it
@@ -754,9 +723,9 @@ class SimilaritySpec extends SparkTestBase {
     assert(cb2.length === 4 && cb2.forall(_.length === 16))
     assert(cb2 !== cbAuto)
     assert(PqIndex.root(fakeDir).getPath !== PqIndex.root(fakeDir, 4, 16).getPath)
-    assert(new java.io.File(PqIndex.root(fakeDir, 4, 16), "codes/_SUCCESS").isFile)
+    assert(new java.io.File(committedLeaf(PqIndex.root(fakeDir, 4, 16), "codes"), "_SUCCESS").isFile)
     // both artifacts coexist (geometry variants are not "superseded")
-    assert(new java.io.File(PqIndex.root(fakeDir), "codes/_SUCCESS").isFile)
+    assert(new java.io.File(committedLeaf(PqIndex.root(fakeDir), "codes"), "_SUCCESS").isFile)
     assert(codes2.collect().forall(_.getSeq[Byte](1).length === 4))
     PqIndex.drop(fakeDir)
     PqIndex.drop(fakeDir, m = 4, ksub = 16)
@@ -794,46 +763,27 @@ class SimilaritySpec extends SparkTestBase {
     def coldRows(upto: Long) = rows(graft.sim.Similarity.assignCells(
       all.filter(t => t._1 >= 40 || t._1 < upto).toDF("vec_id", "embedding"),
       cents, "vec_id", "embedding"))
-    // rollback: an UNCOMMITTED fold (no _SUCCESS) is discarded at the next entry
-    val junkTmp = new java.io.File(base, "corpus__compact")
-    assert(junkTmp.mkdirs())
-    java.nio.file.Files.write(new java.io.File(junkTmp, "part-junk.parquet").toPath,
-      Array[Byte](1))
-    val (r0, _) = IvfIndex.ensure(spark, fakeDir,
-      { fail("recovery must not rebuild"); corpus }, subset = "cpt")
-    assert(!junkTmp.exists(), "uncommitted fold must be rolled back")
-    assert(rows(r0) === coldRows(0))
-    // crash at EVERY destructive phase: each round appends a fresh batch,
-    // crashes compact at one phase, and proves any entry point self-heals
-    // to the full folded state (roll-forward: the fold committed first)
-    val phases = Seq("committed", "keys-swapped", "gens-deleted", "corpus-aside", "swapped")
-    phases.zipWithIndex.foreach { case (phase, i) =>
+    // five appended batches fold into the corpus leaf (crash recovery
+    // of every committing operation is gated store-wide in StoreLogSpec)
+    (0 until 5).foreach { i =>
       val batch = all.filter(t => t._1 >= i * 8 && t._1 < (i + 1) * 8)
         .toDF("vec_id", "embedding")
       IvfIndex.append(spark, fakeDir, s"p$i", batch, subset = "cpt")
-      val boom = intercept[RuntimeException] {
-        IvfIndex.compact(spark, fakeDir, "cpt",
-          p => if (p == phase) throw new RuntimeException(s"boom-$phase"))
-      }
-      assert(boom.getMessage === s"boom-$phase")
-      val (rec, cR) = IvfIndex.ensure(spark, fakeDir,
-        { fail("recovery must not rebuild"); corpus }, subset = "cpt")
-      assert(cR === cents, s"centroids moved recovering from $phase")
-      assert(rows(rec) === coldRows((i + 1) * 8L),
-        s"rows diverged recovering from crash at $phase")
-      assert(genCount(base) === 0, s"generations survived recovery from $phase")
     }
+    val (folded, cF) = IvfIndex.compact(spark, fakeDir, "cpt")
+    assert(cF === cents, "compact must never move the centroids")
+    assert(rows(folded) === coldRows(40))
+    assert(genCount(base) === 0)
     // a replay of a FOLDED batch key no-ops instead of double-counting
     val replay = all.filter(_._1 < 8).toDF("vec_id", "embedding")
     val (afterReplay, _) = IvfIndex.append(spark, fakeDir, "p0", replay, subset = "cpt")
     assert(rows(afterReplay) === coldRows(40))
     // a clean compact on a live appended index: fewer parquet files, zero
     // generations, bit-exact search parity
-    IvfIndex.append(spark, fakeDir, "fresh",
+    val (appended, _) = IvfIndex.append(spark, fakeDir, "fresh",
       Seq((200L, Seq.fill(8)(0.5f))).toDF("vec_id", "embedding"), subset = "cpt")
     val filesBefore = parquetCount(base)
-    val before = rows(spark.read.parquet(new java.io.File(base, "corpus").getPath)
-      .unionByName(spark.read.parquet(new java.io.File(base, "append_fresh").getPath)))
+    val before = rows(appended)
     val (compacted, _) = IvfIndex.compact(spark, fakeDir, "cpt")
     assert(genCount(base) === 0)
     assert(parquetCount(base) < filesBefore, "compact must strictly drop file count")
@@ -862,31 +812,18 @@ class SimilaritySpec extends SparkTestBase {
     assert(ex.getMessage.contains("ensure"))
     val h0 = SrpIndex.ensure(spark, fakeDir, corpus, nTables = 4, subset = "cpt")
     val base = SrpIndex.root(fakeDir, 4, spark.sessionState.newHadoopConf(), "cpt")
-    // crash at EVERY destructive phase (incl. between the two leaf swaps
-    // — the window the commit marker exists for): fresh batch per round,
-    // any entry point self-heals to the full folded state
-    val phases = Seq("committed", "keys-swapped", "gens-deleted",
-      "vectors-swapped", "buckets-swapped")
-    phases.zipWithIndex.foreach { case (phase, i) =>
+    // five appended batches fold into both leaves (crash recovery of
+    // every committing operation is gated store-wide in StoreLogSpec)
+    (0 until 5).foreach { i =>
       val batch = all.filter(t => t._1 >= i * 8 && t._1 < (i + 1) * 8)
         .toDF("vec_id", "embedding")
       SrpIndex.append(spark, fakeDir, 4, s"p$i", batch, subset = "cpt")
-      val boom = intercept[RuntimeException] {
-        SrpIndex.compact(spark, fakeDir, 4, "cpt",
-          p => if (p == phase) throw new RuntimeException(s"boom-$phase"))
-      }
-      assert(boom.getMessage === s"boom-$phase")
-      val h = SrpIndex.ensure(spark, fakeDir,
-        { fail("recovery must not rebuild"); corpus }, nTables = 4, subset = "cpt")
-      assert((h.planes, h.groups) === ((h0.planes, h0.groups)),
-        s"geometry moved recovering from $phase")
-      val expect = 80L + (i + 1) * 8L
-      assert(h.vectors.count() === expect,
-        s"vectors diverged recovering from crash at $phase")
-      assert(h.buckets.count() === expect * 4,
-        s"buckets diverged recovering from crash at $phase")
-      assert(genCount(base) === 0, s"generations survived recovery from $phase")
     }
+    val hF = SrpIndex.compact(spark, fakeDir, 4, "cpt")
+    assert((hF.planes, hF.groups) === ((h0.planes, h0.groups)),
+      "compact must never move the geometry")
+    assert(hF.vectors.count() === 120L && hF.buckets.count() === 480L)
+    assert(genCount(base) === 0)
     // a replay of a FOLDED batch key no-ops instead of double-counting
     val hReplay = SrpIndex.append(spark, fakeDir, 4, "p0",
       all.filter(_._1 < 8).toDF("vec_id", "embedding"), subset = "cpt")
@@ -943,19 +880,12 @@ class SimilaritySpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(codes2) ===
       pairs(Similarity.pqEncode(all.toDF("vec_id", "embedding"), cb)))
-    // compact: zero gens, fewer files, rows preserved, crash self-heals
+    // compact: zero gens, fewer files, rows preserved
     val base = PqIndex.root(fakeDir, hadoopConf = spark.sessionState.newHadoopConf(),
       subset = "inc")
     val filesBefore = parquetCount(base)
-    val boom = intercept[RuntimeException] {
-      PqIndex.compact(spark, fakeDir, subset = "inc",
-        failpoint = p => if (p == "codes-aside") throw new RuntimeException("boom"))
-    }
-    assert(boom.getMessage === "boom")
-    // recovery at the next entry point (the append requires run recover first)
-    val (recovered, _) = PqIndex.ensure(spark, fakeDir,
-      { fail("recovery must not rebuild"); corpus }, subset = "inc")
-    assert(rows(recovered) === cold)
+    val (compacted, _) = PqIndex.compact(spark, fakeDir, subset = "inc")
+    assert(rows(compacted) === cold)
     assert(genCount(base) === 0)
     assert(parquetCount(base) < filesBefore, "compact must strictly drop file count")
     // a replay of the FOLDED batch no-ops instead of double-counting

@@ -11,6 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // shared session; never stop per-suite
+
+  /** The directory the latest manifest of the store at `base` lists
+    * for `leaf` (throws when nothing is committed).
+    */
+  def committedLeaf(base: java.io.File, leaf: String): java.io.File =
+    new java.io.File(base, StoreLog.open(spark, base).snapshot.leaves(leaf))
 }
 
 object SparkTestBase {

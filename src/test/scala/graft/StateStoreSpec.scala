@@ -43,6 +43,10 @@ class StateStoreSpec extends SparkTestBase {
     StateStore.advance(spark, dir, "events", "spec_state", "0002",
       Seq((1L, 31L)).toDF("k", "v"))
     assert(latestV === 31L)
+    // latest is the greatest committed KEY, not the newest commit
+    StateStore.advance(spark, dir, "events", "spec_state", "0001",
+      Seq((1L, 21L)).toDF("k", "v"))
+    assert(latestV === 31L)
     // a half-written epoch (no _SUCCESS — a crash mid-write) is invisible
     val half = new java.io.File(
       StateStore.root(dir, "events", "spec_state",

@@ -165,19 +165,18 @@ class ZOrderSpec extends SparkTestBase {
               pmod(xxhash64(col("id") + lit(seed * 31 + 7)), lit(1000)).as("b"))
     // 4 daily batches, each z-ordered batch-locally into 16 files
     (0 until 4).foreach(d => ZOrderTable.append(batch(d, 16384), Seq("a", "b"), tmp, 16))
-    val afterAppend = spark.read.parquet(tmp)
+    val afterAppend = ZOrderTable.read(spark, tmp)
     assert(afterAppend.count() === 4 * 16384L)
     def hsum(df: org.apache.spark.sql.DataFrame): Long =
       df.agg(sum(hash(col("a"), col("b")).cast("long"))).collect()(0).getLong(0)
     val h0 = hsum(afterAppend)
-    def overlappingIn(dir: String, c: String, lo: Long, hi: Long): Long =
-      spark.read.parquet(dir)
-        .groupBy(input_file_name().as("f"))
+    def overlapsIn(df: org.apache.spark.sql.DataFrame, c: String, lo: Long, hi: Long): Long =
+      df.groupBy(input_file_name().as("f"))
         .agg(min(col(c)).as("mn"), max(col(c)).as("mx"))
         .filter(col("mn") <= hi && col("mx") >= lo).count()
     def overlapping(c: String, lo: Long, hi: Long): Long =
-      overlappingIn(tmp, c, lo, hi)
-    def fileCount: Long = spark.read.parquet(tmp)
+      overlapsIn(ZOrderTable.read(spark, tmp), c, lo, hi)
+    def fileCount: Long = ZOrderTable.read(spark, tmp)
       .select(input_file_name()).distinct().count()
     val filesBefore = fileCount
     val overlapBefore = overlapping("b", 280, 340)
@@ -185,7 +184,7 @@ class ZOrderSpec extends SparkTestBase {
     // compact onto ONE global curve: same row multiset, 16 files, and an
     // in-quadrant range touches a fraction again (the one-shot gate)
     ZOrderTable.compact(spark, tmp, Seq("a", "b"), numFiles = 16)
-    assert(hsum(spark.read.parquet(tmp)) === h0, "compaction is a permutation")
+    assert(hsum(ZOrderTable.read(spark, tmp)) === h0, "compaction is a permutation")
     assert(fileCount === 16L, "compaction must collapse the file count")
     val overlapAfter = overlapping("b", 280, 340)
     // the honest one-shot reference: the SAME row multiset written
@@ -199,8 +198,8 @@ class ZOrderSpec extends SparkTestBase {
     // one-shot", not "same draw"
     val oneShotDir = tmp + "_oneshot"
     graft.sink.ZOrder.writeZOrdered(
-      spark.read.parquet(tmp), Seq("a", "b"), oneShotDir, numFiles = 16)
-    val overlapOneShot = overlappingIn(oneShotDir, "b", 280, 340)
+      ZOrderTable.read(spark, tmp), Seq("a", "b"), oneShotDir, numFiles = 16)
+    val overlapOneShot = overlapsIn(spark.read.parquet(oneShotDir), "b", 280, 340)
     info(s"files overlapping b-range: $overlapBefore/$filesBefore before, " +
       s"$overlapAfter/16 after compact, $overlapOneShot/16 one-shot")
     assert(overlapAfter <= overlapOneShot + 2,
@@ -208,59 +207,6 @@ class ZOrderSpec extends SparkTestBase {
         s"touched $overlapAfter/16 vs one-shot $overlapOneShot/16")
     // the fraction touched must improve, not just the absolute count
     assert(overlapAfter.toDouble / 16 < overlapBefore.toDouble / filesBefore + 0.25)
-  }
-
-  test("ZOrderTable.compact: a retry after a crash between the two swap renames " +
-       "RECOVERS the table from __precompact instead of deleting the only copy") {
-    import graft.sink.ZOrderTable
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zrecover").toString + "/t"
-    val df = spark.range(4096L)
-      .select(pmod(xxhash64(col("id")), lit(1000)).as("a"),
-              pmod(xxhash64(col("id") + 7), lit(1000)).as("b"))
-    ZOrderTable.append(df, Seq("a", "b"), tmp, 4)
-    def hsum(d: org.apache.spark.sql.DataFrame): Long =
-      d.agg(sum(hash(col("a"), col("b")).cast("long"))).collect()(0).getLong(0)
-    val h0 = hsum(spark.read.parquet(tmp))
-    // simulate the documented crash window: rename(p, old) succeeded,
-    // rename(tmp, p) never ran — the table's ONLY copy is at __precompact
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(conf)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(tmp + "__precompact")))
-    assert(!fs.exists(p), "crash simulation: live path absent")
-    // the natural retry must auto-recover, then complete normally
-    ZOrderTable.compact(spark, tmp, Seq("a", "b"), numFiles = 4)
-    assert(hsum(spark.read.parquet(tmp)) === h0,
-      "retry after mid-swap crash must recover the full row multiset")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(tmp + "__precompact")),
-      "recovery copy is cleaned up once the live path exists")
-  }
-
-  test("ZOrderTable: an APPEND after a mid-swap crash restores the parked " +
-       "table first — the batch lands on the full table, never a fresh one " +
-       "the next compact's stale-copy rule would keep") {
-    import graft.sink.ZOrderTable
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zrecover2").toString + "/t"
-    val df = spark.range(4096L)
-      .select(pmod(xxhash64(col("id")), lit(1000)).as("a"),
-              pmod(xxhash64(col("id") + 7), lit(1000)).as("b"))
-    ZOrderTable.append(df, Seq("a", "b"), tmp, 4)
-    // crash window: the table's only copy parked at __precompact
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(conf)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(tmp + "__precompact")))
-    // next day's batch arrives via append, NOT a compact retry
-    val batch = spark.range(4096L, 5120L)
-      .select(pmod(xxhash64(col("id")), lit(1000)).as("a"),
-              pmod(xxhash64(col("id") + 7), lit(1000)).as("b"))
-    ZOrderTable.append(batch, Seq("a", "b"), tmp, 2)
-    assert(spark.read.parquet(tmp).count() === 5120L,
-      "the post-crash append must land on the RESTORED table")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(tmp + "__precompact")))
-    ZOrderTable.compact(spark, tmp, Seq("a", "b"), numFiles = 4)
-    assert(spark.read.parquet(tmp).count() === 5120L,
-      "compact after the recovered append keeps the full row multiset")
   }
 
   test("ZOrderMirror: builds once, reuses without rewriting, and is a permutation " +
