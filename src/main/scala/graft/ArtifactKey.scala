@@ -59,4 +59,10 @@ private[graft] object ArtifactKey {
     Option(parent.listFiles).toSeq.flatten
       .filter(f => f.getName.startsWith(prefix) && f.getName != keep)
       .foreach(rmRecursive)
+
+  /** [[dropSuperseded]] for a `<parent>/`[[stamped]]`(src)` directory:
+    * deletes the sibling directories of `src`'s other content stamps.
+    */
+  def dropSuperseded(stamped: java.io.File, src: String): Unit =
+    dropSuperseded(stamped.getParentFile, pathKey(src) + "_", stamped.getName)
 }

@@ -32,6 +32,7 @@ object JobProfile {
     val jobs = mutable.LinkedHashMap[Int, Job]()
     val stageTasks = mutable.HashMap[Int, Int]()
     val shuffleBytes = Array(0L, 0L) // (write, read) summed over recorded stages
+    val counted = mutable.HashSet[(Int, Int)]() // (stageId, attempt) already summed
     var record = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
@@ -42,11 +43,14 @@ object JobProfile {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = if (record) {
         stageTasks.synchronized { stageTasks(e.stageInfo.stageId) = e.stageInfo.numTasks }
         // aggregate shuffle bytes (guide §2.3 "shuffle fewer bytes" —
-        // the per-query number a narrowing change must move)
+        // the per-query number a narrowing change must move), once per
+        // (stageId, attempt) however many completion events it posts
         val m = e.stageInfo.taskMetrics
         if (m != null) shuffleBytes.synchronized {
-          shuffleBytes(0) += m.shuffleWriteMetrics.bytesWritten
-          shuffleBytes(1) += m.shuffleReadMetrics.totalBytesRead
+          if (counted.add((e.stageInfo.stageId, e.stageInfo.attemptNumber()))) {
+            shuffleBytes(0) += m.shuffleWriteMetrics.bytesWritten
+            shuffleBytes(1) += m.shuffleReadMetrics.totalBytesRead
+          }
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = if (record) {
@@ -75,7 +79,7 @@ object JobProfile {
         case Some(fn) =>
           fn(spark, sfDir).count() // warm lap: artifacts built, code compiled
           jobs.clear(); stageTasks.clear()
-          shuffleBytes.synchronized { shuffleBytes(0) = 0L; shuffleBytes(1) = 0L }
+          shuffleBytes.synchronized { shuffleBytes(0) = 0L; shuffleBytes(1) = 0L; counted.clear() }
           phases.synchronized { phases.clear() }
           record = true
           val t0 = System.nanoTime()

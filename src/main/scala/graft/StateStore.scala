@@ -56,16 +56,10 @@ object StateStore {
   def ensure(spark: SparkSession, dir: String, table: String, name: String,
              state: => DataFrame): DataFrame = synchronized {
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
-    val log = StoreLog.open(spark, base)
-    val s = if (log.snapshot.leaves.contains("seed")) log.snapshot else {
-      ArtifactKey.dropSuperseded(
-        base.getParentFile.getParentFile,
-        ArtifactKey.pathKey(src(dir, table)) + "_", base.getParentFile.getName)
-      val seed = log.fresh("seed")
-      state.write.parquet(log.path(seed).toString)
-      log.commit(StoreSnapshot(leaves = Map("seed" -> seed)))
-    }
-    ReadCache.parquetLocal(spark, new java.io.File(base, s.leaves("seed")))
+    ReadCache.parquetLocal(spark, StoreLog.buildOnce(spark, base, "seed") { path =>
+      ArtifactKey.dropSuperseded(base.getParentFile, src(dir, table))
+      state.write.parquet(path)
+    })
   }
 
   /** Persist one fold's OUTPUT as the next standing snapshot — its own

@@ -53,9 +53,14 @@ private[graft] final class StoreLog private (spark: SparkSession, val base: Path
   sweep(snapshot)
 
   /** A directory name no committed manifest lists — `name` stamped
-    * with the version the next [[commit]] creates.
+    * with the version the next [[commit]] creates. Opening swept every
+    * unlisted directory, so one that exists here is a protocol bug.
     */
-  def fresh(name: String): String = s"$name-${version + 1}"
+  def fresh(name: String): String = {
+    val dir = s"$name-${version + 1}"
+    require(!fs.exists(path(dir)), s"${path(dir)} exists before its commit")
+    dir
+  }
 
   def path(dir: String): Path = new Path(base, dir)
 
@@ -98,6 +103,21 @@ private[graft] object StoreLog {
   /** A store under a local artifact root (target/...). */
   def open(spark: SparkSession, base: java.io.File): StoreLog =
     open(spark, new Path(base.toURI))
+
+  /** The committed leaf `leaf` of the build-once store at `base`. When
+    * no manifest lists it yet, `build` writes the fresh directory whose
+    * path it is passed, and one commit publishes it.
+    */
+  def buildOnce(spark: SparkSession, base: java.io.File, leaf: String)
+               (build: String => Unit): java.io.File = {
+    val log = open(spark, base)
+    val s = if (log.snapshot.leaves.contains(leaf)) log.snapshot else {
+      val dir = log.fresh(leaf)
+      build(log.path(dir).toString)
+      log.commit(StoreSnapshot(leaves = Map(leaf -> dir)))
+    }
+    new java.io.File(base, s.leaves(leaf))
+  }
 
   /** The parquet roots `dirs` of a local store, one memoized read per
     * root unioned: a multi-path partitioned read trips

@@ -108,8 +108,7 @@ object HashLedger {
       case Some(h) => return h
       case None =>
     }
-    graft.ArtifactKey.dropSuperseded(
-      base.getParentFile, graft.ArtifactKey.pathKey(dir) + "_", base.getName)
+    graft.ArtifactKey.dropSuperseded(base, dir)
     // materialize the address frame ONCE: the count below and the
     // layout write would otherwise each evaluate the derivation — for
     // a text corpus that is two cheap scans, but for an opaque

@@ -120,9 +120,7 @@ object LshIndex {
       case Some(h) => return h
       case None =>
     }
-    graft.ArtifactKey.dropSuperseded(
-      base.getParentFile.getParentFile,
-      graft.ArtifactKey.pathKey(dir) + "_", base.getParentFile.getName)
+    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
     val df = corpus
     val n = df.count()
     if (n == 0) {

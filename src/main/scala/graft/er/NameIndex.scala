@@ -77,19 +77,12 @@ object NameIndex {
              standing: => DataFrame, nameCol: String,
              blockCap: Int = EntityResolution.defaultBlockCap): DataFrame = synchronized {
     val base = root(dir, table, subset, blockCap, spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    val s = if (log.snapshot.leaves.contains("pairs")) log.snapshot else {
-      val stampedDir = base.getParentFile
-      graft.ArtifactKey.dropSuperseded(
-        stampedDir.getParentFile,
-        graft.ArtifactKey.pathKey(
-          new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString) + "_",
-        stampedDir.getName)
-      val pairs = log.fresh("pairs")
-      withOcc(uncappedPairs(standing, nameCol)).write.parquet(log.path(pairs).toString)
-      log.commit(graft.StoreSnapshot(leaves = Map("pairs" -> pairs)))
+    val pairs = graft.StoreLog.buildOnce(spark, base, "pairs") { path =>
+      graft.ArtifactKey.dropSuperseded(base.getParentFile,
+        new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString)
+      withOcc(uncappedPairs(standing, nameCol)).write.parquet(path)
     }
-    capped(readPairs(spark, base, s), blockCap)
+    capped(graft.ReadCache.parquetLocal(spark, pairs), blockCap)
   }
 
   private def readPairs(spark: SparkSession, base: java.io.File,

@@ -18,13 +18,15 @@ import org.apache.spark.sql.functions.col
   * which at 100 TB of events is orders of magnitude smaller than the
   * log the inline form re-reads.
   *
-  * Artifact key: content-stamped events source + `variant` (WHICH edge
-  * derivation — page keying, user/ts columns — two derivations must
-  * not share an index) + bucket count (a different layout is a
-  * different artifact, the PqIndex-geometry lesson). Reuse ladder =
-  * [[graft.sink.BucketedMirror]]'s: session catalog → re-attach
-  * on-disk files via bucket-spec DDL → cold build. Supersede-on-
-  * rebuild drops older content stamps of the same source.
+  * One [[graft.StoreLog]] store per (events source, `variant` — WHICH
+  * edge derivation: page keying, user/ts columns — bucket count, since a
+  * different layout is a different artifact). Its manifest lists the
+  * `edges` leaf and, when a caller provides one, the `views` leaf (the
+  * per-user lastViews state an incremental fold links batches with), so
+  * the two always commit together; `meta("stamp")` is the content stamp
+  * of the events the snapshot indexes. Reuse ladder =
+  * [[graft.sink.Sinks.bucketedTable]]'s: session catalog → re-attach the
+  * committed leaf via bucket-spec DDL → build.
   */
 object EdgeIndex {
 
@@ -32,7 +34,7 @@ object EdgeIndex {
     * content + variant, so an index persisted by older derivation code
     * would otherwise silently serve stale edges.
     */
-  private val version = "v1"
+  private val version = "v2" // v2: one StoreLog manifest for edges + views
 
   /** Default bucket count: the edge universe is page-pair-domain-sized
     * (sublinear in events), so the [[graft.sink.BucketedMirror]] floor
@@ -41,102 +43,59 @@ object EdgeIndex {
     */
   val defaultBuckets: Int = graft.sink.BucketedMirror.defaultBuckets
 
-  private def eventsPath(dir: String): String =
-    new org.apache.hadoop.fs.Path(dir, "events.parquet").toString
+  private def stampOf(spark: SparkSession, dir: String): String =
+    graft.ContentStamp(new org.apache.hadoop.fs.Path(dir, "events.parquet").toString,
+      spark.sessionState.newHadoopConf())
 
-  private[graph] def tableName(dir: String, variant: String, buckets: Int,
-                               stamp: String): String =
-    s"graft_edge_index_${variant}_${graft.ArtifactKey.pathKey(dir)}_b${buckets}_s$stamp"
+  private def prefix(dir: String, variant: String): String =
+    s"graft_edge_index_${variant}_${graft.ArtifactKey.pathKey(dir)}"
 
-  private def rootDir(dir: String, variant: String, buckets: Int,
-                      stamp: String): java.io.File =
+  private[graft] def root(dir: String, variant: String,
+                          buckets: Int = defaultBuckets): java.io.File =
     new java.io.File(
-      s"target/edge_index/$version/${graft.ArtifactKey.pathKey(dir)}/" +
-        s"${variant}_b${buckets}_s$stamp").getAbsoluteFile
+      s"target/edge_index/$version/${graft.ArtifactKey.pathKey(dir)}/${variant}_b$buckets")
+      .getAbsoluteFile
 
-  /** Delete the persisted index files AND the catalog entry (forces the
+  /** Delete the persisted index AND its catalog entries (forces the
     * next ensure to rebuild).
     */
   def drop(spark: SparkSession, dir: String, variant: String,
            nBuckets: Int = defaultBuckets): Unit = synchronized {
-    val stamp = graft.ContentStamp(eventsPath(dir), spark.sessionState.newHadoopConf())
-    spark.sql(s"DROP TABLE IF EXISTS ${tableName(dir, variant, nBuckets, stamp)}")
-    graft.ArtifactKey.rmRecursive(rootDir(dir, variant, nBuckets, stamp))
-    // the cross-batch state sidecar belongs to the index lifecycle too
-    graft.ArtifactKey.rmRecursive(viewsDir(dir, variant, nBuckets, stamp))
+    graft.sink.Sinks.dropTables(spark, s"${prefix(dir, variant)}_b${nBuckets}_*")
+    graft.ArtifactKey.rmRecursive(root(dir, variant, nBuckets))
   }
 
   /** The persisted transition-edge table for `dir`'s events under the
     * named derivation `variant`; `edges` (the inline derivation — must
-    * produce exactly (src, dst, n_trans)) is only evaluated on a cold
-    * build. Returns the catalog table: scans publish the bucket
-    * layout, so consumer joins/aggregations on `src` plan no exchange
-    * for the edge side.
+    * produce exactly (src, dst, n_trans)) and `views` are only evaluated
+    * on a build, which happens when no snapshot of the current events is
+    * committed (a build supersedes an older stamp's snapshot). Returns
+    * the catalog table: scans publish the bucket layout, so consumer
+    * joins/aggregations on `src` plan no exchange for the edge side.
     */
   def ensure(spark: SparkSession, dir: String, variant: String,
              edges: => DataFrame, nBuckets: Int = defaultBuckets,
              views: => Option[DataFrame] = None): DataFrame = synchronized {
-    val stamp = graft.ContentStamp(eventsPath(dir), spark.sessionState.newHadoopConf())
-    val name = tableName(dir, variant, nBuckets, stamp)
-    if (!spark.catalog.tableExists(name)) {
-      val base = rootDir(dir, variant, nBuckets, stamp)
-      sweepSuperseded(spark, dir, variant, stamp, base)
-      if (new java.io.File(base, "_SUCCESS").isFile) {
-        // files survive the session catalog; re-attach them with the
-        // bucket spec they were written with — no rewrite, no source scan
-        attach(spark, name, base, nBuckets)
-      } else {
-        val e = edges
-        require(e.columns.toSeq == Seq("src", "dst", "n_trans"),
-          s"EdgeIndex expects (src, dst, n_trans); got ${e.columns.mkString(", ")}")
-        // repartition aligns tasks to buckets (one file per bucket →
-        // scans can publish the in-bucket sort), like BucketedMirror
-        graft.sink.Sinks.writeBucketed(
-          e.repartition(nBuckets, col("src")), name, Seq("src"), nBuckets,
-          path = Some(base.getPath), sortCols = Seq("src"))
-      }
+    val stamp = stampOf(spark, dir)
+    graft.sink.Sinks.bucketedTable(spark, prefix(dir, variant), stamp, "src", nBuckets) { name =>
+      val log = graft.StoreLog.open(spark, root(dir, variant, nBuckets))
+      edgesLeaf(log,
+        if (log.snapshot.meta.get("stamp").contains(stamp)) log.snapshot
+        else commit(log, name, stamp, edges, views, nBuckets))
     }
-    // the optional cross-batch state sidecar (one lastViews row per
-    // user) — what [[append]]'s edge delta links transitions across
-    // the batch boundary with; beside the table location, never inside
-    // it (the scan lists every file under LOCATION). Written on ANY
-    // path where the current stamp's sidecar is missing, not only the
-    // cold build: a crash between the cold table write and this write
-    // must be healed by the caller's retry, not leave the sidecar
-    // absent forever. `views` is only forced when the sidecar is
-    // missing (None-providing callers pay an Option evaluation).
-    if (!new java.io.File(viewsDir(dir, variant, nBuckets, stamp), "_SUCCESS").isFile)
-      views.foreach(_.write.mode("overwrite")
-        .parquet(viewsDir(dir, variant, nBuckets, stamp).getPath))
-    spark.table(name)
   }
 
-  /** The persisted per-user lastViews state of the LIVE snapshot of
-    * (dir, variant) — whatever stamp it carries: the standing state an
-    * incremental caller folds the next batch against (it belongs to the
-    * PREVIOUS log content, so it is deliberately not keyed to the
-    * current stamp the way the table lookup is). None until an
-    * [[ensure]]/[[append]] persisted one.
+  /** The persisted per-user lastViews state of the committed snapshot
+    * of (dir, variant) — whatever stamp it carries: the standing state
+    * an incremental caller folds the next batch against (it belongs to
+    * the PREVIOUS log content). None until an [[ensure]]/[[append]]
+    * committed one.
     */
   def viewsOf(spark: SparkSession, dir: String, variant: String,
               nBuckets: Int = defaultBuckets): Option[DataFrame] = synchronized {
-    val parent = rootDir(dir, variant, nBuckets, "x").getParentFile
-    val all = Option(parent.listFiles).toSeq.flatten
-      .filter(f => f.getName.startsWith(s"${variant}_b${nBuckets}_s") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-    val (sidecars, tables) = all.partition(_.getName.endsWith("__views"))
-    // stamps are hash-valued, so NAME order is not age order: in the
-    // crash window between append's sidecar write and the retirement
-    // sweep two sidecars coexist, and the lexicographically-last one can
-    // be the STALE one. Prefer the sidecar of the single live table
-    // snapshot (the same discovery append's prev check does); fall back
-    // to name order only when no live table names one.
-    val ofLive = tables match {
-      case Seq(t) => sidecars.find(_.getName == t.getName + "__views")
-      case _ => None
-    }
-    ofLive.orElse(sidecars.sortBy(_.getName).lastOption)
-      .map(graft.ReadCache.parquetLocal(spark, _))
+    val base = root(dir, variant, nBuckets)
+    graft.StoreLog.open(spark, base).snapshot.leaves.get("views")
+      .map(v => graft.ReadCache.parquetLocal(spark, new java.io.File(base, v)))
   }
 
   /** Fold one ingest batch's edge-count increments into the persisted
@@ -146,101 +105,64 @@ object EdgeIndex {
     * the batch (computed against the standing [[viewsOf]] state — the
     * raw historical log is never re-scanned), the merge is one
     * (src, dst) sum over page-pair-domain-sized inputs, and the result
-    * lands as the bucketed table for the GROWN log's content stamp.
-    * Pass the rolled-forward [[Graph.lastViewsApply]] state as `views`
-    * so the next batch can fold too.
+    * commits as the snapshot of the GROWN log's content stamp, in one
+    * manifest with `views` — pass the rolled-forward
+    * [[Graph.lastViewsApply]] state so the next batch can fold too.
     *
     * IDEMPOTENT per content stamp (the stamp of the grown log IS the
-    * batch key): if the current stamp's table already exists the call
-    * re-attaches and returns it — an at-least-once replay of the same
-    * absorbed batch never double-counts. The PREVIOUS snapshot (exactly
-    * one must exist — this is a fold, not a build; seed with
-    * [[ensure]]) is retired after the new table commits, same sweep as
-    * a cold build. Parity: folding a time-split log batch-by-batch
-    * yields exactly the one-shot [[ensure]] table (EdgeIndexSpec gates
-    * it through pageRank).
+    * batch key): if the committed snapshot already carries it, the call
+    * is a replay and returns the table — an at-least-once replay of the
+    * same absorbed batch never double-counts. A fold needs a committed
+    * snapshot to fold into; seed with [[ensure]]. Parity: folding a
+    * time-split log batch-by-batch yields exactly the one-shot
+    * [[ensure]] table (EdgeIndexSpec gates it through pageRank).
     */
   def append(spark: SparkSession, dir: String, variant: String,
              delta: DataFrame, views: => Option[DataFrame] = None,
              nBuckets: Int = defaultBuckets): DataFrame = synchronized {
-    val stamp = graft.ContentStamp(eventsPath(dir), spark.sessionState.newHadoopConf())
-    val name = tableName(dir, variant, nBuckets, stamp)
-    val base = rootDir(dir, variant, nBuckets, stamp)
-    // the batch was already absorbed (stamp = batch key) — but a crash
-    // AFTER the table committed and BEFORE the views sidecar landed
-    // must not leave the replay returning early with the sidecar stuck
-    // one batch behind: the next fold's delta would then seed from
-    // stale lastViews and FABRICATE the boundary transitions batch N
-    // already folded. Complete the sidecar (idempotent overwrite) and
-    // the retirement sweep before returning.
-    def completeReplay(): DataFrame = {
-      if (!new java.io.File(viewsDir(dir, variant, nBuckets, stamp), "_SUCCESS").isFile)
-        views.foreach(_.write.mode("overwrite")
-          .parquet(viewsDir(dir, variant, nBuckets, stamp).getPath))
-      sweepSuperseded(spark, dir, variant, stamp, base)
-      spark.table(name)
+    val stamp = stampOf(spark, dir)
+    graft.sink.Sinks.bucketedTable(spark, prefix(dir, variant), stamp, "src", nBuckets) { name =>
+      val log = graft.StoreLog.open(spark, root(dir, variant, nBuckets))
+      val s = log.snapshot
+      edgesLeaf(log, if (s.meta.get("stamp").contains(stamp)) s else {
+        require(s.leaves.contains("edges"),
+          s"append folds into a committed snapshot of ($dir, $variant); " +
+            "seed with ensure() first")
+        val merged = graft.ReadCache.parquetLocal(spark, edgesLeaf(log, s))
+          .unionByName(checked(delta))
+          .groupBy("src", "dst").agg(org.apache.spark.sql.functions.sum(col("n_trans")).as("n_trans"))
+        commit(log, name, stamp, merged, views, nBuckets)
+      })
     }
-    if (spark.catalog.tableExists(name)) return completeReplay()
-    if (new java.io.File(base, "_SUCCESS").isFile) {
-      attach(spark, name, base, nBuckets)
-      return completeReplay()
-    }
-    require(delta.columns.toSeq == Seq("src", "dst", "n_trans"),
-      s"EdgeIndex expects (src, dst, n_trans); got ${delta.columns.mkString(", ")}")
-    val prev = Option(base.getParentFile.listFiles).toSeq.flatten
-      .filter(f => f.getName.startsWith(s"${variant}_b${nBuckets}_s") &&
-        !f.getName.endsWith("__views") && f.getName != base.getName &&
-        new java.io.File(f, "_SUCCESS").isFile)
-    require(prev.length == 1,
-      s"append folds into exactly one standing snapshot of ($dir, $variant); " +
-        s"found ${prev.length} — seed with ensure() first")
-    val merged = graft.ReadCache.parquetLocal(spark, prev.head)
-      .unionByName(delta)
-      .groupBy("src", "dst").agg(org.apache.spark.sql.functions.sum(col("n_trans")).as("n_trans"))
-    graft.sink.Sinks.writeBucketed(
-      merged.repartition(nBuckets, col("src")), name, Seq("src"), nBuckets,
-      path = Some(base.getPath), sortCols = Seq("src"))
-    views.foreach(_.write.mode("overwrite")
-      .parquet(viewsDir(dir, variant, nBuckets, stamp).getPath))
-    // retire the absorbed snapshot (files + dead catalog entries) only
-    // after the new table committed — a crash in between leaves both on
-    // disk and the next entry's sweep finishes the retirement
-    sweepSuperseded(spark, dir, variant, stamp, base)
-    spark.table(name)
   }
 
-  private def viewsDir(dir: String, variant: String, buckets: Int,
-                       stamp: String): java.io.File =
-    new java.io.File(rootDir(dir, variant, buckets, stamp).getPath + "__views")
-
-  private def attach(spark: SparkSession, name: String, base: java.io.File,
-                     nBuckets: Int): Unit = {
-    val schema = graft.ReadCache.parquetLocal(spark, base).schema
-    spark.sql(
-      s"""CREATE TABLE $name (${schema.toDDL}) USING PARQUET
-         |CLUSTERED BY (src) SORTED BY (src) INTO $nBuckets BUCKETS
-         |LOCATION '${base.getPath}'""".stripMargin)
+  private def checked(e: DataFrame): DataFrame = {
+    require(e.columns.toSeq == Seq("src", "dst", "n_trans"),
+      s"EdgeIndex expects (src, dst, n_trans); got ${e.columns.mkString(", ")}")
+    e
   }
 
-  /** Supersede every OLDER-STAMP index of the same (dir, variant):
-    * files (tables AND their `__views` sidecars) and dead catalog
-    * entries — the BucketedMirror discipline (current-stamp bucket
-    * variants stay live; a superseded stamp indexes events that no
-    * longer exist). Matches on CONTAINS of the live stamp so the live
-    * snapshot's `__views` sidecar survives the sweep.
+  private def edgesLeaf(log: graft.StoreLog, s: graft.StoreSnapshot): java.io.File =
+    new java.io.File(log.base.toUri.getPath, s.leaves("edges"))
+
+  /** Write `edges` (repartitioned so each task holds one bucket → one
+    * file per bucket, and scans can publish the in-bucket sort, like
+    * BucketedMirror) and `views` into fresh leaves; commit both as the
+    * snapshot of `stamp`. The sweep deletes the superseded leaves.
     */
-  private def sweepSuperseded(spark: SparkSession, dir: String,
-                              variant: String, stamp: String,
-                              base: java.io.File): Unit = {
-    val liveStamp = s"_s$stamp"
-    Option(base.getParentFile.listFiles).toSeq.flatten
-      .filter(f => f.getName.startsWith(s"${variant}_b") &&
-                   !f.getName.contains(liveStamp))
-      .foreach(graft.ArtifactKey.rmRecursive)
-    spark.sql(
-      s"SHOW TABLES LIKE 'graft_edge_index_${variant}_${graft.ArtifactKey.pathKey(dir)}_*'")
-      .collect().map(_.getAs[String]("tableName"))
-      .filter(t => !t.endsWith(liveStamp))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def commit(log: graft.StoreLog, name: String, stamp: String,
+                     edges: DataFrame, views: Option[DataFrame],
+                     nBuckets: Int): graft.StoreSnapshot = {
+    val e = log.fresh("edges")
+    graft.sink.Sinks.writeBucketed(
+      checked(edges).repartition(nBuckets, col("src")), name, Seq("src"), nBuckets,
+      path = Some(log.path(e).toString), sortCols = Seq("src"))
+    val v = views.map { df =>
+      val d = log.fresh("views")
+      df.write.parquet(log.path(d).toString)
+      "views" -> d
+    }
+    log.commit(graft.StoreSnapshot(leaves = Map("edges" -> e) ++ v,
+      meta = Map("stamp" -> stamp)))
   }
 }

@@ -21,13 +21,14 @@ import org.apache.spark.sql.functions.lit
   * Artifact key: content-stamped source table + `subset` (WHICH slice /
   * featurization is the training corpus — two variants must not share a
   * fit) + the hyperparameters (different iters/lr is a different model,
-  * the PqIndex-geometry lesson). Supersede-on-rebuild drops older
-  * content stamps of the same source.
+  * the PqIndex-geometry lesson). The 1-row `weights` leaf commits
+  * through a [[graft.StoreLog]] manifest ([[graft.StoreLog.buildOnce]]);
+  * supersede-on-rebuild drops older content stamps of the same source.
   */
 object WeightsIndex {
 
   /** Bump when the persisted shape or fit derivation changes. */
-  private val version = "v1"
+  private val version = "v2" // v2: committed through a StoreLog manifest
 
   def root(dir: String, table: String, subset: String, iters: Int = 8,
            lr: Double = 8.0,
@@ -55,23 +56,19 @@ object WeightsIndex {
              lr: Double = 8.0): (Array[Double], Long) = synchronized {
     val conf = spark.sessionState.newHadoopConf()
     val base = root(dir, table, subset, iters, lr, conf)
-    if (!new java.io.File(base, "_SUCCESS").isFile) {
-      val stampedDir = base.getParentFile
-      graft.ArtifactKey.dropSuperseded(
-        stampedDir.getParentFile,
-        graft.ArtifactKey.pathKey(
-          new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString) + "_",
-        stampedDir.getName)
+    val leaf = graft.StoreLog.buildOnce(spark, base, "weights") { path =>
+      graft.ArtifactKey.dropSuperseded(base.getParentFile,
+        new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString)
       val (w, nDocs) = QualityClassifier.trainWeightsAndCount(features, iters, lr)
       spark.range(1)
         .select((w.zipWithIndex.map { case (v, i) => lit(v).as(s"b$i") }
           :+ lit(nDocs).as("n_docs")): _*)
         .coalesce(1)
-        .write.mode("overwrite").parquet(base.getPath)
+        .write.parquet(path)
     }
     // memoized per (session, path, content fingerprint) — graft.ReadCache —
     // so a warm inference pays a metadata walk, not a read + head() job
-    graft.ReadCache.collectedLocal(spark, base) { df =>
+    graft.ReadCache.collectedLocal(spark, leaf) { df =>
       val row = df.head()
       (Array.tabulate(row.length - 1)(row.getDouble),
         row.getLong(row.length - 1))

@@ -135,34 +135,30 @@ object Multimodal {
         round(h * scale).cast("int").as("target_height"))
   }
 
-  /** Deterministic synthetic media table derived from the `documents`
-    * testdata (no media table ships with the driver data): media_id =
-    * doc_id, kind cycles image/video/audio, bytes = the document text
-    * (stands in for real pixels/samples), metadata derived arithmetically
-    * from doc_id — so a SQL oracle can recompute every metadata value
-    * without reading a byte of the blobs. Written to parquet once per sf
-    * dir and read back, so downstream metadata-only queries go through a
-    * REAL parquet scan whose ReadSchema provably excludes `bytes`
-    * (PlanQualitySpec gate).
+  /** Bump when the fixture layout changes. */
+  private val fixtureVersion = "v3" // v3: committed through a StoreLog manifest
+
+  private def documentsPath(sfDir: String): String =
+    new org.apache.hadoop.fs.Path(sfDir, "documents.parquet").toString
+
+  /** The store of the `label` fixture derived from the current
+    * `<sfDir>/documents.parquet` content.
     */
-  private val genLock = new Object
+  private[graft] def fixtureRoot(spark: SparkSession, sfDir: String,
+                                 label: String): java.io.File =
+    new java.io.File(s"target/media_fixture/$fixtureVersion/" +
+      graft.ArtifactKey.stamped(documentsPath(sfDir), spark.sessionState.newHadoopConf()) +
+      s"/$label").getAbsoluteFile
 
   /** Caching envelope shared by every documents-derived synthetic asset
-    * table: cache dir keyed by the SANITIZED FULL PATH plus a FINGERPRINT
-    * of the source parquet (total bytes + latest mtime, via the Hadoop FS
-    * so a directory-style parquet fingerprints correctly and a MISSING
-    * source fails loudly instead of degrading to 0_0): regenerating the
-    * testdata moves the fingerprint, so a stale cached table can never be
-    * read — and two JVMs racing on a regenerated source target different
-    * dirs, which also makes the cross-JVM race benign (the JVM-local lock
-    * only serializes within one process). Older fingerprints of the same
-    * source are deleted (if idle > 1 h: deleting a just-superseded dir
-    * immediately could yank it from under a concurrent JVM that resolved
-    * its path before the regeneration) so regenerations don't accumulate
-    * copies. Built ONCE per (source, label); downstream queries measure
-    * their own work through a real parquet scan, not the fixture build.
-    */
-  /** Fixture WRITE parallelism is the fixture READ parallelism: the
+    * table: one build-once [[graft.StoreLog]] store per (content-stamped
+    * documents source, label), so regenerating the testdata moves the
+    * stamp and a stale fixture can never be read; the build drops the
+    * fixtures of older stamps. Built ONCE per (source, label); downstream
+    * queries measure their own work through a real parquet scan, not the
+    * fixture build.
+    *
+    * Fixture WRITE parallelism is the fixture READ parallelism: the
     * real-codec generators read the SPREAD documents table
     * (Tables.documents, not the raw single-split reader), so the
     * one-time encode pass runs at session width and the written fixture
@@ -176,39 +172,35 @@ object Multimodal {
     * through a shuffle, against the family's scale discipline.
     */
   private def cachedDerived(spark: SparkSession, sfDir: String, label: String,
-                            readSchema: Option[StructType])(gen: => DataFrame): DataFrame = {
-    val srcPath = new org.apache.hadoop.fs.Path(sfDir, "documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(srcPath), s"$label: no documents parquet at $srcPath")
-    val summary = fs.getContentSummary(srcPath)
-    val mtime = fs.getFileStatus(srcPath).getModificationTime
-    // the trailing layout tag versions the CACHE KEY, not the content:
-    // the sharded-write change (generators read the spread documents
-    // table) only takes effect on a REBUILD, and without the tag a
-    // surviving pre-shard single-file fixture would short-circuit the
-    // build forever and silently keep every decode scan single-split
-    val fp = s"${summary.getLength}_${mtime}_l2"
-    val prefix = s"graft_${label}_" + sfDir.replaceAll("[^A-Za-z0-9.-]", "_") + "_"
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    Option(tmp.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(prefix) && f.getName != prefix + fp &&
-                   f.lastModified() < cutoff)
-      .foreach(stale => org.apache.commons.io.FileUtils.deleteQuietly(stale))
-    val out = new java.io.File(tmp, prefix + fp).getAbsolutePath
-    genLock.synchronized {
-      if (!new java.io.File(out, "_SUCCESS").exists())
-        gen.write.mode("overwrite").parquet(out)
+                            readSchema: Option[StructType])(gen: => DataFrame): DataFrame =
+    synchronized {
+      val base = fixtureRoot(spark, sfDir, label)
+      val leaf = graft.StoreLog.buildOnce(spark, base, "data") { path =>
+        val src = new org.apache.hadoop.fs.Path(documentsPath(sfDir))
+        require(src.getFileSystem(spark.sessionState.newHadoopConf()).exists(src),
+          s"$label: no documents parquet at $src")
+        graft.ArtifactKey.dropSuperseded(base.getParentFile, src.toString)
+        gen.write.parquet(path)
+      }
+      // memoized handle per (session, path, content fingerprint) — the
+      // fixture parquet is immutable once written, so every m-query
+      // otherwise re-pays the listing + schema-inference job per call
+      graft.ReadCache.cached(spark, "pq", leaf.getPath,
+        graft.ReadCache.localFingerprint(leaf)) {
+        readSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(leaf.getPath)
+      }
     }
-    // memoized handle per (session, path, content fingerprint) — the
-    // fixture parquet is immutable once written, so every m-query
-    // otherwise re-pays the listing + schema-inference job per call
-    graft.ReadCache.cached(spark, "pq", out,
-      graft.ReadCache.localFingerprint(new java.io.File(out))) {
-      readSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(out)
-    }
-  }
 
+  /** Deterministic synthetic media table derived from the `documents`
+    * testdata (no media table ships with it): media_id =
+    * doc_id, kind cycles image/video/audio, bytes = the document text
+    * (stands in for real pixels/samples), metadata derived arithmetically
+    * from doc_id — so a SQL oracle can recompute every metadata value
+    * without reading a byte of the blobs. Written to parquet once per sf
+    * dir and read back, so downstream metadata-only queries go through a
+    * REAL parquet scan whose ReadSchema provably excludes `bytes`
+    * (PlanQualitySpec gate).
+    */
   def syntheticMediaTable(spark: SparkSession, sfDir: String): DataFrame =
     cachedDerived(spark, sfDir, "media", Some(mediaSchema)) {
         graft.Tables(spark, sfDir, "documents")

@@ -94,9 +94,7 @@ object IvfIndex {
     // without this each regeneration strands a full-size index copy
     // (the whole stamped dir goes, all subsets: they are slices of
     // the same now-stale content)
-    graft.ArtifactKey.dropSuperseded(
-      base.getParentFile.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
-      base.getParentFile.getName)
+    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
     val df = corpus
     val n = Similarity.countRows(df)
     if (n == 0) {

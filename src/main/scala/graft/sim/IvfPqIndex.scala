@@ -81,9 +81,7 @@ object IvfPqIndex {
       sessionMemo(spark)(base.getPath) = h
       return h
     }
-    graft.ArtifactKey.dropSuperseded(
-      base.getParentFile.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
-      base.getParentFile.getName)
+    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
     // one build-time equi-join lays the codes out by cell; repartition
     // on the cell first so partitionBy writes ONE file per cell
     // directory (the IvfIndex alignment trick)

@@ -94,10 +94,7 @@ object PqIndex {
     // superseded = older CONTENT stamps of the same source (siblings of
     // the stamped dir); geometry variants live INSIDE one stamped dir
     // and coexist
-    val stampedDir = base.getParentFile
-    graft.ArtifactKey.dropSuperseded(
-      stampedDir.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
-      stampedDir.getName)
+    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
     val df = corpus
     val cb = Similarity.pqTrain(df, m, ksub, iters = 2, idCol, vecCol)
     if (cb.isEmpty) {

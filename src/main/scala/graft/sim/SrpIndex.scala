@@ -131,9 +131,7 @@ object SrpIndex {
       case None =>
     }
     // a cold build supersedes every older stamp of the same source
-    graft.ArtifactKey.dropSuperseded(
-      base.getParentFile.getParentFile,
-      graft.ArtifactKey.pathKey(dir) + "_", base.getParentFile.getName)
+    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
     val df = corpus
     val n = Similarity.countRows(df)
     if (n == 0) {

@@ -13,12 +13,12 @@ import org.apache.spark.sql.functions.col
   * SQLite B-tree it builds once per load (/root/reference/src/load.py:
   * 143-144) so later lookups don't scan.
   *
-  * Reuse ladder (cheapest first):
+  * Reuse ladder (cheapest first, [[Sinks.bucketedTable]]):
   *  1. the session catalog already has the mirror → reuse as-is;
-  *  2. a previous JVM left the files on disk (`_SUCCESS` present) →
-  *     re-register the external table over them with bucket-spec DDL —
-  *     no rewrite;
-  *  3. nothing exists → write it (the one-time shuffle+sort).
+  *  2. a previous JVM committed it (its [[graft.StoreLog]] manifest lists
+  *     the `data` leaf) → re-register the external table over the leaf
+  *     with bucket-spec DDL — no rewrite;
+  *  3. nothing is committed → write it (the one-time shuffle+sort).
   *
   * The write `repartition(nBuckets, key)`s first: repartition's hash
   * partitioning is the same murmur3 `pmod(hash(key), n)` the bucket
@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions.col
   * each bucket lands in ONE file — which is what lets the scan publish
   * its in-bucket sort order and the downstream sort-merge join drop both
   * its Sort nodes, not just its exchanges. Mirrors are keyed by
-  * (sf-dir, table), live under target/bucketed_mirror (untracked; `sbt
-  * clean` or deleting the directory forces a rebuild), and mirror the
+  * (source table, content stamp, bucket count), live under
+  * target/bucketed_mirror (untracked; `sbt clean` or deleting the
+  * directory forces a rebuild), and mirror the
   * FULL table — one mirror serves every query on the key, and column
   * pruning works on bucketed scans like any parquet scan.
   */
@@ -93,12 +94,8 @@ object BucketedMirror {
   def withSessionConfs(b: SparkSession.Builder): SparkSession.Builder =
     sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
-  /** Mirror key: readable basename + a hash of the FULL absolute path —
-    * basename alone would let two corpora at different paths with the
-    * same directory name silently serve each other's mirror. (Content
-    * staleness is keyed per TABLE, not here — see [[ensure]].)
-    */
-  private[graft] def tag(dir: String): String = graft.ArtifactKey.pathKey(dir)
+  /** Bump when the persisted layout changes. */
+  private val version = "v2" // v2: committed through a StoreLog manifest
 
   /** Size through the Hadoop FileSystem of the path's scheme — the same
     * stack the table is read with — so hdfs:/s3a: sources size correctly
@@ -114,6 +111,19 @@ object BucketedMirror {
     fs.getContentSummary(p).getLength
   }
 
+  /** The store of the `buckets`-bucket mirror of the current
+    * `<dir>/<table>.parquet` content; bucket-count variants of one stamp
+    * sit side by side under the stamped directory.
+    */
+  private[graft] def root(dir: String, table: String, buckets: Int,
+                          hadoopConf: org.apache.hadoop.conf.Configuration =
+                            new org.apache.hadoop.conf.Configuration()): java.io.File = {
+    val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString
+    new java.io.File(
+      s"target/bucketed_mirror/$version/${graft.ArtifactKey.stamped(src, hadoopConf)}/b$buckets")
+      .getAbsoluteFile
+  }
+
   /** Bucketed mirror of `<dir>/<table>.parquet` clustered+sorted on
     * `keyCol`; returns the catalog table, building or re-registering it
     * only when needed. `nBuckets ≤ 0` derives the count from the source
@@ -122,55 +132,31 @@ object BucketedMirror {
     * with a different bucket spec. Builds are serialized per JVM —
     * Verify constructs queries from a thread pool and j7/j8 share the
     * orderkey mirrors.
+    *
+    * The catalog name and the store embed the source's content stamp, so
+    * a source regenerated at the same path rebuilds instead of serving
+    * the stale mirror, and the build drops every OLDER-STAMP mirror of
+    * the table (files and catalog entries). Bucket-count variants of the
+    * CURRENT stamp (ensure(nBuckets=4) then ensure(nBuckets=8)) both stay
+    * live: DataFrames held in this session may reference either.
     */
   def ensure(spark: SparkSession, dir: String, table: String, keyCol: String,
              nBuckets: Int = 0): DataFrame = synchronized {
     val buckets = if (nBuckets > 0) nBuckets else bucketsFor(sourceBytes(spark, dir, table))
     // the planning flags the mirror plans rely on live in [[sessionConfs]]
     // and are applied at session construction, not mutated here
-    // content stamp per TABLE: a source regenerated at the same path gets
-    // a new stamp → new catalog name + path → rebuild, instead of the
-    // path-keyed reuse silently serving the stale mirror
-    val stamp = graft.ContentStamp(
-      new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString,
-      spark.sessionState.newHadoopConf())
-    val name = s"graft_mirror_${table}_${tag(dir)}_b${buckets}_s$stamp"
-    if (!spark.catalog.tableExists(name)) {
-      val path = new java.io.File(
-        s"target/bucketed_mirror/${tag(dir)}/${table}_b${buckets}_s$stamp").getAbsolutePath
-      // a cold build supersedes every OLDER-STAMP mirror of the same
-      // table (files AND their dead catalog entries) — without this each
-      // source regeneration strands a full-size mirror copy. Scoped to
-      // stamps OTHER than the current one: two bucket-count variants of
-      // the CURRENT stamp (ensure(nBuckets=4) then ensure(nBuckets=8))
-      // are both live, possibly referenced by DataFrames held in this
-      // session — deleting one mid-session would fail those frames'
-      // next action. A superseded stamp's mirror, by contrast, mirrors
-      // data that no longer exists at the source; a holder was already
-      // reading stale rows.
-      val liveStamp = s"_s$stamp"
-      Option(new java.io.File(path).getParentFile.listFiles).toSeq.flatten
-        .filter(f => f.getName.startsWith(s"${table}_b") &&
-                     !f.getName.endsWith(liveStamp))
-        .foreach(graft.ArtifactKey.rmRecursive)
-      spark.sql(s"SHOW TABLES LIKE 'graft_mirror_${table}_${tag(dir)}_*'")
-        .collect().map(_.getAs[String]("tableName"))
-        .filter(t => t != name && !t.endsWith(liveStamp))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      if (new java.io.File(path, "_SUCCESS").isFile) {
-        // files survive the session catalog; re-attach them with the
-        // bucket spec they were written with (same code path below)
-        val schema = spark.read.parquet(path).schema
-        spark.sql(
-          s"""CREATE TABLE $name (${schema.toDDL}) USING PARQUET
-             |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $buckets BUCKETS
-             |LOCATION '$path'""".stripMargin)
-      } else {
+    val conf = spark.sessionState.newHadoopConf()
+    val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString
+    val stamp = graft.ContentStamp(src, conf)
+    Sinks.bucketedTable(spark, s"graft_mirror_${table}_${graft.ArtifactKey.pathKey(dir)}",
+        stamp, keyCol, buckets) { name =>
+      val base = root(dir, table, buckets, conf)
+      graft.StoreLog.buildOnce(spark, base, "data") { path =>
+        graft.ArtifactKey.dropSuperseded(base.getParentFile, src)
         Sinks.writeBucketed(
           graft.Tables(spark, dir, table).repartition(buckets, col(keyCol)),
           name, Seq(keyCol), buckets, path = Some(path), sortCols = Seq(keyCol))
       }
     }
-    spark.table(name)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analyze.Analytics
 
@@ -100,6 +100,45 @@ object Sinks {
     val located = path.fold(sorted)(p => sorted.option("path", p))
     located.saveAsTable(tableName)
   }
+
+  /** The catalog table `<prefix>_b<n>_s<stamp>` of a persisted artifact
+    * bucketed and sorted on `key` ([[graft.sink.BucketedMirror]],
+    * [[graft.graph.EdgeIndex]]). A session-catalog hit returns at once.
+    * Otherwise `leaf` returns the artifact's committed leaf — building
+    * and committing it first if needed, with [[writeBucketed]] under the
+    * name it is passed — and the table is registered over it with
+    * bucket-spec DDL: no rewrite, no source scan. A failed build drops
+    * the entry its write registered, so the catalog never names an
+    * uncommitted leaf; entries of other content stamps name superseded
+    * files and are dropped.
+    */
+  def bucketedTable(spark: SparkSession, prefix: String, stamp: String, key: String,
+                    nBuckets: Int)(leaf: String => java.io.File): DataFrame = {
+    val name = s"${prefix}_b${nBuckets}_s$stamp"
+    if (!spark.catalog.tableExists(name)) {
+      val location = try leaf(name) catch {
+        case e: Throwable => spark.sql(s"DROP TABLE IF EXISTS $name"); throw e
+      }
+      dropTables(spark, s"${prefix}_*", _.endsWith(s"_s$stamp"))
+      if (!spark.catalog.tableExists(name)) {
+        val schema = graft.ReadCache.parquetLocal(spark, location).schema
+        spark.sql(
+          s"""CREATE TABLE $name (${schema.toDDL}) USING PARQUET
+             |CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS
+             |LOCATION '${location.getPath}'""".stripMargin)
+      }
+    }
+    spark.table(name)
+  }
+
+  /** Drop the catalog entries `SHOW TABLES LIKE pattern` lists, except
+    * those `keep` holds.
+    */
+  def dropTables(spark: SparkSession, pattern: String,
+                 keep: String => Boolean = _ => false): Unit =
+    spark.sql(s"SHOW TABLES LIKE '$pattern'").collect()
+      .map(_.getAs[String]("tableName")).filterNot(keep)
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
   /** S12: nested analysis-result JSON (analyze.py:292-306) — one JSON
     * object per group assembled with struct/to_json, written as JSON lines.

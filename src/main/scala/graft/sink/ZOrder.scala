@@ -145,7 +145,9 @@ object ZOrderTable {
   * shuffle once, every later multi-column range scan prunes) and the
   * index stores (content-stamped key, supersede-on-rebuild, reuse never
   * scans the source). Where the bucketed mirror serves JOIN co-location
-  * on one key, this serves RANGE-PREDICATE pruning on k columns.
+  * on one key, this serves RANGE-PREDICATE pruning on k columns. The
+  * mirror commits its one `data` leaf through a [[graft.StoreLog]]
+  * manifest ([[graft.StoreLog.buildOnce]]).
   */
 object ZOrderMirror {
 
@@ -153,7 +155,7 @@ object ZOrderMirror {
     * content, so a mirror persisted by OLDER layout code would
     * otherwise silently serve the stale file order.
     */
-  private val version = "v2" // v2: bits + unambiguous cols in the key
+  private val version = "v3" // v3: committed through a StoreLog manifest
 
   /** Files for a source of `bytes`: one ~[[BucketedMirror.targetBucketBytes]]
     * file per chunk, floored at 16 (local[32]-shape parallelism at test
@@ -193,23 +195,19 @@ object ZOrderMirror {
              cols: Seq[String], bits: Int = 8): DataFrame = synchronized {
     val conf = spark.sessionState.newHadoopConf()
     val base = root(dir, table, cols, bits, conf)
-    if (!new java.io.File(base, "_SUCCESS").isFile) {
+    val leaf = graft.StoreLog.buildOnce(spark, base, "data") { path =>
       val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet")
       val fs = src.getFileSystem(conf)
       require(fs.exists(src), s"z-order mirror source does not exist: $src")
       // superseded = older content stamps of the same source table
       // (siblings of the stamped dir); geometry/column variants coexist
       // inside (base = <stamp>/b<bits>/<cols>)
-      val stampedDir = base.getParentFile.getParentFile
-      graft.ArtifactKey.dropSuperseded(
-        stampedDir.getParentFile,
-        graft.ArtifactKey.pathKey(src.toString) + "_", stampedDir.getName)
-      val df = spark.read.parquet(src.toString)
-      ZOrder.writeZOrdered(df, cols, base.getPath,
+      graft.ArtifactKey.dropSuperseded(base.getParentFile.getParentFile, src.toString)
+      ZOrder.writeZOrdered(spark.read.parquet(src.toString), cols, path,
         filesFor(fs.getContentSummary(src).getLength), bits)
     }
     // memoized handle ([[graft.ReadCache]]): a warm mirror read skips the
     // per-read listing + schema-inference job; any rewrite misses
-    graft.ReadCache.parquetLocal(spark, base)
+    graft.ReadCache.parquetLocal(spark, leaf)
   }
 }

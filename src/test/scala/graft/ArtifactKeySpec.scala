@@ -115,18 +115,22 @@ class ArtifactKeySpec extends SparkTestBase {
     def mirrorTables() = spark.sql(s"SHOW TABLES LIKE 'graft_mirror_t_${tag}_*'")
       .select("tableName").as[String].collect().toSeq
     assert(mirrorTables().size === 1)
-    val mirrorDir = new java.io.File(s"target/bucketed_mirror/$tag")
-    assert(Option(mirrorDir.listFiles).toSeq.flatten.size === 1)
+    // one stamped store directory per content stamp of the source table
+    val stampedDir = BucketedMirror.root(src.getPath, "t", 4).getParentFile
+    def mirrorDirs() = Option(stampedDir.getParentFile.listFiles).toSeq.flatten
+      .filter(_.getName.startsWith(
+        ArtifactKey.pathKey(new java.io.File(src, "t.parquet").getPath) + "_"))
+    assert(mirrorDirs().size === 1)
     // regenerate the source table with different content
     writeSource(70)
     val m2 = BucketedMirror.ensure(spark, src.getPath, "t", "k", nBuckets = 4)
     assert(m2.count() === 70, "the mirror must serve the regenerated table")
     assert(mirrorTables().size === 1,
       "the dead catalog entry for the old stamp must be dropped")
-    assert(Option(mirrorDir.listFiles).toSeq.flatten.size === 1,
+    assert(mirrorDirs().size === 1 && !stampedDir.exists,
       "the old stamp's mirror files must be GC'd")
     mirrorTables().foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    ArtifactKey.rmRecursive(mirrorDir)
+    mirrorDirs().foreach(ArtifactKey.rmRecursive)
     ArtifactKey.rmRecursive(src)
   }
 
@@ -147,7 +151,7 @@ class ArtifactKeySpec extends SparkTestBase {
       .select("tableName").as[String].collect().toSeq
     assert(live.size === 2, s"both variants must stay registered, got $live")
     live.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    ArtifactKey.rmRecursive(new java.io.File(s"target/bucketed_mirror/$tag"))
+    ArtifactKey.rmRecursive(BucketedMirror.root(src.getPath, "t", 4).getParentFile)
     ArtifactKey.rmRecursive(src)
   }
 

@@ -26,11 +26,10 @@ class EdgeIndexSpec extends SparkTestBase {
     val idx1 = EdgeIndex.ensure(spark, dir, "spec", inline)
     val expected = edgeRows(inline)
     assert(edgeRows(idx1) === expected, "indexed rows must equal the inline derivation")
-    // locate the persisted _SUCCESS through the catalog table's files
-    val success = new java.io.File(
-      new java.io.File(idx1.inputFiles.head.stripPrefix("file:")).getParentFile,
+    // locate the committed leaf's _SUCCESS through the store's manifest
+    val success = new java.io.File(committedLeaf(EdgeIndex.root(dir, "spec"), "edges"),
       "_SUCCESS")
-    assert(success.isFile, s"expected _SUCCESS beside ${idx1.inputFiles.head}")
+    assert(success.isFile, s"expected _SUCCESS in the committed edges leaf")
     val stamp = success.lastModified
     val idx2 = EdgeIndex.ensure(spark, dir, "spec",
       { fail("warm ensure must not evaluate the edge derivation"); inline })
@@ -133,30 +132,6 @@ class EdgeIndexSpec extends SparkTestBase {
     assert(edgeRows(reattached) === edgeRows(oneShot))
     assert(EdgeIndex.viewsOf(spark, tmpDir, "apx").nonEmpty,
       "the live snapshot's views sidecar must survive the re-attach sweep")
-    // a crash between the table write and the sidecar write: the replay
-    // of the SAME batch must complete the missing sidecar instead of
-    // returning early with the state stuck one batch behind (the next
-    // fold would fabricate boundary transitions this batch already
-    // folded)
-    val sidecars = Option(new java.io.File(
-      new java.io.File("target/edge_index/v1"),
-      graft.ArtifactKey.pathKey(tmpDir)).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith("__views"))
-    assert(sidecars.length === 1)
-    graft.ArtifactKey.rmRecursive(sidecars.head)
-    assert(EdgeIndex.viewsOf(spark, tmpDir, "apx").isEmpty,
-      "crash simulation: sidecar gone")
-    // the replay's inputs are rebuilt from the caller's own frames (as a
-    // real at-least-once driver would) — the ORIGINAL delta/views plans
-    // read the retired seed-stamp sidecar the sweep already deleted
-    EdgeIndex.append(spark, tmpDir, "apx",
-      Graph.transitionEdgesDelta(
-        Graph.lastViews(ev(rows.take(200)), "user_id", "page", "ts", "event_id"),
-        batch, "user_id", "page", "ts", "event_id"),
-      views = Some(Graph.lastViews(ev(rows), "user_id", "page", "ts", "event_id")))
-    assert(EdgeIndex.viewsOf(spark, tmpDir, "apx").get
-      .collect().map(_.toSeq).toSet === viewRows,
-      "the idempotent replay must restore the views sidecar")
     EdgeIndex.drop(spark, tmpDir, "apx")
     graft.ArtifactKey.rmRecursive(tmpRoot)
   }

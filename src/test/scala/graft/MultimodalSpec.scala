@@ -144,12 +144,13 @@ class MultimodalSpec extends SparkTestBase {
     assert(w5.getAs[Int]("peak") === 1000 + (5 * 7) % 9000)
     assert(w5.getAs[Long]("n_samples") === 800L + 5 % 1600)
     // decode scans split by FILE: a single-file fixture would run every
-    // m-query on one core, and only the `_l2` layout tag in the cache key
-    // keeps a surviving pre-shard fixture from being served
+    // m-query on one core, and a fixture surviving from the previous
+    // layout (java.io.tmpdir, keyed by source length + mtime + `_l2`)
+    // must never be served
     val src = new org.apache.hadoop.fs.Path(dir, "documents.parquet")
     val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
     val oldKey = s"${fs.getContentSummary(src).getLength}_" +
-      s"${fs.getFileStatus(src).getModificationTime}"
+      s"${fs.getFileStatus(src).getModificationTime}_l2"
     val rows = Tables.documents(spark, dir).count()
     val want = math.min(spark.sparkContext.defaultParallelism.toLong, rows)
     Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
@@ -157,7 +158,7 @@ class MultimodalSpec extends SparkTestBase {
       "media_jpg" -> Multimodal.syntheticJpegTable,
       "media_wav" -> Multimodal.syntheticWavTable,
       "media_gif" -> Multimodal.syntheticGifTable).foreach { case (label, table) =>
-      // a stale single-file fixture planted under the pre-_l2 key
+      // a stale single-file fixture planted under the previous layout's key
       val stale = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_${label}_" + dir.replaceAll("[^A-Za-z0-9.-]", "_") + "_" + oldKey)
       ArtifactKey.rmRecursive(stale)
@@ -168,7 +169,7 @@ class MultimodalSpec extends SparkTestBase {
         val files = df.inputFiles
         assert(files.length >= want, s"$label: ${files.length} files < $want")
         assert(!files.exists(_.contains(stale.getName + "/")),
-          s"$label served the pre-_l2 directory")
+          s"$label served the previous layout's directory")
         assert(df.count() === rows)
       } finally ArtifactKey.rmRecursive(stale)
     }

@@ -98,7 +98,8 @@ class QualityClassifierSpec extends SparkTestBase {
     assert(w1.toSeq === inline._1.toSeq,
       "persisted weights must be the identical IEEE doubles the fit produced")
     assert(n1 === inline._2)
-    val success = new java.io.File(WeightsIndex.root(dir, "documents", "spec"), "_SUCCESS")
+    val success = new java.io.File(
+      committedLeaf(WeightsIndex.root(dir, "documents", "spec"), "weights"), "_SUCCESS")
     assert(success.isFile)
     val stamp = success.lastModified
     val (w2, n2) = WeightsIndex.ensure(spark, dir, "documents", "spec",

@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   *    appends (LshIndex, HashLedger, ZOrderTable) are at-least-once: a
   *    replay after "committed" appends twice, so only their "written"
   *    replay is checked.
+  * The catalog-backed stores (EdgeIndex, BucketedMirror) read through
+  * their own entry point, which must not find a catalog entry naming an
+  * uncommitted leaf.
   */
 class StoreLogSpec extends SparkTestBase {
   import spark.implicits._
@@ -136,6 +139,38 @@ class StoreLogSpec extends SparkTestBase {
     }, () => (),
     () => rows(sink.ZOrderTable.read(spark, zPath)))
 
+  // the build-once and catalog-backed stores key on real source tables
+  private lazy val src: String = {
+    val d = s"$tmp/src"
+    spark.range(0, 200).select(col("id").as("k"), pmod(xxhash64(col("id")), lit(97)).as("v"))
+      .write.parquet(s"$d/t.parquet")
+    texts.withColumn("n_chars", length(col("text"))).write.parquet(s"$d/documents.parquet")
+    d
+  }
+  private def events(n: Long): Unit =
+    spark.range(n).toDF("event_id").write.mode("overwrite").parquet(s"$src/events.parquet")
+  private val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L)).toDF("src", "dst", "n_trans")
+  private val delta = Seq((1L, 2L, 1L), (4L, 1L, 5L)).toDF("src", "dst", "n_trans")
+  private def views(page: Long): DataFrame = Seq((1L, page), (2L, page + 1)).toDF("user_id", "page")
+  private def edgeIndex(): DataFrame =
+    graph.EdgeIndex.ensure(spark, src, sub, edges, views = Some(views(5)))
+  private def edgeState(): Seq[String] =
+    rows(spark.read.parquet(committedLeaf(graph.EdgeIndex.root(src, sub), "edges").getPath)) ++
+      graph.EdgeIndex.viewsOf(spark, src, sub).map(rows).getOrElse(Seq.empty)
+  private val edgeCase = Case("EdgeIndex", () => local(graph.EdgeIndex.root(src, sub)),
+    () => graph.EdgeIndex.drop(spark, src, sub), () => events(10), () => edgeIndex(): Unit,
+    () => edgeState(), rebuilds = true)
+  private def mirror(): DataFrame = sink.BucketedMirror.ensure(spark, src, "t", "k", nBuckets = 4)
+  private def zmirror(): DataFrame = sink.ZOrderMirror.ensure(spark, src, "t", Seq("k", "v"))
+  private def features: DataFrame = ml.QualityClassifier.featurize(
+    spark.read.parquet(s"$src/documents.parquet"), "doc_id", "text", "n_chars",
+    col("doc_id") % 2 === 0)
+  private def weights(): Seq[String] = {
+    val (w, n) = ml.WeightsIndex.ensure(spark, src, "documents", sub, features)
+    w.toSeq.map(_.toString) :+ s"n_docs $n"
+  }
+  private def media(): DataFrame = multimodal.Multimodal.syntheticMediaTable(spark, src)
+
   private val cases = Seq(
     ivfCase.copy(name = "IvfIndex.ensure", run = () => ivf(), rebuilds = true),
     ivfCase.copy(name = "IvfIndex.append", setup = () => ivf(),
@@ -195,7 +230,27 @@ class StoreLogSpec extends SparkTestBase {
     zCase.copy(name = "ZOrderTable.append", idempotent = false,
       run = () => sink.ZOrderTable.append(zrows(768, 256), Seq("a", "b"), zPath, 2)),
     zCase.copy(name = "ZOrderTable.compact",
-      run = () => sink.ZOrderTable.compact(spark, zPath, Seq("a", "b"), 2)))
+      run = () => sink.ZOrderTable.compact(spark, zPath, Seq("a", "b"), 2)),
+    edgeCase.copy(name = "EdgeIndex.ensure",
+      read = () => rows(edgeIndex()) ++ edgeState()),
+    edgeCase.copy(name = "EdgeIndex.append", rebuilds = false,
+      setup = () => { events(10); edgeIndex(); events(20) },
+      run = () => graph.EdgeIndex.append(spark, src, sub, delta, views = Some(views(7))): Unit),
+    Case("BucketedMirror.ensure", () => local(sink.BucketedMirror.root(src, "t", 4)),
+      () => {
+        sink.Sinks.dropTables(spark, s"graft_mirror_t_${ArtifactKey.pathKey(src)}_*")
+        ArtifactKey.rmRecursive(sink.BucketedMirror.root(src, "t", 4))
+      }, () => (), () => mirror(): Unit, () => rows(mirror()), rebuilds = true),
+    Case("ZOrderMirror.ensure", () => local(sink.ZOrderMirror.root(src, "t", Seq("k", "v"))),
+      () => sink.ZOrderMirror.drop(src, "t", Seq("k", "v")), () => (), () => zmirror(): Unit,
+      () => rows(zmirror()), rebuilds = true),
+    Case("WeightsIndex.ensure", () => local(ml.WeightsIndex.root(src, "documents", sub)),
+      () => ml.WeightsIndex.drop(src, "documents", sub), () => (), () => weights(): Unit,
+      () => weights(), rebuilds = true),
+    Case("media fixture", () => local(multimodal.Multimodal.fixtureRoot(spark, src, "media")),
+      () => ArtifactKey.rmRecursive(multimodal.Multimodal.fixtureRoot(spark, src, "media")),
+      () => (), () => media(): Unit,
+      () => rows(media().withColumn("bytes", md5(col("bytes")))), rebuilds = true))
 
   /** Children of `base` that its latest manifest does not list, read
     * without opening the store (opening would sweep them).
@@ -227,6 +282,39 @@ class StoreLogSpec extends SparkTestBase {
           assert(c.read() === want, s"${c.name} replayed after a crash at $label")
         }
       }
+      c.reset()
+    }
+  }
+
+  test("a store whose layout version moved builds fresh beside its previous " +
+       "layout's directory and never reads it") {
+    def stamp(table: String) = ContentStamp(s"$src/$table.parquet")
+    def bumped(root: java.io.File, from: String, to: String) =
+      new java.io.File(root.getPath.replace(from, to))
+    // where the previous layout kept each store (a `_SUCCESS`-marked leaf)
+    val previous = Map[String, () => java.io.File](
+      "EdgeIndex.ensure" -> (() => new java.io.File(
+        s"target/edge_index/v1/${ArtifactKey.pathKey(src)}/${sub}_b16_s${stamp("events")}")
+        .getAbsoluteFile),
+      "BucketedMirror.ensure" -> (() => new java.io.File(
+        s"target/bucketed_mirror/${ArtifactKey.pathKey(src)}/t_b4_s${stamp("t")}")
+        .getAbsoluteFile),
+      "ZOrderMirror.ensure" -> (() => bumped(sink.ZOrderMirror.root(src, "t", Seq("k", "v")),
+        "/zorder_mirror/v3/", "/zorder_mirror/v2/")),
+      "WeightsIndex.ensure" -> (() => bumped(ml.WeightsIndex.root(src, "documents", sub),
+        "/weights_index/v2/", "/weights_index/v1/")))
+    val stores = cases.filter(c => previous.contains(c.name))
+    assert(stores.size === previous.size)
+    stores.foreach { c =>
+      c.reset(); c.setup()
+      val want = c.read()
+      c.reset(); c.setup()
+      val old = previous(c.name)()
+      Seq((-1L, -1L)).toDF("k", "v").write.parquet(old.getPath)
+      assert(c.read() === want, s"${c.name} served its previous layout's directory")
+      assert(new java.io.File(old, "_SUCCESS").isFile,
+        s"${c.name} touched its previous layout's directory")
+      ArtifactKey.rmRecursive(old)
       c.reset()
     }
   }
