@@ -1,11 +1,12 @@
 package graft
 
-/** The ONE keying scheme for persisted derived artifacts (bucketed
-  * mirrors, IVF/SRP indexes), so the three artifact stores cannot drift
-  * apart (each had grown its own copy of this logic — and two of the
-  * copies stamped through a bare default Hadoop `Configuration`, which
-  * breaks on any filesystem that needs session conf to resolve, e.g.
-  * s3a credentials supplied via `spark.hadoop.*`).
+/** The ONE keying scheme for persisted derived artifacts, and the one
+  * store root ([[root]]) every content-stamped store under target/ is
+  * built at, so the stores cannot drift apart (copies of this logic
+  * have: one stamped through a bare default Hadoop `Configuration`,
+  * which breaks on any filesystem that needs session conf to resolve,
+  * e.g. s3a credentials via `spark.hadoop.*`; another never deleted
+  * its superseded stamps).
   *
   * Key anatomy: `<basename>_<pathMd5.8hex>[_<contentStamp>]`
   *  - basename: human-readable (which corpus is this?)
@@ -33,13 +34,11 @@ private[graft] object ArtifactKey {
 
   /** [[pathKey]] + content stamp. Pass the SESSION Hadoop conf
     * (`spark.sessionState.newHadoopConf()`) wherever a session is in
-    * scope — the default only resolves filesystems that need no conf
-    * (local, unauthenticated HDFS) and exists for driver-side utilities
-    * (drop/root) that run where no session is live.
+    * scope — a bare `Configuration` only resolves filesystems that need
+    * no conf (local, unauthenticated HDFS); the stores' `root`/`drop`
+    * default to one for callers with no live session.
     */
-  def stamped(dir: String,
-              hadoopConf: org.apache.hadoop.conf.Configuration =
-                new org.apache.hadoop.conf.Configuration()): String =
+  private def stamped(dir: String, hadoopConf: org.apache.hadoop.conf.Configuration): String =
     pathKey(dir) + "_" + ContentStamp(dir, hadoopConf)
 
   /** Recursive local delete (artifact stores live under target/). */
@@ -60,9 +59,27 @@ private[graft] object ArtifactKey {
       .filter(f => f.getName.startsWith(prefix) && f.getName != keep)
       .foreach(rmRecursive)
 
-  /** [[dropSuperseded]] for a `<parent>/`[[stamped]]`(src)` directory:
-    * deletes the sibling directories of `src`'s other content stamps.
+  /** The store root `target/<kind>/<version>/`[[stamped]]`(src)/<variant>`
+    * — the one layout of every content-stamped artifact under target/.
+    * `variant` (subset, geometry, bucket count, …) may span several
+    * directory levels; every variant of one stamp shares the stamped
+    * directory, and a change of stamp moves all of them at once.
     */
-  def dropSuperseded(stamped: java.io.File, src: String): Unit =
-    dropSuperseded(stamped.getParentFile, pathKey(src) + "_", stamped.getName)
+  def root(kind: String, version: String, src: String, variant: String,
+           hadoopConf: org.apache.hadoop.conf.Configuration): java.io.File =
+    new java.io.File(s"target/$kind/$version/${stamped(src, hadoopConf)}/$variant")
+      .getAbsoluteFile
+
+  /** [[dropSuperseded]] for a [[root]]: deletes the stamped directories
+    * of the same source's other content stamps, with every variant in
+    * them (they are slices of the same now-stale content).
+    */
+  def dropSuperseded(root: java.io.File): Unit = {
+    val target = new java.io.File("target").getAbsoluteFile.toPath
+    val rel = target.relativize(root.toPath)
+    require(rel.getNameCount > 3 && !rel.startsWith(".."), s"$root is not an ArtifactKey.root")
+    val stampedDir = target.resolve(rel.subpath(0, 3)).toFile
+    val name = stampedDir.getName // <pathKey>_<stamp>; a stamp has no '_'
+    dropSuperseded(stampedDir.getParentFile, name.take(name.lastIndexOf('_') + 1), name)
+  }
 }

@@ -40,14 +40,11 @@ object StateStore {
   def root(dir: String, table: String, name: String,
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration()): java.io.File =
-    new java.io.File(
-      s"target/state_store/$version/" +
-        s"${ArtifactKey.stamped(src(dir, table), hadoopConf)}/$name")
-      .getAbsoluteFile
+    ArtifactKey.root("state_store", version, src(dir, table), name, hadoopConf)
 
   /** Delete the persisted state (forces the next ensure to rebuild). */
   def drop(dir: String, table: String, name: String): Unit =
-    ArtifactKey.rmRecursive(root(dir, table, name))
+    StoreLog.drop(root(dir, table, name))
 
   /** The seed snapshot for (source, name): `state` is only evaluated
     * (and its inputs scanned) on a cold build — every later call is a
@@ -56,10 +53,7 @@ object StateStore {
   def ensure(spark: SparkSession, dir: String, table: String, name: String,
              state: => DataFrame): DataFrame = synchronized {
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
-    ReadCache.parquetLocal(spark, StoreLog.buildOnce(spark, base, "seed") { path =>
-      ArtifactKey.dropSuperseded(base.getParentFile, src(dir, table))
-      state.write.parquet(path)
-    })
+    ReadCache.parquetLocal(spark, StoreLog.buildOnce(spark, base, "seed")(state.write.parquet(_)))
   }
 
   /** Persist one fold's OUTPUT as the next standing snapshot — its own
@@ -73,18 +67,10 @@ object StateStore {
     */
   def advance(spark: SparkSession, dir: String, table: String, name: String,
               epochKey: String, state: DataFrame): DataFrame = synchronized {
-    require(epochKey.nonEmpty && epochKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"epochKey must be a [A-Za-z0-9_-]+ label; got '$epochKey'")
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
-    val log = StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("seed"),
-      s"advance requires a seeded state — ensure() first ($base)")
-    val epoch = log.fresh(s"epoch_$epochKey")
-    state.write.parquet(log.path(epoch).toString)
-    log.commit(s.copy(keys = s.keys + (epochKey -> epoch)))
-    ReadCache.parquetLocal(spark, new java.io.File(base, epoch))
+    StoreLog.append(spark, base, Some(epochKey))(s =>
+      ReadCache.parquetLocal(spark, new java.io.File(base, s.keys(epochKey))))(
+      (_, epoch) => state.write.parquet(epoch))
   }
 
   /** The newest committed snapshot for (source, name): the epoch with

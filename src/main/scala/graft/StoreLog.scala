@@ -104,19 +104,115 @@ private[graft] object StoreLog {
   def open(spark: SparkSession, base: java.io.File): StoreLog =
     open(spark, new Path(base.toURI))
 
-  /** The committed leaf `leaf` of the build-once store at `base`. When
-    * no manifest lists it yet, `build` writes the fresh directory whose
-    * path it is passed, and one commit publishes it.
+  /** Empty-corpus handles per (session, store root): nothing is
+    * persisted for an empty corpus, so this memo is what keeps a repeat
+    * [[ensure]] from re-evaluating the by-name corpus. The root embeds
+    * the source's content stamp, so a corpus that gains rows misses; the
+    * weak session key lets a stopped session's handles (whose DataFrames
+    * are bound to it) be collected. [[drop]] forgets the root's entries.
+    */
+  private val emptyMemo =
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Any]]()
+
+  private def memo[T](spark: SparkSession)(f: scala.collection.mutable.Map[String, Any] => T): T =
+    emptyMemo.synchronized(f(emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)))
+
+  /** The ensure lifecycle of the store at `base` (an [[ArtifactKey.root]]):
+    *  1. a committed snapshot is `read`;
+    *  2. else this session's empty-corpus handle for `base` is returned;
+    *  3. else the source's superseded content stamps are deleted, and
+    *  4. `build` runs: `Left(h)` (an empty corpus, nothing written) is
+    *     memoized and returned, `Right(s)` (the snapshot of the fresh
+    *     directories it wrote) is committed and read.
+    * A cold build starts a fresh store lifetime: no generations and no
+    * folded keys carry over. Takes no lock: each store object serializes
+    * its own calls.
+    */
+  def ensure[H](spark: SparkSession, base: java.io.File)(read: StoreSnapshot => H)
+               (build: StoreLog => Either[H, StoreSnapshot]): H = {
+    val log = open(spark, base)
+    if (log.snapshot.leaves.nonEmpty) read(log.snapshot)
+    else memo(spark)(_.get(base.getPath)).map(_.asInstanceOf[H]).getOrElse {
+      ArtifactKey.dropSuperseded(base)
+      build(log) match {
+        case Left(h) => memo(spark)(_.update(base.getPath, h)); h
+        case Right(s) => read(log.commit(s))
+      }
+    }
+  }
+
+  /** The committed leaf `leaf` of the build-once store at `base`: the
+    * [[ensure]] lifecycle where `build` fills the fresh directory whose
+    * path it is passed.
     */
   def buildOnce(spark: SparkSession, base: java.io.File, leaf: String)
-               (build: String => Unit): java.io.File = {
-    val log = open(spark, base)
-    val s = if (log.snapshot.leaves.contains(leaf)) log.snapshot else {
+               (build: String => Unit): java.io.File =
+    ensure(spark, base)(s => new java.io.File(base, s.leaves(leaf))) { log =>
       val dir = log.fresh(leaf)
       build(log.path(dir).toString)
-      log.commit(StoreSnapshot(leaves = Map(leaf -> dir)))
+      Right(StoreSnapshot(leaves = Map(leaf -> dir)))
     }
-    new java.io.File(base, s.leaves(leaf))
+
+  /** Delete the store at `base` and forget its empty-corpus handle in
+    * every session, so the next [[ensure]] rebuilds.
+    */
+  def drop(base: java.io.File): Unit = {
+    emptyMemo.synchronized(emptyMemo.values.forEach(_ -= base.getPath))
+    ArtifactKey.rmRecursive(base)
+  }
+
+  private def committed(log: StoreLog, op: String): StoreSnapshot = {
+    require(log.snapshot.leaves.nonEmpty,
+      s"$op requires a committed store — ensure() first (${log.base})")
+    log.snapshot
+  }
+
+  /** The append lifecycle: `write` fills one fresh generation directory
+    * (its path is passed) and one commit adds it to the snapshot's keys.
+    * Requires a committed base. Keyed (`key` = a batch or epoch label):
+    * idempotent per key — a replay replaces its own generation, and a
+    * replay of a key [[compact]] folded is a no-op. Unkeyed: every call
+    * adds a generation (at-least-once).
+    */
+  def append[H](spark: SparkSession, base: java.io.File, key: Option[String])
+               (read: StoreSnapshot => H)(write: (StoreSnapshot, String) => Unit): H = {
+    key.foreach(k => require(k.nonEmpty && k.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
+      s"a batch or epoch key must be a [A-Za-z0-9_-]+ label; got '$k'"))
+    val log = open(spark, base)
+    val s = committed(log, "append")
+    if (key.exists(s.folded.contains)) read(s)
+    else {
+      val gen = log.fresh(key.fold("append")("append_" + _))
+      write(s, log.path(gen).toString)
+      read(log.commit(s.copy(keys = s.keys + (key.getOrElse(gen) -> gen))))
+    }
+  }
+
+  /** The compact lifecycle: `fold` writes the folded leaves into fresh
+    * directories and returns the snapshot with them (and any re-sized
+    * meta); one commit drops every generation and records their batch
+    * keys as folded, so [[append]] no-ops a replay of one. Requires a
+    * committed base.
+    */
+  def compact[H](spark: SparkSession, base: java.io.File)(read: StoreSnapshot => H)
+                (fold: (StoreLog, StoreSnapshot) => StoreSnapshot): H = {
+    val log = open(spark, base)
+    val s = committed(log, "compact")
+    // an unkeyed generation is listed under its own directory name
+    read(log.commit(fold(log, s).copy(keys = Map.empty,
+      folded = s.folded ++ s.keys.collect { case (k, gen) if k != gen => k })))
+  }
+
+  /** The file count a fold of the local directories `dirs` of `base`
+    * writes: one ~[[graft.sink.BucketedMirror.targetBucketBytes]] file
+    * per chunk of their parquet bytes (a listing, no Spark job), at
+    * least one.
+    */
+  def foldFiles(base: java.io.File, dirs: Seq[String]): Int = {
+    val bytes = dirs.flatMap(d => Option(new java.io.File(base, d).listFiles()).toSeq.flatten)
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    val target = graft.sink.BucketedMirror.targetBucketBytes
+    math.max(1L, (bytes + target - 1) / target).toInt
   }
 
   /** The parquet roots `dirs` of a local store, one memoized read per

@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   *
   * Reuse ladder and keying follow [[LshIndex]]: a committed
   * [[graft.StoreLog]] manifest → read back; none → build; [[graft.ContentStamp]] in the tag forces
-  * a rebuild when the source regenerates; empty corpora are memoized per
-  * (session, stamped path).
+  * a rebuild when the source regenerates, and the rebuild drops the
+  * ledgers of older stamps.
   */
 object HashLedger {
 
@@ -60,25 +60,10 @@ object HashLedger {
   def root(dir: String, subset: String = "all",
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration()): java.io.File =
-    new java.io.File(
-      s"target/hash_ledger/$version/${graft.ArtifactKey.stamped(dir, hadoopConf)}/$subset")
-      .getAbsoluteFile
+    graft.ArtifactKey.root("hash_ledger", version, dir, subset, hadoopConf)
 
   /** Delete the persisted ledger (forces the next ensure to rebuild). */
-  def drop(dir: String, subset: String = "all"): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, subset))
-
-  /** Empty-corpus handles memoized per (SparkSession, stamped base path)
-    * — the [[LshIndex]] memo contract: repeat ensure() calls must not
-    * re-evaluate the by-name corpus; the weak session key keeps a cached
-    * Handle (whose DataFrame is bound to the session that built it) from
-    * dangling once that session stops.
-    */
-  private val emptyMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, Handle]]()
-
-  private def sessionMemo(spark: SparkSession): scala.collection.mutable.HashMap[String, Handle] =
-    emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
+  def drop(dir: String, subset: String = "all"): Unit = graft.StoreLog.drop(root(dir, subset))
 
   /** Build-or-reuse the ledger of `<dir>`'s corpus. `corpus` is only
     * evaluated (and scanned) on a cold build.
@@ -102,36 +87,28 @@ object HashLedger {
                    idCol: String, textCol: String,
                    subset: String): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    if (log.snapshot.leaves.contains("hashes")) return handle(spark, base, log.snapshot)
-    sessionMemo(spark).get(base.getPath) match {
-      case Some(h) => return h
-      case None =>
+    graft.StoreLog.ensure(spark, base)(handle(spark, base, _)) { log =>
+      // materialize the address frame ONCE: the count below and the
+      // layout write would otherwise each evaluate the derivation — for
+      // a text corpus that is two cheap scans, but for an opaque
+      // derivation (the media digest ledger's per-blob codec decode,
+      // which Catalyst cannot prune out of a count) it would pay the
+      // dominant build cost twice
+      val df = hashes.localCheckpoint()
+      val n = df.count()
+      if (n == 0) Left(Handle(
+        df.select(col("content_md5")).withColumn("__grp", grpOf(col("content_md5"), 16)),
+        16, idCol, textCol))
+      else {
+        val groups = autoGroups(n)
+        val hashesDir = log.fresh("hashes")
+        writeHashes(df, groups, log.path(hashesDir).toString)
+        Right(graft.StoreSnapshot(
+          leaves = Map("hashes" -> hashesDir),
+          meta = Map("groups" -> groups.toString, "n" -> n.toString,
+            "id_col" -> idCol, "text_col" -> textCol)))
+      }
     }
-    graft.ArtifactKey.dropSuperseded(base, dir)
-    // materialize the address frame ONCE: the count below and the
-    // layout write would otherwise each evaluate the derivation — for
-    // a text corpus that is two cheap scans, but for an opaque
-    // derivation (the media digest ledger's per-blob codec decode,
-    // which Catalyst cannot prune out of a count) it would pay the
-    // dominant build cost twice
-    val df = hashes.localCheckpoint()
-    val n = df.count()
-    if (n == 0) {
-      val h = Handle(
-        df.select(col("content_md5"))
-          .withColumn("__grp", grpOf(col("content_md5"), 16)),
-        16, idCol, textCol)
-      sessionMemo(spark)(base.getPath) = h
-      return h
-    }
-    val groups = autoGroups(n)
-    val hashesDir = log.fresh("hashes")
-    writeHashes(df, groups, log.path(hashesDir).toString)
-    handle(spark, base, log.commit(graft.StoreSnapshot(
-      leaves = Map("hashes" -> hashesDir),
-      meta = Map("groups" -> groups.toString, "n" -> n.toString,
-        "id_col" -> idCol, "text_col" -> textCol))))
   }
 
   /** Write distinct addresses in the ledger layout: map-side partial
@@ -172,13 +149,9 @@ object HashLedger {
   def append(spark: SparkSession, dir: String, newHashes: DataFrame,
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("hashes"),
-      s"append requires a persisted ledger — ensure() first ($base)")
-    val gen = log.fresh("append")
-    writeHashes(newHashes, s.meta("groups").toInt, log.path(gen).toString)
-    handle(spark, base, log.commit(s.copy(keys = s.keys + (gen -> gen))))
+    graft.StoreLog.append(spark, base, None)(handle(spark, base, _)) { (s, gen) =>
+      writeHashes(newHashes, s.meta("groups").toInt, gen)
+    }
   }
 
   /** Fold the append generations into one file per group and re-size
@@ -195,17 +168,14 @@ object HashLedger {
     */
   def compact(spark: SparkSession, dir: String, subset: String = "all"): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("hashes"),
-      s"compact requires a persisted ledger — ensure() first ($base)")
-    val distinctAddrs = handle(spark, base, s).hashes.select(col("content_md5")).distinct()
-    val n = distinctAddrs.count()
-    val groups = autoGroups(n)
-    val hashesDir = log.fresh("hashes")
-    writeHashes(distinctAddrs, groups, log.path(hashesDir).toString)
-    handle(spark, base, log.commit(s.copy(
-      leaves = Map("hashes" -> hashesDir), keys = Map.empty,
-      meta = s.meta ++ Map("groups" -> groups.toString, "n" -> n.toString))))
+    graft.StoreLog.compact(spark, base)(handle(spark, base, _)) { (log, s) =>
+      val distinctAddrs = handle(spark, base, s).hashes.select(col("content_md5")).distinct()
+      val n = distinctAddrs.count()
+      val groups = autoGroups(n)
+      val hashesDir = log.fresh("hashes")
+      writeHashes(distinctAddrs, groups, log.path(hashesDir).toString)
+      s.copy(leaves = Map("hashes" -> hashesDir),
+        meta = s.meta ++ Map("groups" -> groups.toString, "n" -> n.toString))
+    }
   }
 }

@@ -80,30 +80,13 @@ object LshIndex {
            subset: String = "all",
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration()): java.io.File =
-    new java.io.File(
-      s"target/lsh_index/$version/${graft.ArtifactKey.stamped(dir, hadoopConf)}/" +
-        s"${subset}_s${shingleSize}_b${bands}_r$rowsPerBand").getAbsoluteFile
+    graft.ArtifactKey.root("lsh_index", version, dir,
+      s"${subset}_s${shingleSize}_b${bands}_r$rowsPerBand", hadoopConf)
 
   /** Delete the persisted index (forces the next ensure to rebuild). */
   def drop(dir: String, shingleSize: Int = 3, bands: Int = 8,
            rowsPerBand: Int = 4, subset: String = "all"): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, shingleSize, bands, rowsPerBand, subset))
-
-  /** Empty-corpus handles memoized per (SparkSession, stamped base path):
-    * nothing persists for an empty corpus, so the memo is what keeps
-    * repeat ensure() calls from re-evaluating the by-name corpus (the
-    * documented "only evaluated on a cold build" contract). Keyed by the
-    * SESSION too — a Handle holds DataFrames bound to the session that
-    * built it, so a path-only key would hand a later caller (test suites
-    * restart sessions) plans referencing a stopped SparkSession; the weak
-    * session key lets stopped sessions' entries be collected instead of
-    * growing forever.
-    */
-  private val emptyMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, Handle]]()
-
-  private def sessionMemo(spark: SparkSession): scala.collection.mutable.HashMap[String, Handle] =
-    emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
+    graft.StoreLog.drop(root(dir, shingleSize, bands, rowsPerBand, subset))
 
   /** Build-or-reuse the index of `<dir>`'s corpus. `corpus` is only
     * evaluated (and scanned) on a cold build.
@@ -114,36 +97,29 @@ object LshIndex {
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    if (log.snapshot.leaves.contains("buckets")) return handle(spark, base, log.snapshot)
-    sessionMemo(spark).get(base.getPath) match {
-      case Some(h) => return h
-      case None =>
-    }
-    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
-    val df = corpus
-    val n = df.count()
-    if (n == 0) {
-      val h = Handle(
+    graft.StoreLog.ensure(spark, base)(handle(spark, base, _)) { log =>
+      val df = corpus
+      val n = df.count()
+      if (n == 0) Left(Handle(
         Dedup.lshBuckets(df, idCol, textCol, shingleSize, bands, rowsPerBand)
           .withColumn("bsize", lit(0L))
           .withColumn("__grp", grpOf(col("band"), col("bucket"), 16)),
-        shingleSize, bands, rowsPerBand, 16, idCol, textCol)
-      sessionMemo(spark)(base.getPath) = h
-      return h
+        shingleSize, bands, rowsPerBand, 16, idCol, textCol))
+      else {
+        val groups = autoGroups(n * bands)
+        // one corpus pass: shingle → minhash → band buckets (all native
+        // expressions inside lshBuckets), then the occupancy and
+        // one-file-per-group layout of [[writeBuckets]]
+        val bucketsDir = log.fresh("buckets")
+        writeBuckets(Dedup.lshBuckets(df, idCol, textCol, shingleSize, bands, rowsPerBand),
+          groups, log.path(bucketsDir).toString)
+        Right(graft.StoreSnapshot(
+          leaves = Map("buckets" -> bucketsDir),
+          meta = Map("shingle" -> shingleSize.toString, "bands" -> bands.toString,
+            "rows" -> rowsPerBand.toString, "groups" -> groups.toString,
+            "n" -> n.toString, "id_col" -> idCol, "text_col" -> textCol)))
+      }
     }
-    val groups = autoGroups(n * bands)
-    // one corpus pass: shingle → minhash → band buckets (all native
-    // expressions inside lshBuckets), then the occupancy and
-    // one-file-per-group layout of [[writeBuckets]]
-    val bucketsDir = log.fresh("buckets")
-    writeBuckets(Dedup.lshBuckets(df, idCol, textCol, shingleSize, bands, rowsPerBand),
-      groups, log.path(bucketsDir).toString)
-    handle(spark, base, log.commit(graft.StoreSnapshot(
-      leaves = Map("buckets" -> bucketsDir),
-      meta = Map("shingle" -> shingleSize.toString, "bands" -> bands.toString,
-        "rows" -> rowsPerBand.toString, "groups" -> groups.toString,
-        "n" -> n.toString, "id_col" -> idCol, "text_col" -> textCol))))
   }
 
   /** Write (id, band, bucket) rows in the index layout: a narrow
@@ -192,15 +168,11 @@ object LshIndex {
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("buckets"),
-      s"append requires a persisted index — ensure() first ($base)")
-    val h = handle(spark, base, s)
-    val gen = log.fresh("append")
-    writeBuckets(Dedup.lshBuckets(newDocs, h.idCol, h.textCol, h.shingleSize,
-      h.bands, h.rowsPerBand), h.groups, log.path(gen).toString)
-    handle(spark, base, log.commit(s.copy(keys = s.keys + (gen -> gen))))
+    graft.StoreLog.append(spark, base, None)(handle(spark, base, _)) { (s, gen) =>
+      val h = handle(spark, base, s)
+      writeBuckets(Dedup.lshBuckets(newDocs, h.idCol, h.textCol, h.shingleSize,
+        h.bands, h.rowsPerBand), h.groups, gen)
+    }
   }
 
   /** Fold the append generations into one file per group, RE-DERIVE the
@@ -220,19 +192,16 @@ object LshIndex {
               subset: String = "all"): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("buckets"),
-      s"compact requires a persisted index — ensure() first ($base)")
-    val h = handle(spark, base, s)
-    val rows = h.buckets.select(col(h.idCol), col("band"), col("bucket")).distinct()
-    val total = rows.count()
-    val groups = autoGroups(total)
-    val bucketsDir = log.fresh("buckets")
-    writeBuckets(rows, groups, log.path(bucketsDir).toString)
-    handle(spark, base, log.commit(s.copy(
-      leaves = Map("buckets" -> bucketsDir), keys = Map.empty,
-      meta = s.meta ++ Map("groups" -> groups.toString,
-        "n" -> (total / math.max(1, h.bands)).toString))))
+    graft.StoreLog.compact(spark, base)(handle(spark, base, _)) { (log, s) =>
+      val h = handle(spark, base, s)
+      val rows = h.buckets.select(col(h.idCol), col("band"), col("bucket")).distinct()
+      val total = rows.count()
+      val groups = autoGroups(total)
+      val bucketsDir = log.fresh("buckets")
+      writeBuckets(rows, groups, log.path(bucketsDir).toString)
+      s.copy(leaves = Map("buckets" -> bucketsDir),
+        meta = s.meta ++ Map("groups" -> groups.toString,
+          "n" -> (total / math.max(1, h.bands)).toString))
+    }
   }
 }

@@ -42,18 +42,15 @@ object NameIndex {
   def root(dir: String, table: String, subset: String,
            blockCap: Int = EntityResolution.defaultBlockCap,
            hadoopConf: org.apache.hadoop.conf.Configuration =
-             new org.apache.hadoop.conf.Configuration()): java.io.File = {
-    val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString
-    new java.io.File(
-      s"target/name_index/$version/${graft.ArtifactKey.stamped(src, hadoopConf)}/" +
-        s"${subset}_c$blockCap")
-      .getAbsoluteFile
-  }
+             new org.apache.hadoop.conf.Configuration()): java.io.File =
+    graft.ArtifactKey.root("name_index", version,
+      new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString,
+      s"${subset}_c$blockCap", hadoopConf)
 
   /** Delete the persisted index (forces the next ensure to rebuild). */
   def drop(dir: String, table: String, subset: String,
            blockCap: Int = EntityResolution.defaultBlockCap): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, table, subset, blockCap))
+    graft.StoreLog.drop(root(dir, table, subset, blockCap))
 
   /** The read-time cap filter — what [[ensure]]/[[append]] hand to
     * consumers: exactly [[EntityResolution.standingTokenBlocks]]'
@@ -77,11 +74,8 @@ object NameIndex {
              standing: => DataFrame, nameCol: String,
              blockCap: Int = EntityResolution.defaultBlockCap): DataFrame = synchronized {
     val base = root(dir, table, subset, blockCap, spark.sessionState.newHadoopConf())
-    val pairs = graft.StoreLog.buildOnce(spark, base, "pairs") { path =>
-      graft.ArtifactKey.dropSuperseded(base.getParentFile,
-        new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString)
-      withOcc(uncappedPairs(standing, nameCol)).write.parquet(path)
-    }
+    val pairs = graft.StoreLog.buildOnce(spark, base, "pairs")(
+      withOcc(uncappedPairs(standing, nameCol)).write.parquet(_))
     capped(graft.ReadCache.parquetLocal(spark, pairs), blockCap)
   }
 

@@ -34,18 +34,16 @@ object WeightsIndex {
            lr: Double = 8.0,
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration()): java.io.File = {
-    val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString
     val lrKey = lr.toString.replaceAll("[^0-9A-Za-z.]", "_")
-    new java.io.File(
-      s"target/weights_index/$version/${graft.ArtifactKey.stamped(src, hadoopConf)}/" +
-        s"${subset}_i${iters}_lr$lrKey")
-      .getAbsoluteFile
+    graft.ArtifactKey.root("weights_index", version,
+      new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString,
+      s"${subset}_i${iters}_lr$lrKey", hadoopConf)
   }
 
   /** Delete the persisted fit (forces the next ensure to re-train). */
   def drop(dir: String, table: String, subset: String, iters: Int = 8,
            lr: Double = 8.0): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, table, subset, iters, lr))
+    graft.StoreLog.drop(root(dir, table, subset, iters, lr))
 
   /** The trained (weights, n_docs) for `features` over `<dir>/<table>
     * .parquet`; `features` is only evaluated (and the corpus only
@@ -54,11 +52,8 @@ object WeightsIndex {
   def ensure(spark: SparkSession, dir: String, table: String, subset: String,
              features: => DataFrame, iters: Int = 8,
              lr: Double = 8.0): (Array[Double], Long) = synchronized {
-    val conf = spark.sessionState.newHadoopConf()
-    val base = root(dir, table, subset, iters, lr, conf)
+    val base = root(dir, table, subset, iters, lr, spark.sessionState.newHadoopConf())
     val leaf = graft.StoreLog.buildOnce(spark, base, "weights") { path =>
-      graft.ArtifactKey.dropSuperseded(base.getParentFile,
-        new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString)
       val (w, nDocs) = QualityClassifier.trainWeightsAndCount(features, iters, lr)
       spark.range(1)
         .select((w.zipWithIndex.map { case (v, i) => lit(v).as(s"b$i") }

@@ -146,9 +146,8 @@ object Multimodal {
     */
   private[graft] def fixtureRoot(spark: SparkSession, sfDir: String,
                                  label: String): java.io.File =
-    new java.io.File(s"target/media_fixture/$fixtureVersion/" +
-      graft.ArtifactKey.stamped(documentsPath(sfDir), spark.sessionState.newHadoopConf()) +
-      s"/$label").getAbsoluteFile
+    graft.ArtifactKey.root("media_fixture", fixtureVersion, documentsPath(sfDir), label,
+      spark.sessionState.newHadoopConf())
 
   /** Caching envelope shared by every documents-derived synthetic asset
     * table: one build-once [[graft.StoreLog]] store per (content-stamped
@@ -174,14 +173,13 @@ object Multimodal {
   private def cachedDerived(spark: SparkSession, sfDir: String, label: String,
                             readSchema: Option[StructType])(gen: => DataFrame): DataFrame =
     synchronized {
-      val base = fixtureRoot(spark, sfDir, label)
-      val leaf = graft.StoreLog.buildOnce(spark, base, "data") { path =>
-        val src = new org.apache.hadoop.fs.Path(documentsPath(sfDir))
-        require(src.getFileSystem(spark.sessionState.newHadoopConf()).exists(src),
-          s"$label: no documents parquet at $src")
-        graft.ArtifactKey.dropSuperseded(base.getParentFile, src.toString)
-        gen.write.parquet(path)
-      }
+      val src = new org.apache.hadoop.fs.Path(documentsPath(sfDir))
+      // checked before the cold path supersedes older stamps: a missing
+      // source must not delete the fixtures of the last one it had
+      require(src.getFileSystem(spark.sessionState.newHadoopConf()).exists(src),
+        s"$label: no documents parquet at $src")
+      val leaf = graft.StoreLog.buildOnce(spark, fixtureRoot(spark, sfDir, label), "data")(
+        gen.write.parquet(_))
       // memoized handle per (session, path, content fingerprint) — the
       // fixture parquet is immutable once written, so every m-query
       // otherwise re-pays the listing + schema-inference job per call

@@ -43,91 +43,56 @@ object IvfIndex {
   private val version = "v3"
 
   /** Index root for a source dir — key scheme and its rationale in
-    * [[graft.ArtifactKey]] (basename + path hash + content stamp).
-    * Exposed so ScaleProbe can time a fresh build explicitly; pass the
-    * session Hadoop conf for sources on filesystems that need it.
+    * [[graft.ArtifactKey]] (basename + path hash + content stamp); pass
+    * the session Hadoop conf for sources on filesystems that need it.
     */
   def root(dir: String, subset: String = "all",
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration()): java.io.File =
-    new java.io.File(
-      s"target/ivf_index/$version/${graft.ArtifactKey.stamped(dir, hadoopConf)}/$subset")
-      .getAbsoluteFile
+    graft.ArtifactKey.root("ivf_index", version, dir, subset, hadoopConf)
 
   /** Delete the persisted index (forces the next ensure to rebuild). */
-  def drop(dir: String, subset: String = "all"): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, subset))
-
-  /** Empty-corpus results memoized per (SparkSession, stamped base path):
-    * nothing is persisted for an empty corpus, so the memo is what keeps
-    * repeat ensure() calls from re-evaluating the by-name corpus and
-    * re-running the count job, against the documented "only scanned on a
-    * cold build" contract. Keying by the STAMPED path gives staleness for
-    * free (a corpus that gains rows changes its content stamp); keying by
-    * the SESSION keeps a cached result — whose DataFrames are bound to
-    * the session that built it — from dangling once that session stops
-    * (test suites restart sessions). The weak session key lets stopped
-    * sessions' entries be collected instead of growing forever.
-    */
-  private val emptyMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, (DataFrame, Seq[Seq[Double]])]]()
-
-  private def sessionMemo(spark: SparkSession)
-      : scala.collection.mutable.HashMap[String, (DataFrame, Seq[Seq[Double]])] =
-    emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
+  def drop(dir: String, subset: String = "all"): Unit = graft.StoreLog.drop(root(dir, subset))
 
   /** The (assigned corpus, centroids) pair for `<dir>`'s corpus:
     * columns (idCol, vecCol, __qc, __sc, __cell) with __cell as the
-    * PARTITION column. `corpus` is only scanned on a cold build.
+    * PARTITION column. `corpus` is only scanned on a cold build; an
+    * empty corpus persists nothing ([[graft.StoreLog.ensure]] memoizes
+    * its handle).
     */
   def ensure(spark: SparkSession, dir: String, corpus: => DataFrame,
              idCol: String = "vec_id", vecCol: String = "embedding",
              subset: String = "all"): (DataFrame, Seq[Seq[Double]]) = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    if (log.snapshot.leaves.contains("corpus")) return handle(spark, base, log.snapshot)
-    sessionMemo(spark).get(base.getPath) match {
-      case Some(h) => return h
-      case None =>
+    graft.StoreLog.ensure(spark, base)(handle(spark, base, _)) { log =>
+      val df = corpus
+      val n = Similarity.countRows(df)
+      if (n == 0) {
+        // an empty parquet dir can't be read back (no footer to infer a
+        // schema from), and repartition(0 cells) throws — return the
+        // inline paths' empty-corpus contract (empty assigned frame, no
+        // centroids) without writing an index
+        Left((Similarity.assignCells(df, Seq.empty, idCol, vecCol), Seq.empty[Seq[Double]]))
+      } else {
+        val cents = Similarity.kmeansCentroids(df, Similarity.autoCells(n), 0, idCol, vecCol)
+          .map(_.toSeq).toSeq
+        // centroids persist beside the corpus: probe selection must use
+        // the EXACT quantizer the cells were assigned with, across JVMs
+        import spark.implicits._
+        val centsDir = log.fresh("centroids")
+        cents.zipWithIndex.map { case (c, i) => (i, c) }
+          .toDF("cell", "centroid")
+          .coalesce(1).write.parquet(log.path(centsDir).toString)
+        // repartition by the cell id first: the hash layout puts each
+        // cell's rows in exactly one task, so partitionBy writes ONE file
+        // per cell directory (the BucketedMirror alignment trick)
+        val corpusDir = log.fresh("corpus")
+        Similarity.assignCells(df, cents, idCol, vecCol)
+          .repartition(cents.length, col("__cell"))
+          .write.partitionBy("__cell").parquet(log.path(corpusDir).toString)
+        Right(graft.StoreSnapshot(leaves = Map("corpus" -> corpusDir, "centroids" -> centsDir)))
+      }
     }
-    // a cold build supersedes every older stamp of the same source —
-    // without this each regeneration strands a full-size index copy
-    // (the whole stamped dir goes, all subsets: they are slices of
-    // the same now-stale content)
-    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
-    val df = corpus
-    val n = Similarity.countRows(df)
-    if (n == 0) {
-      // nothing to persist: an empty parquet dir can't be read back
-      // (no footer to infer a schema from), and repartition(0 cells)
-      // throws — return the inline paths' empty-corpus contract
-      // (empty assigned frame, no centroids) without writing an index
-      val h = (Similarity.assignCells(df, Seq.empty, idCol, vecCol),
-        Seq.empty[Seq[Double]])
-      sessionMemo(spark)(base.getPath) = h
-      return h
-    }
-    val cells = Similarity.autoCells(n)
-    val cents = Similarity.kmeansCentroids(df, cells, 0, idCol, vecCol)
-      .map(_.toSeq).toSeq
-    // centroids persist beside the corpus: probe selection must use the
-    // EXACT quantizer the cells were assigned with, across JVMs
-    import spark.implicits._
-    val centsDir = log.fresh("centroids")
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.parquet(log.path(centsDir).toString)
-    // repartition by the cell id first: the hash layout puts each cell's
-    // rows in exactly one task, so partitionBy writes ONE file per cell
-    // directory (the BucketedMirror alignment trick)
-    val corpusDir = log.fresh("corpus")
-    Similarity.assignCells(df, cents, idCol, vecCol)
-      .repartition(cents.length, col("__cell"))
-      .write.partitionBy("__cell").parquet(log.path(corpusDir).toString)
-    // a cold build starts a fresh index lifetime: no generations and no
-    // folded keys carry over from whatever the base held before
-    handle(spark, base, log.commit(graft.StoreSnapshot(
-      leaves = Map("corpus" -> corpusDir, "centroids" -> centsDir))))
   }
 
   /** The persisted centroid matrix of a committed index, memoized per
@@ -192,21 +157,13 @@ object IvfIndex {
              batch: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding",
              subset: String = "all"): (DataFrame, Seq[Seq[Double]]) = synchronized {
-    require(batchKey.nonEmpty && batchKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("corpus"),
-      s"no persisted index at $base — ensure() a base corpus before append()")
-    if (s.folded.contains(batchKey)) return handle(spark, base, s)
-    val cents = readCents(spark, base, s)
-    val gen = log.fresh(s"append_$batchKey")
-    Similarity.assignCells(batch, cents, idCol, vecCol)
-      .repartition(cents.length, col("__cell"))
-      .write.partitionBy("__cell").parquet(log.path(gen).toString)
-    handle(spark, base, log.commit(s.copy(keys = s.keys + (batchKey -> gen))))
+    graft.StoreLog.append(spark, base, Some(batchKey))(handle(spark, base, _)) { (s, gen) =>
+      val cents = readCents(spark, base, s)
+      Similarity.assignCells(batch, cents, idCol, vecCol)
+        .repartition(cents.length, col("__cell"))
+        .write.partitionBy("__cell").parquet(gen)
+    }
   }
 
   /** Fold every [[append]] generation back into the base corpus leaf —
@@ -228,22 +185,18 @@ object IvfIndex {
   def compact(spark: SparkSession, dir: String,
               subset: String = "all"): (DataFrame, Seq[Seq[Double]]) = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("corpus"),
-      s"compact requires a persisted index — ensure() first ($base)")
-    val (all, cents) = handle(spark, base, s)
-    // the same one-task-per-cell repartition alignment as the build
-    // writes ONE file per cell directory. Replayed rows need no dedup
-    // here BY CONSTRUCTION: a pre-fold replay replaces its own
-    // generation, a post-fold replay no-ops on the folded keys — an
-    // unconditional distinct() over array columns would be the fold's
-    // dominant shuffle for zero rows removed.
-    val corpusDir = log.fresh("corpus")
-    all.repartition(cents.length, col("__cell"))
-      .write.partitionBy("__cell").parquet(log.path(corpusDir).toString)
-    handle(spark, base, log.commit(s.copy(
-      leaves = s.leaves + ("corpus" -> corpusDir), keys = Map.empty,
-      folded = s.folded ++ s.keys.keys)))
+    graft.StoreLog.compact(spark, base)(handle(spark, base, _)) { (log, s) =>
+      val (all, cents) = handle(spark, base, s)
+      // the same one-task-per-cell repartition alignment as the build
+      // writes ONE file per cell directory. Replayed rows need no dedup
+      // here BY CONSTRUCTION: a pre-fold replay replaces its own
+      // generation, a post-fold replay no-ops on the folded keys — an
+      // unconditional distinct() over array columns would be the fold's
+      // dominant shuffle for zero rows removed.
+      val corpusDir = log.fresh("corpus")
+      all.repartition(cents.length, col("__cell"))
+        .write.partitionBy("__cell").parquet(log.path(corpusDir).toString)
+      s.copy(leaves = s.leaves + ("corpus" -> corpusDir))
+    }
   }
 }

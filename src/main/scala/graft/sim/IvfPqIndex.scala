@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions.col
   * with, ADC the exact codebooks the codes were encoded with — both
   * persist beside their own index) and pays one extra build-time
   * equi-join of the two frames on the vector id to lay codes out by
-  * cell. Reuse ladder / artifact keying / empty-corpus memo identical
-  * to [[IvfIndex]]; [[append]]/[[compact]] commit through the same
-  * [[graft.StoreLog]] manifest as IvfIndex/PqIndex.
+  * cell. [[ensure]]/[[append]]/[[compact]] run the one
+  * [[graft.StoreLog]] lifecycle.
   */
 object IvfPqIndex {
 
@@ -30,20 +29,11 @@ object IvfPqIndex {
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration(),
            subset: String = "all"): java.io.File =
-    new java.io.File(
-      s"target/ivfpq_index/$version/${graft.ArtifactKey.stamped(dir, hadoopConf)}/$subset")
-      .getAbsoluteFile
+    graft.ArtifactKey.root("ivfpq_index", version, dir, subset, hadoopConf)
 
   /** Delete the persisted index (forces the next ensure to rebuild). */
   def drop(dir: String, subset: String = "all"): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, subset = subset))
-
-  private val emptyMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]])]]()
-
-  private def sessionMemo(spark: SparkSession)
-      : scala.collection.mutable.HashMap[String, (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]])] =
-    emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
+    graft.StoreLog.drop(root(dir, subset = subset))
 
   /** The cell-partitioned code table: base build plus every [[append]]
     * generation (each its own cell-partitioned root, so dynamic
@@ -69,28 +59,19 @@ object IvfPqIndex {
     val (codes, cb) = PqIndex.ensure(spark, dir, corpus,
       idCol = idCol, vecCol = vecCol, subset = subset)
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    if (log.snapshot.leaves.contains("codes_by_cell"))
-      return (readAll(spark, base, log.snapshot), cents, cb)
-    sessionMemo(spark).get(base.getPath) match {
-      case Some(h) => return h
-      case None =>
+    graft.StoreLog.ensure(spark, base)(s => (readAll(spark, base, s), cents, cb)) { log =>
+      if (cb.isEmpty || cents.isEmpty) Left((codes.select(col(idCol)).limit(0), cents, cb))
+      else {
+        // one build-time equi-join lays the codes out by cell; repartition
+        // on the cell first so partitionBy writes ONE file per cell
+        // directory (the IvfIndex alignment trick)
+        val joined = log.fresh("codes_by_cell")
+        codes.join(assigned.select(col(idCol), col("__cell")), Seq(idCol))
+          .repartition(cents.length, col("__cell"))
+          .write.partitionBy("__cell").parquet(log.path(joined).toString)
+        Right(graft.StoreSnapshot(leaves = Map("codes_by_cell" -> joined)))
+      }
     }
-    if (cb.isEmpty || cents.isEmpty) {
-      val h = (codes.select(col(idCol)).limit(0), cents, cb)
-      sessionMemo(spark)(base.getPath) = h
-      return h
-    }
-    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
-    // one build-time equi-join lays the codes out by cell; repartition
-    // on the cell first so partitionBy writes ONE file per cell
-    // directory (the IvfIndex alignment trick)
-    val joined = log.fresh("codes_by_cell")
-    codes.join(assigned.select(col(idCol), col("__cell")), Seq(idCol))
-      .repartition(cents.length, col("__cell"))
-      .write.partitionBy("__cell").parquet(log.path(joined).toString)
-    (readAll(spark, base, log.commit(graft.StoreSnapshot(
-      leaves = Map("codes_by_cell" -> joined)))), cents, cb)
   }
 
   /** Fold a batch of NEW vectors into the composed index — the s13/s15
@@ -109,31 +90,24 @@ object IvfPqIndex {
              batch: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding", subset: String = "all"
             ): (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = synchronized {
-    require(batchKey.nonEmpty && batchKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("codes_by_cell"),
-      s"no persisted index at $base — ensure() a base corpus before append()")
-    val (cents, cb) = quantizers(spark, dir, subset)
-    if (s.folded.contains(batchKey)) return (readAll(spark, base, s), cents, cb)
-    // ONE map-side pass derives codes AND cell per batch row (both are
-    // pure per-row functions of the frozen quantizers over the same
-    // frame) — an encode-frame ⋈ assign-frame equi-join on the id would
-    // re-scan the batch twice and pay a join exchange to reunite
-    // columns that never needed separating
-    val gen = log.fresh(s"append_$batchKey")
-    Similarity.withUnitNorm(batch, vecCol, "__unit")
-      .select(col(idCol),
-        org.apache.spark.sql.graft.PqFunctions
-          .pqEncodeNative(col("__unit"), cb).as("__codes"),
-        org.apache.spark.sql.graft.VectorFunctions
-          .nearestCellsNative(col(vecCol), cents, 1).getItem(0).as("__cell"))
-      .repartition(cents.length, col("__cell"))
-      .write.partitionBy("__cell").parquet(log.path(gen).toString)
-    (readAll(spark, base, log.commit(s.copy(keys = s.keys + (batchKey -> gen)))), cents, cb)
+    lazy val (cents, cb) = quantizers(spark, dir, subset)
+    graft.StoreLog.append(spark, base, Some(batchKey))(s => (readAll(spark, base, s), cents, cb)) {
+      (_, gen) =>
+        // ONE map-side pass derives codes AND cell per batch row (both
+        // are pure per-row functions of the frozen quantizers over the
+        // same frame) — an encode-frame ⋈ assign-frame equi-join on the
+        // id would re-scan the batch twice and pay a join exchange to
+        // reunite columns that never needed separating
+        Similarity.withUnitNorm(batch, vecCol, "__unit")
+          .select(col(idCol),
+            org.apache.spark.sql.graft.PqFunctions
+              .pqEncodeNative(col("__unit"), cb).as("__codes"),
+            org.apache.spark.sql.graft.VectorFunctions
+              .nearestCellsNative(col(vecCol), cents, 1).getItem(0).as("__cell"))
+          .repartition(cents.length, col("__cell"))
+          .write.partitionBy("__cell").parquet(gen)
+    }
   }
 
   /** Fold every [[append]] generation back into the base leaf — one
@@ -144,18 +118,14 @@ object IvfPqIndex {
   def compact(spark: SparkSession, dir: String, subset: String = "all"
              ): (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("codes_by_cell"),
-      s"compact requires a persisted index — ensure() first ($base)")
-    val (cents, cb) = quantizers(spark, dir, subset)
-    val joined = log.fresh("codes_by_cell")
-    readAll(spark, base, s)
-      .repartition(cents.length, col("__cell"))
-      .write.partitionBy("__cell").parquet(log.path(joined).toString)
-    (readAll(spark, base, log.commit(s.copy(
-      leaves = s.leaves + ("codes_by_cell" -> joined), keys = Map.empty,
-      folded = s.folded ++ s.keys.keys))), cents, cb)
+    lazy val (cents, cb) = quantizers(spark, dir, subset)
+    graft.StoreLog.compact(spark, base)(s => (readAll(spark, base, s), cents, cb)) { (log, s) =>
+      val joined = log.fresh("codes_by_cell")
+      readAll(spark, base, s)
+        .repartition(cents.length, col("__cell"))
+        .write.partitionBy("__cell").parquet(log.path(joined).toString)
+      s.copy(leaves = s.leaves + ("codes_by_cell" -> joined))
+    }
   }
 
   /** The frozen quantizer pair, read from the SIBLING indexes'

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions.col
   * input shape keeps open (pass it the cell-pruned slice).
   *
   * Reuse ladder, artifact keying, supersede-on-rebuild, empty-corpus
-  * memo: all identical to [[IvfIndex]] (one discipline, one set of
-  * rationales — see that scaladoc). Index lives under
+  * memo: the one [[graft.StoreLog.ensure]] lifecycle. Index lives under
   * target/pq_index/<version>/<stamped-dir>/<m_ksub geometry> — the
   * geometry leg keeps a warm call with different m/ksub from silently
   * being served another geometry's codes.
@@ -58,22 +57,12 @@ object PqIndex {
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration(),
            subset: String = "all"): java.io.File =
-    new java.io.File(
-      s"target/pq_index/$version/${graft.ArtifactKey.stamped(dir, hadoopConf)}/" +
-        s"${subset}_${geom(m, ksub)}")
-      .getAbsoluteFile
+    graft.ArtifactKey.root("pq_index", version, dir, s"${subset}_${geom(m, ksub)}", hadoopConf)
 
   /** Delete the persisted index (forces the next ensure to rebuild). */
   def drop(dir: String, m: Int = 0, ksub: Int = 0,
            subset: String = "all"): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, m, ksub, subset = subset))
-
-  private val emptyMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, (DataFrame, Seq[Seq[Seq[Double]]])]]()
-
-  private def sessionMemo(spark: SparkSession)
-      : scala.collection.mutable.HashMap[String, (DataFrame, Seq[Seq[Seq[Double]]])] =
-    emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
+    graft.StoreLog.drop(root(dir, m, ksub, subset = subset))
 
   /** The (code table, codebooks) pair for `<dir>`'s corpus: codes are
     * (idCol, __codes array<byte>), codebooks m × ksub × dsub. `corpus`
@@ -85,39 +74,26 @@ object PqIndex {
              subset: String = "all"
             ): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    if (log.snapshot.leaves.contains("codes")) return handle(spark, base, log.snapshot)
-    sessionMemo(spark).get(base.getPath) match {
-      case Some(h) => return h
-      case None =>
-    }
-    // superseded = older CONTENT stamps of the same source (siblings of
-    // the stamped dir); geometry variants live INSIDE one stamped dir
-    // and coexist
-    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
-    val df = corpus
-    val cb = Similarity.pqTrain(df, m, ksub, iters = 2, idCol, vecCol)
-    if (cb.isEmpty) {
+    graft.StoreLog.ensure(spark, base)(handle(spark, base, _)) { log =>
+      val df = corpus
+      val cb = Similarity.pqTrain(df, m, ksub, iters = 2, idCol, vecCol)
       // empty corpus: nothing to persist (no parquet footer to read
-      // back) — return the inline paths' empty contract without
-      // writing an index
-      val h = (df.select(col(idCol)).limit(0), Seq.empty[Seq[Seq[Double]]])
-      sessionMemo(spark)(base.getPath) = h
-      return h
+      // back) — the inline paths' empty contract, no index written
+      if (cb.isEmpty) Left((df.select(col(idCol)).limit(0), Seq.empty[Seq[Seq[Double]]]))
+      else {
+        // codebooks persist beside the codes: ADC LUTs must use the
+        // EXACT quantizer the codes were written with, across JVMs
+        import spark.implicits._
+        val booksDir = log.fresh("codebooks")
+        cb.zipWithIndex.flatMap { case (book, s) =>
+          book.zipWithIndex.map { case (cent, c) => (s, c, cent) }
+        }.toDF("sub", "cell", "centroid")
+          .coalesce(1).write.parquet(log.path(booksDir).toString)
+        val codesDir = log.fresh("codes")
+        Similarity.pqEncode(df, cb, idCol, vecCol).write.parquet(log.path(codesDir).toString)
+        Right(graft.StoreSnapshot(leaves = Map("codes" -> codesDir, "codebooks" -> booksDir)))
+      }
     }
-    // codebooks persist beside the codes: ADC LUTs must use the EXACT
-    // quantizer the codes were written with, across JVMs
-    import spark.implicits._
-    val booksDir = log.fresh("codebooks")
-    cb.zipWithIndex.flatMap { case (book, s) =>
-      book.zipWithIndex.map { case (cent, c) => (s, c, cent) }
-    }.toDF("sub", "cell", "centroid")
-      .coalesce(1).write.parquet(log.path(booksDir).toString)
-    val codesDir = log.fresh("codes")
-    Similarity.pqEncode(df, cb, idCol, vecCol).write.parquet(log.path(codesDir).toString)
-    // a cold build starts a fresh index lifetime (see IvfIndex.ensure)
-    handle(spark, base, log.commit(graft.StoreSnapshot(
-      leaves = Map("codes" -> codesDir, "codebooks" -> booksDir))))
   }
 
   /** The persisted codebooks of a committed index, memoized per
@@ -172,22 +148,14 @@ object PqIndex {
              batch: DataFrame, m: Int = 0, ksub: Int = 0,
              idCol: String = "vec_id", vecCol: String = "embedding",
              subset: String = "all"): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
-    require(batchKey.nonEmpty && batchKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("codes"),
-      s"no persisted index at $base — ensure() a base corpus before append()")
-    if (s.folded.contains(batchKey)) return handle(spark, base, s)
-    val gen = log.fresh(s"append_$batchKey")
     // REBALANCE (AQE) sizes the generation's files (the SrpIndex.append
     // note): un-hinted, the codes land in the batch's input partitioning
     // — dozens of near-empty files per append at test scale
-    Similarity.pqEncode(batch, readBooks(spark, base, s), idCol, vecCol)
-      .hint("rebalance").write.parquet(log.path(gen).toString)
-    handle(spark, base, log.commit(s.copy(keys = s.keys + (batchKey -> gen))))
+    graft.StoreLog.append(spark, base, Some(batchKey))(handle(spark, base, _)) { (s, gen) =>
+      Similarity.pqEncode(batch, readBooks(spark, base, s), idCol, vecCol)
+        .hint("rebalance").write.parquet(gen)
+    }
   }
 
   /** Fold every [[append]] generation back into the base codes leaf —
@@ -199,22 +167,13 @@ object PqIndex {
   def compact(spark: SparkSession, dir: String, m: Int = 0, ksub: Int = 0,
               subset: String = "all"): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("codes"),
-      s"compact requires a persisted index — ensure() first ($base)")
-    // size the fold by the on-disk bytes being folded (codes are m
-    // bytes/vector — usually one file suffices at test scale)
-    val bytes = s.generations("codes").map(new java.io.File(base, _))
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val nFiles = math.max(1L, (bytes +
-      graft.sink.BucketedMirror.targetBucketBytes - 1) /
-      graft.sink.BucketedMirror.targetBucketBytes).toInt
-    val codesDir = log.fresh("codes")
-    handle(spark, base, s)._1.repartition(nFiles).write.parquet(log.path(codesDir).toString)
-    handle(spark, base, log.commit(s.copy(
-      leaves = s.leaves + ("codes" -> codesDir), keys = Map.empty,
-      folded = s.folded ++ s.keys.keys)))
+    graft.StoreLog.compact(spark, base)(handle(spark, base, _)) { (log, s) =>
+      // size the fold by the on-disk bytes being folded (codes are m
+      // bytes/vector — usually one file suffices at test scale)
+      val codesDir = log.fresh("codes")
+      handle(spark, base, s)._1.repartition(graft.StoreLog.foldFiles(base, s.generations("codes")))
+        .write.parquet(log.path(codesDir).toString)
+      s.copy(leaves = s.leaves + ("codes" -> codesDir))
+    }
   }
 }

@@ -93,29 +93,11 @@ object SrpIndex {
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration(),
            subset: String = "all"): java.io.File =
-    new java.io.File(
-      s"target/srp_index/$version/${graft.ArtifactKey.stamped(dir, hadoopConf)}/t${nTables}_$subset")
-      .getAbsoluteFile
+    graft.ArtifactKey.root("srp_index", version, dir, s"t${nTables}_$subset", hadoopConf)
 
   /** Delete the persisted index (forces the next ensure to rebuild). */
   def drop(dir: String, nTables: Int, subset: String = "all"): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, nTables, subset = subset))
-
-  /** Empty-corpus handles memoized per (SparkSession, stamped base path) —
-    * same contract and staleness argument as [[IvfIndex]]: nothing
-    * persists for an empty corpus, so the memo is what keeps repeat
-    * ensure() calls from re-evaluating the by-name corpus; a corpus that
-    * gains rows changes its content stamp and misses. Keyed by the
-    * SESSION too — a cached Handle holds DataFrames bound to the session
-    * that built it, so a path-only key would dangle once that session
-    * stops (test suites restart sessions); the weak session key lets
-    * stopped sessions' entries be collected.
-    */
-  private val emptyMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, Handle]]()
-
-  private def sessionMemo(spark: SparkSession): scala.collection.mutable.HashMap[String, Handle] =
-    emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
+    graft.StoreLog.drop(root(dir, nTables, subset = subset))
 
   /** Build-or-reuse the index for `<dir>`'s corpus. `corpus` is only
     * evaluated (and scanned) on a cold build.
@@ -124,49 +106,39 @@ object SrpIndex {
              idCol: String = "vec_id", vecCol: String = "embedding",
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    if (log.snapshot.leaves.contains("buckets")) return handle(spark, base, log.snapshot)
-    sessionMemo(spark).get(base.getPath) match {
-      case Some(h) => return h
-      case None =>
-    }
-    // a cold build supersedes every older stamp of the same source
-    graft.ArtifactKey.dropSuperseded(base.getParentFile, dir)
-    val df = corpus
-    val n = Similarity.countRows(df)
-    if (n == 0) {
+    graft.StoreLog.ensure(spark, base)(handle(spark, base, _)) { log =>
+      val df = corpus
+      val n = Similarity.countRows(df)
       // nothing to persist (an empty parquet dir can't be read back);
       // hand out the inline paths' empty-corpus contract directly
-      val h = Handle(emptyBuckets(df, idCol, vecCol),
-        df.select(col(idCol), col(vecCol)),
-        Similarity.autoPlanes(0), nTables, 16)
-      sessionMemo(spark)(base.getPath) = h
-      return h
+      if (n == 0) Left(Handle(emptyBuckets(df, idCol, vecCol),
+        df.select(col(idCol), col(vecCol)), Similarity.autoPlanes(0), nTables, 16))
+      else {
+        val planes = Similarity.autoPlanes(n)
+        val groups = autoGroups(n * nTables)
+        val bucketsDir = log.fresh("buckets")
+        val vectorsDir = log.fresh("vectors")
+        // one corpus pass derives everything the candidate side ever
+        // needs: int8 pair below the generator (attributes pass through
+        // the Generate; computing them above it would re-run the O(dim)
+        // quantize once per emitted table row), buckets via the custom
+        // generator (no InferFiltersFromGenerate re-derivation in the
+        // scan). Repartition by the group key first so each group's rows
+        // land in exactly one task → ONE file per partition directory
+        // (the BucketedMirror / IvfIndex alignment trick)
+        bucketRows(df, idCol, vecCol, planes, nTables, groups)
+          .repartition(groups, col("__grp"))
+          .write.partitionBy("__grp").parquet(log.path(bucketsDir).toString)
+        // the full-precision side, once per vector — exact scoring and
+        // the rescore join here by id instead of shipping 8·dim-byte
+        // doubles through the nTables-replicated bucket frame
+        df.select(col(idCol), col(vecCol)).write.parquet(log.path(vectorsDir).toString)
+        Right(graft.StoreSnapshot(
+          leaves = Map("buckets" -> bucketsDir, "vectors" -> vectorsDir),
+          meta = Map("planes" -> planes.toString, "tables" -> nTables.toString,
+            "groups" -> groups.toString, "n" -> n.toString)))
+      }
     }
-    val planes = Similarity.autoPlanes(n)
-    val groups = autoGroups(n * nTables)
-    val bucketsDir = log.fresh("buckets")
-    val vectorsDir = log.fresh("vectors")
-    // one corpus pass derives everything the candidate side ever needs:
-    // int8 pair below the generator (attributes pass through the
-    // Generate; computing them above it would re-run the O(dim)
-    // quantize once per emitted table row), buckets via the custom
-    // generator (no InferFiltersFromGenerate re-derivation in the scan).
-    // Repartition by the group key first so each group's rows land in
-    // exactly one task → ONE file per partition directory (the
-    // BucketedMirror / IvfIndex alignment trick)
-    bucketRows(df, idCol, vecCol, planes, nTables, groups)
-      .repartition(groups, col("__grp"))
-      .write.partitionBy("__grp").parquet(log.path(bucketsDir).toString)
-    // the full-precision side, once per vector — exact scoring and the
-    // rescore join here by id instead of shipping 8·dim-byte doubles
-    // through the nTables-replicated bucket frame
-    df.select(col(idCol), col(vecCol)).write.parquet(log.path(vectorsDir).toString)
-    // a cold build starts a fresh index lifetime (see IvfIndex.ensure)
-    handle(spark, base, log.commit(graft.StoreSnapshot(
-      leaves = Map("buckets" -> bucketsDir, "vectors" -> vectorsDir),
-      meta = Map("planes" -> planes.toString, "tables" -> nTables.toString,
-        "groups" -> groups.toString, "n" -> n.toString))))
   }
 
   /** The (neighbor_id, __qc, __sc, __t, __b, __grp) bucket rows of
@@ -219,30 +191,20 @@ object SrpIndex {
              batch: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding",
              subset: String = "all"): Handle = synchronized {
-    require(batchKey.nonEmpty && batchKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("buckets"),
-      s"no persisted index at $base — ensure() a base corpus before append()")
-    if (s.folded.contains(batchKey)) return handle(spark, base, s)
-    val gen = log.fresh(s"append_$batchKey")
-    // REBALANCE (AQE) sizes the output files: the batch arrives in the
-    // caller's input partitioning (32 near-empty files at test scale,
-    // unsized splits at corpus scale); the hinted exchange lets AQE
-    // coalesce/split to the advisory partition size (guide §6) — row
-    // SET unchanged, and readAll unions whole files, so placement is
-    // semantics-free
-    batch.select(col(idCol), col(vecCol)).hint("rebalance")
-      .write.parquet(new java.io.File(new java.io.File(base, gen), "vectors").getPath)
-    val groups = s.meta("groups").toInt
-    bucketRows(batch, idCol, vecCol, s.meta("planes").toInt, nTables, groups)
-      .repartition(groups, col("__grp"))
-      .write.partitionBy("__grp")
-      .parquet(new java.io.File(new java.io.File(base, gen), "buckets").getPath)
-    handle(spark, base, log.commit(s.copy(keys = s.keys + (batchKey -> gen))))
+    graft.StoreLog.append(spark, base, Some(batchKey))(handle(spark, base, _)) { (s, gen) =>
+      // REBALANCE (AQE) sizes the output files: the batch arrives in the
+      // caller's input partitioning (32 near-empty files at test scale,
+      // unsized splits at corpus scale); the hinted exchange lets AQE
+      // coalesce/split to the advisory partition size (guide §6) — row
+      // SET unchanged, and readAll unions whole files, so placement is
+      // semantics-free
+      batch.select(col(idCol), col(vecCol)).hint("rebalance").write.parquet(s"$gen/vectors")
+      val groups = s.meta("groups").toInt
+      bucketRows(batch, idCol, vecCol, s.meta("planes").toInt, nTables, groups)
+        .repartition(groups, col("__grp"))
+        .write.partitionBy("__grp").parquet(s"$gen/buckets")
+    }
   }
 
   /** Fold every [[append]] generation back into the base leaves — the
@@ -268,36 +230,24 @@ object SrpIndex {
   def compact(spark: SparkSession, dir: String, nTables: Int,
               subset: String = "all"): Handle = synchronized {
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    val log = graft.StoreLog.open(spark, base)
-    val s = log.snapshot
-    require(s.leaves.contains("buckets"),
-      s"compact requires a persisted index — ensure() first ($base)")
-    val groups = s.meta("groups").toInt
-    // vectors: size the fold by the on-disk bytes being folded (no
-    // Spark job — a directory listing), one ~256 MB file per chunk.
-    // No row dedup in either fold: a pre-fold replay replaces its own
-    // generation, a post-fold replay no-ops on the folded keys, so
-    // replayed rows cannot exist by construction.
-    val vecBytes = (new java.io.File(base, s.leaves("vectors")) +:
-      s.keys.values.toSeq.map(g => new java.io.File(new java.io.File(base, g), "vectors")))
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val vecFiles = math.max(1L, (vecBytes +
-      graft.sink.BucketedMirror.targetBucketBytes - 1) /
-      graft.sink.BucketedMirror.targetBucketBytes).toInt
-    val vectorsDir = log.fresh("vectors")
-    val bucketsDir = log.fresh("buckets")
-    readAll(spark, base, s, "vectors")
-      .repartition(vecFiles)
-      .write.parquet(log.path(vectorsDir).toString)
-    // buckets: the same one-task-per-group repartition alignment as the
-    // build writes ONE file per group directory again
-    readAll(spark, base, s, "buckets")
-      .repartition(groups, col("__grp"))
-      .write.partitionBy("__grp").parquet(log.path(bucketsDir).toString)
-    handle(spark, base, log.commit(s.copy(
-      leaves = Map("buckets" -> bucketsDir, "vectors" -> vectorsDir),
-      keys = Map.empty, folded = s.folded ++ s.keys.keys)))
+    graft.StoreLog.compact(spark, base)(handle(spark, base, _)) { (log, s) =>
+      // vectors: size the fold by the on-disk bytes being folded. No row
+      // dedup in either fold: a pre-fold replay replaces its own
+      // generation, a post-fold replay no-ops on the folded keys, so
+      // replayed rows cannot exist by construction.
+      val vectorsDir = log.fresh("vectors")
+      val bucketsDir = log.fresh("buckets")
+      readAll(spark, base, s, "vectors")
+        .repartition(graft.StoreLog.foldFiles(base,
+          s.leaves("vectors") +: s.keys.values.toSeq.map(_ + "/vectors")))
+        .write.parquet(log.path(vectorsDir).toString)
+      // buckets: the same one-task-per-group repartition alignment as the
+      // build writes ONE file per group directory again
+      readAll(spark, base, s, "buckets")
+        .repartition(s.meta("groups").toInt, col("__grp"))
+        .write.partitionBy("__grp").parquet(log.path(bucketsDir).toString)
+      s.copy(leaves = Map("buckets" -> bucketsDir, "vectors" -> vectorsDir))
+    }
   }
 
   /** Empty frame with the buckets schema (for the empty-corpus path). */

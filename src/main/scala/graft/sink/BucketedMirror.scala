@@ -117,12 +117,9 @@ object BucketedMirror {
     */
   private[graft] def root(dir: String, table: String, buckets: Int,
                           hadoopConf: org.apache.hadoop.conf.Configuration =
-                            new org.apache.hadoop.conf.Configuration()): java.io.File = {
-    val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString
-    new java.io.File(
-      s"target/bucketed_mirror/$version/${graft.ArtifactKey.stamped(src, hadoopConf)}/b$buckets")
-      .getAbsoluteFile
-  }
+                            new org.apache.hadoop.conf.Configuration()): java.io.File =
+    graft.ArtifactKey.root("bucketed_mirror", version,
+      new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString, s"b$buckets", hadoopConf)
 
   /** Bucketed mirror of `<dir>/<table>.parquet` clustered+sorted on
     * `keyCol`; returns the catalog table, building or re-registering it
@@ -150,9 +147,7 @@ object BucketedMirror {
     val stamp = graft.ContentStamp(src, conf)
     Sinks.bucketedTable(spark, s"graft_mirror_${table}_${graft.ArtifactKey.pathKey(dir)}",
         stamp, keyCol, buckets) { name =>
-      val base = root(dir, table, buckets, conf)
-      graft.StoreLog.buildOnce(spark, base, "data") { path =>
-        graft.ArtifactKey.dropSuperseded(base.getParentFile, src)
+      graft.StoreLog.buildOnce(spark, root(dir, table, buckets, conf), "data") { path =>
         Sinks.writeBucketed(
           graft.Tables(spark, dir, table).repartition(buckets, col(keyCol)),
           name, Seq(keyCol), buckets, path = Some(path), sortCols = Seq(keyCol))

@@ -169,21 +169,19 @@ object ZOrderMirror {
   def root(dir: String, table: String, cols: Seq[String], bits: Int = 8,
            hadoopConf: org.apache.hadoop.conf.Configuration =
              new org.apache.hadoop.conf.Configuration()): java.io.File = {
-    val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString
     // the LAYOUT GEOMETRY is part of the key (the PqIndex/NameIndex
     // discipline): a warm call with different `bits` must rebuild, not
     // silently serve coarser buckets; cols are length-prefixed so
     // Seq("a_b","c") and Seq("a","b_c") cannot alias one directory
     val colKey = cols.map(c => s"${c.length}~$c").mkString("_")
-    new java.io.File(
-      s"target/zorder_mirror/$version/${graft.ArtifactKey.stamped(src, hadoopConf)}/" +
-        s"b$bits/$colKey")
-      .getAbsoluteFile
+    graft.ArtifactKey.root("zorder_mirror", version,
+      new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString, s"b$bits/$colKey",
+      hadoopConf)
   }
 
   /** Delete the persisted mirror (forces the next ensure to rebuild). */
   def drop(dir: String, table: String, cols: Seq[String], bits: Int = 8): Unit =
-    graft.ArtifactKey.rmRecursive(root(dir, table, cols, bits))
+    graft.StoreLog.drop(root(dir, table, cols, bits))
 
   /** The z-ordered mirror of `<dir>/<table>.parquet` clustered on
     * `cols`; builds on the cold path only (quantile pass + one range
@@ -194,15 +192,12 @@ object ZOrderMirror {
   def ensure(spark: org.apache.spark.sql.SparkSession, dir: String, table: String,
              cols: Seq[String], bits: Int = 8): DataFrame = synchronized {
     val conf = spark.sessionState.newHadoopConf()
-    val base = root(dir, table, cols, bits, conf)
-    val leaf = graft.StoreLog.buildOnce(spark, base, "data") { path =>
-      val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet")
-      val fs = src.getFileSystem(conf)
-      require(fs.exists(src), s"z-order mirror source does not exist: $src")
-      // superseded = older content stamps of the same source table
-      // (siblings of the stamped dir); geometry/column variants coexist
-      // inside (base = <stamp>/b<bits>/<cols>)
-      graft.ArtifactKey.dropSuperseded(base.getParentFile.getParentFile, src.toString)
+    val src = new org.apache.hadoop.fs.Path(dir, s"$table.parquet")
+    val fs = src.getFileSystem(conf)
+    // checked before the cold path supersedes older stamps: a missing
+    // source must not delete the mirrors of the last one it had
+    require(fs.exists(src), s"z-order mirror source does not exist: $src")
+    val leaf = graft.StoreLog.buildOnce(spark, root(dir, table, cols, bits, conf), "data") { path =>
       ZOrder.writeZOrdered(spark.read.parquet(src.toString), cols, path,
         filesFor(fs.getContentSummary(src).getLength), bits)
     }

@@ -10,6 +10,7 @@ package graft
   */
 class ArtifactKeySpec extends SparkTestBase {
   import spark.implicits._
+  import org.apache.spark.sql.functions.{col, length}
 
   private def tmpDir(prefix: String): java.io.File = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -71,33 +72,65 @@ class ArtifactKeySpec extends SparkTestBase {
     ArtifactKey.rmRecursive(parent)
   }
 
-  test("IvfIndex: a regenerated source forces a rebuild and GCs the old stamp") {
-    import graft.sim.IvfIndex
-    // a REAL on-disk source dir, so the content stamp is live
-    val src = tmpDir("ivf_stale_spec")
-    java.nio.file.Files.write(
-      new java.io.File(src, "marker").toPath, Array[Byte](1))
-    val gen = new scala.util.Random(7)
-    def corpus(seed: Int) = (0L until 60L)
-      .map(i => (i, Seq.fill(8)(gen.nextFloat() + seed)))
-      .toDF("vec_id", "embedding")
-    IvfIndex.drop(src.getPath)
-    IvfIndex.ensure(spark, src.getPath, corpus(0))
-    val oldRoot = IvfIndex.root(src.getPath)
-    assert(new java.io.File(committedLeaf(oldRoot, "corpus"), "_SUCCESS").isFile)
-    // regenerate the source (length change → new stamp)
-    java.nio.file.Files.write(
-      new java.io.File(src, "marker").toPath, Array[Byte](1, 2))
-    val newRoot = IvfIndex.root(src.getPath)
-    assert(newRoot.getPath !== oldRoot.getPath,
-      "a regenerated source must key a different index root")
-    IvfIndex.ensure(spark, src.getPath, corpus(1))
-    assert(new java.io.File(committedLeaf(newRoot, "corpus"), "_SUCCESS").isFile,
-      "the rebuild must land under the new stamp")
-    assert(!oldRoot.exists,
-      "the cold build must GC the superseded stamp's index")
-    IvfIndex.drop(src.getPath)
-    ArtifactKey.rmRecursive(src)
+  /** One content-stamped store: `ensure` builds it for the source dir
+    * (whose `t.parquet` is the table of the table-keyed stores), `root`
+    * is its store root, `drop` deletes everything it built.
+    */
+  private case class Stamped(name: String, ensure: String => Unit,
+                             root: String => java.io.File, drop: String => Unit)
+
+  private lazy val vectors = (0L until 60L)
+    .map(i => (i, Seq.fill(16)(new scala.util.Random(i).nextFloat()))).toDF("vec_id", "embedding")
+  private lazy val texts = (0L until 40L)
+    .map(i => (i, s"the quick brown fox ${i % 5} jumps over lazy dog item$i")).toDF("doc_id", "text")
+
+  private val stampedStores = {
+    import graft.sim._, graft.dedup._
+    Seq(
+      Stamped("IvfIndex", d => IvfIndex.ensure(spark, d, vectors): Unit,
+        IvfIndex.root(_), IvfIndex.drop(_)),
+      Stamped("PqIndex", d => PqIndex.ensure(spark, d, vectors): Unit,
+        PqIndex.root(_), PqIndex.drop(_)),
+      Stamped("IvfPqIndex", d => IvfPqIndex.ensure(spark, d, vectors): Unit,
+        IvfPqIndex.root(_), d => { IvfPqIndex.drop(d); IvfIndex.drop(d); PqIndex.drop(d) }),
+      Stamped("SrpIndex", d => SrpIndex.ensure(spark, d, vectors, 4): Unit,
+        SrpIndex.root(_, 4), SrpIndex.drop(_, 4)),
+      Stamped("LshIndex", d => LshIndex.ensure(spark, d, texts): Unit,
+        LshIndex.root(_, 3, 8, 4), LshIndex.drop(_)),
+      Stamped("HashLedger", d => HashLedger.ensure(spark, d, texts): Unit,
+        HashLedger.root(_), HashLedger.drop(_)),
+      Stamped("NameIndex", d => er.NameIndex.ensure(spark, d, "t", "all", texts, "text"): Unit,
+        er.NameIndex.root(_, "t", "all"), er.NameIndex.drop(_, "t", "all")),
+      Stamped("StateStore", d => StateStore.ensure(spark, d, "t", "st", texts): Unit,
+        StateStore.root(_, "t", "st"), StateStore.drop(_, "t", "st")),
+      Stamped("WeightsIndex", d => ml.WeightsIndex.ensure(spark, d, "t", "all",
+          ml.QualityClassifier.featurize(texts.withColumn("n_chars", length(col("text"))),
+            "doc_id", "text", "n_chars", col("doc_id") % 2 === 0)): Unit,
+        ml.WeightsIndex.root(_, "t", "all"), ml.WeightsIndex.drop(_, "t", "all")))
+  }
+
+  stampedStores.foreach { c =>
+    test(s"${c.name}: a regenerated source forces a rebuild and GCs the old stamp") {
+      // a REAL on-disk source dir, so the content stamp is live
+      val src = tmpDir(s"${c.name}_stale_spec")
+      val marker = new java.io.File(src, "t.parquet/marker")
+      marker.getParentFile.mkdirs()
+      java.nio.file.Files.write(marker.toPath, Array[Byte](1))
+      c.ensure(src.getPath)
+      val oldRoot = c.root(src.getPath)
+      assert(StoreLog.open(spark, oldRoot).snapshot.leaves.nonEmpty)
+      // regenerate the source (length change → new stamp)
+      java.nio.file.Files.write(marker.toPath, Array[Byte](1, 2))
+      val newRoot = c.root(src.getPath)
+      assert(newRoot.getPath !== oldRoot.getPath,
+        "a regenerated source must key a different store root")
+      c.ensure(src.getPath)
+      assert(StoreLog.open(spark, newRoot).snapshot.leaves.nonEmpty,
+        "the rebuild must land under the new stamp")
+      assert(!oldRoot.exists, "the cold build must GC the superseded stamp's store")
+      c.drop(src.getPath)
+      ArtifactKey.rmRecursive(src)
+    }
   }
 
   test("BucketedMirror: a regenerated table re-mirrors and drops the dead " +

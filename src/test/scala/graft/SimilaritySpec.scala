@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity
 
@@ -443,12 +444,69 @@ class SimilaritySpec extends SparkTestBase {
     SrpIndex.drop(fakeDir, nTables = 4)
   }
 
-  test("SrpIndex.ensure on an empty corpus returns empty searches, not an error") {
-    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+  /** One store whose empty-corpus handle [[StoreLog.ensure]] memoizes:
+    * `ensure` returns the handle's frames — its main frame first, then
+    * searches over it and one row per quantizer entry, all of which an
+    * empty corpus must leave empty.
+    */
+  private case class EmptyCorpus(name: String, empty: DataFrame, full: DataFrame,
+                                 ensure: (String, () => DataFrame) => Seq[DataFrame],
+                                 root: String => java.io.File, drop: String => Unit)
+
+  private lazy val emptyCorpusStores = {
+    import graft.sim._, graft.dedup._
+    val noVecs = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val vecs = (0L until 60L).map(i => (i, Seq.fill(16)(new scala.util.Random(i).nextFloat())))
+      .toDF("vec_id", "embedding")
     val queries = Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
-    val h = graft.sim.SrpIndex.ensure(spark, "/x/srp_empty_spec", empty, nTables = 4)
-    assert(Similarity.annTopKIndexed(h, queries, k = 3).count() === 0)
-    assert(Similarity.annTopKInt8Indexed(h, queries, k = 3).count() === 0)
+    val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val docs = (0L until 20L).map(i => (i, s"the quick brown fox item$i")).toDF("doc_id", "text")
+    def n(s: Seq[_]): DataFrame = spark.range(s.size).toDF()
+    Seq(
+      EmptyCorpus("IvfIndex", noVecs, vecs, { (d, c) =>
+        val (a, cents) = IvfIndex.ensure(spark, d, c())
+        Seq(a, n(cents), Similarity.ivfTopKAssigned(a, cents, queries, k = 3),
+          Similarity.ivfTopKInt8Assigned(a, cents, queries, k = 3))
+      }, IvfIndex.root(_), IvfIndex.drop(_)),
+      EmptyCorpus("PqIndex", noVecs, vecs, { (d, c) =>
+        val (codes, cb) = PqIndex.ensure(spark, d, c())
+        Seq(codes, n(cb), Similarity.pqCandidatePairsEncoded(codes, cb, noVecs, kCand = 5))
+      }, PqIndex.root(_), PqIndex.drop(_)),
+      EmptyCorpus("IvfPqIndex", noVecs, vecs, { (d, c) =>
+        val (codes, cents, cb) = IvfPqIndex.ensure(spark, d, c())
+        Seq(codes, n(cents), n(cb),
+          Similarity.ivfPqCandidatePairs(codes, cents, cb, noVecs, kCand = 5))
+      }, IvfPqIndex.root(_), d => { IvfPqIndex.drop(d); IvfIndex.drop(d); PqIndex.drop(d) }),
+      EmptyCorpus("SrpIndex", noVecs, vecs, { (d, c) =>
+        val h = SrpIndex.ensure(spark, d, c(), nTables = 4)
+        Seq(h.buckets, Similarity.annTopKIndexed(h, queries, k = 3),
+          Similarity.annTopKInt8Indexed(h, queries, k = 3))
+      }, SrpIndex.root(_, 4), SrpIndex.drop(_, 4)),
+      EmptyCorpus("LshIndex", noDocs, docs,
+        (d, c) => Seq(LshIndex.ensure(spark, d, c()).buckets),
+        LshIndex.root(_, 3, 8, 4), LshIndex.drop(_)),
+      EmptyCorpus("HashLedger", noDocs, docs,
+        (d, c) => Seq(HashLedger.ensure(spark, d, c()).hashes),
+        HashLedger.root(_), HashLedger.drop(_)))
+  }
+
+  emptyCorpusStores.foreach { c =>
+    test(s"${c.name}.ensure on an empty corpus returns empty searches, not an error") {
+      val dir = s"/x/${c.name}_empty_spec"
+      c.drop(dir)
+      assert(c.ensure(dir, () => c.empty).map(_.count()).forall(_ == 0))
+      // the memo serves repeat calls without re-evaluating the corpus
+      val again = c.ensure(dir, () => fail("empty-corpus reuse must not re-evaluate the corpus"))
+      assert(again.head.count() === 0)
+      def files(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(files) else Seq(f)
+      assert(files(c.root(dir)).filter(_.exists).isEmpty, "an empty corpus must persist nothing")
+      // drop forgets the memo: the next ensure builds the corpus it is given
+      c.drop(dir)
+      assert(c.ensure(dir, () => c.full).head.count() > 0,
+        "ensure after drop must not serve the memoized empty handle")
+      c.drop(dir)
+    }
   }
 
   test("SrpIndex.autoGroups: bounded directory count, full files per group") {
@@ -473,18 +531,6 @@ class SimilaritySpec extends SparkTestBase {
     java.nio.file.Files.writeString(f.toPath, "v2-regenerated")
     val r2 = graft.sim.IvfIndex.root(tmp.getPath)
     assert(r1 !== r2, "index root must change when source content changes")
-  }
-
-  test("IvfIndex.ensure on an empty corpus returns empty searches, not an error") {
-    // kmeans on zero rows yields zero centroids; the persisted path used
-    // to throw at repartition(0) while the inline paths return empty —
-    // ensure() now short-circuits to the same empty-corpus contract
-    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
-    val queries = Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
-    val (a, c) = graft.sim.IvfIndex.ensure(spark, "/x/ivf_empty_spec", empty)
-    assert(c.isEmpty)
-    assert(Similarity.ivfTopKAssigned(a, c, queries, k = 3).count() === 0)
-    assert(Similarity.ivfTopKInt8Assigned(a, c, queries, k = 3).count() === 0)
   }
 
   test("IVF on an empty corpus returns empty, not an error") {
@@ -664,35 +710,6 @@ class SimilaritySpec extends SparkTestBase {
     val n = emb.count()
     assert(codesByCell.count() === n)
     assert(codesByCell.select("vec_id").distinct().count() === n)
-  }
-
-  test("IvfPqIndex.ensure on an empty corpus returns empty searches, not an error") {
-    import graft.sim.IvfPqIndex
-    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
-    val fakeDir = "/x/ivfpq_spec_empty"
-    IvfPqIndex.drop(fakeDir)
-    val (codes, cents, cb) = IvfPqIndex.ensure(spark, fakeDir, empty)
-    assert(cents.isEmpty && cb.isEmpty && codes.count() === 0)
-    val cands = Similarity.ivfPqCandidatePairs(codes, cents, cb, empty.limit(0), kCand = 5)
-    assert(cands.count() === 0)
-    IvfPqIndex.drop(fakeDir)
-  }
-
-  test("PqIndex.ensure on an empty corpus returns empty searches, not an error") {
-    import graft.sim.PqIndex
-    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
-    val fakeDir = "/x/pq_spec_empty"
-    PqIndex.drop(fakeDir)
-    val (codes, cb) = PqIndex.ensure(spark, fakeDir, empty)
-    assert(cb.isEmpty && codes.count() === 0)
-    // the memo serves repeat calls without re-evaluating the corpus
-    val (codes2, _) = PqIndex.ensure(spark, fakeDir,
-      { fail("empty-corpus memo must serve the repeat ensure"); empty })
-    assert(codes2.count() === 0)
-    val cands = Similarity.pqCandidatePairsEncoded(codes, cb,
-      empty.limit(0), kCand = 5)
-    assert(cands.count() === 0)
-    PqIndex.drop(fakeDir)
   }
 
   test("pqTopK on an empty corpus returns the empty frame, like its siblings") {
