@@ -7,6 +7,7 @@
 # UTC session TZ, SPARK_DRIVER_MEM heap).
 #
 # Usage:  scripts/run_main.sh graft.ScaleProbe
+#         scripts/run_main.sh graft.Harness q3_shipping_priority ...  # per-query job profile
 #         GRAFT_CLASSES=/tmp/snap scripts/run_main.sh graft.Bench
 # (set GRAFT_CLASSES to a snapshot dir when recompiles must not disturb
 #  a run in flight; env vars pass through to the main.)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   /** Locale-pinned fixed-point formatting: the default-locale f"" emits
@@ -9,9 +8,36 @@ object Bench {
   private[graft] def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** Best-of-`reps` seconds of one query, or the -1 sentinel when every
+    * rep failed, so the JSON marks it failed instead of fast. Each failed
+    * rep is reported on stderr.
+    */
+  private[graft] def time(name: String, reps: Int)(run: => Any): Double =
+    Harness.bestOf(reps, e => System.err.println(
+      s"[Bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}"))(run).getOrElse(-1.0)
+
+  /** The bench's one JSON line. Its reader may keep only the last ~2000
+    * chars of stdout: per-query times are rounded to ms (bench noise is
+    * >>1ms) and the headline fields go LAST so a front-truncated tail
+    * still shows the total.
+    */
+  private[graft] def json(results: Iterable[(String, Double)], sfLabel: String, bestOf: Int): String = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
+      .mkString("{", ",", "}")
+    // Failures (-1 sentinel) must NOT enter the headline total: summing
+    // them makes a round with broken queries read FASTER than a healthy
+    // one (r10/r11 reported ~21s for what was really ~46s of passing
+    // work minus 25 failures). The total is passing-queries-only and
+    // n_failed makes any breakage loud even in a truncated tail.
+    val nFailed = results.count(_._2 < 0)
+    val total = results.iterator.map(_._2).filter(_ >= 0).sum
+    "{\"queries\":" + qs +
+      s""","sf":"$sfLabel","best_of":$bestOf,"n_queries":${results.size}""" +
+      s""","n_failed":$nFailed,"metric":"total","unit":"sec","value":${f3(total)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Repeat each query N times and keep the fastest: contention from
     // anything else on the box (sbt test, a concurrent Verify) inflates
     // single-shot times 1.5-10x per query (round-6 driver bench read
@@ -23,68 +49,21 @@ object Bench {
     // a third rep makes that unlikely at ~+50% bench wall-clock
     // (~1.5 min). The JSON records best_of for transparency.
     val bestOf = sys.env.getOrElse("SPARK_GRAFT_BENCH_BEST_OF", "3").toInt.max(1)
-    val spark = graft.sink.BucketedMirror.withSessionConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen compiler, shuffle machinery, parquet
-    // footer caches) so the first timed query isn't charged ~3s of
-    // one-time JVM/session initialization.
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      Tables.lineitem(spark, sfDir).limit(1).count()
-    } catch { case NonFatal(_) => () }
+    Harness.warm(spark, sfDir)
     // Optional args: bench only the named queries (driver passes none).
-    // Unknown names warn loudly — a silent empty filter would produce a
-    // zero-timing "successful" bench that reads as a real run.
-    args.filterNot(SparkEntry.queries.contains)
-      .foreach(n => System.err.println(s"[Bench] unknown query: $n"))
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => args.contains(n) }
-    val results = selected.map { case (name, fn) =>
-      // min over SUCCESSFUL reps only: a rep that throws fast must not
-      // record its tiny time-to-exception as the query's best time. A
-      // query that fails every rep records -1 so the JSON marks it
-      // failed instead of fast.
+    val results = Harness.select(args.toSeq, SparkEntry.queries, "Bench").map { case (name, fn) =>
       // label the rep's jobs (guide §1.5) so a UI/event-log inspection of
       // a bench run attributes every job to its query; thread-local, no
       // effect on the measured work
       spark.sparkContext.setJobDescription(s"bench: $name")
-      val times = (1 to bestOf).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case NonFatal(e) =>
-            System.err.println(s"[Bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            None
-        }
-      }
-      name -> (if (times.nonEmpty) times.min else -1.0)
+      name -> time(name, bestOf)(fn(spark, sfDir).count())
     }
-    // The driver keeps only the last ~2000 chars of stdout. Per-query
-    // times are rounded to ms (bench noise is >>1ms) and the headline
-    // fields go LAST so a front-truncated tail still shows the total.
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // Failures (-1 sentinel) must NOT enter the headline total: summing
-    // them makes a round with broken queries read FASTER than a healthy
-    // one (r10/r11 reported ~21s for what was really ~46s of passing
-    // work minus 25 failures). The total is passing-queries-only and
-    // n_failed makes any breakage loud even in a truncated tail.
-    val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
-    val total = results.values.filter(_ >= 0).sum
-    failed.foreach(n => System.err.println(s"[Bench] FAILED (excluded from total): $n"))
-    val sfLabel = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val json = "{\"queries\":" + qs +
-      s""","sf":"$sfLabel","best_of":$bestOf,"n_queries":${results.size}""" +
-      s""","n_failed":${failed.size},"metric":"total","unit":"sec","value":${f3(total)}}"""
-    println(json)
+    results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
+      .foreach(n => System.err.println(s"[Bench] FAILED (excluded from total): $n"))
+    val line = json(results, java.nio.file.Paths.get(sfDir).getFileName.toString, bestOf)
+    println(line)
     // Persist the full JSON to an UNTRACKED path so the complete
     // per-query data survives a clipped stdout tail without dirtying the
     // working tree on every driver run; scripts/refresh_bench.sh copies
@@ -93,7 +72,7 @@ object Bench {
     try {
       val out = java.nio.file.Paths.get(outPath)
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(out, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.write(out, line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch {
       // a failed persist plus a clipped stdout is the whole failure mode
       // these files guard against — make it diagnosable, never silent

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
@@ -201,33 +200,23 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "docs/plans")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val benchJson =
       try new String(Files.readAllBytes(Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "docs/bench_full.json"))),
         StandardCharsets.UTF_8)
       catch { case _: java.io.IOException => "" }
-    val names = if (args.nonEmpty) args.toSeq else ledger
-    val spark = graft.sink.BucketedMirror.withSessionConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus(8))
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[ExplainAudit] unknown query: $name")
-        case Some(fn) =>
-          val df = fn(spark, sfDir)
-          df.collect() // finalize AQE so the dumped plan is the executed one
-          val txt = benchHeader(name, benchJson) +
-            scrub(df.queryExecution.executedPlan.toString)
-          Files.write(Paths.get(outDir, s"$name.txt"),
-            txt.getBytes(StandardCharsets.UTF_8),
-            StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-      }
+    val names = if (args.nonEmpty) args.toSeq else ledger
+    Harness.select(names, SparkEntry.queries, "ExplainAudit").foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      df.collect() // finalize AQE so the dumped plan is the executed one
+      val txt = benchHeader(name, benchJson) +
+        scrub(df.queryExecution.executedPlan.toString)
+      Files.write(Paths.get(outDir, s"$name.txt"),
+        txt.getBytes(StandardCharsets.UTF_8),
+        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-growth probe: measures how the registered event/document queries
@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *    duplicate rate grows factor× — the dedup operators' real production
   *    shape (a larger crawl has more duplicates, not more distinct docs).
   *
-  * Each query is timed cold in one JVM, scaled dir vs sf0.1, same
-  * local[cpus] session. Output: one JSON line + target/scale_probe.json.
+  * Each query is timed best-of-two in one JVM, scaled dir vs source dir,
+  * same local[cpus] session. Output: one JSON line +
+  * target/scale_probe_<set>_x<factor>.json.
   */
 object ScaleProbe {
 
@@ -152,25 +153,49 @@ object ScaleProbe {
     // one level down the scan-cost ladder (codes are m bytes/vector)
     "s15_pq_append_topk", "s16_ivfpq_append_topk")
 
+  private type Row = (String, Double, Double) // name, base s, scaled s
+
+  // best of two runs: the first pays one-time codegen compilation (and
+  // artifact builds), which at probe sizes can exceed the query itself
+  // and would masquerade as super-linear growth; a throw fails the probe
+  private def best(f: => Any): Double = Harness.bestOf(2)(f).get
+  private def once(f: => Any): Double = Harness.bestOf(1)(f).get // a one-time build
+
+  /** `df` replicated `factor`×: replica r (column `id`, visible to the
+    * `perReplica` rewrites) offsets `key` by r · `stride`.
+    */
+  private def replicate(spark: SparkSession, df: DataFrame, factor: Int, key: String,
+                        stride: Long, perReplica: (String, Column)*): DataFrame =
+    perReplica.foldLeft(spark.range(factor).crossJoin(df)) { case (d, (c, e)) => d.withColumn(c, e) }
+      .withColumn(key, col(key) + col("id") * stride)
+      .drop("id")
+      .repartition(32)
+
+  /** One past `key`'s max: each replica is a disjoint block of keys. */
+  private def stride(df: DataFrame, key: String): Long =
+    df.agg(max(key)).collect()(0).getLong(0) + 1
+
+  /** Writes `out/<table>.parquet` unless its `_SUCCESS` marker says an
+    * earlier run finished it (an interrupted table is rewritten).
+    */
+  private def writeOnce(spark: SparkSession, out: String, table: String)(df: => DataFrame): Unit = {
+    val path = new org.apache.hadoop.fs.Path(s"$out/$table.parquet")
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")))
+      df.write.mode("overwrite").parquet(path.toString)
+  }
+
   def generate(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$out/_DONE"))) return
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // events: ts stays a raw nanos long (Tables.events handles either)
-    val ev = spark.read.parquet(s"$src/events.parquet")
-    val evMax = ev.agg(max("event_id")).collect()(0).getLong(0) + 1
-    val evScaled = spark.range(factor).crossJoin(ev)
-      .withColumn("event_id", col("event_id") + col("id") * evMax)
-      .drop("id")
-    evScaled.repartition(32).write.mode("overwrite").parquet(s"$out/events.parquet")
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    val docMax = docs.agg(max("doc_id")).collect()(0).getLong(0) + 1
-    val docScaled = spark.range(factor).crossJoin(docs)
-      .withColumn("doc_id", col("doc_id") + col("id") * docMax)
-      .drop("id")
-    docScaled.repartition(32).write.mode("overwrite").parquet(s"$out/documents.parquet")
-    fs.create(new org.apache.hadoop.fs.Path(s"$out/_DONE")).close()
+    writeOnce(spark, out, "events") {
+      // events: ts stays a raw nanos long (Tables.events handles either)
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val ev = spark.read.parquet(s"$src/events.parquet")
+      replicate(spark, ev, factor, "event_id", stride(ev, "event_id"))
+    }
+    writeOnce(spark, out, "documents") {
+      val docs = spark.read.parquet(s"$src/documents.parquet")
+      replicate(spark, docs, factor, "doc_id", stride(docs, "doc_id"))
+    }
   }
 
   /** TPC-H upscale: replicate orders + lineitem with per-replica orderkey
@@ -182,25 +207,14 @@ object ScaleProbe {
     * one that stresses the fact-side shuffles and the broadcast decisions.
     */
   def generateTpch(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$out/_DONE"))) return
     val orders = spark.read.parquet(s"$src/orders.parquet")
-    val okMax = orders.agg(max("o_orderkey")).collect()(0).getLong(0) + 1
-    spark.range(factor).crossJoin(orders)
-      .withColumn("o_orderkey", col("o_orderkey") + col("id") * okMax)
-      .drop("id")
-      .repartition(32).write.mode("overwrite").parquet(s"$out/orders.parquet")
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
-    spark.range(factor).crossJoin(li)
-      .withColumn("l_orderkey", col("l_orderkey") + col("id") * okMax)
-      .drop("id")
-      .repartition(32).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
+    lazy val okStride = stride(orders, "o_orderkey")
+    writeOnce(spark, out, "orders")(replicate(spark, orders, factor, "o_orderkey", okStride))
+    writeOnce(spark, out, "lineitem")(replicate(spark,
+      spark.read.parquet(s"$src/lineitem.parquet"), factor, "l_orderkey", okStride))
     Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
-        .write.mode("overwrite").parquet(s"$out/$t.parquet")
+      writeOnce(spark, out, t)(spark.read.parquet(s"$src/$t.parquet"))
     }
-    fs.create(new org.apache.hadoop.fs.Path(s"$out/_DONE")).close()
   }
 
   /** Embedding upscale: replicate with offset vec_ids and a DETERMINISTIC
@@ -211,231 +225,168 @@ object ScaleProbe {
     * not a larger one. The perturbation keeps the value distribution
     * while giving replicas distinct signatures.
     */
-  def generateEmb(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$out/_DONE"))) return
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
-    val vMax = emb.agg(max("vec_id")).collect()(0).getLong(0) + 1
-    // the multiplier on the dimension index must be coprime to the
-    // modulus or the per-dimension term vanishes (an earlier i*7 mod 7
-    // collapsed to a constant-per-replica shift, leaving replicas with
-    // id ≡ 1 (mod 7) bit-exact duplicates); 31·id + 5·i mod 7 varies
-    // with BOTH replica and dimension
-    spark.range(factor).crossJoin(emb)
-      .withColumn("embedding", transform(col("embedding"), (x, i) =>
-        (x + ((pmod(col("id") * 31 + i * 5, lit(7)) - 3) * lit(0.01f))).cast("float")))
-      .withColumn("vec_id", col("vec_id") + col("id") * vMax)
-      .drop("id")
-      .repartition(32).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    fs.create(new org.apache.hadoop.fs.Path(s"$out/_DONE")).close()
-  }
+  def generateEmb(spark: SparkSession, src: String, out: String, factor: Int): Unit =
+    writeOnce(spark, out, "embeddings") {
+      val emb = spark.read.parquet(s"$src/embeddings.parquet")
+      // the multiplier on the dimension index must be coprime to the
+      // modulus or the per-dimension term vanishes (an earlier i*7 mod 7
+      // collapsed to a constant-per-replica shift, leaving replicas with
+      // id ≡ 1 (mod 7) bit-exact duplicates); 31·id + 5·i mod 7 varies
+      // with BOTH replica and dimension
+      replicate(spark, emb, factor, "vec_id", stride(emb, "vec_id"),
+        "embedding" -> transform(col("embedding"), (x, i) =>
+          (x + ((pmod(col("id") * 31 + i * 5, lit(7)) - 3) * lit(0.01f))).cast("float")))
+    }
 
-  /** Wall-clock one action, in seconds — the single timing primitive
-    * every probe block uses (was copy-pasted per block).
+  /** The extra rows (formulation ladders, index builds, gates), one named
+    * block each, run after the registered rows of their probe set.
     */
-  private def timeOnce(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
+  private final class Extras(spark: SparkSession, src: String, out: String,
+                             factor: Int, cpus: Int) {
 
-  def main(args: Array[String]): Unit = {
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val probeSet = sys.env.getOrElse("SPARK_GRAFT_PROBE", "events")
-    val out = probeSet match {
-      case "tpch" => s"target/scale_probe/tpch_x$factor"
-      case "emb"  => s"target/scale_probe/emb_x$factor"
-      case _      => s"target/scale_probe/x$factor"
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sink.BucketedMirror.withSessionConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the ×100 media fixtures carry ~200 KB binary blobs per row; at
-      // the default 4096-row columnar batch a single vectorized-reader
-      // batch is ~800 MB PER TASK and a full events sweep dies with
-      // "Cannot reserve additional contiguous bytes". 128 caps a blob
-      // batch at ~25 MB and is timing-neutral for the narrow tables
-      // (measured: the fact-scan rows moved < run-to-run noise). The
-      // general 100 TB lesson is in the Multimodal scaladoc: size
-      // columnar batches by ROW BYTES, not row count, on blob tables.
-      .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val selected = probeSet match {
-      case "tpch" => generateTpch(spark, src, out, factor); tpchProbeQueries
-      case "emb"  => generateEmb(spark, src, out, factor); embProbeQueries
-      case _      => generate(spark, src, out, factor); probeQueries
-    }
-    // min of two runs: the first pays one-time codegen compilation, which
-    // at probe sizes can exceed the query itself and would masquerade as
-    // super-linear growth
-    def time(dir: String, name: String): Double = {
-      def once: Double = timeOnce(SparkEntry.queries(name)(spark, dir).count())
-      math.min(once, once)
-    }
-    // local-iteration filter (comma-separated registered-query names,
-    // like Verify's SPARK_GRAFT_ONLY): probe only the named rows instead
-    // of the full set. Skips the extra (non-registered-query) blocks
-    // below whenever a filter is set — those have their own names and a
-    // filtered run is always a targeted refresh, never the published
-    // full sweep. The driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val probeExtras = only.isEmpty
-    val rows = selected.filter(q => only.forall(_.contains(q))).map { q =>
-      val base = time(src, q)
-      val scaled = time(out, q)
-      (q, base, scaled)
-    } ++ (if (!probeExtras || probeSet != "events") Seq.empty else {
-      // (positively gated on the events/documents probe set: only its
-      // generator writes $out/documents.parquet — a future probe set must
-      // opt in explicitly rather than inherit this block and crash)
-      // Incremental-dedup CANDIDATE GENERATION at the realistic shape — a
-      // SMALL batch (0.1%) against the big scaled corpus — inline
-      // (re-bands the whole corpus per run) vs the persisted LshIndex
-      // probe, warm. The registered d15/d16 queries use a 10% batch whose
-      // verify stage dominates either path; this row isolates what the
-      // index actually amortizes. (base = inline, scaled = indexed warm;
-      // ratio < 1 IS the speedup.) Build cost reported like
-      // fact_bucket_write_once / ivf_index_build_once.
+    // positively gated per probe set: only the events generator writes
+    // $out/documents.parquet, so a new set opts in rather than crash
+    val bySet: Map[String, Seq[() => Seq[Row]]] = Map(
+      "events" -> Seq(lshCandidates _, t9Heap _, imagePerception _, audioPerception _,
+        distributedClosure _, funnelCapGate _),
+      "tpch" -> Seq(bucketedJoin _, zorder _, bloomReferential _, entityResolution _),
+      "emb" -> Seq(recall _, indexBuilds _, srpPlanes _))
+
+    // a one-time build cost at both sizes: drop the artifact, time one build
+    private def buildRow(name: String, drop: String => Unit, ensure: String => Any): Row =
+      (name, { drop(src); once(ensure(src)) }, { drop(out); once(ensure(out)) })
+
+    // Incremental-dedup CANDIDATE GENERATION at the realistic shape — a
+    // SMALL batch (0.1%) against the big scaled corpus — inline
+    // (re-bands the whole corpus per run) vs the persisted LshIndex
+    // probe, warm. The registered d15/d16 queries use a 10% batch whose
+    // verify stage dominates either path; this row isolates what the
+    // index actually amortizes. (base = inline, scaled = indexed warm;
+    // ratio < 1 IS the speedup.) Build cost reported like
+    // fact_bucket_write_once / ivf_index_build_once.
+    def lshCandidates(): Seq[Row] = {
       import graft.dedup.{Dedup, LshIndex}
       val docs = spark.read.parquet(s"$out/documents.parquet")
       val corpus = docs.filter(pmod(col("doc_id"), lit(1000)) =!= 0)
       val batch = docs.filter(pmod(col("doc_id"), lit(1000)) === 0)
-      def inlineOnce: Double = timeOnce(
-        Dedup.incrementalCandidatePairs(batch, corpus, "doc_id", "text").count())
-      val inline = math.min(inlineOnce, inlineOnce)
+      val inline = best(Dedup.incrementalCandidatePairs(batch, corpus, "doc_id", "text").count())
       LshIndex.drop(out, subset = "probe")
-      val build = timeOnce(LshIndex.ensure(spark, out, corpus, subset = "probe"))
-      def indexedOnce: Double = timeOnce(
-        Dedup.incrementalCandidatePairsIndexed(
-          LshIndex.ensure(spark, out, corpus, subset = "probe"),
-          batch, "doc_id", "text").count())
-      val indexed = math.min(indexedOnce, indexedOnce)
+      val build = once(LshIndex.ensure(spark, out, corpus, subset = "probe"))
+      val indexed = best(Dedup.incrementalCandidatePairsIndexed(
+        LshIndex.ensure(spark, out, corpus, subset = "probe"), batch, "doc_id", "text").count())
       Seq(("lsh_candidates_inline_vs_indexed", inline, indexed),
           ("lsh_index_build_once", build, build))
-    } ++ {
-      // t9 formulation ladder at ×100 group cardinality (500 k doc
-      // groups): the registered row_number window (the t9_tfidf row
-      // above) vs the TopKRows heap at the default ObjectHashAggregate
-      // sort fallback (128 in-flight groups/task — the measured r12
-      // LOSS) vs the heap with the fallback raised past the per-task
-      // group count, the untried third option. (base = heap@default,
-      // scaled = heap@raised: the two new contenders in one row; compare
-      // both against t9_tfidf's scaled time to pick the winner.)
+    }
+
+    // t9 formulation ladder at ×100 group cardinality (500 k doc
+    // groups): the registered row_number window (the t9_tfidf row
+    // above) vs the TopKRows heap at the default ObjectHashAggregate
+    // sort fallback (128 in-flight groups/task — the measured r12
+    // LOSS) vs the heap with the fallback raised past the per-task
+    // group count, the untried third option. (base = heap@default,
+    // scaled = heap@raised: the two new contenders in one row; compare
+    // both against t9_tfidf's scaled time to pick the winner.)
+    def t9Heap(): Seq[Row] = {
       import graft.text.Text
       val docsScaled = spark.read.parquet(s"$out/documents.parquet")
-      def heapOnce: Double = timeOnce(
-        Text.tfidfTopTermsHeap(docsScaled, "doc_id", "text", k = 3).count())
-      val heapDefault = math.min(heapOnce, heapOnce)
+      def heap: Double = best(Text.tfidfTopTermsHeap(docsScaled, "doc_id", "text", k = 3).count())
+      val heapDefault = heap
       val fbKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
       val saved = spark.conf.get(fbKey)
       spark.conf.set(fbKey, (1 << 20).toString)
-      val heapRaised = try math.min(heapOnce, heapOnce)
-      finally spark.conf.set(fbKey, saved)
+      val heapRaised = try heap finally spark.conf.set(fbKey, saved)
       Seq(("t9_heap_fb128_vs_fb1m", heapDefault, heapRaised))
-    }) ++ (if (!probeExtras || probeSet != "events") Seq.empty else {
-      // m14's hash-pair join under perception CLUSTERS (r14 verdict item
-      // 3): the perturbed-variant corpus gives every seed content an
-      // unbounded stream of distinct-but-near hashes (variant = id/101,
-      // ≤3 cells inverted), so per-cluster distinct-hash occupancy — the
-      // term the distinct-universe argument does NOT bound — grows with
-      // the corpus. Rows: the capped join's base→scaled growth (the
-      // operative default), and capped vs UNCAPPED at the base size
-      // (the quadratic mass is visible already there; uncapped at ×100
-      // is deliberately not run — the same-shaped d19 blocker measured
-      // 332× for 100× data before its cap).
-      import graft.multimodal.Multimodal
+    }
+
+    /** A perception rung's pair join under perception CLUSTERS: rows
+      * `<prefix>_capped` (the capped join's base→scaled growth, the
+      * operative default) and `<prefix>_capped_vs_uncapped_base` (the
+      * quadratic mass is visible already at the base size), plus the
+      * uncapped join where feasible — cluster occupancy grows ~linearly
+      * with factor, pairs quadratically: at ×100 the candidate stream is
+      * ~10⁸–10⁹ rows and deliberately not run (the same-shaped d19 blocker
+      * measured 332× for 100× data before its cap); at ×10 it completes,
+      * putting a measured point behind the occupancy arithmetic.
+      */
+    private def perceptionClusters(prefix: String, table: String => DataFrame,
+                                   pairs: (DataFrame, Int) => DataFrame): Seq[Row] = {
       val cap = graft.dedup.Dedup.defaultBucketCap // the operative default, not a copy of it
-      def pairsOnce(dir: String, cap: Int): Double = timeOnce(
-        Multimodal.perceptualHashPairs(
-          Multimodal.syntheticPerturbedGridImageTable(spark, dir),
-          maxHamming = 3, bucketCap = cap).count())
+      def pairsAt(dir: String, cap: Int): Double = best(pairs(table(dir), cap).count())
       // force the fixture build (cachedDerived) before timing either dir
-      Multimodal.syntheticPerturbedGridImageTable(spark, src).count()
-      Multimodal.syntheticPerturbedGridImageTable(spark, out).count()
-      val cappedBase = math.min(pairsOnce(src, cap), pairsOnce(src, cap))
-      val cappedScaled = math.min(pairsOnce(out, cap), pairsOnce(out, cap))
-      val uncappedBase = math.min(pairsOnce(src, 0), pairsOnce(src, 0))
-      Seq(("m14_hash_pairs_capped", cappedBase, cappedScaled),
-          ("m14_hash_pairs_capped_vs_uncapped_base", cappedBase, uncappedBase)) ++
-      // the uncapped join IS measured where feasible (cluster occupancy
-      // grows ~linearly with factor, pairs quadratically — at ×100 the
-      // candidate stream is ~10⁸–10⁹ rows and deliberately not run):
-      // at ×10 it completes, putting a measured point behind the
-      // occupancy arithmetic instead of only the d19 precedent.
-      (if (factor <= 10)
-         Seq((s"m14_hash_pairs_capped_vs_uncapped_x$factor",
-              cappedScaled, math.min(pairsOnce(out, 0), pairsOnce(out, 0))))
-       else Seq.empty)
-    }) ++ (if (!probeExtras || probeSet != "events") Seq.empty else {
-      // m21's pair join under perception CLUSTERS (r15 verdict item 3):
-      // the audio twin of the m14 block above. The registered m21 row's
-      // fixture universe is pinned (18 envelope hashes — scale-free by
-      // construction), so THIS is the probe where per-cluster
-      // distinct-hash occupancy grows with the corpus on the sound rung
-      // too (syntheticPerturbedAmWavTable: variant = doc_id / 101, ≤3
-      // envelope windows mirrored). Same rows as m14's: capped growth,
-      // capped-vs-uncapped where the cap does not bind, and the measured
-      // uncapped join at ×10.
+      table(src).count()
+      table(out).count()
+      val cappedBase = pairsAt(src, cap)
+      val cappedScaled = pairsAt(out, cap)
+      val uncappedBase = pairsAt(src, 0)
+      Seq((s"${prefix}_capped", cappedBase, cappedScaled),
+          (s"${prefix}_capped_vs_uncapped_base", cappedBase, uncappedBase)) ++
+        (if (factor <= 10)
+           Seq((s"${prefix}_capped_vs_uncapped_x$factor", cappedScaled, pairsAt(out, 0)))
+         else Seq.empty)
+    }
+
+    // m14's hash-pair join (r14 verdict item 3): the perturbed-variant
+    // corpus gives every seed content an unbounded stream of
+    // distinct-but-near hashes (variant = id/101, ≤3 cells inverted), so
+    // per-cluster distinct-hash occupancy — the term the distinct-universe
+    // argument does NOT bound — grows with the corpus.
+    def imagePerception(): Seq[Row] = {
       import graft.multimodal.Multimodal
-      val cap = graft.dedup.Dedup.defaultBucketCap
-      def pairsOnce(dir: String, cap: Int): Double = timeOnce(
-        Multimodal.audioPerceptualHashPairs(
-          Multimodal.syntheticPerturbedAmWavTable(spark, dir),
-          maxHamming = 3, bucketCap = cap).count())
-      // force the fixture build (cachedDerived) before timing either dir
-      Multimodal.syntheticPerturbedAmWavTable(spark, src).count()
-      Multimodal.syntheticPerturbedAmWavTable(spark, out).count()
-      val cappedBase = math.min(pairsOnce(src, cap), pairsOnce(src, cap))
-      val cappedScaled = math.min(pairsOnce(out, cap), pairsOnce(out, cap))
-      val uncappedBase = math.min(pairsOnce(src, 0), pairsOnce(src, 0))
-      Seq(("m21_audio_pairs_capped", cappedBase, cappedScaled),
-          ("m21_audio_pairs_capped_vs_uncapped_base", cappedBase, uncappedBase)) ++
-      (if (factor <= 10)
-         Seq((s"m21_audio_pairs_capped_vs_uncapped_x$factor",
-              cappedScaled, math.min(pairsOnce(out, 0), pairsOnce(out, 0))))
-       else Seq.empty)
-    }) ++ (if (!probeExtras || probeSet != "events") Seq.empty else {
-      // The DISTRIBUTED pointer-jumping closure branch, which the
-      // registered d12 never exercises at probe scale (the capped pair
-      // graph stays under the 4M-edge driver budget, so d12's row
-      // measures the driver union-find). Force the distributed branch
-      // (maxDriverEdges = 0) on the SAME verified pair graph at both
-      // sizes — its growth is what a 100 TB corpus with a >4M-edge dup
-      // graph would actually pay.
+      perceptionClusters("m14_hash_pairs",
+        Multimodal.syntheticPerturbedGridImageTable(spark, _),
+        (t, cap) => Multimodal.perceptualHashPairs(t, maxHamming = 3, bucketCap = cap))
+    }
+
+    // m21's pair join (r15 verdict item 3): the audio twin of m14's. The
+    // registered m21 row's fixture universe is pinned (18 envelope hashes —
+    // scale-free by construction), so THIS is the probe where per-cluster
+    // distinct-hash occupancy grows with the corpus on the sound rung too
+    // (syntheticPerturbedAmWavTable: variant = doc_id / 101, ≤3 envelope
+    // windows mirrored).
+    def audioPerception(): Seq[Row] = {
+      import graft.multimodal.Multimodal
+      perceptionClusters("m21_audio_pairs",
+        Multimodal.syntheticPerturbedAmWavTable(spark, _),
+        (t, cap) => Multimodal.audioPerceptualHashPairs(t, maxHamming = 3, bucketCap = cap))
+    }
+
+    // The DISTRIBUTED pointer-jumping closure branch, which the
+    // registered d12 never exercises at probe scale (the capped pair
+    // graph stays under the 4M-edge driver budget, so d12's row
+    // measures the driver union-find). Force the distributed branch
+    // (maxDriverEdges = 0) on the SAME verified pair graph at both
+    // sizes — its growth is what a 100 TB corpus with a >4M-edge dup
+    // graph would actually pay.
+    def distributedClosure(): Seq[Row] = {
       import graft.dedup.Dedup
-      def closureOnce(dir: String): Double = {
+      def closure(dir: String): Double = {
         val docs = spark.read.parquet(s"$dir/documents.parquet")
         val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.8)
           .select(col("id1"), col("id2"))
-        timeOnce(Dedup.dupClusters(pairs, maxDriverEdges = 0).count())
+        best(Dedup.dupClusters(pairs, maxDriverEdges = 0).count())
       }
-      def run(dir: String): Double = math.min(closureOnce(dir), closureOnce(dir))
-      Seq(("d12_distributed_closure", run(src), run(out)))
-    }) ++ (if (!probeExtras || probeSet != "events") Seq.empty else {
-      // w14 funnel cap headroom GATE (r14 verdict item 7): on the scaled
-      // corpus the default-capped funnel must produce IDENTICAL rows to
-      // the uncapped exact fold — the cap is a memory bound, never a
-      // result change, and the densest scaled key (~8 500) sits only
-      // 1.2× under the 10 000 default, so this is the corpus where a
-      // density jump would first silently diverge. The probe FAILS
-      // outright on mismatch (cap-selection rule: Lifecycle.defaultEventCap
-      // scaladoc) rather than reporting a timing for a wrong answer.
+      Seq(("d12_distributed_closure", closure(src), closure(out)))
+    }
+
+    // w14 funnel cap headroom GATE (r14 verdict item 7): on the scaled
+    // corpus the default-capped funnel must produce IDENTICAL rows to
+    // the uncapped exact fold — the cap is a memory bound, never a
+    // result change, and the densest scaled key (~8 500) sits only
+    // 1.2× under the 10 000 default, so this is the corpus where a
+    // density jump would first silently diverge. The probe FAILS
+    // outright on mismatch (cap-selection rule: Lifecycle.defaultEventCap
+    // scaladoc) rather than reporting a timing for a wrong answer.
+    def funnelCapGate(): Seq[Row] = {
       import graft.analyze.Lifecycle
       val stages = Seq("signup", "view", "click", "purchase")
       val ev = Tables.events(spark, out)
       def funnelRun(cap: Int): (Seq[String], Double) = {
         var rows: Seq[String] = null
-        def once = timeOnce {
+        val t = best {
           rows = Lifecycle.funnel(ev, "user_id", "ts", "event_type", stages,
               maxLagSeconds = 21600, maxEventsPerKey = cap)
             .orderBy("stage_idx").collect().toSeq.map(_.toString)
         }
-        val t = math.min(once, once)
         (rows, t)
       }
       val densest = Lifecycle.maxStageEventsPerKey(ev, "user_id", "event_type", stages)
@@ -449,17 +400,18 @@ object ScaleProbe {
       println(s"w14 cap headroom gate OK at ×$factor: densest key $densest, " +
         s"cap ${Lifecycle.defaultEventCap}, capped == uncapped (4 stages)")
       Seq(("w14_capped_vs_uncapped_gate", tCapped, tExact))
-    }) ++ (if (!probeExtras || probeSet != "tpch") Seq.empty else {
-      // Bucketed-join twin for the probe's superlinear rows: q3/q21 grow
-      // ~10x at 100x facts because the fact-fact sort-merge join re-sorts
-      // both sides every run (n log n). Bucketing + in-bucket sorting
-      // pays that shuffle+sort ONCE at write; these entries measure the
-      // same join-aggregate shape from plain parquet vs bucketed tables,
-      // plus the one-time bucket-write cost, all at the scaled size.
-      // (base = plain, scaled = bucketed, so ratio < 1 IS the speedup.)
+    }
+
+    // Bucketed-join twin for the probe's superlinear rows: q3/q21 grow
+    // ~10x at 100x facts because the fact-fact sort-merge join re-sorts
+    // both sides every run (n log n). Bucketing + in-bucket sorting
+    // pays that shuffle+sort ONCE at write; these entries measure the
+    // same join-aggregate shape from plain parquet vs bucketed tables,
+    // plus the one-time bucket-write cost, all at the scaled size.
+    // (base = plain, scaled = bucketed, so ratio < 1 IS the speedup.)
+    def bucketedJoin(): Seq[Row] = {
       import graft.sink.Sinks
-      def joinShape(li: org.apache.spark.sql.DataFrame,
-                    ord: org.apache.spark.sql.DataFrame): Long =
+      def joinShape(li: DataFrame, ord: DataFrame): Long =
         li.join(ord, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_orderdate"))
           .agg(sum(col("l_extendedprice")).as("rev"))
@@ -468,57 +420,53 @@ object ScaleProbe {
         .select("l_orderkey", "l_extendedprice")
       val ordP = spark.read.parquet(s"$out/orders.parquet")
         .select("o_orderkey", "o_orderdate")
-      val plain = math.min(timeOnce(joinShape(liP, ordP)), timeOnce(joinShape(liP, ordP)))
+      val plain = best(joinShape(liP, ordP))
       spark.sql("DROP TABLE IF EXISTS probe_li_bucketed")
       spark.sql("DROP TABLE IF EXISTS probe_ord_bucketed")
-      val writeCost = timeOnce {
+      val writeCost = once {
         Sinks.writeBucketed(liP, "probe_li_bucketed", Seq("l_orderkey"),
-          nBuckets = cpus.toInt, path = Some(s"$out/li_bucketed"),
+          nBuckets = cpus, path = Some(s"$out/li_bucketed"),
           sortCols = Seq("l_orderkey"))
         Sinks.writeBucketed(ordP, "probe_ord_bucketed", Seq("o_orderkey"),
-          nBuckets = cpus.toInt, path = Some(s"$out/ord_bucketed"),
+          nBuckets = cpus, path = Some(s"$out/ord_bucketed"),
           sortCols = Seq("o_orderkey"))
       }
-      def bucketedOnce: Double =
-        timeOnce(joinShape(spark.table("probe_li_bucketed"), spark.table("probe_ord_bucketed")))
-      val bucketed = math.min(bucketedOnce, bucketedOnce)
+      val bucketed =
+        best(joinShape(spark.table("probe_li_bucketed"), spark.table("probe_ord_bucketed")))
       Seq(("fact_join_bucketed_vs_plain", plain, bucketed),
           ("fact_bucket_write_once", writeCost, writeCost))
-    }) ++ (if (!probeExtras || probeSet != "tpch") Seq.empty else {
-      // Z-order layout at scale: the one-time clustering write at both
-      // sizes (growth of the layout pass itself), then the registered
-      // z1 filter+agg shape from PLAIN parquet vs the z-mirror at the
-      // SCALED size (base = plain, scaled = mirrored; ratio < 1 IS the
-      // min-max pruning win the layout buys).
+    }
+
+    // Z-order layout at scale: the one-time clustering write at both
+    // sizes (growth of the layout pass itself), then the registered
+    // z1 filter+agg shape from PLAIN parquet vs the z-mirror at the
+    // SCALED size (base = plain, scaled = mirrored; ratio < 1 IS the
+    // min-max pruning win the layout buys).
+    def zorder(): Seq[Row] = {
       import graft.sink.ZOrderMirror
       val zCols = Seq("o_totalprice", "o_custkey")
-      def zShape(df: org.apache.spark.sql.DataFrame): Long =
+      def zShape(df: DataFrame): Long =
         df.filter(col("o_totalprice").between(50000, 150000) &&
                   col("o_custkey").between(200, 1000))
           .groupBy("o_orderstatus")
           .agg(sum(col("o_totalprice")).as("rev"))
           .count()
-      def buildAt(dir: String): Double = {
-        ZOrderMirror.drop(dir, "orders", zCols)
-        timeOnce(ZOrderMirror.ensure(spark, dir, "orders", zCols))
-      }
-      val wBase = buildAt(src)
-      val wScaled = buildAt(out)
+      val write = buildRow("zorder_mirror_write_once",
+        ZOrderMirror.drop(_, "orders", zCols), ZOrderMirror.ensure(spark, _, "orders", zCols))
       val plainOrd = spark.read.parquet(s"$out/orders.parquet")
       val zOrd = ZOrderMirror.ensure(spark, out, "orders", zCols) // warm
-      val plainT = math.min(timeOnce(zShape(plainOrd)), timeOnce(zShape(plainOrd)))
-      val zT = math.min(timeOnce(zShape(zOrd)), timeOnce(zShape(zOrd)))
-      Seq(("zorder_scan_vs_plain", plainT, zT),
-          ("zorder_mirror_write_once", wBase, wScaled))
-    }) ++ (if (!probeExtras || probeSet != "tpch") Seq.empty else {
-      // The bloom prefilter's honest regimes at the scaled size: the
-      // screen only removes DEFINITE orphans, so on a clean child every
-      // row passes and the bloom build is pure overhead (the registered
-      // dq5 row's posture) — its payoff regime is an orphan-heavy ingest,
-      // the case a referential gate exists to catch. Both rows run plain
-      // vs bloom on the SAME child at the scaled size (base = plain,
-      // scaled = bloom, ratio < 1 IS the prefilter win), with the
-      // answers gated equal — the prefilter must be answer-invisible.
+      Seq(("zorder_scan_vs_plain", best(zShape(plainOrd)), best(zShape(zOrd))), write)
+    }
+
+    // The bloom prefilter's honest regimes at the scaled size: the
+    // screen only removes DEFINITE orphans, so on a clean child every
+    // row passes and the bloom build is pure overhead (the registered
+    // dq5 row's posture) — its payoff regime is an orphan-heavy ingest,
+    // the case a referential gate exists to catch. Both rows run plain
+    // vs bloom on the SAME child at the scaled size (base = plain,
+    // scaled = bloom, ratio < 1 IS the prefilter win), with the
+    // answers gated equal — the prefilter must be answer-invisible.
+    def bloomReferential(): Seq[Row] = {
       import graft.quality.Checks
       val ordS = spark.read.parquet(s"$out/orders.parquet")
       val liS = spark.read.parquet(s"$out/lineitem.parquet")
@@ -528,101 +476,59 @@ object ScaleProbe {
         when(pmod(col("l_orderkey"), lit(10)) < 9,
           col("l_orderkey") + lit(100000000000L))
           .otherwise(col("l_orderkey")).as("l_orderkey"))
-      def metric(d: org.apache.spark.sql.DataFrame): Seq[String] =
-        d.collect().toSeq.map(_.toString)
-      def pair(child: org.apache.spark.sql.DataFrame, tag: String) = {
+      def metric(d: DataFrame): Seq[String] = d.collect().toSeq.map(_.toString)
+      def pair(child: DataFrame, tag: String): Row = {
         var a: Seq[String] = null; var b: Seq[String] = null
-        def plainOnce = timeOnce {
-          a = metric(Checks.referential(child, "l_orderkey", ordS, "o_orderkey", 1.0))
-        }
-        def bloomOnce = timeOnce {
-          b = metric(Checks.referentialBloom(child, "l_orderkey", ordS, "o_orderkey", 1.0))
-        }
-        val tp = math.min(plainOnce, plainOnce)
-        val tb = math.min(bloomOnce, bloomOnce)
+        val tp = best { a = metric(Checks.referential(child, "l_orderkey", ordS, "o_orderkey", 1.0)) }
+        val tb = best { b = metric(Checks.referentialBloom(child, "l_orderkey", ordS, "o_orderkey", 1.0)) }
         require(a == b,
           s"dq5 $tag gate FAILED at ×$factor: bloom-prefiltered referential " +
             s"diverged from the plain join.\nplain: $a\nbloom: $b")
         (s"dq5_bloom_vs_plain_$tag", tp, tb)
       }
       Seq(pair(orphanLi, "orphan"), pair(liS, "clean"))
-    }) ++ (if (!probeExtras || probeSet != "tpch") Seq.empty else {
-      // Entity resolution at a GROWING name universe (the image
-      // perception rung's syntheticPerturbedGridImageTable rationale,
-      // applied to names): replicate part with a per-replica suffix
-      // token, so the distinct-name universe grows ×factor while every
-      // name keeps its fuzzy structure (within-replica matches persist;
-      // replicas of one name match each other at dist ≤ 2 across the
-      // suffix). Token occupancy grows ×factor too — the block cap's
-      // binding regime is exactly what this measures.
-      import graft.er.EntityResolution
+    }
+
+    // Entity resolution at a GROWING name universe (the image
+    // perception rung's syntheticPerturbedGridImageTable rationale,
+    // applied to names): replicate part with a per-replica suffix
+    // token, so the distinct-name universe grows ×factor while every
+    // name keeps its fuzzy structure (within-replica matches persist;
+    // replicas of one name match each other at dist ≤ 2 across the
+    // suffix). Token occupancy grows ×factor too — the block cap's
+    // binding regime is exactly what this measures.
+    def entityResolution(): Seq[Row] = {
+      import graft.er.{EntityResolution, NameIndex}
       val partBase = spark.read.parquet(s"$src/part.parquet")
-      val erPath = s"$out/part_er.parquet"
-      val fs2 = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs2.exists(new org.apache.hadoop.fs.Path(s"$erPath/_SUCCESS"))) {
-        val pkMax = partBase.agg(max("p_partkey")).collect()(0).getLong(0) + 1
-        spark.range(factor).crossJoin(partBase)
-          .withColumn("p_partkey", col("p_partkey") + col("id") * pkMax)
-          .withColumn("p_name", concat(col("p_name"), lit(" v"), col("id")))
-          .drop("id")
-          .repartition(32).write.mode("overwrite").parquet(erPath)
-      }
-      val partScaled = spark.read.parquet(erPath)
-      def er1At(df: org.apache.spark.sql.DataFrame): Double = {
-        def once = timeOnce(
-          EntityResolution.nameMatchPairs(df, "p_name", maxDist = 2).count())
-        math.min(once, once)
-      }
-      def er2At(df: org.apache.spark.sql.DataFrame): Double = {
-        def once = timeOnce(
-          EntityResolution.entityGroups(df, "p_partkey", "p_name", maxDist = 2).count())
-        math.min(once, once)
-      }
-      def erSplit(df: org.apache.spark.sql.DataFrame) =
-        (df.filter(pmod(col("p_partkey"), lit(10)) === 0),
-          df.filter(pmod(col("p_partkey"), lit(10)) =!= 0))
-      def er3At(df: org.apache.spark.sql.DataFrame): Double = {
-        val (batch, standing) = erSplit(df)
-        def once = timeOnce(EntityResolution.incrementalEntityMatches(
+      val pkStride = stride(partBase, "p_partkey")
+      writeOnce(spark, out, "part_er")(replicate(spark, partBase, factor, "p_partkey", pkStride,
+        "p_name" -> concat(col("p_name"), lit(" v"), col("id"))))
+      val partScaled = spark.read.parquet(s"$out/part_er.parquet")
+      def er1At(df: DataFrame): Double =
+        best(EntityResolution.nameMatchPairs(df, "p_name", maxDist = 2).count())
+      def er2At(df: DataFrame): Double =
+        best(EntityResolution.entityGroups(df, "p_partkey", "p_name", maxDist = 2).count())
+      def er5At(df: DataFrame): Double =
+        best(EntityResolution.entitySurvivors(df, "p_partkey", "p_name", maxDist = 2).count())
+      def standingOf(df: DataFrame) = df.filter(pmod(col("p_partkey"), lit(10)) =!= 0)
+      def batchOf(df: DataFrame) = df.filter(pmod(col("p_partkey"), lit(10)) === 0)
+      def er3(batch: DataFrame, standing: DataFrame): Double =
+        best(EntityResolution.incrementalEntityMatches(
           batch, standing, "p_partkey", "p_name", maxDist = 2).count())
-        math.min(once, once)
-      }
-      def er4At(dir: String, table: String,
-                df: org.apache.spark.sql.DataFrame): Double = {
-        val (batch, standing) = erSplit(df)
-        val idx = graft.er.NameIndex.ensure(spark, dir, table, "mod10ne0",
-          standing, "p_name")
-        def once = timeOnce(EntityResolution.incrementalEntityMatchesIndexed(
+      // the index is ensured before timing: a warm probe, like d16
+      def er4(dir: String, table: String, batch: DataFrame, standing: DataFrame): Double = {
+        val idx = NameIndex.ensure(spark, dir, table, "mod10ne0", standing, "p_name")
+        best(EntityResolution.incrementalEntityMatchesIndexed(
           batch, idx, "p_partkey", "p_name", maxDist = 2).count())
-        math.min(once, once) // index ensured above: warm probe, like d16
       }
       // shared across the daily-shape rows: base timings measured ONCE
-      // (each er*At is already min-of-two full executions), the fixed
-      // day batch = replica 0 of the er fixture (its " v0" names still
+      // (each is already best-of-two full executions), the fixed day
+      // batch = replica 0 of the er fixture (its " v0" names still
       // fuzzy-match the grown universe's single/double-digit replicas
       // at ≤2 edits), standing = the whole ×factor universe
-      val er3Base = er3At(partBase)
-      val er4Base = er4At(src, "part", partBase)
-      val pkMax = partBase.agg(max("p_partkey")).collect()(0).getLong(0) + 1
-      val fixedBatch = partScaled
-        .filter(col("p_partkey") < pkMax &&
-          pmod(col("p_partkey"), lit(10)) === 0)
-      val standingScaled =
-        partScaled.filter(pmod(col("p_partkey"), lit(10)) =!= 0)
-      def er3FixedScaled: Double = {
-        def once = timeOnce(EntityResolution.incrementalEntityMatches(
-          fixedBatch, standingScaled, "p_partkey", "p_name",
-          maxDist = 2).count())
-        math.min(once, once)
-      }
-      def er4FixedScaled: Double = {
-        val idx = graft.er.NameIndex.ensure(spark, out, "part_er",
-          "mod10ne0", standingScaled, "p_name")
-        def once = timeOnce(EntityResolution.incrementalEntityMatchesIndexed(
-          fixedBatch, idx, "p_partkey", "p_name", maxDist = 2).count())
-        math.min(once, once) // index ensured above: warm probe, like d16
-      }
+      val er3Base = er3(batchOf(partBase), standingOf(partBase))
+      val er4Base = er4(src, "part", batchOf(partBase), standingOf(partBase))
+      val fixedBatch = batchOf(partScaled.filter(col("p_partkey") < pkStride))
       // er1's PAIR OUTPUT is quadratic in the duplicate rate by nature
       // (each entity's spelling set is a clique — the e1/m14 law; this
       // fixture makes every base name a factor-clique, measured
@@ -633,12 +539,6 @@ object ScaleProbe {
       // are the TRUE daily shape, and er4's is where the persisted
       // index earns its keep (the standing tokenization scan — the
       // daily shape's linear term — is replaced by the artifact read)
-      def er5At(df: org.apache.spark.sql.DataFrame): Double = {
-        def once = timeOnce(
-          EntityResolution.entitySurvivors(df, "p_partkey", "p_name",
-            maxDist = 2).count())
-        math.min(once, once)
-      }
       Seq(("er1_name_matches[pair output ~ dup-rate^2]",
             er1At(partBase), er1At(partScaled)),
           ("er2_entity_groups[universe scales]", er2At(partBase), er2At(partScaled)),
@@ -647,27 +547,29 @@ object ScaleProbe {
           ("er5_entity_survivors[universe scales]",
             er5At(partBase), er5At(partScaled)),
           ("er3_incremental_matches[batch x standing both scale]",
-            er3Base, er3At(partScaled)),
+            er3Base, er3(batchOf(partScaled), standingOf(partScaled))),
           ("er4_incremental_indexed[warm index probe]",
-            er4Base, er4At(out, "part_er", partScaled)),
+            er4Base, er4(out, "part_er", batchOf(partScaled), standingOf(partScaled))),
           (s"er3_incremental_matches[fixed day batch, standing x$factor]",
-            er3Base, er3FixedScaled),
+            er3Base, er3(fixedBatch, standingOf(partScaled))),
           (s"er4_incremental_indexed[fixed day batch, standing x$factor, warm]",
-            er4Base, er4FixedScaled))
-    }) ++ (if (!probeExtras || probeSet != "emb") Seq.empty else {
-      // Recall at scale, not just latency: a bucketed ANN that gets
-      // faster by silently returning worse neighbors is not an index.
-      // recall@5 vs exact brute force on the registered 8-query sample,
-      // at BOTH sizes (base = sf0.1, scaled = x factor) — the auto-sized
-      // IVF paths change their cell count with N, so recall must be
-      // re-proven at the size the cells were sized for. (ratio here is
-      // scaled/base recall; ~1.0 means the index quality survived the
-      // upscale.)
+            er4Base, er4(out, "part_er", fixedBatch, standingOf(partScaled))))
+    }
+
+    // Recall at scale, not just latency: a bucketed ANN that gets
+    // faster by silently returning worse neighbors is not an index.
+    // recall@5 vs exact brute force on the registered 8-query sample,
+    // at BOTH sizes (base = sf0.1, scaled = x factor) — the auto-sized
+    // IVF paths change their cell count with N, so recall must be
+    // re-proven at the size the cells were sized for. (ratio here is
+    // scaled/base recall; ~1.0 means the index quality survived the
+    // upscale.)
+    def recall(): Seq[Row] = {
       import graft.sim.{IvfIndex, Similarity}
       def recallAt(dir: String): Seq[(String, Double)] = {
         val emb = Tables.embeddings(spark, dir)
         val queries = emb.filter(col("vec_id") < 8)
-        def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+        def sets(df: DataFrame): Map[Long, Set[Long]] =
           df.collect().groupBy(_.getLong(0))
             .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
         val exact = sets(Similarity.bruteForceTopK(emb, queries, k = 5))
@@ -705,75 +607,93 @@ object ScaleProbe {
       }
       val base = recallAt(src).toMap
       recallAt(out).map { case (name, scaled) => (name, base(name), scaled) }
-    }) ++ (if (!probeExtras || probeSet != "emb") Seq.empty else {
-      // One-time IVF index build cost, reported like fact_bucket_write_once
-      // (the s4/s8 query rows above measured a WARM index: their first rep
-      // built it, min-of-2 keeps the warm run). base = build at sf0.1,
-      // scaled = build at x factor — the ratio is the build's own growth.
-      import graft.sim.IvfIndex
-      def build(dir: String): Double = {
-        IvfIndex.drop(dir)
-        val t0 = System.nanoTime()
-        IvfIndex.ensure(spark, dir, Tables.embeddings(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
-      Seq(("ivf_index_build_once", build(src), build(out)))
-    }) ++ (if (!probeExtras || probeSet != "emb") Seq.empty else {
-      // One-time SRP index build cost (the s2/s7 twin of
-      // ivf_index_build_once): count + auto-planes + the single corpus
-      // pass deriving int8 pair and all nTables bucket assignments +
-      // the partitioned write. nTables = 12 matches the registered
-      // s2/s7 exactly.
-      import graft.sim.SrpIndex
-      def build(dir: String): Double = {
-        SrpIndex.drop(dir, nTables = 12)
-        val t0 = System.nanoTime()
-        SrpIndex.ensure(spark, dir, Tables.embeddings(spark, dir), nTables = 12)
-        (System.nanoTime() - t0) / 1e9
-      }
-      Seq(("srp_index_build_once", build(src), build(out)))
-    }) ++ (if (!probeExtras || probeSet != "emb") Seq.empty else {
-      // One-time PQ build costs (the s10/s11 twins of the rows above),
-      // split at the seam that matters at 100 TB: pq_index_build_once =
-      // bounded-sample train + the ONE full-corpus encode pass + code
-      // write (expected ~linear in N with a constant train term);
-      // ivfpq_layout_build_once = ONLY the codes⋈cells layout join on
-      // warm siblings (the marginal cost of composing two standing
-      // indexes into the s11 layout).
-      import graft.sim.{PqIndex, IvfPqIndex}
-      def buildPq(dir: String): Double = {
-        PqIndex.drop(dir)
-        timeOnce(PqIndex.ensure(spark, dir, Tables.embeddings(spark, dir)))
-      }
-      val pqRow = ("pq_index_build_once", buildPq(src), buildPq(out))
-      def buildLayout(dir: String): Double = {
-        IvfPqIndex.drop(dir) // siblings stay warm — measures the join+write only
-        timeOnce(IvfPqIndex.ensure(spark, dir, Tables.embeddings(spark, dir)))
-      }
-      Seq(pqRow, ("ivfpq_layout_build_once", buildLayout(src), buildLayout(out)))
-    }) ++ (if (!probeExtras || probeSet != "emb") Seq.empty else {
-      // Parameter-scaling twin for the SRP path: with FIXED nPlanes the
-      // candidate stream grows ∝ N (each bucket holds factor× more
-      // vectors), so the registered-parameter entries above scale
-      // ~linearly by construction. The index knob that restores
-      // per-bucket density is nPlanes += log2(factor); this entry
-      // measures s2's shape with exactly that adjustment (base side
-      // keeps the registered 4 planes).
+    }
+
+    // One-time index build costs, reported like fact_bucket_write_once
+    // (the s4/s8/s2/s7/s10/s11 query rows above measured WARM indexes:
+    // their first rep built them, best-of-two keeps the warm run). base =
+    // build at the source size, scaled = build at x factor — the ratio is
+    // the build's own growth. The SRP build is count + auto-planes + the
+    // single corpus pass deriving int8 pair and all nTables bucket
+    // assignments + the partitioned write (nTables = 12 matches the
+    // registered s2/s7 exactly). The PQ builds split at the seam that
+    // matters at 100 TB: pq_index_build_once = bounded-sample train + the
+    // ONE full-corpus encode pass + code write (expected ~linear in N with
+    // a constant train term); ivfpq_layout_build_once = ONLY the
+    // codes⋈cells layout join on warm siblings (the marginal cost of
+    // composing two standing indexes into the s11 layout).
+    def indexBuilds(): Seq[Row] = {
+      import graft.sim.{IvfIndex, IvfPqIndex, PqIndex, SrpIndex}
+      def emb(dir: String) = Tables.embeddings(spark, dir)
+      Seq(
+        buildRow("ivf_index_build_once", IvfIndex.drop(_), d => IvfIndex.ensure(spark, d, emb(d))),
+        buildRow("srp_index_build_once", SrpIndex.drop(_, nTables = 12),
+          d => SrpIndex.ensure(spark, d, emb(d), nTables = 12)),
+        buildRow("pq_index_build_once", PqIndex.drop(_), d => PqIndex.ensure(spark, d, emb(d))),
+        // siblings stay warm — measures the join+write only
+        buildRow("ivfpq_layout_build_once", IvfPqIndex.drop(_),
+          d => IvfPqIndex.ensure(spark, d, emb(d))))
+    }
+
+    // Parameter-scaling twin for the SRP path: with FIXED nPlanes the
+    // candidate stream grows ∝ N (each bucket holds factor× more
+    // vectors), so the registered-parameter entries above scale
+    // ~linearly by construction. The index knob that restores
+    // per-bucket density is nPlanes += log2(factor); this entry
+    // measures s2's shape with exactly that adjustment (base side
+    // keeps the registered 4 planes).
+    def srpPlanes(): Seq[Row] = {
       val planes = 4 + math.round(math.log(factor.toDouble) / math.log(2.0)).toInt
       // nTables = 12 matches the registered s2 exactly, so the only
       // variable between this row and the s2 row is the plane count
       def annAt(dir: String, p: Int): Double = {
-        def once: Double = {
-          val emb = Tables.embeddings(spark, dir)
-          val t0 = System.nanoTime()
-          graft.sim.Similarity.annTopK(emb, emb.filter(col("vec_id") < 8), k = 5,
-            nPlanes = p, nTables = 12, maxDim = 64).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once, once)
+        val emb = Tables.embeddings(spark, dir)
+        best(graft.sim.Similarity.annTopK(emb, emb.filter(col("vec_id") < 8), k = 5,
+          nPlanes = p, nTables = 12, maxDim = 64).count())
       }
       Seq((s"s2_ann_planes$planes", annAt(src, 4), annAt(out, planes)))
-    })
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
+    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val probeSet = sys.env.getOrElse("SPARK_GRAFT_PROBE", "events")
+    val out = probeSet match {
+      case "tpch" => s"target/scale_probe/tpch_x$factor"
+      case "emb"  => s"target/scale_probe/emb_x$factor"
+      case _      => s"target/scale_probe/x$factor"
+    }
+    val cpus = Harness.cpus(32)
+    // the ×100 media fixtures carry ~200 KB binary blobs per row; at
+    // the default 4096-row columnar batch a single vectorized-reader
+    // batch is ~800 MB PER TASK and a full events sweep dies with
+    // "Cannot reserve additional contiguous bytes". 128 caps a blob
+    // batch at ~25 MB and is timing-neutral for the narrow tables
+    // (measured: the fact-scan rows moved < run-to-run noise). The
+    // general 100 TB lesson is in the Multimodal scaladoc: size
+    // columnar batches by ROW BYTES, not row count, on blob tables.
+    val spark = Harness.session(cpus, Map("spark.sql.parquet.columnarReaderBatchSize" -> "128"))
+    spark.sparkContext.setLogLevel("WARN")
+    val probeNames = probeSet match {
+      case "tpch" => generateTpch(spark, src, out, factor); tpchProbeQueries
+      case "emb"  => generateEmb(spark, src, out, factor); embProbeQueries
+      case _      => generate(spark, src, out, factor); probeQueries
+    }
+    // local-iteration filter (comma-separated registered-query names,
+    // like Verify's SPARK_GRAFT_ONLY): probe only the named rows instead
+    // of the full set. Skips the extra (non-registered-query) blocks
+    // whenever a filter is set — those have their own names and a
+    // filtered run is always a targeted refresh, never the published
+    // full sweep.
+    val only = Harness.names("SPARK_GRAFT_PROBE_ONLY")
+    val registry = SparkEntry.queries
+    val selected = Harness.select(only,
+      scala.collection.immutable.VectorMap.from(probeNames.map(q => q -> registry(q))), "ScaleProbe")
+    val rows = selected.toSeq.map { case (q, fn) =>
+      (q, best(fn(spark, src).count()), best(fn(spark, out).count()))
+    } ++ (if (only.nonEmpty) Seq.empty
+          else new Extras(spark, src, out, factor, cpus).bySet.getOrElse(probeSet, Seq.empty).flatMap(_()))
     // Locale-pinned formatting (Bench.f3) — default-locale %f breaks the
     // JSON on comma-decimal locales. A zero base (e.g. a recall row
     // measuring a total miss) must emit ratio null, not the bare

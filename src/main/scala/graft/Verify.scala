@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** JSON string escape: backslash, quote, and ALL control chars (<0x20) —
   * a tab or CR in builder-authored SQL would otherwise make the driver's
@@ -27,13 +26,7 @@ object Verify {
     // Verify, and only Verify, turns the dump writes on. Bench and specs
     // run the pure plans (CandidateDumps scaladoc).
     CandidateDumps.enable()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sink.BucketedMirror.withSessionConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dump queries with bounded concurrency: Spark schedules jobs from
@@ -47,10 +40,7 @@ object Verify {
     // never sets it, so driver runs always dump the full surface — the
     // manifest's missing-output check below still covers every
     // registered query there.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val selected = Harness.select(Harness.names("SPARK_GRAFT_ONLY"), SparkEntry.queries, "verify")
     val futures = selected.map { case (name, fn) =>
       scala.concurrent.Future {
         try {
@@ -73,7 +63,7 @@ object Verify {
           frame.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case e: Throwable =>
           failed.add(name)
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       }(ec)
     }
@@ -98,8 +88,8 @@ object Verify {
     // filter, so driver manifests show n_selected == n_registered,
     // skipped=[] and the full-surface completeness check is unchanged.
     val skipped = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(n => selected.exists(_._1 == n))
-    val missing = selected.map(_._1).sorted
+      .filterNot(selected.contains)
+    val missing = selected.keys.toSeq.sorted
       .filterNot(n => Files.isDirectory(Paths.get(s"$outDir/$n")))
     val manifest = "{\"n_registered\":" + SparkEntry.queries.size +
       ",\"n_selected\":" + selected.size +

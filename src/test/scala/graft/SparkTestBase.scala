@@ -20,11 +20,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = graft.sink.BucketedMirror
-    .withSessionConfs(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  // always local[4], whatever SPARK_GRAFT_CPUS says: the mains read it,
+  // the specs' fixtures are sized for four partitions
+  lazy val session: SparkSession = Harness.session(4)
 }
