@@ -3,7 +3,8 @@ package graft
 import java.util.Locale
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.ListenerBus
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
@@ -138,17 +139,30 @@ object Harness {
     */
   private final class Ledger(val group: String) extends SparkListener with QueryExecutionListener {
     private val jobs = mutable.LinkedHashMap[Int, Job]()
+    private val execSites = mutable.HashMap[Long, String]()
     private val stageIds = mutable.HashSet[Int]()
     private val stages = mutable.HashSet[(Int, Int)]()
     private val tasks = mutable.HashSet[Long]()
     private var taskMs, shuffleWrite, shuffleRead = 0L
     private val phases = mutable.LinkedHashMap[String, Long]().withDefaultValue(0L)
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized {
+        programSite(s.details).foreach(execSites(s.executionId) = _)
+      }
+      case _ => ()
+    }
+
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       if (ListenerBus.jobGroup(e.properties).contains(group)) {
-        // the final stage's name is the job's short call site ("count at
-        // X.scala:12"; for an AQE stage job, the AQE thread's)
-        val site = e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name)
+        // a job of a SQL execution is named after that execution's call
+        // site: the jobs AQE, broadcasts and subqueries start on Spark's
+        // own threads carry no program frame. Other jobs take their final
+        // stage's name, the job's short call site ("count at X.scala:12").
+        val site = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => execSites.get(id.toLong))
+          .getOrElse(e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name))
         jobs(e.jobId) = Job(e.jobId, e.time, e.time, site)
         stageIds ++= e.stageIds
       }
@@ -192,6 +206,18 @@ object Harness {
       Profile(name, rows, (t1 - t0) / 1e3, jobs.values.toSeq, (t1 - t0 - covered) / 1e3,
         stages.size, tasks.size, taskMs / 1e3, shuffleWrite, shuffleRead, phases.toSeq)
     }
+  }
+
+  private val ProgramFrame = """(?m)^graft\.[\w.$]+\((\w+\.scala:\d+)\)""".r
+
+  /** A call site's short form, "count at X.scala:12", from its long form
+    * (one stack frame a line, the Spark method first): that method and
+    * the first program frame, or None when no frame is the program's.
+    */
+  private[graft] def programSite(details: String): Option[String] = {
+    val d = Option(details).getOrElse("")
+    ProgramFrame.findFirstMatchIn(d).map(m =>
+      s"${d.takeWhile(_ != '(').split('.').last} at ${m.group(1)}")
   }
 
   def main(args: Array[String]): Unit = {

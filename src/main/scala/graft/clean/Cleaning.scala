@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * Batch only: the functions here run jobs when called. On a stream these
   * global statistics become per-window aggregates or a periodically
-  * refreshed broadcast — see graft.streaming.StreamingClean (SURVEY §7.4
-  * risk 4).
+  * refreshed broadcast — see
+  * [[graft.streaming.Streaming.cleanWithStaticBounds]] (SURVEY §7.4 risk 4).
   */
 object Cleaning {
 

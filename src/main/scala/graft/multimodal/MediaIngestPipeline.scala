@@ -2,8 +2,9 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
+import graft.streaming.Streaming
 
 /** End-to-end continuous media-ingest gate — the multimodal twin of
   * [[graft.streaming.StreamingPipeline]]: arriving media micro-batches
@@ -46,28 +47,23 @@ object MediaIngestPipeline {
 
   def start(spark: SparkSession, cfg: Config, drain: Boolean = false): StreamingQuery = {
     // materialize the standing corpus digests ONCE per pipeline start:
-    // foreachBatch would otherwise re-evaluate the frame every trigger —
+    // each micro-batch would otherwise re-evaluate the frame —
     // a full corpus re-decode per batch if the caller passed the natural
     // un-materialized imagePixelDigests(corpus)
     val corpusDigests = cfg.corpusDigests.select("pixel_md5").localCheckpoint()
     val stream = spark.readStream.schema(cfg.schema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger.toString)
       .parquet(cfg.inputDir)
-    val writer = stream.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val standing = corpusDigests
-          .unionByName(admitted(spark, cfg.outputDir))
-        // decode once per batch row; one representative per NOVEL content
-        // (min media_id within the batch — later batches lose to the
-        // admitted set read back above)
-        val keepers = Multimodal.incrementalContentNew(batch, standing)
-          .groupBy("pixel_md5").agg(min(col("media_id")).as("media_id"))
-          .select("media_id", "pixel_md5")
-        keepers.write.mode("append").parquet(cfg.outputDir)
-        ()
-      }
-    (if (drain) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    Streaming.microBatches(stream, Some(cfg.checkpointDir), drain) { (batch, _) =>
+      val standing = corpusDigests
+        .unionByName(admitted(spark, cfg.outputDir))
+      // decode once per batch row; one representative per NOVEL content
+      // (min media_id within the batch — later batches lose to the
+      // admitted set read back above)
+      val keepers = Multimodal.incrementalContentNew(batch, standing)
+        .groupBy("pixel_md5").agg(min(col("media_id")).as("media_id"))
+        .select("media_id", "pixel_md5")
+      keepers.write.mode("append").parquet(cfg.outputDir)
+    }
   }
 }

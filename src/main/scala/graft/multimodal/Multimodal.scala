@@ -734,18 +734,16 @@ object Multimodal {
   def perceptualGateStream(corpusHashes: DataFrame, mediaStream: DataFrame,
                            maxHamming: Int = 3)
                           (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    mediaStream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // release each micro-batch's checkpoint blocks once the sink
-          // has consumed the frame — a long-running stream must not
-          // accumulate pinned executor storage until driver GC
-          val (result, cleanup) =
-            incrementalPerceptualNewWithCleanup(batch, corpusHashes, maxHamming)
-          try sink(result) finally cleanup()
-        }
-        ()
-    }.start()
+    graft.streaming.Streaming.microBatches(mediaStream) { (batch, _) =>
+      if (!batch.isEmpty) {
+        // release each micro-batch's checkpoint blocks once the sink
+        // has consumed the frame — a long-running stream must not
+        // accumulate pinned executor storage until driver GC
+        val (result, cleanup) =
+          incrementalPerceptualNewWithCleanup(batch, corpusHashes, maxHamming)
+        try sink(result) finally cleanup()
+      }
+    }
 
   /** Animated-GIF table: one real multi-frame motion asset per doc id
     * (MediaCodec.encodeGif; frame count and colors formula-derived).

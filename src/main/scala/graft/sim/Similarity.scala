@@ -217,37 +217,6 @@ object Similarity {
     rankTopK(scored, queryIdCol, k)
   }
 
-  /** SRP-LSH ANN with an int8 prefilter stage — the standard
-    * vector-index compression put to work inside the search path.
-    *
-    * Symmetric int8 quantization is SCALE-INVARIANT
-    * (u_i·127/max|u| = x_i·127/max|x|), so both sides quantize the RAW
-    * vectors — no unit-norm pass exists anywhere in these paths.
-    * Candidates are scored with an integer dot in the same map stage as
-    * the broadcast bucket join; `int8dot(q_q, q_c) · (max|x_c|/‖x_c‖)`
-    * orders candidates per query like the approximate cosine (the
-    * remaining factor `127²/(max|x_q|·‖x_c‖·…)` reduces to a per-query
-    * constant), so the (query, candidate) pair shuffle — the dominant
-    * shuffle of the whole search at corpus scale — carries one 8-byte
-    * score per pair instead of the full vector (annTopK ships the
-    * 8·dim-byte double vector per pair). Only the top `rerank` per query
-    * survive, and the exact-cosine rescore joins those nQueries·rerank
-    * ids back to the full-precision corpus — a narrow second join
-    * instead of exact math on every candidate.
-    *
-    * All per-row vector math is native codegen ([[VectorFunctions]]).
-    * The previous formulation derived a unit vector and quantized it
-    * with HOF transforms whose lambdas captured the norm/scale aliases;
-    * HOFs are interpreted (CodegenFallback) and projection collapse
-    * inlines the captured alias, so the norm — itself a full pass —
-    * re-evaluated per ELEMENT: O(dim²) boxed ops per row, measured
-    * ~5 ms/row at dim 64 (a 0.6 s search ran in 4 s).
-    *
-    * Quantization error is ≤ max|x|/254 per element, so the int8
-    * ordering only confuses near-ties; `rerank ≫ k` absorbs that
-    * (SimilaritySpec gates recall ≥ 0.6 at rerank = 32, k = 5 alongside
-    * the counted-comparisons reduction).
-    */
   /** The two int8 candidate columns, derived from the raw vector in one
     * native pass each: the quantized tinyint array and the score
     * correction max|x|/‖x‖ (0 for the zero vector, whose quantized form
@@ -304,7 +273,39 @@ object Similarity {
     rankTopK(scored, queryIdCol, k)
   }
 
-  /** nPlanes ≤ 0 auto-sizes from the corpus count ([[autoPlanes]]). */
+  /** SRP-LSH ANN with an int8 prefilter stage — the standard
+    * vector-index compression put to work inside the search path.
+    *
+    * Symmetric int8 quantization is SCALE-INVARIANT
+    * (u_i·127/max|u| = x_i·127/max|x|), so both sides quantize the RAW
+    * vectors — no unit-norm pass exists anywhere in these paths.
+    * Candidates are scored with an integer dot in the same map stage as
+    * the broadcast bucket join; `int8dot(q_q, q_c) · (max|x_c|/‖x_c‖)`
+    * orders candidates per query like the approximate cosine (the
+    * remaining factor `127²/(max|x_q|·‖x_c‖·…)` reduces to a per-query
+    * constant), so the (query, candidate) pair shuffle — the dominant
+    * shuffle of the whole search at corpus scale — carries one 8-byte
+    * score per pair instead of the full vector (annTopK ships the
+    * 8·dim-byte double vector per pair). Only the top `rerank` per query
+    * survive, and the exact-cosine rescore joins those nQueries·rerank
+    * ids back to the full-precision corpus — a narrow second join
+    * instead of exact math on every candidate.
+    *
+    * All per-row vector math is native codegen ([[VectorFunctions]]).
+    * The previous formulation derived a unit vector and quantized it
+    * with HOF transforms whose lambdas captured the norm/scale aliases;
+    * HOFs are interpreted (CodegenFallback) and projection collapse
+    * inlines the captured alias, so the norm — itself a full pass —
+    * re-evaluated per ELEMENT: O(dim²) boxed ops per row, measured
+    * ~5 ms/row at dim 64 (a 0.6 s search ran in 4 s).
+    *
+    * Quantization error is ≤ max|x|/254 per element, so the int8
+    * ordering only confuses near-ties; `rerank ≫ k` absorbs that
+    * (SimilaritySpec gates recall ≥ 0.6 at rerank = 32, k = 5 alongside
+    * the counted-comparisons reduction).
+    *
+    * nPlanes ≤ 0 auto-sizes from the corpus count ([[autoPlanes]]).
+    */
   def annTopKInt8(corpus: DataFrame, queries: DataFrame, k: Int,
                   nPlanes: Int = 0, nTables: Int = 8, rerank: Int = 32,
                   idCol: String = "vec_id", vecCol: String = "embedding",
@@ -343,18 +344,6 @@ object Similarity {
     rescoreTopK(survivors, cBase, qBase, idCol, vecCol, queryIdCol, k)
   }
 
-  /** [[annTopK]] over a persisted [[SrpIndex]] — the pure SEARCH path:
-    * plane count, bucket assignments, and the group partitioning all come
-    * from the index, so the corpus is never re-bucketed (and never even
-    * COUNTED — inline auto-sizing needs a count job per run). The
-    * candidate branch reads only (neighbor_id, __t, __b) from the
-    * buckets frame, the broadcast probe join carries the partition-group
-    * key so dynamic partition pruning drops every unprobed bucket-group
-    * at scan time, and the exact cosine joins the deduped candidate ids
-    * back to the one-row-per-vector full-precision frame. Emits exactly
-    * the rows the inline path emits (same planes/tables/seed → same
-    * candidate pairs → same scores; parity gated in SimilaritySpec).
-    */
   /** The deduped candidate id pairs of [[annTopKIndexed]] — its exact-
     * rescore input, published separately so a caller can MATERIALIZE the
     * candidate set and replay the rescore over the dump (the d13
@@ -394,6 +383,18 @@ object Similarity {
     rescoreTopK(pairs, corpus.select(col(idCol), col(vecCol)),
       queries.select(col(idCol), col(vecCol)), idCol, vecCol, queryIdCol, k)
 
+  /** [[annTopK]] over a persisted [[SrpIndex]] — the pure SEARCH path:
+    * plane count, bucket assignments, and the group partitioning all come
+    * from the index, so the corpus is never re-bucketed (and never even
+    * COUNTED — inline auto-sizing needs a count job per run). The
+    * candidate branch reads only (neighbor_id, __t, __b) from the
+    * buckets frame, the broadcast probe join carries the partition-group
+    * key so dynamic partition pruning drops every unprobed bucket-group
+    * at scan time, and the exact cosine joins the deduped candidate ids
+    * back to the one-row-per-vector full-precision frame. Emits exactly
+    * the rows the inline path emits (same planes/tables/seed → same
+    * candidate pairs → same scores; parity gated in SimilaritySpec).
+    */
   def annTopKIndexed(idx: SrpIndex.Handle, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      queryIdCol: String = "query_id"): DataFrame = {

@@ -1,9 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.graft.SpaceSavingBuffer
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.collection.mutable.ArrayBuffer
 
 /** Structured Streaming layer (SURVEY §2.10). The reference's "real-time"
   * story is a daily cron (airflow/weather_pipeline_dag.py:35); here the same
@@ -16,9 +20,10 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale posture: all stateful operators key their state by the grouping
   * key and bound it with watermarks — state size is O(active keys ×
-  * windows-in-watermark), independent of total stream length. Sinks go
-  * through `foreachBatch` so each micro-batch reuses the batch writers and
-  * their partitioning.
+  * windows-in-watermark), independent of total stream length. Every keyed
+  * state operator runs on one evicting fold ([[evictingFold]]), and every
+  * batch-at-a-time sink on one micro-batch bridge ([[microBatches]]), so
+  * each micro-batch reuses the batch operators, writers and partitioning.
   */
 object Streaming {
 
@@ -144,8 +149,8 @@ object Streaming {
     * sides carry watermarks so the join state is bounded (Spark purges
     * buffered rows once they can no longer match). Column names must be
     * disjoint apart from the key.
-    */
-  /** `joinType` "inner" (default) or "left_outer": outer emits the
+    *
+    * `joinType` "inner" (default) or "left_outer": outer emits the
     * unmatched left row with null right columns once the watermark proves
     * no match can still arrive — the harder semantics (results for a left
     * row are withheld until its join window expires).
@@ -205,79 +210,85 @@ object Streaming {
   case class StageEventEt(key: Long, tMicros: Long, stage: Int,
                           __et: java.sql.Timestamp)
 
-  /** Per-key running day-over-day change with WATERMARK-DRIVEN EVICTION:
-    * a key idle for more than `stateTtlDays` of event time has its
-    * (lastDate, lastValue) dropped, so state is bounded by ACTIVE keys,
-    * not lifetime distinct keys (bots / one-time visitors no longer grow
-    * the store forever). Documented post-eviction semantics: a key that
-    * returns after a silence longer than the TTL emits NO change row for
-    * its comeback day (there is nothing to diff against — same as a brand
-    * new key); diffs resume from the next day. `stateTtlDays <= 0`
-    * disables eviction (the pre-round-15 unbounded behavior).
-    * `lateness` is the watermark delay on the derived event-time column
-    * (date at midnight). PART OF THE DEFAULT-ON BEHAVIOR CHANGE: with
-    * the watermark attached (eviction enabled), Spark drops rows OLDER
-    * than the current watermark before they reach the fold
-    * (FlatMapGroupsWithStateExec applies
-    * removeKeysOlderThanWatermark/applyRemovingRowsOlderThanWatermark),
-    * so an event arriving more than `lateness` behind the max seen event
-    * time NEVER updates state — unlike the pre-round-15 NoTimeout form
-    * (or `stateTtlDays <= 0` today), which folds arbitrarily late rows.
-    * A row older than the HELD day that still reaches the fold (inside
-    * `lateness`, or with eviction off) is dropped too — folding it
-    * would emit a backward diff and rewind state. Widen `lateness` AND
-    * deliver in event-time order if late replays must count.
+  /** The one evicting fold under every keyed twin below: `rows` are
+    * watermarked on `eventTime` (delay `lateness`), grouped by `key`, and
+    * folded by `flatMapGroupsWithState(Append, EventTimeTimeout)`.
+    *
+    *  - A key with new rows gets `fold(key, rows sorted by order, held
+    *    state)`, which returns the key's next state, the event time (epoch
+    *    ms) after which that state is evicted, and the rows to emit.
+    *  - A key whose deadline the watermark has passed emits
+    *    `flush(key, state)`, and its state is removed.
+    *
+    * So state is bounded by ACTIVE keys, not lifetime distinct keys. Spark
+    * drops rows older than the current watermark before they reach the
+    * fold (FlatMapGroupsWithStateExec applies
+    * applyRemovingRowsOlderThanWatermark): an event arriving more than
+    * `lateness` behind the max seen event time never updates state.
+    */
+  private def evictingFold[K: Encoder, V, S: Encoder, O: Encoder](
+      rows: Dataset[V], eventTime: String, lateness: String)(
+      key: V => K, order: Ordering[V])(
+      fold: (K, Seq[V], Option[S]) => (S, Long, Seq[O]),
+      flush: (K, S) => Option[O] = (_: K, _: S) => None): Dataset[O] =
+    rows.withWatermark(eventTime, lateness).groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, group: Iterator[V], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            val out = state.getOption.flatMap(flush(k, _))
+            state.remove()
+            out.iterator
+          } else {
+            val (next, deadlineMs, out) = fold(k, group.toSeq.sorted(order), state.getOption)
+            state.update(next)
+            safeSetTimeout(state, deadlineMs)
+            out.iterator
+          }
+      }
+
+  /** Per-key running day-over-day change with WATERMARK-DRIVEN EVICTION
+    * ([[evictingFold]]): a key idle for more than `stateTtlDays` (> 0) of
+    * event time has its (lastDate, lastValue) dropped. Documented
+    * post-eviction semantics: a key that returns after a silence longer
+    * than the TTL emits NO change row for its comeback day (there is
+    * nothing to diff against — same as a brand new key); diffs resume
+    * from the next day. `lateness` is the watermark delay on the derived
+    * event-time column (date at midnight): an event arriving more than
+    * `lateness` behind the max seen event time never updates state. A row
+    * older than the HELD day that still reaches the fold (inside
+    * `lateness`) is dropped too — folding it would emit a backward diff
+    * and rewind state. Widen `lateness` AND deliver in event-time order
+    * if late replays must count.
     */
   def runningDailyChange(ds: Dataset[DayObs],
                          stateTtlDays: Int = 30,
                          lateness: String = "1 day"): Dataset[DayChange] = {
+    require(stateTtlDays > 0, s"stateTtlDays must be positive, got $stateTtlDays")
     import ds.sparkSession.implicits._
-    val evict = stateTtlDays > 0
-    val src: Dataset[DayObsEt] =
-      if (evict)
-        ds.withColumn("__et", col("date").cast("timestamp"))
-          .withWatermark("__et", lateness)
-          .as[DayObsEt]
-      else ds.withColumn("__et", col("date").cast("timestamp")).as[DayObsEt]
-    val timeoutConf =
-      if (evict) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    src.groupByKey(_.key)
-      .flatMapGroupsWithState[DayState, DayChange](
-        OutputMode.Append, timeoutConf) {
-        (key: String, rowsEt: Iterator[DayObsEt], state: GroupState[DayState]) =>
-          if (evict && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = rowsEt.map(r => DayObs(r.key, r.date, r.value))
-            val sorted = rows.toSeq.sortBy(_.date.getTime)
-            var st = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[DayChange]
-            sorted.foreach { o =>
-              st match {
-                // a late row older than the held day is dropped, never
-                // folded: diffing it would emit a bogus BACKWARD change
-                // and rewind state to the stale day, diverging from the
-                // batch lag (same contract as scd2Stream's mid-run
-                // guard; widen `lateness` + deliver in order if such
-                // replays must count)
-                case Some(prev) if o.date.getTime >= prev.lastDate.getTime =>
-                  if (o.date.getTime != prev.lastDate.getTime)
-                    out += DayChange(key, o.date, o.value - prev.lastValue)
-                  st = Some(DayState(o.date, o.value))
-                case Some(_) => // pre-state late row: dropped (contract)
-                case None =>
-                  st = Some(DayState(o.date, o.value))
-              }
-            }
-            st.foreach { s =>
-              state.update(s)
-              if (evict)
-                safeSetTimeout(state, s.lastDate.getTime + stateTtlDays * 86400000L)
-            }
-            out.iterator
+    evictingFold(ds.withColumn("__et", col("date").cast("timestamp")).as[DayObsEt],
+        "__et", lateness)(_.key, Ordering.by(_.date.getTime))(
+      (key, rows, held: Option[DayState]) => {
+        var st = held
+        val out = ArrayBuffer.empty[DayChange]
+        rows.foreach { o =>
+          st match {
+            // a late row older than the held day is dropped, never
+            // folded: diffing it would emit a bogus BACKWARD change
+            // and rewind state to the stale day, diverging from the
+            // batch lag (same contract as scd2Stream's mid-run
+            // guard; widen `lateness` + deliver in order if such
+            // replays must count)
+            case Some(prev) if o.date.getTime >= prev.lastDate.getTime =>
+              if (o.date.getTime != prev.lastDate.getTime)
+                out += DayChange(key, o.date, o.value - prev.lastValue)
+              st = Some(DayState(o.date, o.value))
+            case Some(_) => // pre-state late row: dropped (contract)
+            case None =>
+              st = Some(DayState(o.date, o.value))
           }
-      }
+        }
+        (st.get, st.get.lastDate.getTime + stateTtlDays * 86400000L, out.toSeq)
+      })
   }
 
   /** Input/output rows of [[scd2Stream]] — the streaming twin of
@@ -295,10 +306,10 @@ object Streaming {
 
   /** Streaming SCD2: per key, hold the OPEN run (value, since) and emit
     * an interval the moment a batch closes it (the tracked value
-    * changes); on watermark-driven eviction (`stateTtlDays` of event-time
-    * silence) the open run flushes with `valid_to = None` — the "current
-    * record" surfaces instead of rotting in the store, and streamed
-    * output (closed + flushed-open) EQUALS the one-shot
+    * changes); on watermark-driven eviction (`stateTtlDays` (> 0) of
+    * event-time silence) the open run flushes with `valid_to = None` —
+    * the "current record" surfaces instead of rotting in the store, and
+    * streamed output (closed + flushed-open) EQUALS the one-shot
     * `Lifecycle.scd2Intervals` on the same events once every key's TTL
     * has passed (the batch-parity gate in StreamingSpec). A key
     * returning after eviction starts a fresh history — its first new
@@ -323,57 +334,40 @@ object Streaming {
   def scd2Stream(ds: Dataset[ChangeObs],
                  stateTtlDays: Int = 30,
                  lateness: String = "1 day"): Dataset[Scd2Change] = {
+    require(stateTtlDays > 0, s"stateTtlDays must be positive, got $stateTtlDays")
     import ds.sparkSession.implicits._
-    val evict = stateTtlDays > 0
-    val src = if (evict) ds.withWatermark("ts", lateness) else ds
-    val timeoutConf =
-      if (evict) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    src.groupByKey(_.key)
-      .flatMapGroupsWithState[RunState, Scd2Change](
-        OutputMode.Append, timeoutConf) {
-        (key: Long, rows: Iterator[ChangeObs], state: GroupState[RunState]) =>
-          if (evict && state.hasTimedOut) {
-            val out = state.getOption.map(run =>
-              Scd2Change(key, run.value, run.since, None)).iterator
-            state.remove()
-            out
-          } else {
-            val sorted = rows.toSeq.sortBy(r =>
-              (r.ts.getTime, r.ts.getNanos, r.tie))
-            var st = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Change]
-            sorted.foreach { r =>
-              st match {
-                case None =>
-                  st = Some(RunState(r.value, r.ts, r.ts.getTime))
-                case Some(run) =>
-                  // rows must be at or after the run's LAST folded
-                  // observation, not merely its start: a late row
-                  // landing mid-run (since ≤ ts < lastSeen) would close
-                  // the run early and silently diverge from the batch
-                  // twin — it is dropped like a pre-run row (see the
-                  // ordering contract; widen `lateness` + deliver in
-                  // order if such replays must count)
-                  if (r.ts.getTime >= run.lastSeenMs &&
-                      r.ts.compareTo(run.since) >= 0) {
-                    if (r.value != run.value) {
-                      out += Scd2Change(key, run.value, run.since, Some(r.ts))
-                      st = Some(RunState(r.value, r.ts,
-                        math.max(run.lastSeenMs, r.ts.getTime)))
-                    } else if (r.ts.getTime > run.lastSeenMs) {
-                      st = Some(run.copy(lastSeenMs = r.ts.getTime))
-                    }
-                  } // late row: ignored (see ordering contract)
-              }
-            }
-            st.foreach { s =>
-              state.update(s)
-              if (evict)
-                safeSetTimeout(state, s.lastSeenMs + stateTtlDays * 86400000L)
-            }
-            out.iterator
+    evictingFold(ds, "ts", lateness)(
+        _.key, Ordering.by(r => (r.ts.getTime, r.ts.getNanos, r.tie)))(
+      (key, rows, held: Option[RunState]) => {
+        var st = held
+        val out = ArrayBuffer.empty[Scd2Change]
+        rows.foreach { r =>
+          st match {
+            case None =>
+              st = Some(RunState(r.value, r.ts, r.ts.getTime))
+            case Some(run) =>
+              // rows must be at or after the run's LAST folded
+              // observation, not merely its start: a late row
+              // landing mid-run (since ≤ ts < lastSeen) would close
+              // the run early and silently diverge from the batch
+              // twin — it is dropped like a pre-run row (see the
+              // ordering contract; widen `lateness` + deliver in
+              // order if such replays must count)
+              if (r.ts.getTime >= run.lastSeenMs &&
+                  r.ts.compareTo(run.since) >= 0) {
+                if (r.value != run.value) {
+                  out += Scd2Change(key, run.value, run.since, Some(r.ts))
+                  st = Some(RunState(r.value, r.ts,
+                    math.max(run.lastSeenMs, r.ts.getTime)))
+                } else if (r.ts.getTime > run.lastSeenMs) {
+                  st = Some(run.copy(lastSeenMs = r.ts.getTime))
+                }
+              } // late row: ignored (see ordering contract)
           }
-      }
+        }
+        (st.get, st.get.lastSeenMs + stateTtlDays * 86400000L, out.toSeq)
+      },
+      (key, run: RunState) => Some(Scd2Change(key, run.value, run.since, None)))
   }
 
   case class PageView(user: Long, ts: java.sql.Timestamp, tie: Long, page: Long)
@@ -389,8 +383,8 @@ object Streaming {
     * census reads that aggregate, never the raw emissions.
     *
     * State is O(1) per ACTIVE user (one last view). Eviction after
-    * `stateTtlDays` of event-time silence forgets the last view, so a
-    * returning user starts a fresh chain — no edge spans the gap. That
+    * `stateTtlDays` (> 0) of event-time silence forgets the last view, so
+    * a returning user starts a fresh chain — no edge spans the gap. That
     * is a semantic choice, not just hygiene: a transition across a
     * month of silence is not evidence of navigation (the sessionize
     * rationale), and it is what bounds the state by active users.
@@ -404,47 +398,31 @@ object Streaming {
     */
   def transitionEdgesStream(ds: Dataset[PageView], stateTtlDays: Int = 30,
                             lateness: String = "1 day"): Dataset[PageEdge] = {
+    require(stateTtlDays > 0, s"stateTtlDays must be positive, got $stateTtlDays")
     import ds.sparkSession.implicits._
-    val evict = stateTtlDays > 0
-    val src = if (evict) ds.withWatermark("ts", lateness) else ds
-    val timeoutConf =
-      if (evict) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    src.groupByKey(_.user)
-      .flatMapGroupsWithState[LastView, PageEdge](
-        OutputMode.Append, timeoutConf) {
-        (_: Long, rows: Iterator[PageView], state: GroupState[LastView]) =>
-          if (evict && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // full-precision ordering (the scd2Stream discipline): the
-            // batch lag window orders by the COMPLETE timestamp, so the
-            // fold and the held state must too — ms truncation would
-            // swap same-millisecond views and break the parity gate
-            val sorted = rows.toSeq.sortBy(r =>
-              (r.ts.getTime, r.ts.getNanos, r.tie))
-            var st = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[PageEdge]
-            sorted.foreach { r =>
-              st match {
-                case Some(lv) if Ordering[(Long, Long, Long)].gteq(
-                    (r.ts.getTime, r.ts.getNanos.toLong, r.tie),
-                    (lv.tsMs, lv.nanos.toLong, lv.tie)) =>
-                  out += PageEdge(lv.page, r.page)
-                  st = Some(LastView(r.ts.getTime, r.ts.getNanos, r.tie, r.page))
-                case Some(_) => // pre-state late row: dropped (contract)
-                case None =>
-                  st = Some(LastView(r.ts.getTime, r.ts.getNanos, r.tie, r.page))
-              }
-            }
-            st.foreach { s =>
-              state.update(s)
-              if (evict)
-                safeSetTimeout(state, s.tsMs + stateTtlDays * 86400000L)
-            }
-            out.iterator
+    // full-precision ordering (the scd2Stream discipline): the batch lag
+    // window orders by the COMPLETE timestamp, so the fold and the held
+    // state must too — ms truncation would swap same-millisecond views
+    // and break the parity gate
+    evictingFold(ds, "ts", lateness)(
+        _.user, Ordering.by(r => (r.ts.getTime, r.ts.getNanos, r.tie)))(
+      (_, rows, held: Option[LastView]) => {
+        var st = held
+        val out = ArrayBuffer.empty[PageEdge]
+        rows.foreach { r =>
+          st match {
+            case Some(lv) if Ordering[(Long, Long, Long)].gteq(
+                (r.ts.getTime, r.ts.getNanos.toLong, r.tie),
+                (lv.tsMs, lv.nanos.toLong, lv.tie)) =>
+              out += PageEdge(lv.page, r.page)
+              st = Some(LastView(r.ts.getTime, r.ts.getNanos, r.tie, r.page))
+            case Some(_) => // pre-state late row: dropped (contract)
+            case None =>
+              st = Some(LastView(r.ts.getTime, r.ts.getNanos, r.tie, r.page))
           }
-      }
+        }
+        (st.get, st.get.tsMs + stateTtlDays * 86400000L, out.toSeq)
+      })
   }
 
   case class SessionEvent(user: Long, ts: java.sql.Timestamp, tie: Long,
@@ -463,7 +441,7 @@ object Streaming {
     * of the last event merges (counts, value sum, end timestamp), a
     * gap-crossing row EMITS the closed session and opens the next at
     * `session_id + 1`, and state timeout emits the open session after
-    * `stateTtlDays` of event-time silence (a returning user then
+    * `stateTtlDays` (> 0) of event-time silence (a returning user then
     * starts a fresh numbering — the transitionEdgesStream eviction
     * semantics). Consumers read closed sessions; the batch twin's last
     * (still-open) session per user is exactly what a drained stream has
@@ -485,11 +463,8 @@ object Streaming {
   def sessionStateStream(ds: Dataset[SessionEvent], gapMinutes: Int = 30,
                          stateTtlDays: Int = 30,
                          lateness: String = "1 day"): Dataset[SessionRow] = {
+    require(stateTtlDays > 0, s"stateTtlDays must be positive, got $stateTtlDays")
     import ds.sparkSession.implicits._
-    val evict = stateTtlDays > 0
-    val src = if (evict) ds.withWatermark("ts", lateness) else ds
-    val timeoutConf =
-      if (evict) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
     def micros(v: Double): Long =
       scala.math.BigDecimal(v).setScale(6,
         scala.math.BigDecimal.RoundingMode.HALF_UP)
@@ -500,53 +475,40 @@ object Streaming {
     def close(user: Long, s: OpenSession): SessionRow =
       SessionRow(user, s.sid, s.n, s.nv, s.vsumMicros,
         tsOf(s.startMs, s.startNanos), tsOf(s.lastMs, s.lastNanos))
-    src.groupByKey(_.user)
-      .flatMapGroupsWithState[OpenSession, SessionRow](
-        OutputMode.Append, timeoutConf) {
-        (user: Long, rows: Iterator[SessionEvent], state: GroupState[OpenSession]) =>
-          if (evict && state.hasTimedOut) {
-            val out = state.getOption.map(close(user, _)).iterator
-            state.remove()
-            out
-          } else {
-            val sorted = rows.toSeq.sortBy(r =>
-              (r.ts.getTime, r.ts.getNanos, r.tie))
-            var st = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[SessionRow]
-            sorted.foreach { r =>
-              val (nv1, vs1) =
-                (r.value.map(_ => 1L).getOrElse(0L),
-                 r.value.map(micros).getOrElse(0L))
-              st match {
-                case None =>
-                  st = Some(OpenSession(0L, 1L, nv1, vs1, r.ts.getTime,
-                    r.ts.getNanos, r.ts.getTime, r.ts.getNanos, r.tie))
-                case Some(s) if Ordering[(Long, Long, Long)].gt(
-                    (r.ts.getTime, r.ts.getNanos.toLong, r.tie),
-                    (s.lastMs, s.lastNanos.toLong, s.lastTie)) =>
-                  // floor-second gap, the batch cast(ts as long) contract
-                  if (r.ts.getTime / 1000L - s.lastMs / 1000L >
-                      gapMinutes * 60L) {
-                    out += close(user, s)
-                    st = Some(OpenSession(s.sid + 1L, 1L, nv1, vs1,
-                      r.ts.getTime, r.ts.getNanos, r.ts.getTime,
-                      r.ts.getNanos, r.tie))
-                  } else {
-                    st = Some(s.copy(n = s.n + 1L, nv = s.nv + nv1,
-                      vsumMicros = s.vsumMicros + vs1, lastMs = r.ts.getTime,
-                      lastNanos = r.ts.getNanos, lastTie = r.tie))
-                  }
-                case Some(_) => // at-or-before the fold frontier: dropped
+    evictingFold(ds, "ts", lateness)(
+        _.user, Ordering.by(r => (r.ts.getTime, r.ts.getNanos, r.tie)))(
+      (user, rows, held: Option[OpenSession]) => {
+        var st = held
+        val out = ArrayBuffer.empty[SessionRow]
+        rows.foreach { r =>
+          val (nv1, vs1) =
+            (r.value.map(_ => 1L).getOrElse(0L),
+             r.value.map(micros).getOrElse(0L))
+          st match {
+            case None =>
+              st = Some(OpenSession(0L, 1L, nv1, vs1, r.ts.getTime,
+                r.ts.getNanos, r.ts.getTime, r.ts.getNanos, r.tie))
+            case Some(s) if Ordering[(Long, Long, Long)].gt(
+                (r.ts.getTime, r.ts.getNanos.toLong, r.tie),
+                (s.lastMs, s.lastNanos.toLong, s.lastTie)) =>
+              // floor-second gap, the batch cast(ts as long) contract
+              if (r.ts.getTime / 1000L - s.lastMs / 1000L >
+                  gapMinutes * 60L) {
+                out += close(user, s)
+                st = Some(OpenSession(s.sid + 1L, 1L, nv1, vs1,
+                  r.ts.getTime, r.ts.getNanos, r.ts.getTime,
+                  r.ts.getNanos, r.tie))
+              } else {
+                st = Some(s.copy(n = s.n + 1L, nv = s.nv + nv1,
+                  vsumMicros = s.vsumMicros + vs1, lastMs = r.ts.getTime,
+                  lastNanos = r.ts.getNanos, lastTie = r.tie))
               }
-            }
-            st.foreach { s =>
-              state.update(s)
-              if (evict)
-                safeSetTimeout(state, s.lastMs + stateTtlDays * 86400000L)
-            }
-            out.iterator
+            case Some(_) => // at-or-before the fold frontier: dropped
           }
-      }
+        }
+        (st.get, st.get.lastMs + stateTtlDays * 86400000L, out.toSeq)
+      },
+      (user, s: OpenSession) => Some(close(user, s)))
   }
 
   /** Streaming first-seen cohort assignment — the real-time twin of
@@ -559,59 +521,43 @@ object Streaming {
     * cohort). Consumers reduce with MIN per key — emissions carry no
     * ordering column and sink row order is not a contract, but the
     * min-monotone invariant makes min(cohort_day) always the current
-    * assignment. State is one Int per key, and since round 15 the key
-    * SET is bounded too: see the eviction contract on the def below.
+    * assignment. State is one Int per key, and the key SET is bounded
+    * too: see the eviction contract on the def below.
     */
   case class KeyDay(key: Long, day: Int) // day = epoch days
   case class CohortAssigned(key: Long, cohort_day: Int)
 
   /** Eviction is ALWAYS safe here because consumers reduce with MIN per
-    * key: once the watermark passes `cohort_day + horizonDays` (the
+    * key: once the watermark passes `cohort_day + horizonDays` (> 0; the
     * retention analysis window for that cohort is closed) the state is
     * dropped. A key reappearing after eviction re-emits its first day
     * seen SINCE eviction — a later day, which min-reduce discards. An
     * earlier very-late event only re-points the cohort if it is still
-    * WITHIN the watermark: with eviction on, Spark filters rows older
-    * than the current watermark before the fold
-    * (applyRemovingRowsOlderThanWatermark), so an event more than
-    * `lateness` behind the max seen event time is dropped, where the
-    * NoTimeout form (`horizonDays <= 0` — the pre-round-15 behavior)
-    * would have folded it and re-emitted the earlier day. That drop can
-    * only leave a cohort assignment LATER than the all-data answer — the
-    * min-monotone consumer contract itself is unchanged; widen
-    * `lateness` if deep replays must re-point cohorts. Eviction thus
-    * trades extra emissions + the late-drop cutoff for bounded state
-    * (O(keys active within the horizon), not lifetime distinct keys).
+    * WITHIN the watermark: Spark filters rows older than the current
+    * watermark before the fold (applyRemovingRowsOlderThanWatermark), so
+    * an event more than `lateness` behind the max seen event time is
+    * dropped. That drop can only leave a cohort assignment LATER than the
+    * all-data answer — the min-monotone consumer contract itself is
+    * unchanged; widen `lateness` if deep replays must re-point cohorts.
+    * Eviction thus trades extra emissions + the late-drop cutoff for
+    * bounded state (O(keys active within the horizon), not lifetime
+    * distinct keys).
     */
   def firstSeenCohorts(ds: Dataset[KeyDay],
                        horizonDays: Int = 90,
                        lateness: String = "1 day"): Dataset[CohortAssigned] = {
+    require(horizonDays > 0, s"horizonDays must be positive, got $horizonDays")
     import ds.sparkSession.implicits._
-    val evict = horizonDays > 0
     val withEt = ds.withColumn("__et",
       timestamp_seconds(col("day").cast("long") * 86400L))
-    val src: Dataset[KeyDayEt] =
-      (if (evict) withEt.withWatermark("__et", lateness) else withEt).as[KeyDayEt]
-    val timeoutConf =
-      if (evict) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    src.groupByKey(_.key)
-      .flatMapGroupsWithState[Int, CohortAssigned](
-        OutputMode.Append, timeoutConf) {
-        (key: Long, rows: Iterator[KeyDayEt], state: GroupState[Int]) =>
-          if (evict && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val incoming = rows.map(_.day).min
-            val revised = state.getOption.forall(incoming < _)
-            if (revised) state.update(incoming)
-            if (evict)
-              safeSetTimeout(state,
-                (state.get.toLong + horizonDays) * 86400000L)
-            if (revised) Iterator.single(CohortAssigned(key, incoming))
-            else Iterator.empty
-          }
-      }
+    evictingFold(withEt.as[KeyDayEt], "__et", lateness)(_.key, Ordering.by(_.day))(
+      (key, rows, held: Option[Int]) => {
+        val incoming = rows.head.day
+        val revised = held.forall(incoming < _)
+        val cohort = if (revised) incoming else held.get
+        (cohort, (cohort.toLong + horizonDays) * 86400000L,
+          if (revised) Seq(CohortAssigned(key, incoming)) else Nil)
+      })
   }
 
   /** Streaming funnel progress — the real-time twin of
@@ -647,67 +593,44 @@ object Streaming {
     * DISTINCT (key, stage) are unaffected; raw-count consumers see one
     * extra row per stage per post-idle restart. Keyed state is therefore
     * O(keys active within maxLag), not lifetime distinct keys.
-    * `evictState = false` restores the pre-round-15 unbounded behavior
-    * (used by the historical-replay parity spec, whose batch twin has no
-    * lateness cutoff). `lateness` is the watermark delay on the derived
-    * event-time column; with eviction on, stage events arriving more
-    * than `lateness` behind the max seen event time are dropped by Spark
-    * BEFORE the fold (applyRemovingRowsOlderThanWatermark) — they never
-    * extend a chain, where the evictState=false form folds them.
+    * `lateness` is the watermark delay on the derived event-time column:
+    * stage events arriving more than `lateness` behind the max seen event
+    * time are dropped by Spark BEFORE the fold
+    * (applyRemovingRowsOlderThanWatermark) — they never extend a chain.
     */
   def funnelProgress(ds: Dataset[StageEvent], nStages: Int,
                      maxLagSeconds: Long,
-                     evictState: Boolean = true,
                      lateness: String = "1 hour"): Dataset[StageReached] = {
     import ds.sparkSession.implicits._
     val lag = maxLagSeconds * 1000000L
-    val withEt = ds.withColumn("__et", timestamp_micros(col("tMicros")))
-    val src: Dataset[StageEventEt] =
-      (if (evictState) withEt.withWatermark("__et", lateness) else withEt)
-        .as[StageEventEt]
-    val timeoutConf =
-      if (evictState) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    src.groupByKey(_.key)
-      .flatMapGroupsWithState[FunnelTimes, StageReached](
-        OutputMode.Append, timeoutConf) {
-        (key: Long, rows: Iterator[StageEventEt], state: GroupState[FunnelTimes]) =>
-          if (evictState && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val acc = state.getOption.map(_.times.toArray)
-              .getOrElse(Array.fill(nStages)(-1L))
-            val out = scala.collection.mutable.ArrayBuffer.empty[StageReached]
-            var newestMicros = -1L
-            rows.toSeq.sortBy(e => (e.tMicros, e.stage)).foreach { e =>
-              val i = e.stage
-              newestMicros = math.max(newestMicros, e.tMicros)
-              if (i >= 0 && i < nStages) {
-                val prevOk = i == 0 ||
-                  (acc(i - 1) >= 0 && e.tMicros >= acc(i - 1) &&
-                    e.tMicros - acc(i - 1) <= lag)
-                if (prevOk) {
-                  if (acc(i) < 0) out += StageReached(key, i, e.tMicros)
-                  // max, not overwrite: within a batch events arrive
-                  // (t, stage)-sorted so this is the plain overwrite, but
-                  // an out-of-order stage-i event arriving in a LATER
-                  // micro-batch must not move the latest-achievable time
-                  // BACKWARD (that would suppress a conversion the prior
-                  // state already allowed) — state stays maximal under
-                  // late data, like the batch fold's monotone acc.
-                  acc(i) = math.max(acc(i), e.tMicros)
-                }
-              }
+    evictingFold(ds.withColumn("__et", timestamp_micros(col("tMicros"))).as[StageEventEt],
+        "__et", lateness)(_.key, Ordering.by(e => (e.tMicros, e.stage)))(
+      (key, rows, held: Option[FunnelTimes]) => {
+        val acc = held.map(_.times.toArray).getOrElse(Array.fill(nStages)(-1L))
+        val out = ArrayBuffer.empty[StageReached]
+        rows.foreach { e =>
+          val i = e.stage
+          if (i >= 0 && i < nStages) {
+            val prevOk = i == 0 ||
+              (acc(i - 1) >= 0 && e.tMicros >= acc(i - 1) &&
+                e.tMicros - acc(i - 1) <= lag)
+            if (prevOk) {
+              if (acc(i) < 0) out += StageReached(key, i, e.tMicros)
+              // max, not overwrite: within a batch events arrive
+              // (t, stage)-sorted so this is the plain overwrite, but
+              // an out-of-order stage-i event arriving in a LATER
+              // micro-batch must not move the latest-achievable time
+              // BACKWARD (that would suppress a conversion the prior
+              // state already allowed) — state stays maximal under
+              // late data, like the batch fold's monotone acc.
+              acc(i) = math.max(acc(i), e.tMicros)
             }
-            state.update(FunnelTimes(acc.toSeq))
-            if (evictState) {
-              val baseMicros = math.max(acc.max, newestMicros)
-              safeSetTimeout(state, (baseMicros + lag) / 1000L)
-            }
-            out.iterator
           }
-      }
+        }
+        // rows are time-sorted: the last is the batch's newest event
+        (FunnelTimes(acc.toSeq), (math.max(acc.max, rows.last.tMicros) + lag) / 1000L,
+          out.toSeq)
+      })
   }
 
   /** Statistics-dependent cleaning on a stream (SURVEY §7.4 risk 4): the
@@ -739,8 +662,93 @@ object Streaming {
     cleaned.drop(cols.flatMap(c => Seq(s"__${c}_lb", s"__${c}_ub", s"__${c}_med")): _*)
   }
 
+  /** The one micro-batch bridge of the streaming layer: `body(batch,
+    * batchId)` runs once per micro-batch of `stream` (`foreachBatch`), so
+    * each micro-batch reuses the batch operators and writers. The query
+    * checkpoints its offsets at `checkpoint` when given; with `drain` it
+    * processes what is available now and stops (`AvailableNow`, the
+    * batch-parity trigger) instead of running until stopped.
+    */
+  private[graft] def microBatches(stream: DataFrame, checkpoint: Option[String] = None,
+                                  drain: Boolean = false)
+                                 (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = checkpoint.foldLeft(stream.writeStream)(_.option("checkpointLocation", _))
+    (if (drain) w.trigger(Trigger.AvailableNow()) else w).foreachBatch(body).start()
+  }
+
+  /** The stateless per-batch twins below: `sink` receives `f(batch,
+    * batchId)` for every non-empty micro-batch of `stream`; empty batches
+    * are skipped.
+    */
+  private def eachNonEmpty(stream: DataFrame, sink: DataFrame => Unit)
+                          (f: (DataFrame, Long) => DataFrame): StreamingQuery =
+    microBatches(stream) { (batch, id) => if (!batch.isEmpty) sink(f(batch, id)) }
+
+  /** Streaming entity conformance — er3's online twin (the streaming
+    * rung every incremental operator here gets): each micro-batch of
+    * arriving records is conformed to the STANDING name universe via
+    * [[graft.er.EntityResolution.incrementalEntityMatches]] (token
+    * blocking against standing names only, best match under the total
+    * (dist, name) order, unmatched rows self-label). Stateless per
+    * batch — the assignment depends only on (row, standing universe) —
+    * so the streamed union equals the one-shot er3 answer on the same
+    * rows (StreamingSpec parity gate). At scale the standing side is
+    * the sublinear distinct-name frame; per-batch cost never touches
+    * corpus rows.
+    */
+  def entityMatchStream(standing: DataFrame, recordStream: DataFrame,
+                        idCol: String, nameCol: String, maxDist: Int)
+                       (sink: DataFrame => Unit): StreamingQuery =
+    eachNonEmpty(recordStream, sink) { (batch, _) =>
+      graft.er.EntityResolution.incrementalEntityMatches(
+        batch, standing, idCol, nameCol, maxDist)
+    }
+
+  /** Streaming data-quality monitoring — the dq family's online twin
+    * (the streaming rung every batch family here gets): each micro-batch
+    * is validated by the SAME one-scan suite
+    * ([[graft.quality.Checks.run]]) and the report rows are stamped with
+    * the micro-batch id, yielding a per-batch quality time series — the
+    * ingest-gate shape, where a sink alerts or quarantines the batch the
+    * moment a `passed` flag goes false. Stateless per batch (a report
+    * depends only on its own rows), so thresholds are per-batch
+    * contracts and the stream needs no keyed state to evict.
+    */
+  def qualityMonitorStream(stream: DataFrame,
+                           checks: Seq[graft.quality.Checks.Check])
+                          (sink: DataFrame => Unit): StreamingQuery =
+    eachNonEmpty(stream, sink) { (batch, id) =>
+      graft.quality.Checks.run(batch, checks).withColumn("batch_id", lit(id))
+    }
+
+  /** [[qualityMonitorStream]] with DRIFT judgment — the online consumer
+    * of the dq family's metric history ([[graft.quality.ReportStore]]):
+    * each micro-batch's suite metrics append to the persisted store
+    * (period = zero-padded batch id, so string order is batch order) and
+    * the batch is judged against the TRAILING batches' mean via
+    * [[graft.quality.Checks.driftReport]] — the same thresholds and
+    * report shape as the batch dq4 path, so one drift contract serves
+    * both cadences. The first batch passes vacuously (no history), like
+    * the batch form. State lives in the store, not the stream — the
+    * query itself stays stateless and restart-safe: periods are batch
+    * ids and [[graft.quality.ReportStore.append]] is idempotent PER
+    * PERIOD (the store names one directory per period), so a replayed
+    * micro-batch after a restart REPLACES its period's rows instead of
+    * double-counting them into the trailing mean.
+    */
+  def qualityDriftStream(stream: DataFrame,
+                         checks: Seq[graft.quality.Checks.Check],
+                         storePath: String, maxAbsDelta: Double)
+                        (sink: DataFrame => Unit): StreamingQuery =
+    eachNonEmpty(stream, sink) { (batch, id) =>
+      graft.quality.ReportStore.appendAndDrift(
+          graft.quality.Checks.run(batch, checks),
+          storePath, f"b$id%012d", maxAbsDelta)
+        .withColumn("batch_id", lit(id))
+    }
+
   /** STREAMING SIMILARITY SEARCH — the ANN mirror of the standing-ledger
-    * dedup loop (LshIndex / HashLedger foreachBatch probes): a standing
+    * dedup loop (LshIndex / HashLedger micro-batch probes): a standing
     * corpus indexed ONCE ([[graft.sim.SrpIndex]]), each arriving
     * micro-batch of QUERY vectors probed against it with the persisted
     * index path ([[graft.sim.Similarity.annTopKIndexed]] — broadcast
@@ -761,91 +769,14 @@ object Streaming {
     * neighbor_id, cos, rank) — write it to a queue, table, or memory;
     * empty batches are skipped.
     */
-  /** Streaming entity conformance — er3's online twin (the streaming
-    * rung every incremental operator here gets): each micro-batch of
-    * arriving records is conformed to the STANDING name universe via
-    * [[graft.er.EntityResolution.incrementalEntityMatches]] (token
-    * blocking against standing names only, best match under the total
-    * (dist, name) order, unmatched rows self-label). Stateless per
-    * batch — the assignment depends only on (row, standing universe) —
-    * so the streamed union equals the one-shot er3 answer on the same
-    * rows (StreamingSpec parity gate). At scale the standing side is
-    * the sublinear distinct-name frame; per-batch cost never touches
-    * corpus rows.
-    */
-  def entityMatchStream(standing: DataFrame, recordStream: DataFrame,
-                        idCol: String, nameCol: String, maxDist: Int)
-                       (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    recordStream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.er.EntityResolution.incrementalEntityMatches(
-            batch, standing, idCol, nameCol, maxDist))
-        ()
-    }.start()
-
-  /** Streaming data-quality monitoring — the dq family's online twin
-    * (the streaming rung every batch family here gets): each micro-batch
-    * is validated by the SAME one-scan suite
-    * ([[graft.quality.Checks.run]]) and the report rows are stamped with
-    * the micro-batch id, yielding a per-batch quality time series — the
-    * ingest-gate shape, where a sink alerts or quarantines the batch the
-    * moment a `passed` flag goes false. Stateless per batch (a report
-    * depends only on its own rows), so thresholds are per-batch
-    * contracts and the stream needs no keyed state to evict.
-    */
-  def qualityMonitorStream(stream: DataFrame,
-                           checks: Seq[graft.quality.Checks.Check])
-                          (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.quality.Checks.run(batch, checks)
-            .withColumn("batch_id", lit(id)))
-        ()
-    }.start()
-
-  /** [[qualityMonitorStream]] with DRIFT judgment — the online consumer
-    * of the dq family's metric history ([[graft.quality.ReportStore]]):
-    * each micro-batch's suite metrics append to the persisted store
-    * (period = zero-padded batch id, so string order is batch order) and
-    * the batch is judged against the TRAILING batches' mean via
-    * [[graft.quality.Checks.driftReport]] — the same thresholds and
-    * report shape as the batch dq4 path, so one drift contract serves
-    * both cadences. The first batch passes vacuously (no history), like
-    * the batch form. State lives in the store, not the stream — the
-    * query itself stays stateless and restart-safe: periods are batch
-    * ids and [[graft.quality.ReportStore.append]] is idempotent PER
-    * PERIOD (the store names one directory per period), so a replayed
-    * micro-batch after a restart REPLACES its period's rows instead of
-    * double-counting them into the trailing mean.
-    */
-  def qualityDriftStream(stream: DataFrame,
-                         checks: Seq[graft.quality.Checks.Check],
-                         storePath: String, maxAbsDelta: Double)
-                        (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.quality.ReportStore.appendAndDrift(
-            graft.quality.Checks.run(batch, checks),
-            storePath, f"b$id%012d", maxAbsDelta)
-            .withColumn("batch_id", lit(id)))
-        ()
-    }.start()
-
   def annSearchStream(idx: graft.sim.SrpIndex.Handle, queryStream: DataFrame,
                       k: Int,
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       queryIdCol: String = "query_id")
-                     (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.sim.Similarity.annTopKIndexed(
-            idx, batch, k, idCol, vecCol, queryIdCol))
-        ()
-    }.start()
+                     (sink: DataFrame => Unit): StreamingQuery =
+    eachNonEmpty(queryStream, sink) { (batch, _) =>
+      graft.sim.Similarity.annTopKIndexed(idx, batch, k, idCol, vecCol, queryIdCol)
+    }
 
   /** [[annSearchStream]]'s IVF twin — online retrieval against the
     * OTHER persisted ANN index ([[graft.sim.IvfIndex]], the s4 path):
@@ -865,14 +796,11 @@ object Streaming {
                       queryStream: DataFrame, k: Int, nProbes: Int = 0,
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       queryIdCol: String = "query_id")
-                     (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.sim.Similarity.ivfTopKAssigned(
-            assigned, cents, batch, k, nProbes, idCol, vecCol, queryIdCol))
-        ()
-    }.start()
+                     (sink: DataFrame => Unit): StreamingQuery =
+    eachNonEmpty(queryStream, sink) { (batch, _) =>
+      graft.sim.Similarity.ivfTopKAssigned(
+        assigned, cents, batch, k, nProbes, idCol, vecCol, queryIdCol)
+    }
 
   /** [[annSearchStream]]'s IVF-PQ twin — online retrieval against the
     * COMPOSED persisted index ([[graft.sim.IvfPqIndex]], the s11 path):
@@ -893,18 +821,21 @@ object Streaming {
                         nProbes: Int = 0,
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         queryIdCol: String = "query_id")
-                       (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val cands = graft.sim.Similarity.ivfPqCandidatePairs(
-            codesByCell, cents, codebooks, batch, kCand, nProbes,
-            idCol, vecCol, queryIdCol)
-          sink(graft.sim.Similarity.exactRerank(
-            cands, corpus, batch, k, idCol, vecCol, queryIdCol))
-        }
-        ()
-    }.start()
+                       (sink: DataFrame => Unit): StreamingQuery =
+    eachNonEmpty(queryStream, sink) { (batch, _) =>
+      val cands = graft.sim.Similarity.ivfPqCandidatePairs(
+        codesByCell, cents, codebooks, batch, kCand, nProbes,
+        idCol, vecCol, queryIdCol)
+      graft.sim.Similarity.exactRerank(
+        cands, corpus, batch, k, idCol, vecCol, queryIdCol)
+    }
+
+  /** One committed [[heavyHittersStream]] summary: the running row total
+    * and the summary's (item, count) entries in the summary's own order,
+    * so a restore rebuilds the same tie order.
+    */
+  private[streaming] case class HeavyHitter(item: String, count: Long)
+  private[streaming] case class HeavyHittersSummary(total: Long, entries: Seq[HeavyHitter])
 
   /** STREAMING heavy hitters — the real-time twin of
     * [[graft.text.Text.heavyHitters]] (trending items on an unbounded
@@ -927,102 +858,78 @@ object Streaming {
     * the full corpus); with capacity above the live distinct-item count
     * the estimates are exact — the spec gates both regimes.
     *
-    * Durability: pass `checkpointDir` and the summary SURVIVES RESTART —
-    * the query checkpoints its source offsets there, and after each
-    * merged batch the summary (entries + total + last-merged batchId) is
-    * written atomically (temp + rename) to a sidecar file beside the
-    * checkpoint, restored on start. The sidecar write and the offset
-    * commit cannot be atomic TOGETHER, but either crash order is safe:
-    * sidecar-behind → the restarted query re-delivers the batch and the
-    * restored `lastMerged` (< batchId) admits the merge exactly once;
-    * sidecar-ahead → re-delivery is batchId-skipped. Without
-    * `checkpointDir` the summary is session-scoped as before (a restart
-    * starts empty and, with no offset checkpoint, re-reads the source),
-    * and within-session re-delivery is batchId-deduped either way.
+    * Durability: pass `checkpointDir` (any Hadoop filesystem) and the
+    * summary SURVIVES RESTART — the query checkpoints its source offsets
+    * in `offsets/` there, and each merged batch commits its summary under
+    * its batch id to `summary/` (Spark's [[HDFSMetadataLog]], the log the
+    * offsets are committed with; older batches are purged), restored on
+    * start. The summary commit and the offset commit cannot be atomic
+    * TOGETHER, but either crash order is safe: summary-behind → the
+    * restarted query re-delivers the batch and the restored last batch
+    * id (< batchId) admits the merge exactly once; summary-ahead →
+    * re-delivery is batchId-skipped. Without `checkpointDir` the summary
+    * is session-scoped (a restart starts empty and, with no offset
+    * checkpoint, re-reads the source), and within-session re-delivery is
+    * batchId-deduped either way.
     */
   def heavyHittersStream(itemStream: DataFrame, itemCol: String, k: Int,
                          capacity: Int = 4096, checkpointDir: String = null)
-                        (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.graft.SpaceSavingBuffer
+                        (sink: DataFrame => Unit): StreamingQuery = {
     val spark = itemStream.sparkSession
     import spark.implicits._
     val running = new SpaceSavingBuffer(capacity)
     var total = 0L
     var lastMerged = -1L
-    val sidecar = Option(checkpointDir).map(d => new java.io.File(d, "graft_heavy_hitters_summary"))
-    sidecar.filter(_.isFile).foreach { f =>
-      // restore: line 1 = "<lastMerged> <total>", then "<count> <base64(item)>"
-      val lines = java.nio.file.Files.readAllLines(f.toPath,
-        java.nio.charset.StandardCharsets.UTF_8)
-      if (!lines.isEmpty) {
-        val head = lines.get(0).split(' ')
-        lastMerged = head(0).toLong
-        total = head(1).toLong
-        val entries = (1 until lines.size).map { i =>
-          val Array(c, b64) = lines.get(i).split(' ')
-          (new String(java.util.Base64.getDecoder.decode(b64),
-            java.nio.charset.StandardCharsets.UTF_8), c.toLong)
-        }
-        running.mergeIn(SpaceSavingBuffer.fromEntries(capacity, entries.toArray))
-      }
+    val summaries = Option(checkpointDir).map(d =>
+      new HDFSMetadataLog[HeavyHittersSummary](spark, new Path(d, "summary").toString))
+    summaries.flatMap(_.getLatest()).foreach { case (id, s) =>
+      lastMerged = id
+      total = s.total
+      running.mergeIn(SpaceSavingBuffer.fromEntries(capacity,
+        s.entries.map(e => (e.item, e.count)).toArray))
     }
-    def persistSummary(): Unit = sidecar.foreach { f =>
-      val sb = new StringBuilder
-      sb.append(lastMerged).append(' ').append(total).append('\n')
-      running.foreachEntry { (i, c) =>
-        sb.append(c).append(' ')
-          .append(java.util.Base64.getEncoder.encodeToString(
-            i.getBytes(java.nio.charset.StandardCharsets.UTF_8))).append('\n')
-      }
-      f.getParentFile.mkdirs()
-      val tmp = new java.io.File(f.getParentFile, f.getName + ".tmp")
-      java.nio.file.Files.write(tmp.toPath,
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp.toPath, f.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    val writer0 = itemStream.writeStream
-    val writer = Option(checkpointDir)
-      .map(d => writer0.option("checkpointLocation", new java.io.File(d, "offsets").toString))
-      .getOrElse(writer0)
-    writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (batchId > lastMerged) {
-        val partials = batch.select(col(itemCol).cast("string")).as[String]
-          .mapPartitions { it =>
-            val buf = new SpaceSavingBuffer(capacity)
-            var n = 0L
-            it.foreach { s => if (s != null) { buf.add(s); n += 1 } }
-            if (n == 0) Iterator.empty
-            else {
-              val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-              buf.foreachEntry((i, c) => entries += ((i, c)))
-              Iterator.single((entries.toSeq, n))
+    microBatches(itemStream, Option(checkpointDir).map(new Path(_, "offsets").toString)) {
+      (batch, batchId) =>
+        if (batchId > lastMerged) {
+          val partials = batch.select(col(itemCol).cast("string")).as[String]
+            .mapPartitions { it =>
+              val buf = new SpaceSavingBuffer(capacity)
+              var n = 0L
+              it.foreach { s => if (s != null) { buf.add(s); n += 1 } }
+              if (n == 0) Iterator.empty
+              else {
+                val entries = ArrayBuffer.empty[(String, Long)]
+                buf.foreachEntry((i, c) => entries += ((i, c)))
+                Iterator.single((entries.toSeq, n))
+              }
+            }.collect()
+          // partition results arrive in nondeterministic order and merge
+          // pruning is order-sensitive at ties — pin a content-derived
+          // TOTAL order: (row count, full canonical entry serialization).
+          // (count, min item) alone can tie for two different partials,
+          // leaving the merge order — and tie-broken estimates —
+          // nondeterministic; identical serializations mean identical
+          // partials, whose relative order cannot matter.
+          partials.sortBy { case (entries, n) =>
+            (n, entries.sorted.map { case (i, c) => s"$i\u0000$c" }.mkString("\u0001"))
+          }.foreach { case (entries, n) =>
+              running.mergeIn(SpaceSavingBuffer.fromEntries(capacity, entries.toArray))
+              total += n
             }
-          }.collect()
-        // partition results arrive in nondeterministic order and merge
-        // pruning is order-sensitive at ties — pin a content-derived
-        // TOTAL order: (row count, full canonical entry serialization).
-        // (count, min item) alone can tie for two different partials,
-        // leaving the merge order — and tie-broken estimates —
-        // nondeterministic; identical serializations mean identical
-        // partials, whose relative order cannot matter.
-        partials.sortBy { case (entries, n) =>
-          (n, entries.sorted.map { case (i, c) => s"$i\u0000$c" }.mkString("\u0001"))
-        }.foreach { case (entries, n) =>
-            running.mergeIn(SpaceSavingBuffer.fromEntries(capacity, entries.toArray))
-            total += n
+          lastMerged = batchId
+          summaries.foreach { log =>
+            val entries = ArrayBuffer.empty[HeavyHitter]
+            running.foreachEntry((i, c) => entries += HeavyHitter(i, c))
+            log.add(batchId, HeavyHittersSummary(total, entries.toSeq))
+            log.purge(batchId)
           }
-        lastMerged = batchId
-        persistSummary()
-      }
-      val top = {
-        val all = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        running.foreachEntry((i, c) => all += ((i, c)))
-        all.sortBy { case (i, c) => (-c, i) }.take(k).toSeq
-      }
-      sink(top.toDF("item", "est_count").withColumn("n_total", lit(total)))
-      ()
-    }.start()
+        }
+        val top = {
+          val all = ArrayBuffer.empty[(String, Long)]
+          running.foreachEntry((i, c) => all += ((i, c)))
+          all.sortBy { case (i, c) => (-c, i) }.take(k).toSeq
+        }
+        sink(top.toDF("item", "est_count").withColumn("n_total", lit(total)))
+    }
   }
 }

@@ -1,20 +1,26 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog, SinkFileStatus}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.observe.Metrics
 
 /** The reference pipeline as an actual stream (north star: "Structured
   * Streaming + Kafka"): polling source → statistics-guarded cleaning →
-  * event-time windowed aggregation → `foreachBatch` driving the same batch
-  * sinks as the daily pipeline. One checkpointed query replaces the cron.
+  * event-time windowed aggregation → the micro-batch bridge
+  * ([[Streaming.microBatches]]) driving the same batch writers as the
+  * daily pipeline. One checkpointed query replaces the cron.
   *
-  * `foreachBatch` is the sink bridge: each micro-batch appends the same
-  * (city, date)-partitioned parquet layout `Sinks.writePartitioned`
-  * produces (append here, overwrite there — a batch backfill can replace
-  * exactly the partitions a stream wrote), so downstream consumers cannot
-  * tell whether a day came from the stream or a backfill.
+  * Each micro-batch appends to the same (city, date)-partitioned parquet
+  * layout `Sinks.writePartitioned` produces, exactly once per batch id
+  * ([[appendOnce]]), so downstream consumers read a day the same way
+  * whether it came from the stream or a batch run. The sink's
+  * `_spark_metadata` log decides what `windowed/` holds: a batch backfill
+  * writes its own directory, since files written beside that log are
+  * never read.
   */
 object StreamingPipeline {
 
@@ -81,8 +87,9 @@ object StreamingPipeline {
     * rows leave the plan BEFORE the stateful window — each query
     * checkpoints its own offsets (`checkpointDir` /
     * `checkpointDir-quarantine`), so the two routes restart
-    * independently with exactly-once delivery per sink. The routing
-    * itself is stateless and map-side ([[graft.quality.Checks.quarantine]]),
+    * independently with exactly-once delivery per sink ([[appendOnce]]).
+    * The routing itself is stateless and map-side
+    * ([[graft.quality.Checks.quarantine]]),
     * applied to decoded records before any dedup state or cleaning —
     * invalid rows never occupy state, and the quarantined record
     * carries its full payload plus the declaration-ordered
@@ -137,45 +144,55 @@ object StreamingPipeline {
       // either dedup branch already declared the watermark
       setWatermark = cfg.dedupKeys.isEmpty && cfg.dedupSignatureOf.isEmpty)
 
-    val writer = windowed.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist: count + write must not re-execute the stateful agg
-        batch.persist()
-        try {
-          val n = batch.count()
-          if (n > 0) {
-            // pipeline-owned counter; the generic batch/stream counters
-            // come from the Metrics listeners, never from here (double
-            // counting when both are wired)
-            Metrics.inc(Metrics.StreamWindowsWritten, n)
-            batch
-              .withColumn("date", date_format(col("window_start"), "yyyy-MM-dd"))
-              .write.mode("append").partitionBy("city", "date")
-              .parquet(s"${cfg.outputDir}/windowed")
-          }
-        } finally batch.unpersist()
-      }
-
-    val main = (if (drain) writer.trigger(Trigger.AvailableNow()) else writer).start()
-
-    val dlq = dirty.map { d =>
-      val w = d.writeStream
-        .option("checkpointLocation", s"${cfg.checkpointDir}-quarantine")
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.persist()
-          try {
-            val n = batch.count()
-            if (n > 0) {
-              Metrics.inc(Metrics.StreamRowsQuarantined, n)
-              batch.write.mode("append").parquet(s"${cfg.outputDir}/quarantine")
-            }
-          } finally batch.unpersist()
-        }
-      (if (drain) w.trigger(Trigger.AvailableNow()) else w).start()
-    }
+    val main = Streaming.microBatches(windowed, Some(cfg.checkpointDir), drain)(
+      appendOnce(spark, s"${cfg.outputDir}/windowed", Seq("city", "date"),
+        Metrics.StreamWindowsWritten)(
+        _.withColumn("date", date_format(col("window_start"), "yyyy-MM-dd"))))
+    val dlq = dirty.map(d =>
+      Streaming.microBatches(d, Some(s"${cfg.checkpointDir}-quarantine"), drain)(
+        appendOnce(spark, s"${cfg.outputDir}/quarantine", Nil,
+          Metrics.StreamRowsQuarantined)(identity)))
     Seq(main) ++ dlq
+  }
+
+  /** The micro-batch body of both sinks: it appends each batch, shaped by
+    * `shape`, to the parquet table at `path` exactly once, and adds the
+    * batch's row count to the pipeline-owned `counter` (the generic
+    * batch/stream counters come from the Metrics listeners, never from
+    * here: both wired would double count).
+    *
+    * The write goes through Spark's own parquet file sink: its
+    * `_spark_metadata` log under `path` records a batch id's files when
+    * the batch commits, `spark.read.parquet(path)` reads only the files
+    * that log lists, and a batch id the log already holds is skipped
+    * whole. So a batch that Spark replays after a crash between this
+    * write and the checkpoint's commit entry is neither written nor
+    * counted twice, and a crash mid-write leaves files no reader sees. An
+    * empty batch commits an empty entry (the log compacts only over
+    * consecutive batch ids) without running a write.
+    */
+  private def appendOnce(spark: SparkSession, path: String, partitionBy: Seq[String],
+                         counter: String)
+                        (shape: DataFrame => DataFrame): (DataFrame, Long) => Unit = {
+    val sink = new FileStreamSink(spark, path, new ParquetFileFormat, partitionBy, Map.empty)
+    val base = new Path(path)
+    val log = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark,
+      FileStreamSink.getMetadataLogPath(base.getFileSystem(spark.sessionState.newHadoopConf()),
+        base, spark.sessionState.conf).toString)
+    (batch, batchId) => {
+      // persist: count + write must not re-execute the stateful agg. A
+      // replayed batch is counted too: its state stores commit only when
+      // its whole plan runs.
+      batch.persist()
+      try {
+        val n = batch.count()
+        if (batchId > log.getLatestBatchId().getOrElse(-1L)) {
+          if (n > 0) {
+            sink.addBatch(batchId, shape(batch))
+            Metrics.inc(counter, n)
+          } else log.add(batchId, Array.empty[SinkFileStatus])
+        }
+      } finally batch.unpersist()
+    }
   }
 }

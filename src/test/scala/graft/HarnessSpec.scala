@@ -112,6 +112,10 @@ class HarnessSpec extends SparkTestBase {
       }
       assert(p.tasks >= p.stages)
       assert(p.jobs.forall(j => j.end >= j.start))
+      // every job is named after the program's call site, none after the
+      // thread pool AQE and broadcasts run their jobs on
+      assert(p.jobs.forall(j => !j.site.contains("CompletableFuture")), p.jobs)
+      assert(p.jobs.forall(_.site.contains("HarnessSpec.scala")), p.jobs)
       assert(p.gapS >= 0 && p.gapS <= p.wallS, p)
       assert(p.phases.map(_._1).contains("planning"), p.phases)
     } finally {

@@ -101,8 +101,9 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import Streaming._
     val mem = MemoryStream[DayObs]
-    // eviction off => no watermark drop: the fold's own guard must hold
-    val q = runningDailyChange(mem.toDS(), stateTtlDays = 0)
+    // lateness wide enough that the watermark does NOT drop the late
+    // row — the fold's own guard must
+    val q = runningDailyChange(mem.toDS(), lateness = "10 days")
       .writeStream.format("memory").queryName("day_chg_late")
       .outputMode("append").start()
     try {
@@ -752,10 +753,10 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import Streaming._
     val mem = MemoryStream[KeyDay]
-    // horizonDays = 0: the unbounded variant — this spec pins the
-    // arbitrarily-late-revision semantics that eviction (deliberately)
-    // trades away; the evicting default is covered by its own spec below.
-    val q = firstSeenCohorts(mem.toDS(), horizonDays = 0)
+    // lateness wide enough that the watermark does NOT drop the late
+    // earlier day: this spec pins the late-revision semantics inside the
+    // watermark; eviction is covered by its own spec below.
+    val q = firstSeenCohorts(mem.toDS(), lateness = "365 days")
       .writeStream.format("memory").queryName("cohorts_st")
       .outputMode("append").start()
     try {
@@ -1496,5 +1497,168 @@ class StreamingSpec extends SparkTestBase {
         (Some("gold"), T("2024-01-01 00:00:00"), None),
         (Some("silver"), T("2024-03-10 00:00:00"), Some(T("2024-03-11 00:00:00")))))
     } finally q.stop()
+  }
+
+  /** Deletes the newest entry of a query checkpoint's commit log, as a
+    * crash between a batch's sink write and its commit entry leaves it;
+    * returns the deleted entry's file.
+    */
+  private def dropLastCommit(checkpoint: String): java.io.File = {
+    val commits = new java.io.File(checkpoint, "commits")
+    val last = commits.listFiles().filter(_.getName.forall(_.isDigit))
+      .maxBy(_.getName.toLong)
+    new java.io.File(commits, s".${last.getName}.crc").delete()
+    assert(last.delete(), s"could not delete $last")
+    last
+  }
+
+  test("StreamingPipeline: a batch replayed after a lost commit entry writes " +
+       "no window and no quarantine row twice") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft_replay")
+    val epoch = Timestamp.valueOf("2024-01-01 00:00:00").getTime / 1000L
+    val clean = (0 until 60).flatMap(i => Seq(
+      kRec("London", epoch + i * 60L, 10.0 + i % 7, 2L * i),
+      kRec("Tokyo", epoch + i * 60L, 20.0 + i % 5, 2L * i + 1)))
+    val dirty = Seq(kRec("Paris", epoch + 90L, 12.0, 1000L))
+    val mem = MemoryStream[KRec]
+    val ckpt = base.resolve("ckpt").toString
+    val cfg = graft.streaming.StreamingPipeline.Config(
+      checkpointDir = ckpt,
+      outputDir = base.resolve("out").toString,
+      window = "10 minutes", lateness = "5 minutes",
+      wireSource = Some(mem.toDF()),
+      quarantineChecks = Seq(graft.quality.Checks.inSet("city", Seq("London", "Tokyo"), 1.0)))
+    def run(): Unit = {
+      val qs = graft.streaming.StreamingPipeline.startRouted(spark, cfg)
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+      qs.foreach(_.exception.foreach(e => throw e))
+    }
+    mem.addData((clean ++ dirty): _*)
+    run()
+    def windows() = spark.read.parquet(base.resolve("out").resolve("windowed").toString)
+    def quarantined() = spark.read.parquet(base.resolve("out").resolve("quarantine").toString)
+    val before = (windows().count(), quarantined().count())
+    assert(before._1 > 0 && before._2 === 1L)
+    // the crash window: each query's last batch reached its sink, its
+    // commit entry did not; the restart replays that batch id
+    val lost = Seq(dropLastCommit(ckpt), dropLastCommit(s"$ckpt-quarantine"))
+    run()
+    assert(lost.forall(_.exists()), "the restart must replay and re-commit the batch")
+    val twice = windows().groupBy("window_start", "city").count().filter($"count" > 1)
+    assert(twice.isEmpty, twice.collect().mkString(", "))
+    assert((windows().count(), quarantined().count()) === before)
+  }
+
+  test("heavyHittersStream: a batch re-delivered after a lost commit entry " +
+       "merges once") {
+    val tokens = (0 until 600).map(i => s"tok${i % 25}")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("item",
+        org.apache.spark.sql.types.StringType)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_hh_replay")
+    // one file, hence one micro-batch, per 200 rows
+    tokens.grouped(200).zipWithIndex.foreach { case (p, i) =>
+      p.toDF("item").coalesce(1).write.mode("overwrite").parquet(dir.resolve(s"p$i").toString)
+    }
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_hh_replay_ckpt").toString
+    @volatile var got: Seq[(String, Long, Long)] = Seq.empty
+    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val q = Streaming.heavyHittersStream(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(dir.toString + "/*"),
+          "item", k = 25, capacity = 64, checkpointDir = ckpt) { top =>
+        got = top.collect().toSeq.map(r =>
+          (r.getAs[String]("item"), r.getAs[Long]("est_count"), r.getAs[Long]("n_total")))
+      }
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+    val lastBatch = run().lastProgress.batchId
+    val first = got
+    assert(first.map(_._3).distinct === Seq(600L))
+    dropLastCommit(new java.io.File(ckpt, "offsets").toString)
+    got = Seq.empty
+    val q2 = run()
+    assert(q2.recentProgress.map(_.batchId).toSeq === Seq(lastBatch),
+      "the restart must re-deliver the last batch, and only it")
+    assert(got.map(_._3).distinct === Seq(600L), "the re-delivered batch merged twice")
+    assert(got === first)
+  }
+
+  /** numRowsTotal of the one state operator of `op` over `batches`, after
+    * the first batch and after the last.
+    */
+  private def stateRows[T: org.apache.spark.sql.Encoder](
+      op: org.apache.spark.sql.Dataset[T] => org.apache.spark.sql.Dataset[_],
+      batches: Seq[T]*): (Long, Long) = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[T]
+    val q = op(mem.toDS()).writeStream.format("noop").outputMode("append").start()
+    def rows() = q.lastProgress.stateOperators(0).numRowsTotal
+    try {
+      val counts = batches.map { b =>
+        mem.addData(b)
+        q.processAllAvailable()
+        rows()
+      }
+      (counts.head, counts.last)
+    } finally q.stop()
+  }
+
+  test("every evicting twin removes an idle key's state once the watermark " +
+       "passes its deadline") {
+    import Streaming._
+    def d(s: String) = java.sql.Date.valueOf(s)
+    def t(s: String) = Timestamp.valueOf(s)
+    // keys 1 and 2 open state; key 3's events then carry the watermark far
+    // past both deadlines (lateness 0), leaving key 3's state alone
+    val table: Seq[(String, () => (Long, Long))] = Seq(
+      "runningDailyChange" -> (() => stateRows[DayObs](
+        runningDailyChange(_, stateTtlDays = 5, lateness = "0 seconds"),
+        Seq(DayObs("1", d("2024-01-01"), 1.0), DayObs("2", d("2024-01-01"), 2.0)),
+        Seq(DayObs("3", d("2024-03-01"), 3.0)),
+        Seq(DayObs("3", d("2024-03-02"), 4.0)))),
+      "scd2Stream" -> (() => stateRows[ChangeObs](
+        scd2Stream(_, stateTtlDays = 5, lateness = "0 seconds"),
+        Seq(ChangeObs(1L, t("2024-01-01 00:00:00"), Some("a"), 1L),
+            ChangeObs(2L, t("2024-01-01 00:00:00"), Some("b"), 2L)),
+        Seq(ChangeObs(3L, t("2024-03-01 00:00:00"), Some("c"), 3L)),
+        Seq(ChangeObs(3L, t("2024-03-02 00:00:00"), Some("d"), 4L)))),
+      "transitionEdgesStream" -> (() => stateRows[PageView](
+        transitionEdgesStream(_, stateTtlDays = 5, lateness = "0 seconds"),
+        Seq(PageView(1L, t("2024-01-01 00:00:00"), 1L, 10L),
+            PageView(2L, t("2024-01-01 00:00:00"), 2L, 20L)),
+        Seq(PageView(3L, t("2024-03-01 00:00:00"), 3L, 30L)),
+        Seq(PageView(3L, t("2024-03-02 00:00:00"), 4L, 31L)))),
+      "sessionStateStream" -> (() => stateRows[SessionEvent](
+        sessionStateStream(_, gapMinutes = 60, stateTtlDays = 2, lateness = "0 seconds"),
+        Seq(SessionEvent(1L, t("2024-01-01 00:00:00"), 1L, Some(1.0)),
+            SessionEvent(2L, t("2024-01-01 00:00:00"), 2L, None)),
+        Seq(SessionEvent(3L, t("2024-03-01 00:00:00"), 3L, Some(3.0))),
+        Seq(SessionEvent(3L, t("2024-03-02 00:00:00"), 4L, Some(4.0))))),
+      "firstSeenCohorts" -> (() => stateRows[KeyDay](
+        firstSeenCohorts(_, horizonDays = 10, lateness = "0 seconds"),
+        Seq(KeyDay(1L, 100), KeyDay(2L, 100)),
+        Seq(KeyDay(3L, 200)),
+        Seq(KeyDay(3L, 201)))),
+      "funnelProgress" -> (() => stateRows[StageEvent](
+        funnelProgress(_, nStages = 2, maxLagSeconds = 100, lateness = "0 seconds"),
+        Seq(StageEvent(1L, 1000000000L, 0), StageEvent(2L, 1000000000L, 0)),
+        Seq(StageEvent(3L, 5000000000L, 0)),
+        Seq(StageEvent(3L, 5001000000L, 1)))))
+    table.foreach { case (name, run) =>
+      assert(run() === ((2L, 1L)), s"$name: state rows (after keys 1 and 2, at the end)")
+    }
+  }
+
+  test("evicting twins reject a non-positive TTL or horizon") {
+    import Streaming._
+    implicit val sqlCtx = spark.sqlContext
+    intercept[IllegalArgumentException](runningDailyChange(MemoryStream[DayObs].toDS(), stateTtlDays = 0))
+    intercept[IllegalArgumentException](scd2Stream(MemoryStream[ChangeObs].toDS(), stateTtlDays = 0))
+    intercept[IllegalArgumentException](transitionEdgesStream(MemoryStream[PageView].toDS(), stateTtlDays = -1))
+    intercept[IllegalArgumentException](sessionStateStream(MemoryStream[SessionEvent].toDS(), stateTtlDays = 0))
+    intercept[IllegalArgumentException](firstSeenCohorts(MemoryStream[KeyDay].toDS(), horizonDays = 0))
   }
 }
