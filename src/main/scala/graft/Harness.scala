@@ -83,7 +83,9 @@ object Harness {
       Tables.lineitem(spark, sfDir).limit(1).count()
     } catch { case NonFatal(_) => () }
 
-  /** One job of a measured lap: epoch-ms start and end, and its call site. */
+  /** One job of a measured lap: epoch-ms start and end, and its call site
+    * followed by its final stage's operator scope in brackets.
+    */
   final case class Job(id: Int, start: Long, end: Long, site: String) {
     def seconds: Double = (end - start) / 1e3
   }
@@ -159,11 +161,15 @@ object Harness {
         // site: the jobs AQE, broadcasts and subqueries start on Spark's
         // own threads carry no program frame. Other jobs take their final
         // stage's name, the job's short call site ("count at X.scala:12").
+        // The final stage's operator scope then says which plan node the
+        // job runs ("[Exchange]", "[BroadcastExchange]", ...).
+        val last = e.stageInfos.sortBy(_.stageId).lastOption
         val site = Option(e.properties)
           .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
           .flatMap(id => execSites.get(id.toLong))
-          .getOrElse(e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name))
-        jobs(e.jobId) = Job(e.jobId, e.time, e.time, site)
+          .getOrElse(last.fold("?")(_.name))
+        val scope = last.flatMap(ListenerBus.operatorScope).fold("")(s => s" [$s]")
+        jobs(e.jobId) = Job(e.jobId, e.time, e.time, site + scope)
         stageIds ++= e.stageIds
       }
     }

@@ -1879,7 +1879,7 @@ object SparkEntry {
     "s5_doc_embedding_join" -> ((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
-        sqrt(graft.functions.VectorFunctions.dotNative(
+        sqrt(org.apache.spark.sql.graft.VectorFunctions.dotNative(
           Similarity.toDouble(col("embedding")),
           Similarity.toDouble(col("embedding")))).as("__norm"))
       docs.join(emb, col("doc_id") === col("vec_id"))

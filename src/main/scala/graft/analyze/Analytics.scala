@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture (100 TB): every function here is a single `groupBy` /
   * `Window` — one shuffle on the grouping key, map-side partial aggregation,
-  * no driver-side collection. Exact `percentile`/`median` have
-  * `percentile_approx` twins behind the `exact` flag where noted.
+  * no driver-side collection. Exact `percentile`/`median` and
+  * `count(DISTINCT)` become sketches under the session's one switch,
+  * `spark.graft.approx.aggregates`
+  * ([[org.apache.spark.sql.graft.ApproxAggRewrite]]).
   */
 object Analytics {
 
@@ -46,11 +48,12 @@ object Analytics {
 
   /** A1 (analyze.py:146-183): global multi-aggregate basic stats.
     * count, ts range, min/max/mean/median of value.
-    * `median` is exact (Spark 3.4+); at 100 TB flip `exact=false` for the
-    * one-pass `percentile_approx` sketch.
+    * `median` is exact (Spark 3.4+); at 100 TB set
+    * `spark.graft.approx.aggregates` for the one-pass `percentile_approx`
+    * sketch.
     */
-  def basicStats(df: DataFrame, ts: String, value: String, exact: Boolean = true): DataFrame = {
-    val med = if (exact) median(col(value)) else percentile_approx(col(value), lit(0.5), lit(10000))
+  def basicStats(df: DataFrame, ts: String, value: String): DataFrame = {
+    val med = median(col(value))
     df.agg(
       count(lit(1)).as("record_count"),
       date_format(min(col(ts)), "yyyy-MM-dd HH:mm:ss").as("ts_min"),

@@ -15,8 +15,12 @@ import org.apache.spark.sql.types._
   * driver-free explode. Exact multi-column distinct counts ride Spark's
   * Expand (input rows x columns before partial aggregation) — fine for
   * typical table widths; at extreme width or at the 100 TB scan, set
-  * `exact = false` to swap in `approx_count_distinct` (HLL, no Expand,
-  * one pass, merge-able).
+  * `spark.graft.approx.aggregates`
+  * ([[org.apache.spark.sql.graft.ApproxAggRewrite]]) to swap in
+  * `approx_count_distinct` (HLL, no Expand, one pass, merge-able). A
+  * profile of several columns needs the rule installed through
+  * `GraftExtensions`: `GraftOptimizations.install` runs it after Spark
+  * has already expanded a multi-distinct aggregate.
   *
   * min/max format canonically by type (fractionals via DECIMAL(28,4) so
   * every engine prints the same digits; timestamps/dates via pinned
@@ -59,8 +63,7 @@ object Profiler {
     case _ => false // map, variant, calendar-interval, unknown future types
   }
 
-  def profile(df: DataFrame, cols: Seq[String] = Nil,
-              exact: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
     val names = if (cols.nonEmpty) cols else df.columns.toSeq
     val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
     require(names.forall(types.contains), s"unknown columns in ${names.mkString(",")}")
@@ -73,8 +76,7 @@ object Profiler {
       val comparable = ord // map/variant: no equality, no countDistinct
       val nd =
         if (!comparable) first(lit(null).cast("long"))
-        else if (exact) countDistinct(col(n))
-        else approx_count_distinct(col(n))
+        else countDistinct(col(n))
       val (mn, mx) =
         if (ord) (fmt(min(col(n)), types(n)), fmt(max(col(n)), types(n)))
         else (first(lit(null).cast("string")), first(lit(null).cast("string")))

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * small aggregate job whose 1-row result is collected and placed into the
   * returned plan as literals, so every consumer of the cleaned frame is a
   * scan plus a map-side projection and no consumer re-derives the fences or
-  * medians. The only scale switch is exact `percentile`/`median` →
-  * `percentile_approx` (`exact = false`).
+  * medians. The statistics are exact `percentile`/`median`; the session's
+  * one exact→sketch switch, `spark.graft.approx.aggregates`
+  * ([[org.apache.spark.sql.graft.ApproxAggRewrite]]), turns them into
+  * `percentile_approx`.
   *
   * Batch only: the functions here run jobs when called. On a stream these
   * global statistics become per-window aggregates or a periodically
@@ -39,14 +41,10 @@ object Cleaning {
     * literals.
     */
   def nullOutliers(df: DataFrame, cols: Seq[String], lo: Double = 0.05,
-                   hi: Double = 0.95, k: Double = 1.5,
-                   exact: Boolean = true): DataFrame = {
+                   hi: Double = 0.95, k: Double = 1.5): DataFrame = {
     if (cols.isEmpty) return df
-    def pct(c: String, p: Double) =
-      if (exact) percentile(col(c), lit(p))
-      else percentile_approx(col(c), lit(p), lit(10000))
     val boundAggs = cols.flatMap { c =>
-      val q1 = pct(c, lo); val q3 = pct(c, hi)
+      val q1 = percentile(col(c), lit(lo)); val q3 = percentile(col(c), lit(hi))
       Seq(q1 - lit(k) * (q3 - q1), q3 + lit(k) * (q3 - q1))
     }
     val bounds = statistics(df, boundAggs).grouped(2)
@@ -60,11 +58,9 @@ object Cleaning {
     * One aggregation job, run when called; the medians enter the plan as
     * literals.
     */
-  def imputeMedians(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
+  def imputeMedians(df: DataFrame, cols: Seq[String]): DataFrame = {
     if (cols.isEmpty) return df
-    def med(c: String) =
-      if (exact) median(col(c)) else percentile_approx(col(c), lit(0.5), lit(10000))
-    val meds = statistics(df, cols.map(med))
+    val meds = statistics(df, cols.map(c => median(col(c))))
     cols.zip(meds).foldLeft(df) { case (d, (c, m)) =>
       d.withColumn(c, coalesce(col(c), m))
     }
@@ -76,10 +72,8 @@ object Cleaning {
     */
   def twoPassClean(df: DataFrame, numericCols: Seq[String],
                    categoricalDefaults: Map[String, String] = Map.empty,
-                   lo: Double = 0.05, hi: Double = 0.95, k: Double = 1.5,
-                   exact: Boolean = true): DataFrame = {
-    val out = imputeMedians(nullOutliers(df, numericCols, lo, hi, k, exact),
-      numericCols, exact)
+                   lo: Double = 0.05, hi: Double = 0.95, k: Double = 1.5): DataFrame = {
+    val out = imputeMedians(nullOutliers(df, numericCols, lo, hi, k), numericCols)
     if (categoricalDefaults.isEmpty) out else out.na.fill(categoricalDefaults)
   }
 }

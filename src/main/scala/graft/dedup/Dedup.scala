@@ -808,7 +808,7 @@ object Dedup {
     pairs.select("id1", "id2")
       .join(v.select(col(idCol).as("id1"), col("__v").as("__v1")), Seq("id1"))
       .join(v.select(col(idCol).as("id2"), col("__v").as("__v2")), Seq("id2"))
-      .withColumn("cos", round(graft.functions.VectorFunctions.cosineNative(col("__v1"), col("__v2")), 4))
+      .withColumn("cos", round(org.apache.spark.sql.graft.VectorFunctions.cosineNative(col("__v1"), col("__v2")), 4))
       .select("id1", "id2", "cos")
   }
 
@@ -826,7 +826,7 @@ object Dedup {
     val r = v.select(col("__bucket"), col(idCol).as("id2"), col("__v").as("__v2"))
     l.join(r, Seq("__bucket"))
       .filter(col("id1") < col("id2"))
-      .withColumn("cos", round(graft.functions.VectorFunctions.cosineNative(col("__v1"), col("__v2")), 4))
+      .withColumn("cos", round(org.apache.spark.sql.graft.VectorFunctions.cosineNative(col("__v1"), col("__v2")), 4))
       .filter(col("cos") >= threshold)
       .select("id1", "id2", "cos").distinct()
   }

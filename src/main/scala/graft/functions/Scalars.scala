@@ -64,7 +64,4 @@ object Scalars {
 
   /** F9 (transform.py:203): range derive. */
   def range(hi: Column, lo: Column): Column = hi - lo
-
-  /** F10 (load.py:192): publish rounding. */
-  def round2(c: Column): Column = round(c, 2)
 }

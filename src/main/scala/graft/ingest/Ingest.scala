@@ -68,11 +68,10 @@ object Ingest {
     * post-nulling medians) run here, once, so every consumer of the
     * returned frame is a scan plus a map-side projection.
     */
-  def transform(raw: DataFrame, exact: Boolean = true): DataFrame = {
+  def transform(raw: DataFrame): DataFrame = {
     val flat = flatten(raw)
     val cleaned = Cleaning.twoPassClean(
-      flat, WeatherSchema.numericCols, WeatherSchema.categoricalDefaults,
-      exact = exact)
+      flat, WeatherSchema.numericCols, WeatherSchema.categoricalDefaults)
     Scalars.withTimeFeatures(cleaned, "timestamp")
       .withColumn("temp_range", Scalars.range(col("temp_max"), col("temp_min")))
   }

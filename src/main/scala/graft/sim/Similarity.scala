@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.graft.VectorFunctions
 
 /** Embedding similarity search (north-star extension, repo BASELINE.json):
   * cosine top-k over an `array<float>` column.
@@ -129,7 +129,7 @@ object Similarity {
     * derived for exactly the elements present.
     */
   def srpBucket(v: Column, nPlanes: Int, seed: Int = 42, maxDim: Int = 512): Column =
-    org.apache.spark.sql.graft.VectorFunctions.srpBucketNative(v, nPlanes, seed)
+    VectorFunctions.srpBucketNative(v, nPlanes, seed)
 
   /** Target SRP bucket occupancy: planes are sized so each of the 2^p
     * buckets holds ~this many vectors. One target serves both the exact
@@ -200,7 +200,7 @@ object Similarity {
     // a cost ∝ nPlanes that at the ×100 probe ate the auto-sizing win
     def withBuckets(df: DataFrame, keep: Seq[Column], v: Column): DataFrame =
       df.select(keep :+
-        org.apache.spark.sql.graft.VectorFunctions
+        VectorFunctions
           .srpBucketsNative(v, planes, nTables).as(Seq("__t", "__b")): _*)
     val q = withBuckets(
       queries.select(col(idCol).as(queryIdCol), toDouble(col(vecCol)).as("__qv")),
@@ -322,7 +322,7 @@ object Similarity {
     // where they would re-evaluate once per emitted (table, bucket) row —
     // nTables× redundant O(dim) work per vector (caught in the r7 plan
     // ledger review); as bare attributes they pass through instead.
-    def gen(v: Column): Column = org.apache.spark.sql.graft.VectorFunctions
+    def gen(v: Column): Column = VectorFunctions
       .srpBucketsNative(v, planes, nTables).as(Seq("__t", "__b"))
     val c = cBase.select(col(idCol).as("neighbor_id"), q8c.as("__qc"),
         sc.as("__sc"), col(vecCol))
@@ -358,7 +358,7 @@ object Similarity {
     val q = queries
       .select(col(idCol).as(queryIdCol), toDouble(col(vecCol)).as("__qv"))
       .select(col(queryIdCol),
-        org.apache.spark.sql.graft.VectorFunctions
+        VectorFunctions
           .srpBucketsNative(col("__qv"), idx.planes, idx.nTables).as(Seq("__t", "__b")))
       .withColumn("__grp", SrpIndex.grpOf(col("__t"), col("__b"), idx.groups))
     idx.buckets.select("neighbor_id", "__t", "__b", "__grp")
@@ -401,7 +401,7 @@ object Similarity {
     val q = queries
       .select(col(idCol).as(queryIdCol), toDouble(col(vecCol)).as("__qv"))
       .select(col(queryIdCol), col("__qv"),
-        org.apache.spark.sql.graft.VectorFunctions
+        VectorFunctions
           .srpBucketsNative(col("__qv"), idx.planes, idx.nTables).as(Seq("__t", "__b")))
       .withColumn("__grp", SrpIndex.grpOf(col("__t"), col("__b"), idx.groups))
     val candidates = idx.buckets.select("neighbor_id", "__t", "__b", "__grp")
@@ -450,7 +450,7 @@ object Similarity {
     // pass-through — same placement rule as annTopKInt8)
     val q = qBase.select(col(idCol).as(queryIdCol), q8c.as("__qq"), col(vecCol))
       .select(col(queryIdCol), col("__qq"),
-        org.apache.spark.sql.graft.VectorFunctions
+        VectorFunctions
           .srpBucketsNative(col(vecCol), idx.planes, idx.nTables).as(Seq("__t", "__b")))
       .withColumn("__grp", SrpIndex.grpOf(col("__t"), col("__b"), idx.groups))
     val candidates = idx.buckets
@@ -576,7 +576,7 @@ object Similarity {
     // through (same placement rule as annTopKInt8)
     val q = qBase.select(col(idCol).as(queryIdCol), q8c.as("__qq"), col(vecCol))
       .select(col(queryIdCol), col("__qq"),
-        org.apache.spark.sql.graft.VectorFunctions
+        VectorFunctions
           .nearestCellsGenNative(col(vecCol), cents, probes).as("__cell"))
     val scored = c.join(broadcast(q), Seq("__cell"))
       .filter(col(queryIdCol) =!= col("neighbor_id"))
@@ -599,7 +599,7 @@ object Similarity {
     val c = assigned.select(col(idCol).as("neighbor_id"), col("__cell"))
     val q = queries.select(col(idCol).as(queryIdCol), toDouble(col(vecCol)).as("__qv"))
       .select(col(queryIdCol),
-        org.apache.spark.sql.graft.VectorFunctions
+        VectorFunctions
           .nearestCellsGenNative(col("__qv"), cents, probes).as("__cell"))
     c.join(broadcast(q), Seq("__cell"))
       .filter(col(queryIdCol) =!= col("neighbor_id"))
@@ -673,14 +673,14 @@ object Similarity {
                       queries: DataFrame, k: Int, nProbes: Int = 0,
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       queryIdCol: String = "query_id"): DataFrame = {
-    import graft.functions.VectorFunctions.cosineNative
+    import VectorFunctions.cosineNative
     val probes = if (nProbes > 0) nProbes else autoProbes(cents.length)
     val c = assigned.select(col(idCol).as("neighbor_id"),
       toDouble(col(vecCol)).as("__cv"), col("__cell"))
     // custom generator, not explode-of-array (see ivfTopKInt8Assigned)
     val q = queries.select(col(idCol).as(queryIdCol), toDouble(col(vecCol)).as("__qv"))
       .select(col(queryIdCol), col("__qv"),
-        org.apache.spark.sql.graft.VectorFunctions
+        VectorFunctions
           .nearestCellsGenNative(col("__qv"), cents, probes).as("__cell"))
     val scored = c.join(broadcast(q), Seq("__cell"))
       .filter(col(queryIdCol) =!= col("neighbor_id"))
@@ -1136,7 +1136,7 @@ object Similarity {
           .pqLutNative(col("__unit"), codebooks).as("__lut"),
         toDouble(col(vecCol)).as("__qv"))
       .select(col(queryIdCol), col("__lut"),
-        org.apache.spark.sql.graft.VectorFunctions
+        VectorFunctions
           .nearestCellsGenNative(col("__qv"), cents, probes).as("__cell"))
     val scored = c.join(broadcast(q), Seq("__cell"))
       .filter(col(queryIdCol) =!= col("neighbor_id"))

@@ -1,32 +1,13 @@
-// In the Spark namespace for the same reason as VectorExpressions: the
-// Column <-> Expression bridge is private[sql].
+// In the Spark namespace for the same reason as Kernels.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Content-keyed wrapper for a driver-built bigram language model —
-  * [[UnigramModel]]'s discipline one conditioning token up: NESTED maps
-  * (w₁ → (w₂ → log-probability)) so the hot loop probes with the two
-  * scanned tokens directly — no per-position bigram-string allocation,
-  * no UTF8String concat. Equality is deep map equality; hashCode is
-  * memoized (canonicalization passes compare expressions repeatedly).
-  */
-final class BigramModel(
-    val lp: java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Double]])
-  extends Serializable {
-  override def equals(o: Any): Boolean = o match {
-    case m: BigramModel => (m eq this) || lp.equals(m.lp)
-    case _ => false
-  }
-  override lazy val hashCode: Int = lp.hashCode()
-}
 
 /** Per-document bigram score over a token array in ONE map-side pass:
   * returns (n_bigrams, Σ decimal(20,10)(lp(w₁,w₂))) as a struct — the
@@ -46,15 +27,17 @@ final class BigramModel(
   * from the model are counted but contribute nothing (unreachable when
   * the model was built from the same corpus).
   */
-case class BigramLogProbSum(child: Expression, model: BigramModel)
-  extends UnaryExpression with ImplicitCastInputTypes {
+case class BigramLogProbSum(
+    child: Expression,
+    model: ContentKeyed[java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Double]]])
+  extends Kernel1[ArrayData, InternalRow] {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
     StructField("n_bigrams", LongType, nullable = false),
     StructField("lp_sum", DecimalType(38, 10), nullable = false)))
   override def prettyName: String = "graft_bigram_lp_sum"
 
-  def score(arr: ArrayData): InternalRow = {
+  def kernel(arr: ArrayData): InternalRow = {
     val n = arr.numElements()
     var sum = java.math.BigDecimal.ZERO
     var nb = 0L
@@ -62,7 +45,7 @@ case class BigramLogProbSum(child: Expression, model: BigramModel)
     while (i < n) {
       if (!arr.isNullAt(i - 1) && !arr.isNullAt(i)) {
         nb += 1L
-        val inner = model.lp.get(arr.getUTF8String(i - 1))
+        val inner = model.value.get(arr.getUTF8String(i - 1))
         if (inner != null) {
           val lp = inner.get(arr.getUTF8String(i))
           if (lp != null) {
@@ -76,14 +59,6 @@ case class BigramLogProbSum(child: Expression, model: BigramModel)
     InternalRow(nb, Decimal(scala.math.BigDecimal(sum), 38, 10))
   }
 
-  protected override def nullSafeEval(input: Any): Any =
-    score(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigramModel", this, classOf[BigramLogProbSum].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.score($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -91,8 +66,10 @@ case class BigramLogProbSum(child: Expression, model: BigramModel)
 /** Column-API entry point: takes the model keyed by the "w₁ w₂" bigram
   * strings the relational form aggregates (tokens never contain
   * whitespace — they come from a \s+ split — so the single-space split
-  * back into (w₁, w₂) is unambiguous) and nests it for the two-probe
-  * lookup.
+  * back into (w₁, w₂) is unambiguous) and nests it (w₁ → (w₂ →
+  * log-probability)) so the hot loop probes with the two scanned tokens
+  * directly — no per-position bigram-string allocation, no UTF8String
+  * concat.
   */
 object BigramFunctions {
   def bigramLogProbSum(tokens: Column, lp: Map[String, Double]): Column = {
@@ -112,6 +89,6 @@ object BigramFunctions {
       inner.put(w2, Double.box(v)): Unit
     }
     ExpressionUtils.column(BigramLogProbSum(
-      ExpressionUtils.expression(tokens), new BigramModel(m)))
+      ExpressionUtils.expression(tokens), new ContentKeyed(m, s"bigram model ${lp.size} bigrams")))
   }
 }

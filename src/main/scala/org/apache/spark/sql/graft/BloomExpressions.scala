@@ -1,34 +1,15 @@
-// In the Spark namespace for the same reason as VectorExpressions: the
-// Column <-> Expression bridge is private[sql].
+// In the Spark namespace for the same reason as Kernels.
 package org.apache.spark.sql.graft
 
 import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, StringType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
-
-/** Content-keyed wrapper for the serialized sketch bytes. A bare
-  * `Array[Byte]` case-class field compares by ARRAY IDENTITY, so two
-  * semantically identical probe expressions would never compare equal —
-  * canonicalization, common-subexpression elimination and exchange reuse
-  * could then never unify two references to the same sketch, and a plan
-  * probing the same sketch twice would ship two multi-MB copies in the
-  * task binary. `equals` compares content; `hashCode` is memoized once
-  * (the sketch can be MBs — a per-call scan would make every
-  * canonicalization pass O(sketch bytes)).
-  */
-final class BloomSketchBytes(val bytes: Array[Byte]) extends Serializable {
-  override def equals(o: Any): Boolean = o match {
-    case b: BloomSketchBytes => (b eq this) || java.util.Arrays.equals(bytes, b.bytes)
-    case _ => false
-  }
-  override lazy val hashCode: Int = java.util.Arrays.hashCode(bytes)
-}
 
 /** Membership probe against a Bloom filter built at the driver (a
   * `treeAggregate` of `BloomFilter.create` merges — see
@@ -42,29 +23,18 @@ final class BloomSketchBytes(val bytes: Array[Byte]) extends Serializable {
   * agree byte-for-byte. Bloom guarantees no false negatives; the
   * false-positive rate is the builder's `fpp`.
   *
-  * The task ships only `bloomBytes` (referencing the materialized filter
-  * from codegen would serialize the sketch a second time); each task
-  * lazily deserializes it once and the generated code probes through a
-  * bound reference to this expression — no UDF, no boxed lambda.
+  * The task ships only the sketch bytes; each task lazily deserializes
+  * them once and probes the filter — no UDF, no boxed lambda.
   */
-case class BloomMightContainString(child: Expression, sketch: BloomSketchBytes)
-  extends UnaryExpression with ImplicitCastInputTypes {
+case class BloomMightContainString(child: Expression, sketch: ContentKeyed[Array[Byte]])
+  extends Kernel1[UTF8String, Boolean] {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bloom_contains"
 
-  @transient private lazy val filter: BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(sketch.bytes))
+  @transient private lazy val filter = BloomFunctions.read(sketch)
 
-  def contains(s: UTF8String): Boolean = filter.mightContainBinary(s.getBytes)
-
-  protected override def nullSafeEval(input: Any): Any =
-    contains(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomProbe", this, classOf[BloomMightContainString].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.contains($c)")
-  }
+  def kernel(s: UTF8String): Boolean = filter.mightContainBinary(s.getBytes)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -77,25 +47,15 @@ case class BloomMightContainString(child: Expression, sketch: BloomSketchBytes)
   * side streams past the sketch in its scan stage and rows that cannot
   * match never reach the shuffle.
   */
-case class BloomMightContainLong(child: Expression, sketch: BloomSketchBytes)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(org.apache.spark.sql.types.LongType)
+case class BloomMightContainLong(child: Expression, sketch: ContentKeyed[Array[Byte]])
+  extends Kernel1[Long, Boolean] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bloom_contains_long"
 
-  @transient private lazy val filter: BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(sketch.bytes))
+  @transient private lazy val filter = BloomFunctions.read(sketch)
 
-  def contains(v: Long): Boolean = filter.mightContainLong(v)
-
-  protected override def nullSafeEval(input: Any): Any =
-    contains(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomProbeL", this, classOf[BloomMightContainLong].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.contains($c)")
-  }
+  def kernel(v: Long): Boolean = filter.mightContainLong(v)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -109,15 +69,15 @@ case class BloomMightContainLong(child: Expression, sketch: BloomSketchBytes)
   * tight loop per row. Null elements count as not-contained (shingle
   * arrays never contain them).
   */
-case class BloomCountContained(child: Expression, sketch: BloomSketchBytes)
-  extends StringArrayHashExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+case class BloomCountContained(child: Expression, sketch: ContentKeyed[Array[Byte]])
+  extends Kernel1[ArrayData, Long] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def dataType: DataType = LongType
   override def prettyName: String = "graft_bloom_count"
 
-  @transient private lazy val filter: BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(sketch.bytes))
+  @transient private lazy val filter = BloomFunctions.read(sketch)
 
-  def countContained(arr: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
+  def kernel(arr: ArrayData): Long = {
     val n = arr.numElements()
     var c = 0L
     var i = 0
@@ -129,29 +89,22 @@ case class BloomCountContained(child: Expression, sketch: BloomSketchBytes)
     c
   }
 
-  protected override def nullSafeEval(input: Any): Any =
-    countContained(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomCounter", this, classOf[BloomCountContained].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.countContained($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Column-API entry points (wrap the raw bytes in the content-keyed
-  * [[BloomSketchBytes]] so equal sketches make equal expressions).
+/** Column-API entry points (wrap the raw bytes in a [[ContentKeyed]]
+  * parameter so equal sketches make equal expressions).
   */
 object BloomFunctions {
+  private def sketch(bytes: Array[Byte]) = new ContentKeyed(bytes, s"bloom ${bytes.length} bytes")
+  private[graft] def read(sketch: ContentKeyed[Array[Byte]]): BloomFilter =
+    BloomFilter.readFrom(new ByteArrayInputStream(sketch.value))
+
   def bloomContains(c: Column, bloomBytes: Array[Byte]): Column =
-    ExpressionUtils.column(BloomMightContainString(
-      ExpressionUtils.expression(c), new BloomSketchBytes(bloomBytes)))
+    ExpressionUtils.column(BloomMightContainString(ExpressionUtils.expression(c), sketch(bloomBytes)))
   def bloomCountContained(c: Column, bloomBytes: Array[Byte]): Column =
-    ExpressionUtils.column(BloomCountContained(
-      ExpressionUtils.expression(c), new BloomSketchBytes(bloomBytes)))
+    ExpressionUtils.column(BloomCountContained(ExpressionUtils.expression(c), sketch(bloomBytes)))
   def bloomContainsLong(c: Column, bloomBytes: Array[Byte]): Column =
-    ExpressionUtils.column(BloomMightContainLong(
-      ExpressionUtils.expression(c), new BloomSketchBytes(bloomBytes)))
+    ExpressionUtils.column(BloomMightContainLong(ExpressionUtils.expression(c), sketch(bloomBytes)))
 }

@@ -1,10 +1,10 @@
-// In the Spark namespace for the same reason as VectorExpressions: the
+// In the Spark namespace for the same reason as Kernels: the
 // FunctionRegistry plumbing used by expression builders is private[sql].
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SQL-surface registration for the native vector expressions, so
   * `spark.sql("SELECT graft_cosine(a, b) ...")` works wherever the
@@ -31,58 +31,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftFunctions {
   type Builder = Seq[Expression] => Expression
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[CosineSimilarity].getName, null, name, usage, "")
-
   private def litInt(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+    case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
   }
 
+  /** One SQL function: its name is the `prettyName` of what `build`
+    * makes (built once here over `arity` placeholder literals), and
+    * `usage` follows the name in its description.
+    */
+  private def fn(arity: Int, usage: String)(build: Builder): (String, ExpressionInfo, Builder) = {
+    val proto = build(Seq.fill(arity)(Literal(1)))
+    val name = proto.prettyName
+    (name, new ExpressionInfo(proto.getClass.getName, null, name, name + usage, ""), build)
+  }
+
   val all: Seq[(String, ExpressionInfo, Builder)] = Seq(
-    ("graft_cosine",
-      info("graft_cosine", "graft_cosine(a, b) - cosine similarity of two vectors, null on zero norm"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))),
-    ("graft_dot",
-      info("graft_dot", "graft_dot(a, b) - dot product of two vectors"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))),
-    ("graft_dot_int8",
-      info("graft_dot_int8", "graft_dot_int8(a, b) - integer dot product of two int8 (tinyint) vectors"),
-      (children: Seq[Expression]) => Int8DotProduct(children(0), children(1))),
-    ("graft_int8_quantize",
-      info("graft_int8_quantize",
-        "graft_int8_quantize(v) - symmetric int8 quantization: floor(x*127/max_abs + 0.5) as array<tinyint>"),
-      (children: Seq[Expression]) => Int8QuantizeVec(children.head)),
-    ("graft_linf",
-      info("graft_linf", "graft_linf(v) - L-infinity norm max(abs(x_i)) of a vector"),
-      (children: Seq[Expression]) => MaxAbs(children.head)),
-    ("graft_srp_bucket",
-      info("graft_srp_bucket",
-        "graft_srp_bucket(v, nPlanes, seed) - signed-random-projection LSH bucket id"),
-      (children: Seq[Expression]) => SrpBucket(children(0),
-        litInt(children(1), "nPlanes"), litInt(children(2), "seed"))),
-    ("graft_simhash",
-      info("graft_simhash", "graft_simhash(tokens) - 64-bit SimHash of a string array"),
-      (children: Seq[Expression]) => SimHash64(children.head)),
-    ("graft_minhash",
-      info("graft_minhash", "graft_minhash(shingles, k) - k-element MinHash signature"),
-      (children: Seq[Expression]) => MinHashSignature(children(0), litInt(children(1), "k"))),
-    ("graft_word_shingles",
-      info("graft_word_shingles", "graft_word_shingles(text, n) - deduplicated word n-grams"),
-      (children: Seq[Expression]) => WordShingles(children(0), litInt(children(1), "n"))),
-    ("graft_char_shingles",
-      info("graft_char_shingles", "graft_char_shingles(text, n) - deduplicated char n-grams"),
-      (children: Seq[Expression]) => CharShingles(children(0), litInt(children(1), "n"))),
-    ("graft_lsh_bands",
-      info("graft_lsh_bands",
-        "graft_lsh_bands(shingles, bands, rowsPerBand) - LSH band bucket ids from a shingle array"),
-      (children: Seq[Expression]) => LshBandBuckets(children(0),
-        litInt(children(1), "bands"), litInt(children(2), "rowsPerBand"))),
-    ("graft_winnow",
-      info("graft_winnow",
-        "graft_winnow(text, k, w) - MOSS winnowing fingerprints (k-gram hashes, window-w minima)"),
-      (children: Seq[Expression]) => Winnow(children(0),
-        litInt(children(1), "k"), litInt(children(2), "w"))))
+    fn(2, "(a, b) - cosine similarity of two vectors, null on zero norm")(
+      c => CosineSimilarity(c(0), c(1))),
+    fn(2, "(a, b) - dot product of two vectors")(c => DotProduct(c(0), c(1))),
+    fn(2, "(a, b) - integer dot product of two int8 (tinyint) vectors")(
+      c => Int8DotProduct(c(0), c(1))),
+    fn(1, "(v) - symmetric int8 quantization: floor(x*127/max_abs + 0.5) as array<tinyint>")(
+      c => Int8QuantizeVec(c.head)),
+    fn(1, "(v) - L-infinity norm max(abs(x_i)) of a vector")(c => MaxAbs(c.head)),
+    fn(3, "(v, nPlanes, seed) - signed-random-projection LSH bucket id")(
+      c => SrpBucket(c(0), litInt(c(1), "nPlanes"), litInt(c(2), "seed"))),
+    fn(1, "(tokens) - 64-bit SimHash of a string array")(c => SimHash64(c.head)),
+    fn(2, "(shingles, k) - k-element MinHash signature")(
+      c => MinHashSignature(c(0), litInt(c(1), "k"))),
+    fn(2, "(text, n) - deduplicated word n-grams")(c => WordShingles(c(0), litInt(c(1), "n"))),
+    fn(2, "(text, n) - deduplicated char n-grams")(c => CharShingles(c(0), litInt(c(1), "n"))),
+    fn(3, "(shingles, bands, rowsPerBand) - LSH band bucket ids from a shingle array")(
+      c => LshBandBuckets(c(0), litInt(c(1), "bands"), litInt(c(2), "rowsPerBand"))),
+    fn(3, "(text, k, w) - MOSS winnowing fingerprints (k-gram hashes, window-w minima)")(
+      c => Winnow(c(0), litInt(c(1), "k"), litInt(c(2), "w"))))
 
   /** Register into an already-running session's function registry. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

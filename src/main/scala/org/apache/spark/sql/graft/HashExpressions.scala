@@ -1,20 +1,19 @@
-// Spark namespace for the same reason as VectorExpressions (private[sql]
-// Column bridge + codegen plumbing). Public API: graft.dedup.Dedup /
-// graft.text.Text delegate here.
+// In the Spark namespace for the same reason as Kernels. Public API:
+// graft.dedup.Dedup / graft.text.Text delegate here.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Tight-loop implementations shared by interpreted eval and codegen (the
-  * generated code just calls these static methods — one invocation per row,
-  * no per-element expression-tree eval, unlike the higher-order-function
-  * formulation which pays interpreted lambda dispatch per element).
+/** Tight-loop implementations the hashing and shingling kernels call —
+  * one invocation per row, no per-element expression-tree eval, unlike
+  * the higher-order-function formulation which pays interpreted lambda
+  * dispatch per element.
   *
   * Hashing: xxhash64 of the UTF-8 bytes; the k MinHash "permutations" use
   * the standard two-hash mix g_i(s) = h1(s) + i·h2(s)
@@ -196,76 +195,55 @@ object HashImpl {
   }
 }
 
-abstract class StringArrayHashExpression extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-}
-
 case class MinHashSignature(child: Expression, k: Int, seed: Long = 42L)
-  extends StringArrayHashExpression {
-  override def prettyName: String = "graft_minhash"
+  extends Kernel1[ArrayData, ArrayData] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected override def nullSafeEval(input: Any): Any =
-    HashImpl.minhash(input.asInstanceOf[ArrayData], k, seed)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.HashImpl.minhash($c, $k, ${seed}L)")
+  override def prettyName: String = "graft_minhash"
+  def kernel(shingles: ArrayData): ArrayData = HashImpl.minhash(shingles, k, seed)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class LshBandBuckets(child: Expression, bands: Int, rowsPerBand: Int, seed: Long = 42L)
-  extends StringArrayHashExpression {
-  override def prettyName: String = "graft_lsh_bands"
+  extends Kernel1[ArrayData, ArrayData] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected override def nullSafeEval(input: Any): Any =
-    HashImpl.lshBands(input.asInstanceOf[ArrayData], bands, rowsPerBand, seed)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.HashImpl.lshBands($c, $bands, $rowsPerBand, ${seed}L)")
+  override def prettyName: String = "graft_lsh_bands"
+  def kernel(shingles: ArrayData): ArrayData = HashImpl.lshBands(shingles, bands, rowsPerBand, seed)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class LshBandsAndHashes(child: Expression, bands: Int, rowsPerBand: Int,
                              seed: Long = 42L)
-  extends StringArrayHashExpression {
+  extends Kernel1[ArrayData, InternalRow] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def dataType: DataType = StructType(Seq(
+    StructField("bands", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("hashes", ArrayType(LongType, containsNull = false), nullable = false)))
   override def prettyName: String = "graft_lsh_bands_hashes"
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("bands",
-      ArrayType(LongType, containsNull = false), nullable = false),
-    org.apache.spark.sql.types.StructField("hashes",
-      ArrayType(LongType, containsNull = false), nullable = false)))
-  protected override def nullSafeEval(input: Any): Any =
-    HashImpl.lshBandsAndHashes(input.asInstanceOf[ArrayData], bands, rowsPerBand, seed)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.HashImpl.lshBandsAndHashes($c, $bands, $rowsPerBand, ${seed}L)")
+  def kernel(shingles: ArrayData): InternalRow =
+    HashImpl.lshBandsAndHashes(shingles, bands, rowsPerBand, seed)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class ShingleHashes(child: Expression, seed: Long = 42L)
-  extends StringArrayHashExpression {
-  override def prettyName: String = "graft_shingle_hashes"
+  extends Kernel1[ArrayData, ArrayData] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected override def nullSafeEval(input: Any): Any =
-    HashImpl.elementHashes(input.asInstanceOf[ArrayData], seed)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.HashImpl.elementHashes($c, ${seed}L)")
+  override def prettyName: String = "graft_shingle_hashes"
+  def kernel(shingles: ArrayData): ArrayData = HashImpl.elementHashes(shingles, seed)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class SimHash64(child: Expression, seed: Long = 42L)
-  extends StringArrayHashExpression {
-  override def prettyName: String = "graft_simhash"
+case class SimHash64(child: Expression, seed: Long = 42L) extends Kernel1[ArrayData, Long] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
-  protected override def nullSafeEval(input: Any): Any =
-    HashImpl.simhash(input.asInstanceOf[ArrayData], seed)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.HashImpl.simhash($c, ${seed}L)")
+  override def prettyName: String = "graft_simhash"
+  def kernel(tokens: ArrayData): Long = HashImpl.simhash(tokens, seed)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -398,15 +376,11 @@ object WinnowImpl {
 }
 
 /** Winnowing document fingerprints (rolling k-gram hash + window minima). */
-case class Winnow(child: Expression, k: Int, w: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
+case class Winnow(child: Expression, k: Int, w: Int) extends Kernel1[UTF8String, ArrayData] {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_winnow"
-  protected override def nullSafeEval(input: Any): Any =
-    WinnowImpl.winnow(input.asInstanceOf[UTF8String], k, w)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.WinnowImpl.winnow($c, $k, $w)")
+  def kernel(text: UTF8String): ArrayData = WinnowImpl.winnow(text, k, w)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -414,42 +388,30 @@ case class Winnow(child: Expression, k: Int, w: Int)
 /** Positional k-gram rolling hashes (winnowing's hashing phase, exposed so
   * the window-minimum selection can be replayed over a dump of these).
   */
-case class KgramHashes(child: Expression, k: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
+case class KgramHashes(child: Expression, k: Int) extends Kernel1[UTF8String, ArrayData] {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_kgram_hashes"
-  protected override def nullSafeEval(input: Any): Any =
-    WinnowImpl.kgramHashes(input.asInstanceOf[UTF8String], k)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.WinnowImpl.kgramHashes($c, $k)")
+  def kernel(text: UTF8String): ArrayData = WinnowImpl.kgramHashes(text, k)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-abstract class StringShingleExpression extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
 }
 
 case class WordShingles(child: Expression, n: Int, distinct: Boolean = true)
-  extends StringShingleExpression {
+  extends Kernel1[UTF8String, ArrayData] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_word_shingles"
-  protected override def nullSafeEval(input: Any): Any =
-    ShingleImpl.wordShingles(input.asInstanceOf[UTF8String], n, distinct)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.ShingleImpl.wordShingles($c, $n, $distinct)")
+  def kernel(text: UTF8String): ArrayData = ShingleImpl.wordShingles(text, n, distinct)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class CharShingles(child: Expression, n: Int) extends StringShingleExpression {
+case class CharShingles(child: Expression, n: Int) extends Kernel1[UTF8String, ArrayData] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_char_shingles"
-  protected override def nullSafeEval(input: Any): Any =
-    ShingleImpl.charShingles(input.asInstanceOf[UTF8String], n)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.ShingleImpl.charShingles($c, $n)")
+  def kernel(text: UTF8String): ArrayData = ShingleImpl.charShingles(text, n)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -457,13 +419,12 @@ case class CharShingles(child: Expression, n: Int) extends StringShingleExpressi
 /** Count of array elements contained in a fixed string set — the hot loop
   * of marker-based language ID and stopword ratios. One hash-set probe per
   * element in a tight loop (vs an interpreted `filter(x -> x.isin(...))`
-  * lambda per element). The set is built once per partition via the lazy
-  * val inside the expression instance.
+  * lambda per element). The set is built once per task, lazily.
   */
-case class CountInSet(child: Expression, set: Seq[String])
-  extends StringArrayHashExpression {
+case class CountInSet(child: Expression, set: Seq[String]) extends Kernel1[ArrayData, Int] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_count_in_set"
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
 
   @transient private lazy val lookup: java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String](set.size * 2)
@@ -471,7 +432,7 @@ case class CountInSet(child: Expression, set: Seq[String])
     s
   }
 
-  def countIn(arr: ArrayData): Int = {
+  def kernel(arr: ArrayData): Int = {
     val n = arr.numElements()
     var c = 0
     var i = 0
@@ -480,14 +441,6 @@ case class CountInSet(child: Expression, set: Seq[String])
       i += 1
     }
     c
-  }
-
-  protected override def nullSafeEval(input: Any): Any =
-    countIn(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("countInSetExpr", this, classOf[CountInSet].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.countIn($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -1,13 +1,9 @@
-// Lives in the org.apache.spark.sql namespace for the same reason as
-// VectorExpressions: the Column <-> Expression bridge
-// (classic.ExpressionUtils) and AbstractDataType are private[sql]
-// developer APIs in Spark 4. Public API surface is
-// graft.sim.Similarity's pq* methods, which delegate here.
+// In the Spark namespace for the same reason as Kernels. Public API
+// surface is graft.sim.Similarity's pq* methods, which delegate here.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataType, DoubleType}
@@ -23,10 +19,10 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataTy
   * distance computation (ADC) of Jégou et al., "Product Quantization
   * for Nearest Neighbor Search" (TPAMI 2011).
   *
-  * All three kernels are native codegen expressions for the same reason
-  * as [[IvfImpl]]: the codebook matrix rides into generated code as ONE
-  * task reference object (never literal doubles in the plan), and the
-  * per-row work is a JIT'd primitive loop. The ADC scorer is the
+  * All three are native kernels for the same reason as [[NearestCells]]:
+  * the codebook is a content-keyed parameter read from the expression
+  * (never literal doubles in the plan), and the per-row work is a JIT'd
+  * primitive loop. The ADC scorer is the
   * corpus-scan hot path — m array reads + m adds per row, no
   * allocation — which is exactly why PQ is the 100 TB embedding-scan
   * format: the scan touches m bytes per vector instead of 4·d.
@@ -143,34 +139,21 @@ object PqImpl {
 }
 
 /** array<double> → array<byte>: PQ code array (one byte per subspace).
-  * Codebooks are a Seq-of-Seq-of-Seq constructor field for content
-  * equality (the NearestCells lesson), flattened once per task into a
-  * primitive array handed to codegen as a reference object.
+  * The codebooks are a content-keyed parameter, flattened once per task
+  * into the primitive layout [[PqImpl.flatten]] defines.
   */
-case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-  extends UnaryExpression with ImplicitCastInputTypes {
-  require(codebooks.nonEmpty, "PQ codebooks must be non-empty")
-  require(codebooks.head.length <= 256,
-    s"ksub must fit a byte code, got ${codebooks.head.length}")
+case class PqEncode(child: Expression, codebooks: ContentKeyed[Seq[Seq[Seq[Double]]]])
+  extends Kernel1[ArrayData, ArrayData] {
+  require(codebooks.value.nonEmpty, "PQ codebooks must be non-empty")
+  require(codebooks.value.head.length <= 256,
+    s"ksub must fit a byte code, got ${codebooks.value.head.length}")
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(ByteType, containsNull = false)
   override def prettyName: String = "graft_pq_encode"
 
-  @transient private lazy val (flat, m, ksub, dsub) = PqImpl.flatten(codebooks)
+  @transient private lazy val (flat, m, ksub, dsub) = PqImpl.flatten(codebooks.value)
 
-  protected override def nullSafeEval(input: Any): Any =
-    PqImpl.encode(input.asInstanceOf[ArrayData], flat, m, ksub, dsub)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = ctx.addReferenceObj("pqFlat", flat, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.PqImpl.encode($c, $f, $m, $ksub, $dsub)")
-  }
-
-  // keep the codebook doubles out of every treeString/explain/ledger
-  // dump (the NearestCells toString rationale)
-  override def toString: String =
-    s"$prettyName($child, ${codebooks.length}x${codebooks.head.length} codebooks)"
+  def kernel(v: ArrayData): ArrayData = PqImpl.encode(v, flat, m, ksub, dsub)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -180,49 +163,34 @@ case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
   * (m·ksub squared subspace distances). Same codebook plumbing as
   * [[PqEncode]].
   */
-case class PqLut(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-  extends UnaryExpression with ImplicitCastInputTypes {
-  require(codebooks.nonEmpty, "PQ codebooks must be non-empty")
+case class PqLut(child: Expression, codebooks: ContentKeyed[Seq[Seq[Seq[Double]]]])
+  extends Kernel1[ArrayData, ArrayData] {
+  require(codebooks.value.nonEmpty, "PQ codebooks must be non-empty")
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_pq_lut"
 
-  @transient private lazy val (flat, m, ksub, dsub) = PqImpl.flatten(codebooks)
+  @transient private lazy val (flat, m, ksub, dsub) = PqImpl.flatten(codebooks.value)
 
-  protected override def nullSafeEval(input: Any): Any =
-    PqImpl.lut(input.asInstanceOf[ArrayData], flat, m, ksub, dsub)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = ctx.addReferenceObj("pqFlat", flat, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.PqImpl.lut($c, $f, $m, $ksub, $dsub)")
-  }
-
-  override def toString: String =
-    s"$prettyName($child, ${codebooks.length}x${codebooks.head.length} codebooks)"
+  def kernel(v: ArrayData): ArrayData = PqImpl.lut(v, flat, m, ksub, dsub)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** (array<double> lut, array<byte> codes) → double: ADC approximate
-  * squared L2 distance. The corpus-scan inner loop — no reference
-  * objects at all, just the two columns and the ksub stride.
+  * squared L2 distance. The corpus-scan inner loop — no parameter at
+  * all, just the two columns and the ksub stride.
   */
 case class PqAdc(left: Expression, right: Expression, ksub: Int)
-  extends BinaryExpression with ImplicitCastInputTypes {
+  extends Kernel2[ArrayData, ArrayData, Double] {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(ByteType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_pq_adc"
   override def nullable: Boolean = true
 
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    PqImpl.adc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], ksub)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) =>
-      s"org.apache.spark.sql.graft.PqImpl.adc($l, $r, $ksub)")
+  def kernel(lut: ArrayData, codes: ArrayData): Double = PqImpl.adc(lut, codes, ksub)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -230,10 +198,13 @@ case class PqAdc(left: Expression, right: Expression, ksub: Int)
 
 /** Column-API entry points for the PQ expressions. */
 object PqFunctions {
+  private def books(codebooks: Seq[Seq[Seq[Double]]]) = new ContentKeyed(codebooks,
+    s"${codebooks.length}x${codebooks.headOption.fold(0)(_.length)} codebooks")
+
   def pqEncodeNative(v: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
-    ExpressionUtils.column(PqEncode(ExpressionUtils.expression(v), codebooks))
+    ExpressionUtils.column(PqEncode(ExpressionUtils.expression(v), books(codebooks)))
   def pqLutNative(v: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
-    ExpressionUtils.column(PqLut(ExpressionUtils.expression(v), codebooks))
+    ExpressionUtils.column(PqLut(ExpressionUtils.expression(v), books(codebooks)))
   def pqAdcNative(lut: Column, codes: Column, ksub: Int): Column =
     ExpressionUtils.column(PqAdc(ExpressionUtils.expression(lut), ExpressionUtils.expression(codes), ksub))
 }

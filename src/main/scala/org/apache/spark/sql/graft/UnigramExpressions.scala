@@ -1,32 +1,13 @@
-// In the Spark namespace for the same reason as VectorExpressions: the
-// Column <-> Expression bridge is private[sql].
+// In the Spark namespace for the same reason as Kernels.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Content-keyed wrapper for a driver-built unigram language model
-  * (token → log-probability) — the [[BloomSketchBytes]] discipline for a
-  * hash map: a bare Map field in a case class would compare by whatever
-  * the map's equals costs on EVERY canonicalization pass, and a
-  * non-memoized hashCode would rescan the vocabulary each time. Keys are
-  * [[UTF8String]] so the hot loop probes with the scanned token directly
-  * — no per-token String decode.
-  */
-final class UnigramModel(val lp: java.util.HashMap[UTF8String, java.lang.Double])
-  extends Serializable {
-  override def equals(o: Any): Boolean = o match {
-    case m: UnigramModel => (m eq this) || lp.equals(m.lp)
-    case _ => false
-  }
-  override lazy val hashCode: Int = lp.hashCode()
-}
 
 /** Per-document unigram score over a token array in ONE map-side pass:
   * returns (n_tokens, Σ decimal(20,10)(lp(token))) as a struct. The
@@ -49,21 +30,22 @@ final class UnigramModel(val lp: java.util.HashMap[UTF8String, java.lang.Double]
   * ln(total-token-count) ≈ 35 even at 100 T tokens, so a billion-token
   * document still needs < 12 integer digits of the 28 available.
   */
-case class UnigramLogProbSum(child: Expression, model: UnigramModel)
-  extends UnaryExpression with ImplicitCastInputTypes {
+case class UnigramLogProbSum(
+    child: Expression, model: ContentKeyed[java.util.HashMap[UTF8String, java.lang.Double]])
+  extends Kernel1[ArrayData, InternalRow] {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("lp_sum", DecimalType(38, 10), nullable = false)))
   override def prettyName: String = "graft_unigram_lp_sum"
 
-  def score(arr: ArrayData): InternalRow = {
+  def kernel(arr: ArrayData): InternalRow = {
     val n = arr.numElements()
     var sum = java.math.BigDecimal.ZERO
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val lp = model.lp.get(arr.getUTF8String(i))
+        val lp = model.value.get(arr.getUTF8String(i))
         if (lp != null) {
           val dec = Decimal(lp.doubleValue())
           // never false here (|lp| ≪ 10^10), but keep the cast contract:
@@ -78,26 +60,20 @@ case class UnigramLogProbSum(child: Expression, model: UnigramModel)
     InternalRow(n.toLong, Decimal(scala.math.BigDecimal(sum), 38, 10))
   }
 
-  protected override def nullSafeEval(input: Any): Any =
-    score(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unigramModel", this, classOf[UnigramLogProbSum].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.score($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Column-API entry point (wraps the map in the content-keyed
-  * [[UnigramModel]] so equal models make equal expressions).
+/** Column-API entry point: keys the model by [[UTF8String]] so the hot
+  * loop probes with the scanned token directly (no per-token String
+  * decode), wrapped in a [[ContentKeyed]] parameter so equal models make
+  * equal expressions.
   */
 object UnigramFunctions {
   def unigramLogProbSum(tokens: Column, lp: Map[String, Double]): Column = {
     val m = new java.util.HashMap[UTF8String, java.lang.Double](lp.size * 2)
     lp.foreach { case (t, v) => m.put(UTF8String.fromString(t), Double.box(v)) }
     ExpressionUtils.column(UnigramLogProbSum(
-      ExpressionUtils.expression(tokens), new UnigramModel(m)))
+      ExpressionUtils.expression(tokens), new ContentKeyed(m, s"unigram model ${m.size} tokens")))
   }
 }

@@ -1,134 +1,77 @@
-// Lives in the org.apache.spark.sql namespace because the Column <->
-// Expression bridge (classic.ExpressionUtils) and AbstractDataType are
-// private[sql] developer APIs in Spark 4 — the standard pattern for
-// libraries shipping custom codegen expressions. Public API surface is
-// graft.functions.VectorFunctions, which delegates here.
+// In the Spark namespace for the same reason as Kernels.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, CollectionGenerator, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
-/** Native codegen vector math (north-star similarity path).
+/** Native vector math (north-star similarity path).
   *
   * The higher-order-function formulation (`aggregate(zip_with(...))`) is
   * correct but interpreted — HOFs are CodegenFallback, so every element
-  * goes through boxed lambda eval. These expressions compile to a tight
-  * primitive `for` loop inside whole-stage codegen: one pass, three
-  * accumulators, no allocation. Order of accumulation is ascending index —
-  * identical to the sequential HOF semantics and to DuckDB's
-  * list_cosine_similarity on doubles, so oracle parity is preserved
-  * bit-for-bit.
+  * goes through boxed lambda eval. These kernels are one primitive loop
+  * per row: one pass, three accumulators, no allocation. Order of
+  * accumulation is ascending index — identical to the sequential HOF
+  * semantics and to DuckDB's list_cosine_similarity on doubles, so oracle
+  * parity is preserved bit-for-bit.
   *
   * Inputs implicit-cast to array<double> (float embeddings widen per
   * element, same IEEE widening DuckDB applies).
   */
-abstract class VectorBinaryExpression extends BinaryExpression with ImplicitCastInputTypes {
+case class DotProduct(left: Expression, right: Expression)
+  extends NullableKernel2[ArrayData, ArrayData, Double] {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
-}
-
-/** dot(a, b) = Σ a_i·b_i over the common prefix of the two arrays.
-  * A null element in either array makes the result null — the same
-  * propagation `aggregate(zip_with(a, b, _*_), 0d, _+_)` exhibits.
-  */
-case class DotProduct(left: Expression, right: Expression) extends VectorBinaryExpression {
   override def prettyName: String = "graft_dot"
   override def nullable: Boolean = true
 
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** Σ a_i·b_i over the common prefix of the two arrays. A null element
+    * in either array makes the result null — the same propagation
+    * `aggregate(zip_with(a, b, _*_), 0d, _+_)` exhibits.
+    */
+  def kernel(x: ArrayData, y: ArrayData, out: NullBit): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      if (x.isNullAt(i) || y.isNullAt(i)) { out.set(); return 0.0 }
       dot += x.getDouble(i) * y.getDouble(i); i += 1
     }
     dot
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val anyNull = ctx.freshName("anyNull")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |boolean $anyNull = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $anyNull = true; break; }
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |if ($anyNull) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-/** cosine(a, b) = dot / (|a|·|b|); null when either norm is zero (matches
-  * graft.sim.Similarity.cosine and the d5/e1 oracle conventions).
-  */
-case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinaryExpression {
+case class CosineSimilarity(left: Expression, right: Expression)
+  extends NullableKernel2[ArrayData, ArrayData, Double] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
   override def nullable: Boolean = true
 
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** dot / (|a|·|b|); null when either norm is zero (matches
+    * graft.sim.Similarity.cosine and the d5/e1 oracle conventions) or on
+    * a null element, as [[DotProduct]].
+    */
+  def kernel(x: ArrayData, y: ArrayData, out: NullBit): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      if (x.isNullAt(i) || y.isNullAt(i)) { out.set(); return 0.0 }
       val xi = x.getDouble(i); val yi = y.getDouble(i)
       dot += xi * yi; na += xi * xi; nb += yi * yi
       i += 1
     }
-    if (na == 0.0 || nb == 0.0) null
+    if (na == 0.0 || nb == 0.0) { out.set(); 0.0 }
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val anyNull = ctx.freshName("anyNull")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |boolean $anyNull = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $anyNull = true; break; }
-         |  double $xi = $a.getDouble($i);
-         |  double $yi = $b.getDouble($i);
-         |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |}
-         |if ($anyNull || $na == 0.0 || $nb == 0.0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -138,52 +81,27 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
   * the prefilter scorer of the int8 ANN paths. Each product widens to
   * int (tinyint·tinyint saturates at ±16129, far inside int) and
   * accumulates into a long — overflow-free for any realistic dimension
-  * (2^47 elements would be needed to overflow). Same tight-loop codegen
-  * shape as [[DotProduct]]; the HOF formulation paid boxed lambda
-  * dispatch per element on the hottest row stream of the search.
+  * (2^47 elements would be needed to overflow). Null rule as
+  * [[DotProduct]]; the HOF formulation paid boxed lambda dispatch per
+  * element on the hottest row stream of the search.
   */
 case class Int8DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(ByteType), ArrayType(ByteType))
+  extends NullableKernel2[ArrayData, ArrayData, Long] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(ByteType), ArrayType(ByteType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_dot_int8"
   override def nullable: Boolean = true
 
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def kernel(x: ArrayData, y: ArrayData, out: NullBit): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0L
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      if (x.isNullAt(i) || y.isNullAt(i)) { out.set(); return 0L }
       dot += x.getByte(i).toInt * y.getByte(i).toInt; i += 1
     }
     dot
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val anyNull = ctx.freshName("anyNull")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |boolean $anyNull = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $anyNull = true; break; }
-         |  $acc += ((int) $a.getByte($i)) * ((int) $b.getByte($i));
-         |}
-         |if ($anyNull) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -235,22 +153,13 @@ object Int8Impl {
   * pass) per ELEMENT: O(dim²) boxed ops per row, measured ~5 ms/row at
   * dim 64 on the s7/s8 candidate streams.
   */
-case class Int8QuantizeVec(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
+case class Int8QuantizeVec(child: Expression) extends Kernel1[ArrayData, ArrayData] {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(ByteType, containsNull = false)
   override def prettyName: String = "graft_int8_quantize"
   override def nullable: Boolean = true
 
-  protected override def nullSafeEval(input: Any): Any =
-    Int8Impl.quantize(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = org.apache.spark.sql.graft.Int8Impl.quantize($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
+  def kernel(v: ArrayData): ArrayData = Int8Impl.quantize(v)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -268,54 +177,27 @@ case class Int8QuantizeVec(child: Expression)
   * pair would yield scale 2.0 for [1.0, null, 2.0] and a per-element
   * null in the quantized array. VectorExpressionsSpec pins both
   * behaviors side by side; embeddings carry no null elements, so no
-  * production path sees the divergence. Tight-loop codegen like
-  * [[DotProduct]].
+  * production path sees the divergence.
   */
-case class MaxAbs(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
+case class MaxAbs(child: Expression) extends NullableKernel1[ArrayData, Double] {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_linf"
   override def nullable: Boolean = true
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  def kernel(v: ArrayData, out: NullBit): Double = {
     val n = v.numElements()
-    if (n == 0) return null
+    if (n == 0) { out.set(); return 0.0 }
     var m = 0.0
     var i = 0
     while (i < n) {
-      if (v.isNullAt(i)) return null
+      if (v.isNullAt(i)) { out.set(); return 0.0 }
       val a = math.abs(v.getDouble(i))
       if (a.isNaN || a > m) m = a
       i += 1
     }
     m
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val a = ctx.freshName("a")
-      val anyNull = ctx.freshName("anyNull")
-      s"""
-         |int $n = $c.numElements();
-         |double $m = 0.0;
-         |boolean $anyNull = ($n == 0);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($c.isNullAt($i)) { $anyNull = true; break; }
-         |  double $a = java.lang.Math.abs($c.getDouble($i));
-         |  if (java.lang.Double.isNaN($a) || $a > $m) { $m = $a; }
-         |}
-         |if ($anyNull) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $m;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -372,18 +254,13 @@ object SrpImpl {
   * derives weights on the fly — codegen size is O(1) in planes and dim.
   */
 case class SrpBucket(child: Expression, nPlanes: Int, seed: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
+  extends Kernel1[ArrayData, Long] {
   require(nPlanes >= 1 && nPlanes <= 63, s"nPlanes must be in [1, 63], got $nPlanes")
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_srp_bucket"
 
-  protected override def nullSafeEval(input: Any): Any =
-    SrpImpl.bucket(input.asInstanceOf[ArrayData], nPlanes, seed)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.SrpImpl.bucket($c, $nPlanes, $seed)")
+  def kernel(v: ArrayData): Long = SrpImpl.bucket(v, nPlanes, seed)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -391,8 +268,8 @@ case class SrpBucket(child: Expression, nPlanes: Int, seed: Int)
 
 object IvfImpl {
   /** The (matrix, L2 norms) pair both cell expressions derive from their
-    * centroid field — ONE derivation so the corpus-assignment scalar and
-    * the probe generator can never disagree on norm handling.
+    * centroid parameter — ONE derivation so the corpus-assignment scalar
+    * and the probe generator can never disagree on norm handling.
     */
   def centroidMatrix(centroids: Seq[Seq[Double]]): (Array[Array[Double]], Array[Double]) = {
     val matrix = centroids.map(_.toArray).toArray
@@ -403,6 +280,10 @@ object IvfImpl {
     }
     (matrix, norms)
   }
+
+  /** A centroid list as an expression parameter. */
+  def centroids(cents: Seq[Seq[Double]]): ContentKeyed[Seq[Seq[Double]]] =
+    new ContentKeyed(cents, s"${cents.length} cells")
 
   /** [[nearestIds]] packed as the scalar expression's array result. */
   def nearest(v: ArrayData, cents: Array[Array[Double]], norms: Array[Double],
@@ -477,19 +358,17 @@ object IvfImpl {
 
 /** array<double> → array<int>: ids of the `nProbes` nearest centroids by
   * cosine (IVF cell assignment / probe selection). The centroid matrix is
-  * a constructor field — Seq-of-Seq so case-class equality is CONTENT
-  * equality (CSE and canonicalization can unify the corpus-assign and
-  * query-probe occurrences; an Array field would compare by identity,
-  * the BloomSketchBytes lesson) — and is handed to codegen once per task
-  * as a reference object, NOT inlined literals. The previous HOF
-  * formulation inlined nCells·dim literal doubles into the plan and
-  * evaluated interpreted per row; at the √N auto-sizing this expression
-  * enables (448 cells at the ×100 probe) that would be ~28k literal
-  * nodes and ~28k boxed ops per row. Here assignment is a JIT'd
-  * O(nCells·dim) primitive loop with O(1) codegen size.
+  * a content-keyed parameter (CSE and canonicalization can unify the
+  * corpus-assign and query-probe occurrences), read by the kernel from
+  * this expression, NOT inlined literals. The previous HOF formulation
+  * inlined nCells·dim literal doubles into the plan and evaluated
+  * interpreted per row; at the √N auto-sizing this expression enables
+  * (448 cells at the ×100 probe) that would be ~28k literal nodes and
+  * ~28k boxed ops per row. Here assignment is a JIT'd O(nCells·dim)
+  * primitive loop with O(1) codegen size.
   */
-case class NearestCells(child: Expression, centroids: Seq[Seq[Double]], nProbes: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
+case class NearestCells(child: Expression, centroids: ContentKeyed[Seq[Seq[Double]]], nProbes: Int)
+  extends Kernel1[ArrayData, ArrayData] {
   require(nProbes >= 1, s"nProbes must be >= 1, got $nProbes")
   // an EMPTY centroid list (empty corpus) yields an empty probe array —
   // explode produces no rows and getItem(0) is null, so the degenerate
@@ -499,25 +378,9 @@ case class NearestCells(child: Expression, centroids: Seq[Seq[Double]], nProbes:
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_nearest_cells"
 
-  @transient private lazy val (matrix, norms) = IvfImpl.centroidMatrix(centroids)
+  @transient private lazy val (matrix, norms) = IvfImpl.centroidMatrix(centroids.value)
 
-  protected override def nullSafeEval(input: Any): Any =
-    IvfImpl.nearest(input.asInstanceOf[ArrayData], matrix, norms, nProbes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("ivfCents", matrix, "double[][]")
-    val nm = ctx.addReferenceObj("ivfNorms", norms, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.IvfImpl.nearest($c, $m, $nm, $nProbes)")
-  }
-
-  // the matrix must not render into plan strings: TreeNode's default
-  // stringification prints every constructor arg, and at the √N sizing
-  // that is tens of KB of doubles per occurrence — in every treeString,
-  // explain, AQE log line and ledger dump (a 400 KB ledger file before
-  // this override). Equality/canonicalization still use the full content.
-  override def toString: String =
-    s"$prettyName($child, ${centroids.length} cells, $nProbes probes)"
+  def kernel(v: ArrayData): ArrayData = IvfImpl.nearest(v, matrix, norms, nProbes)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -529,10 +392,10 @@ case class NearestCells(child: Expression, centroids: Seq[Seq[Double]], nProbes:
   * let `InferFiltersFromGenerate` put `size(graft_nearest_cells(v)) > 0`
   * on the query scan, re-running the full O(nCells·dim) probe selection
   * per row a second time; custom generators are exempt (the
-  * [[SrpBucketsGenerator]] lesson). Same matrix handling as the scalar:
-  * content-comparable constructor field, elided from plan strings.
+  * [[SrpBucketsGenerator]] lesson). Same centroid parameter as the scalar.
   */
-case class NearestCellsGenerator(child: Expression, centroids: Seq[Seq[Double]], nProbes: Int)
+case class NearestCellsGenerator(child: Expression, centroids: ContentKeyed[Seq[Seq[Double]]],
+                                 nProbes: Int)
   extends UnaryExpression with CollectionGenerator with CodegenFallback
   with ImplicitCastInputTypes {
   require(nProbes >= 1, s"nProbes must be >= 1, got $nProbes")
@@ -544,7 +407,7 @@ case class NearestCellsGenerator(child: Expression, centroids: Seq[Seq[Double]],
     StructType(Seq(StructField("cell", IntegerType, nullable = false)))
   override def prettyName: String = "graft_nearest_cells_gen"
 
-  @transient private lazy val (matrix, norms) = IvfImpl.centroidMatrix(centroids)
+  @transient private lazy val (matrix, norms) = IvfImpl.centroidMatrix(centroids.value)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
@@ -552,9 +415,6 @@ case class NearestCellsGenerator(child: Expression, centroids: Seq[Seq[Double]],
     else IvfImpl.nearestIds(v.asInstanceOf[ArrayData], matrix, norms, nProbes)
       .toSeq.map(InternalRow(_))
   }
-
-  override def toString: String =
-    s"$prettyName($child, ${centroids.length} cells, $nProbes probes)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -612,24 +472,30 @@ case class SrpBucketsGenerator(child: Expression, nPlanes: Int, nTables: Int,
     copy(child = newChild)
 }
 
-/** Column-API entry points for the native expressions. */
+/** Column-API entry points for the native vector expressions. */
 object VectorFunctions {
-  def dotNative(a: Column, b: Column): Column =
-    ExpressionUtils.column(DotProduct(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-  def cosineNative(a: Column, b: Column): Column =
-    ExpressionUtils.column(CosineSimilarity(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-  def int8DotNative(a: Column, b: Column): Column =
-    ExpressionUtils.column(Int8DotProduct(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+  private def col(e: Expression): Column = ExpressionUtils.column(e)
+  private def exp(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Σ a_i·b_i as one primitive loop. */
+  def dotNative(a: Column, b: Column): Column = col(DotProduct(exp(a), exp(b)))
+  /** Cosine similarity (null on zero norms) in a single pass. */
+  def cosineNative(a: Column, b: Column): Column = col(CosineSimilarity(exp(a), exp(b)))
+  /** Integer dot over int8 arrays (array<tinyint> → bigint). */
+  def int8DotNative(a: Column, b: Column): Column = col(Int8DotProduct(exp(a), exp(b)))
   def srpBucketNative(v: Column, nPlanes: Int, seed: Int): Column =
-    ExpressionUtils.column(SrpBucket(ExpressionUtils.expression(v), nPlanes, seed))
-  def int8QuantizeNative(v: Column): Column =
-    ExpressionUtils.column(Int8QuantizeVec(ExpressionUtils.expression(v)))
-  def maxAbsNative(v: Column): Column =
-    ExpressionUtils.column(MaxAbs(ExpressionUtils.expression(v)))
+    col(SrpBucket(exp(v), nPlanes, seed))
+  /** One-pass symmetric int8 quantization (array<double> → array<tinyint>). */
+  def int8QuantizeNative(v: Column): Column = col(Int8QuantizeVec(exp(v)))
+  /** L∞ norm max|x_i| (the int8 quantization scale). */
+  def maxAbsNative(v: Column): Column = col(MaxAbs(exp(v)))
+  /** Ids of the `nProbes` nearest centroids by cosine (cos desc, id asc) —
+    * IVF cell assignment (nProbes = 1) and probe selection.
+    */
   def nearestCellsNative(v: Column, centroids: Seq[Seq[Double]], nProbes: Int): Column =
-    ExpressionUtils.column(NearestCells(ExpressionUtils.expression(v), centroids, nProbes))
+    col(NearestCells(exp(v), IvfImpl.centroids(centroids), nProbes))
   def srpBucketsNative(v: Column, nPlanes: Int, nTables: Int, baseSeed: Int = 42): Column =
-    ExpressionUtils.column(SrpBucketsGenerator(ExpressionUtils.expression(v), nPlanes, nTables, baseSeed))
+    col(SrpBucketsGenerator(exp(v), nPlanes, nTables, baseSeed))
   def nearestCellsGenNative(v: Column, centroids: Seq[Seq[Double]], nProbes: Int): Column =
-    ExpressionUtils.column(NearestCellsGenerator(ExpressionUtils.expression(v), centroids, nProbes))
+    col(NearestCellsGenerator(exp(v), IvfImpl.centroids(centroids), nProbes))
 }

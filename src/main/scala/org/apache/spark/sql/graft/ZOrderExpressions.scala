@@ -1,11 +1,9 @@
-// Lives in the org.apache.spark.sql namespace for the same reason as
-// VectorExpressions (private[sql] Column <-> Expression bridge).
-// Public API surface is graft.sink.ZOrder, which delegates here.
+// In the Spark namespace for the same reason as Kernels. Public API
+// surface is graft.sink.ZOrder, which delegates here.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, LongType}
@@ -67,36 +65,24 @@ object ZImpl {
 }
 
 /** array<double> (one row's k clustering-column values) → long z-value.
-  * Cut matrix is a Seq-of-Seq constructor field for content equality
-  * (the NearestCells discipline), flattened to primitive arrays once
-  * per task and handed to codegen as a reference object.
+  * The cut matrix is a content-keyed parameter, flattened to primitive
+  * arrays once per task.
   */
-case class ZValueExpr(child: Expression, cuts: Seq[Seq[Double]], bits: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  require(cuts.nonEmpty, "z-order needs at least one clustering column")
-  require(bits >= 1 && bits * cuts.length <= 63,
-    s"bits·columns must fit a long, got $bits x ${cuts.length}")
-  require(cuts.forall(_.length <= (1 << bits) - 1),
+case class ZValueExpr(child: Expression, cuts: ContentKeyed[Seq[Seq[Double]]], bits: Int)
+  extends Kernel1[ArrayData, Long] {
+  require(cuts.value.nonEmpty, "z-order needs at least one clustering column")
+  require(bits >= 1 && bits * cuts.value.length <= 63,
+    s"bits·columns must fit a long, got $bits x ${cuts.value.length}")
+  require(cuts.value.forall(_.length <= (1 << bits) - 1),
     s"cut count must fit $bits bits")
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_zvalue"
 
   @transient private lazy val cutArrays: Array[Array[Double]] =
-    cuts.map(_.toArray).toArray
+    cuts.value.map(_.toArray).toArray
 
-  protected override def nullSafeEval(input: Any): Any =
-    ZImpl.zValue(input.asInstanceOf[ArrayData], cutArrays, bits)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("zCuts", cutArrays, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.ZImpl.zValue($c, $m, $bits)")
-  }
-
-  // keep the cut doubles out of treeString/explain/ledger dumps
-  override def toString: String =
-    s"$prettyName($child, ${cuts.length} cols x $bits bits)"
+  def kernel(vals: ArrayData): Long = ZImpl.zValue(vals, cutArrays, bits)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -105,5 +91,6 @@ case class ZValueExpr(child: Expression, cuts: Seq[Seq[Double]], bits: Int)
 /** Column-API entry point for the z-value expression. */
 object ZOrderFunctions {
   def zValueNative(vals: Column, cuts: Seq[Seq[Double]], bits: Int): Column =
-    ExpressionUtils.column(ZValueExpr(ExpressionUtils.expression(vals), cuts, bits))
+    ExpressionUtils.column(ZValueExpr(ExpressionUtils.expression(vals),
+      new ContentKeyed(cuts, s"${cuts.length} cols"), bits))
 }

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.graft.{GraftFunctions, Kernel, KernelCatalog}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract invariants that don't need a SparkSession: the
@@ -100,6 +104,50 @@ class ContractSpec extends AnyFunSuite {
     SparkEntry.queries.keys.foreach { k =>
       val p = k.takeWhile(_ != '_').replaceAll("[0-9b]+$", "")
       assert(prefixes.contains(p), s"unexpected query name shape: $k")
+    }
+  }
+
+  test("native expressions: codegen lives only in the shared kernel base") {
+    val dir = new java.io.File("src/main/scala/org/apache/spark/sql/graft")
+    val withCodegen = dir.listFiles().filter { f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains("doGenCode")
+    }.map(_.getName).toSet
+    assert(withCodegen === Set("Kernels.scala"))
+  }
+
+  test("native expressions: every concrete kernel class is in KernelCatalog") {
+    val classes = new java.io.File(
+      classOf[Kernel].getProtectionDomain.getCodeSource.getLocation.toURI)
+    val pkg = classOf[Kernel].getPackage.getName
+    val kernels = new java.io.File(classes, pkg.replace('.', '/')).list().toSeq
+      .filter(n => n.endsWith(".class") && !n.contains("$"))
+      .map(n => Class.forName(s"$pkg.${n.stripSuffix(".class")}"))
+      .filter(c => classOf[Kernel].isAssignableFrom(c) &&
+        !java.lang.reflect.Modifier.isAbstract(c.getModifiers))
+    assert(kernels.size >= 26, kernels)
+    val listed: Set[Class[_]] = KernelCatalog.all(Literal(_)).map(_.getClass).toSet
+    val missing = kernels.filterNot(listed.contains)
+    assert(missing.isEmpty, s"kernels missing from KernelCatalog: $missing")
+  }
+
+  test("native expressions: each kernel's generated code calls its kernel and holds no Java loop") {
+    val schema = KernelCatalog.schema
+    KernelCatalog.all(n => BoundReference(schema.fieldIndex(n), schema(n).dataType, nullable = true))
+      .foreach { k =>
+        val code = k.genCode(new CodegenContext).code.toString
+        assert(code.contains(".kernel("), s"${k.prettyName}:\n$code")
+        assert(!code.contains("for ("), s"${k.prettyName}:\n$code")
+      }
+  }
+
+  test("every registered graft_* SQL name resolves to an expression of that prettyName") {
+    val s = SparkTestBase.session
+    GraftFunctions.register(s)
+    GraftFunctions.all.foreach { case (name, info, _) =>
+      val e = s.sessionState.functionRegistry
+        .lookupFunction(FunctionIdentifier(name), Seq.fill(3)(Literal(1)))
+      assert(e.prettyName === name)
+      assert(info.getName === name && info.getClassName === e.getClass.getName)
     }
   }
 }

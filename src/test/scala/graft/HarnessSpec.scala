@@ -116,6 +116,11 @@ class HarnessSpec extends SparkTestBase {
       // thread pool AQE and broadcasts run their jobs on
       assert(p.jobs.forall(j => !j.site.contains("CompletableFuture")), p.jobs)
       assert(p.jobs.forall(_.site.contains("HarnessSpec.scala")), p.jobs)
+      // ... followed by the operator its final stage runs: the broadcast
+      // job and the aggregate's shuffle-map job say which they are
+      assert(p.jobs.forall(_.site.matches(""".* at HarnessSpec\.scala:\d+ \[.+\]""")), p.jobs)
+      assert(p.jobs.exists(_.site.endsWith(" [BroadcastExchange]")), p.jobs)
+      assert(p.jobs.exists(_.site.endsWith(" [Exchange]")), p.jobs)
       assert(p.gapS >= 0 && p.gapS <= p.wallS, p)
       assert(p.phases.map(_._1).contains("planning"), p.phases)
     } finally {

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import graft.analyze.Profiler
+import org.apache.spark.sql.graft.GraftOptimizations
 
 class ProfilerSpec extends SparkTestBase {
   import spark.implicits._
@@ -28,10 +29,18 @@ class ProfilerSpec extends SparkTestBase {
   }
 
   test("profile: column subset and approx mode") {
-    val p = Profiler.profile(t, Seq("id"), exact = false).collect()
-    assert(p.length === 1)
-    // HLL estimate of 4 distinct longs is exact at this cardinality
-    assert(p(0).getAs[Long]("n_distinct") === 4L)
+    // approx mode is the session's one exact→sketch switch: the
+    // ApproxAggRewrite rule turns the profile's count(DISTINCT) into HLL
+    GraftOptimizations.install(spark)
+    spark.conf.set("spark.graft.approx.aggregates", "true")
+    try {
+      val q = Profiler.profile(t, Seq("id"))
+      assert(q.queryExecution.optimizedPlan.toString.contains("approx_count_distinct"))
+      val p = q.collect()
+      assert(p.length === 1)
+      // HLL estimate of 4 distinct longs is exact at this cardinality
+      assert(p(0).getAs[Long]("n_distinct") === 4L)
+    } finally spark.conf.set("spark.graft.approx.aggregates", "false")
   }
 
   test("profile: non-orderable columns (maps) keep counts, null min/max/distinct") {

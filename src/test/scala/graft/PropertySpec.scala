@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import graft.analyze.Analytics
 import graft.dedup.Dedup
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.graft.VectorFunctions
 import graft.sim.Similarity
 import graft.text.Text
 

@@ -210,7 +210,7 @@ class RowsOnlyGateSpec extends SparkTestBase {
         .join(v.select(col("vec_id").as("id1"), col("v").as("v1")), "id1")
         .join(v.select(col("vec_id").as("id2"), col("v").as("v2")), "id2")
         .withColumn("cos2",
-          graft.functions.VectorFunctions.cosineNative(col("v1"), col("v2")))
+          org.apache.spark.sql.graft.VectorFunctions.cosineNative(col("v1"), col("v2")))
       assert(re.filter(abs(col("cos") - col("cos2")) > 1e-3).count() === 0)
       assert(re.filter(col("cos2") < 0.2 - 1e-3).count() === 0)
     } finally pairs.unpersist()

@@ -584,8 +584,8 @@ class SimilaritySpec extends SparkTestBase {
     val b = unit.filter($"vec_id" === 2).select($"unit_embedding".as("ub"),
       Similarity.toDouble($"embedding").as("vb"))
     val r = a.crossJoin(b).select(
-      graft.functions.VectorFunctions.dotNative($"ua", $"ub").as("dotUnit"),
-      graft.functions.VectorFunctions.cosineNative($"va", $"vb").as("cosOrig")).collect()(0)
+      org.apache.spark.sql.graft.VectorFunctions.dotNative($"ua", $"ub").as("dotUnit"),
+      org.apache.spark.sql.graft.VectorFunctions.cosineNative($"va", $"vb").as("cosOrig")).collect()(0)
     assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12)
     // zero vector stays zero, no NaN
     val z = Similarity.withUnitNorm(Seq((9L, Seq(0.0f, 0.0f))).toDF("vec_id", "embedding"), "embedding")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.graft.VectorFunctions
 import graft.sim.Similarity
 
 class VectorExpressionsSpec extends SparkTestBase {
@@ -142,26 +142,27 @@ class VectorExpressionsSpec extends SparkTestBase {
     // a bare Array[Byte] field keys equality on array IDENTITY, which
     // would make two references to the same sketch permanently unequal —
     // no common-subexpression elimination, and one sketch copy shipped
-    // per expression instance. BloomSketchBytes restores content equality;
+    // per expression instance. ContentKeyed restores content equality;
     // distinct sketches must still compare unequal.
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.graft.{BloomCountContained, BloomMightContainString, BloomSketchBytes}
+    import org.apache.spark.sql.graft.{BloomCountContained, BloomMightContainString, ContentKeyed}
+    def sketch(b: Array[Byte]) = new ContentKeyed(b, "sketch")
     val f = org.apache.spark.util.sketch.BloomFilter.create(10, 0.001)
     f.putBinary("alpha".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val bos = new java.io.ByteArrayOutputStream(); f.writeTo(bos)
     val bytes = bos.toByteArray
-    val e1 = BloomMightContainString(Literal("g"), new BloomSketchBytes(bytes.clone()))
-    val e2 = BloomMightContainString(Literal("g"), new BloomSketchBytes(bytes.clone()))
+    val e1 = BloomMightContainString(Literal("g"), sketch(bytes.clone()))
+    val e2 = BloomMightContainString(Literal("g"), sketch(bytes.clone()))
     assert(e1 === e2 && e1.hashCode === e2.hashCode && e1.semanticEquals(e2))
     val other = {
       val g = org.apache.spark.util.sketch.BloomFilter.create(10, 0.001)
       g.putBinary("beta".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val b = new java.io.ByteArrayOutputStream(); g.writeTo(b)
-      BloomMightContainString(Literal("g"), new BloomSketchBytes(b.toByteArray))
+      BloomMightContainString(Literal("g"), sketch(b.toByteArray))
     }
     assert(e1 !== other)
-    val c1 = BloomCountContained(Literal.create(Seq("g")), new BloomSketchBytes(bytes.clone()))
-    val c2 = BloomCountContained(Literal.create(Seq("g")), new BloomSketchBytes(bytes.clone()))
+    val c1 = BloomCountContained(Literal.create(Seq("g")), sketch(bytes.clone()))
+    val c2 = BloomCountContained(Literal.create(Seq("g")), sketch(bytes.clone()))
     assert(c1 === c2 && c1.semanticEquals(c2))
   }
 
