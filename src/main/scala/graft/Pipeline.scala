@@ -2,19 +2,21 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.analyze.Analytics
+import graft.analyze.{AnalysisDoc, Analytics, WeatherFacts}
 import graft.ingest.Ingest
 import graft.observe.Metrics
 import graft.schema.WeatherSchema
-import graft.sink.Sinks
+import graft.sink.{Figures, Sinks}
 
 /** Phase orchestrator — the `main.py` analog (SURVEY §3.1), lazily
   * composed: the reference hands each phase a file written by the previous
   * one (raw dir → processed dir → output dir); here each phase hands the
-  * next a DataFrame, so Catalyst sees the whole plan per output and the
-  * only materializations are the sinks themselves; the cleaner's two 1-row
-  * statistics jobs run once, in `Ingest.transform`. Phase-skip flags mirror
-  * main.py:140-147.
+  * next a DataFrame, so Catalyst sees the whole plan per output. Besides
+  * the sinks, three things are collected to the driver: the cleaner's two
+  * 1-row statistics jobs (once, in `Ingest.transform`), the one
+  * [[graft.analyze.WeatherFacts]] pass that the analysis document and the
+  * figures share, and the figures' histogram bins and scatter sample.
+  * Phase-skip flags mirror main.py:140-147.
   */
 object Pipeline {
 
@@ -70,14 +72,15 @@ object Pipeline {
           df.write.mode("overwrite").json(s"${cfg.outputPath}/analysis/$name")
         }
         // the reference's single nested weather_analysis_*.json document
+        // and its 5 figures (SVG here — no plot libs needed), both from one
+        // collected facts pass
         if (!cfg.skipAnalyze) {
-          val doc = graft.analyze.AnalysisDoc.build(processed)
+          val facts = WeatherFacts.collect(processed)
           val p = java.nio.file.Paths.get(cfg.outputPath, "analysis_doc.json")
           java.nio.file.Files.createDirectories(p.getParent)
-          java.nio.file.Files.writeString(p, doc)
-          // S13: the reference's 5 figures (SVG here — no plot libs needed)
+          java.nio.file.Files.writeString(p, AnalysisDoc.render(facts))
           if (cfg.writeFigures)
-            graft.sink.Figures.writeFigures(processed, s"${cfg.outputPath}/figures")
+            Figures.write(facts, processed, s"${cfg.outputPath}/figures")
         }
         Metrics.inc(Metrics.LoadSuccesses)
       }

@@ -2,20 +2,23 @@ package graft.sink
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
+import java.sql.Date
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.analyze.WeatherFacts
 
 /** S13 figure sink (analyze.py:308-491): the reference renders 5 matplotlib
   * PNGs; here the same five visualizations render as dependency-free SVG
   * (no codec/plot libs in scope — SVG is plain XML, byte-deterministic,
   * and any browser/Grafana panel displays it).
   *
-  * Scale posture: every chart renders from a driver-side collect of an
-  * ALREADY-AGGREGATED result (per-city means, daily means, fixed-width
-  * histogram bins, condition counts, a bounded deterministic scatter
-  * sample) — the collected row count is O(cities·days) / O(bins), never
-  * O(rows), so the sink is safe at any input scale. The aggregations
-  * themselves are the driver-verified query shapes (a2/a4/a5/a10/a13).
+  * Scale posture: the per-city means, daily means, condition counts,
+  * temperature range and regression line come from the collected
+  * [[graft.analyze.WeatherFacts]] (one aggregate, shared with the analysis
+  * document); only the fixed-width histogram bins and a bounded
+  * deterministic scatter sample query the table again. Every collect is
+  * O(cities·days) / O(bins) / the sample size, never O(rows), so the sink
+  * is safe at any input scale.
   */
 object Figures {
 
@@ -102,74 +105,62 @@ object Figures {
   /** The reference's five figures (analyze.py:308-491) over the clean
     * weather table. Returns the written paths.
     */
-  def writeFigures(clean: DataFrame, dir: String, scatterSample: Int = 500): Seq[String] = {
+  def writeFigures(clean: DataFrame, dir: String, scatterSample: Int = 500): Seq[String] =
+    write(WeatherFacts.collect(clean, wind = None), clean, dir, scatterSample)
+
+  /** The five figures from `clean`'s collected facts: only the histogram
+    * bins and the scatter sample read `clean` again.
+    */
+  def write(facts: WeatherFacts, clean: DataFrame, dir: String,
+            scatterSample: Int = 500): Seq[String] = {
     Files.createDirectories(Paths.get(dir))
     def save(name: String, content: String): String = {
       val p = Paths.get(dir, name)
       Files.write(p, content.getBytes(StandardCharsets.UTF_8))
       p.toString
     }
-    // 7 chart queries share the clean table's lineage — cache it for the
-    // duration of the sink instead of re-running read+transform per chart
-    clean.persist()
-    try writeFiguresImpl(clean, dir, scatterSample, save)
-    finally clean.unpersist()
-  }
-
-  private def writeFiguresImpl(clean: DataFrame, dir: String, scatterSample: Int,
-                               save: (String, String) => String): Seq[String] = {
-    // 1. avg temperature by city, desc (analyze.py:343 bar chart)
-    val byCity = clean.groupBy("city").agg(avg(col("temperature")).as("m"))
-      .filter(col("m").isNotNull) // all-null temps for a city -> no bar, not an NPE
-      .orderBy(col("m").desc, col("city"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
+    def mean(r: Row) = WeatherFacts.double(r, "temperature_mean")
+    // 1. avg temperature by city, desc (analyze.py:343 bar chart); a city
+    // whose temperatures are all null has no mean, so no bar
+    val byCity = facts.cities.flatMap(r => mean(r).map(r.getAs[String]("city") -> _))
+      .sortBy(t => (t._2, t._1))(Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.String))
     // 2. daily avg temperature per city (time-series lines)
-    val daily = clean
-      .groupBy(col("city"), to_date(col("timestamp")).as("d"))
-      .agg(avg(col("temperature")).as("m"))
-      .filter(col("m").isNotNull && col("d").isNotNull)
-      .orderBy(col("city"), col("d"))
-      .collect().map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2)))
+    val daily = facts.cityDays
+      .flatMap(r => mean(r).zip(Option(r.getAs[Date]("date")))
+        .map { case (m, d) => (r.getAs[String]("city"), d.toString, m) })
       .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (c, rows) => c -> rows.map(t => t._2 -> t._3).toSeq }
+      .map { case (c, rows) => c -> rows.map(t => t._2 -> t._3) }
     // 3. temperature histogram: 10 fixed-width bins computed engine-side.
-    // min/max over ZERO rows (or all-null temperature) aggregates to null
-    // — render an empty histogram instead of NPEing the load phase
-    val mm = clean.agg(min(col("temperature")), max(col("temperature"))).collect()(0)
-    val hist =
-      if (mm.isNullAt(0) || mm.isNullAt(1)) Seq.empty[(Double, Long)]
-      else {
-        val (tLo, tHi) = (mm.getDouble(0), mm.getDouble(1))
-        val width = if (tHi == tLo) 1.0 else (tHi - tLo) / 10.0
-        clean
-          .select(least(floor((col("temperature") - tLo) / width), lit(9)).cast("int").as("bin"))
-          .filter(col("bin").isNotNull)
-          .groupBy("bin").agg(count(lit(1)).as("n"))
-          .orderBy("bin")
-          .collect().map(r => (tLo + r.getInt(0) * width, r.getLong(1))).toSeq
-      }
+    // min/max over ZERO rows (or all-null temperature) are null — render an
+    // empty histogram instead of NPEing the load phase
+    val overall = WeatherFacts.double(facts.overall, _)
+    val range = overall("temperature_min").zip(overall("temperature_max"))
+    val hist = range.fold(Seq.empty[(Double, Long)]) { case (tLo, tHi) =>
+      val width = if (tHi == tLo) 1.0 else (tHi - tLo) / 10.0
+      clean
+        .select(least(floor((col("temperature") - tLo) / width), lit(9)).cast("int").as("bin"))
+        .filter(col("bin").isNotNull)
+        .groupBy("bin").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).sorted.toSeq
+        .map { case (b, n) => (tLo + b * width, n) }
+    }
     // 4. weather condition distribution (analyze.py:404's value_counts bar)
-    val conds = clean
-      .filter(col("weather_condition").isNotNull) // null group -> no bar, not an NPE
-      .groupBy("weather_condition").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("weather_condition"))
-      .collect().map(r => r.getString(0) -> r.getLong(1).toDouble).toSeq
+    val conds = facts.conditions
+      .flatMap(r => Option(r.getAs[String]("condition")).map(_ -> r.getAs[Long]("n")))
+      .sortBy { case (k, n) => (-n, k) }
+      .map { case (k, n) => k -> n.toDouble }
     // 5. temp vs humidity scatter + regression line (analyze.py:430-448);
     // deterministic bounded sample: first N by (city, timestamp)
     val pts = clean.select(col("temperature"), col("humidity"), col("city"), col("timestamp"))
       .na.drop(Seq("temperature", "humidity"))
       .orderBy("city", "timestamp").limit(scatterSample)
       .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq
-    val reg = clean.agg(
-      regr_slope(col("humidity"), col("temperature")).as("s"),
-      regr_intercept(col("humidity"), col("temperature")).as("i")).collect()(0)
-    val (slope, icept) =
-      (if (reg.isNullAt(0)) 0.0 else reg.getDouble(0), if (reg.isNullAt(1)) 0.0 else reg.getDouble(1))
     Seq(
       save("temp_by_city.svg", barChartSvg("Average temperature by city", byCity)),
       save("daily_temp.svg", lineChartSvg("Daily average temperature", daily)),
       save("temp_histogram.svg", histogramSvg("Temperature distribution", hist)),
       save("conditions.svg", barChartSvg("Weather condition distribution", conds)),
-      save("temp_vs_humidity.svg", scatterSvg("Temperature vs humidity", pts, slope, icept)))
+      save("temp_vs_humidity.svg", scatterSvg("Temperature vs humidity", pts,
+        overall("slope").getOrElse(0.0), overall("intercept").getOrElse(0.0))))
   }
 }

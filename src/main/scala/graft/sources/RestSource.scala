@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.observe.Metrics
 import graft.schema.WeatherSchema
 
 /** S1/S2 (extract.py:72-137): the REST polling source, re-expressed for
@@ -29,7 +30,8 @@ object RestSource {
     City("Sydney", "AU"), City("Berlin", "DE"))
 
   /** Poll every city with bounded retries + fixed backoff. `sleep` is
-    * injectable so specs don't wait wall-clock time.
+    * injectable so specs don't wait wall-clock time. Each city whose
+    * retries run out counts once in `weather_extract_failures`.
     */
   def fetchAll(cities: Seq[City], fetch: City => String,
                retries: Int = 3, backoffMs: Long = 2000,
@@ -43,6 +45,7 @@ object RestSource {
         catch {
           case _: Exception if attempt < retries => sleep(backoffMs)
           case _: Exception => // exhausted -> empty result, city skipped
+            Metrics.inc(Metrics.ExtractFailures)
         }
       }
       FetchResult(city, result, attempt)

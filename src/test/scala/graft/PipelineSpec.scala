@@ -1,12 +1,17 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import graft.observe.Metrics
 
 class PipelineSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("end-to-end: raw JSON -> partitioned parquet -> analyses -> sinks") {
+  /** PipelineSpec's raw fixture: two cities over three days, one OWM
+    * record per city and day, under a new temp dir's `raw/`.
+    */
+  private def rawFixture(): java.nio.file.Path = {
     val base = Files.createTempDirectory("graft_pipe")
     val rawDir = base.resolve("raw").toString
     def obs(city: String, cc: String, day: Int, temp: Double): String =
@@ -20,13 +25,19 @@ class PipelineSpec extends SparkTestBase {
     Files.createDirectories(java.nio.file.Paths.get(rawDir))
     Files.write(java.nio.file.Paths.get(rawDir, "batch0.json"),
       lines.mkString("\n").getBytes)
+    base
+  }
 
+  private def config(base: java.nio.file.Path) = Pipeline.Config(
+    rawPath = base.resolve("raw").toString,
+    processedPath = base.resolve("processed").toString,
+    outputPath = base.resolve("output").toString)
+
+  test("end-to-end: raw JSON -> partitioned parquet -> analyses -> sinks") {
+    val base = rawFixture()
     Metrics.reset()
     Metrics.install(spark)
-    val res = Pipeline.run(spark, Pipeline.Config(
-      rawPath = rawDir,
-      processedPath = base.resolve("processed").toString,
-      outputPath = base.resolve("output").toString))
+    val res = Pipeline.run(spark, config(base))
 
     val processed = res.processed.get
     assert(processed.count() === 6)
@@ -49,6 +60,27 @@ class PipelineSpec extends SparkTestBase {
     assert(Metrics.get(Metrics.LoadSuccesses) === 1L)
     assert(Metrics.get(Metrics.SparkJobsCompleted) > 0L)
     assert(Metrics.get(Metrics.RecordsProcessed) > 0L)
+  }
+
+  test("one facts pass per Pipeline.run feeds the document and the figures") {
+    val base = rawFixture()
+    // root SQL executions started from the facts code
+    val factsRuns = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.details.contains("WeatherFacts.scala") && s.rootExecutionId.forall(_ == s.executionId) =>
+          factsRuns.incrementAndGet()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val lap = try Harness.profile(spark, "Pipeline.run")({ Pipeline.run(spark, config(base)); 0L })
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(factsRuns.get === 1, lap.report)
+    val docAndFigures = lap.jobs.filter(j =>
+      Seq("AnalysisDoc.scala", "Figures.scala", "WeatherFacts.scala").exists(j.site.contains))
+    assert(docAndFigures.size <= 15, docAndFigures.map(_.site).mkString("\n"))
   }
 
   test("metrics Source registers and gauges report the counters; repeated install is a no-op") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
+import graft.observe.Metrics
 import graft.sources.{LatestSnapshot, RestSource}
 
 class SourcesSpec extends SparkTestBase {
@@ -25,6 +26,21 @@ class SourcesSpec extends SparkTestBase {
       fetch = _ => throw new RuntimeException("down"),
       retries = 3, sleep = _ => ())
     assert(results.head.payload.isEmpty && results.head.attempts === 3)
+  }
+
+  test("weather_extract_failures counts each city whose retries run out, once") {
+    val before = Metrics.get(Metrics.ExtractFailures)
+    fetchAll(
+      Seq(City("Tokyo", "JP"), City("London", "GB"), City("Oslo", "NO")),
+      fetch = c => if (c.name == "London") "{}" else throw new RuntimeException("down"),
+      retries = 3, sleep = _ => ())
+    assert(Metrics.get(Metrics.ExtractFailures) - before === 2L)
+    var calls = 0
+    fetchAll(
+      Seq(City("Tokyo", "JP"), City("London", "GB")),
+      fetch = { _ => calls += 1; if (calls == 1) throw new RuntimeException("503") else "{}" },
+      retries = 3, sleep = _ => ())
+    assert(Metrics.get(Metrics.ExtractFailures) - before === 2L) // a retried success is no failure
   }
 
   test("S1 payloads parse schema-first; failed cities contribute no rows") {

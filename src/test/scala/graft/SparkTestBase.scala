@@ -21,6 +21,9 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   // always local[4], whatever SPARK_GRAFT_CPUS says: the mains read it,
-  // the specs' fixtures are sized for four partitions
-  lazy val session: SparkSession = Harness.session(4)
+  // the specs' fixtures are sized for four partitions. Codegen fallback is
+  // off, so generated Java that fails to compile fails the spec instead of
+  // running interpreted unseen.
+  lazy val session: SparkSession =
+    Harness.session(4, Map("spark.sql.codegen.fallback" -> "false"))
 }
