@@ -1149,7 +1149,7 @@ object SparkEntry {
     // §2.9 two-pass clean on events.value, summarized per group so the
     // verified output is small but pins the full bounds→null→median chain.
     "c1_two_pass_clean" -> ((s, d) =>
-      Cleaning.twoPassClean(Tables.events(s, d), Seq("value"))
+      Cleaning.twoPassClean(Tables.events(s, d), Seq("value"))._1
         .groupBy("event_type")
         .agg(graft.analyze.Analytics.stableMean4(col("value")).as("value_mean"),
              round(min(col("value")), 4).as("value_min"),

@@ -247,8 +247,8 @@ object Analytics {
 
   /** Batch sessionization (gaps-and-islands): assign a session id per key
     * where a gap > `gapMinutes` of event-time silence starts a new session
-    * — the batch twin of Streaming.sessionAgg, and SQL-expressible for the
-    * oracle. Two windows over one shuffle AND one sort on the key: both
+    * — the sessions Spark's `session_window` carves, SQL-expressible for
+    * the oracle. Two windows over one shuffle AND one sort on the key: both
     * window specs share (key, ts ASC) so the second Window consumes the
     * first's output order directly, and the session summary's group-by
     * rides the same hash partitioning — the whole operator is

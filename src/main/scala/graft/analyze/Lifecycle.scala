@@ -244,8 +244,7 @@ object Lifecycle {
     * `open ∪ batch` rows only: at 100 TB that is one day's arrivals plus
     * one row per touched key's dimension state, never the historical log.
     *
-    * Contract (the [[graft.streaming.Streaming.scd2Stream]] ordering
-    * contract, batch-granular): the change log is append-only — a
+    * Contract (batch-granular ordering): the change log is append-only — a
     * batch row at or before its key's open-run start is LATE and drops
     * before the fold (it can neither re-open closed history nor close
     * the open run mid-run; replaying it would diverge from the one-shot

@@ -17,10 +17,8 @@ import org.apache.spark.sql.types._
   * typical table widths; at extreme width or at the 100 TB scan, set
   * `spark.graft.approx.aggregates`
   * ([[org.apache.spark.sql.graft.ApproxAggRewrite]]) to swap in
-  * `approx_count_distinct` (HLL, no Expand, one pass, merge-able). A
-  * profile of several columns needs the rule installed through
-  * `GraftExtensions`: `GraftOptimizations.install` runs it after Spark
-  * has already expanded a multi-distinct aggregate.
+  * `approx_count_distinct` (HLL, no Expand, one pass, merge-able) in a
+  * session built with `GraftExtensions`.
   *
   * min/max format canonically by type (fractionals via DECIMAL(28,4) so
   * every engine prints the same digits; timestamps/dates via pinned

@@ -27,53 +27,65 @@ import org.apache.spark.sql.functions._
   */
 object Cleaning {
 
-  /** Runs the 1-row aggregate over `df` and returns each of its values as a
-    * literal of the aggregate's own type; a null statistic stays a typed
-    * null, so the columns built on it keep their type.
+  /** Runs the 1-row aggregate `aggs` over `df` and returns each of its
+    * values as a literal of the aggregate's own type (a null statistic
+    * stays a typed null, so the columns built on it keep their type),
+    * together with the number of non-null values in `cols`, counted in
+    * the same aggregate.
     */
-  private def statistics(df: DataFrame, aggs: Seq[Column]): Seq[Column] = {
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    row.schema.map(_.dataType).zipWithIndex.map { case (t, i) => lit(row.get(i)).cast(t) }
+  private def statistics(df: DataFrame, aggs: Seq[Column],
+                         cols: Seq[String]): (Seq[Column], Long) = {
+    val all = aggs :+ cols.map(c => count(col(c))).reduce(_ + _)
+    val row = df.agg(all.head, all.tail: _*).head()
+    val stats = row.schema.map(_.dataType).zipWithIndex.take(aggs.size)
+      .map { case (t, i) => lit(row.get(i)).cast(t) }
+    (stats, row.getLong(aggs.size))
   }
 
   /** Null out values outside [q_lo − k·iqr, q_hi + k·iqr] per column.
     * One aggregation job, run when called; the fences enter the plan as
-    * literals.
+    * literals. Also returns the number of non-null values in `cols`
+    * before the fence, counted in the same job.
     */
   def nullOutliers(df: DataFrame, cols: Seq[String], lo: Double = 0.05,
-                   hi: Double = 0.95, k: Double = 1.5): DataFrame = {
-    if (cols.isEmpty) return df
+                   hi: Double = 0.95, k: Double = 1.5): (DataFrame, Long) = {
+    if (cols.isEmpty) return (df, 0L)
     val boundAggs = cols.flatMap { c =>
       val q1 = percentile(col(c), lit(lo)); val q3 = percentile(col(c), lit(hi))
       Seq(q1 - lit(k) * (q3 - q1), q3 + lit(k) * (q3 - q1))
     }
-    val bounds = statistics(df, boundAggs).grouped(2)
-    cols.zip(bounds).foldLeft(df) { case (d, (c, Seq(lb, ub))) =>
+    val (bounds, nonNull) = statistics(df, boundAggs, cols)
+    (cols.zip(bounds.grouped(2)).foldLeft(df) { case (d, (c, Seq(lb, ub))) =>
       d.withColumn(c, when(col(c) < lb || col(c) > ub, lit(null)).otherwise(col(c)))
-    }
+    }, nonNull)
   }
 
   /** Fill nulls in each column with that column's median computed on the
     * CURRENT (post-nulling) data — reference transform.py:188 semantics.
     * One aggregation job, run when called; the medians enter the plan as
-    * literals.
+    * literals. Also returns the number of non-null values in `cols`
+    * before the fill, counted in the same job.
     */
-  def imputeMedians(df: DataFrame, cols: Seq[String]): DataFrame = {
-    if (cols.isEmpty) return df
-    val meds = statistics(df, cols.map(c => median(col(c))))
-    cols.zip(meds).foldLeft(df) { case (d, (c, m)) =>
+  def imputeMedians(df: DataFrame, cols: Seq[String]): (DataFrame, Long) = {
+    if (cols.isEmpty) return (df, 0L)
+    val (meds, nonNull) = statistics(df, cols.map(c => median(col(c))), cols)
+    (cols.zip(meds).foldLeft(df) { case (d, (c, m)) =>
       d.withColumn(c, coalesce(col(c), m))
-    }
+    }, nonNull)
   }
 
   /** Full §2.9 composite, in the reference's order: outlier-null →
     * median-impute (on the nulled data) → categorical fill. Two
-    * aggregation jobs, run when called.
+    * aggregation jobs, run when called. Also returns the number of values
+    * the fence nulled: the non-null count before the fence minus the one
+    * after it, read from those two jobs.
     */
   def twoPassClean(df: DataFrame, numericCols: Seq[String],
                    categoricalDefaults: Map[String, String] = Map.empty,
-                   lo: Double = 0.05, hi: Double = 0.95, k: Double = 1.5): DataFrame = {
-    val out = imputeMedians(nullOutliers(df, numericCols, lo, hi, k), numericCols)
-    if (categoricalDefaults.isEmpty) out else out.na.fill(categoricalDefaults)
+                   lo: Double = 0.05, hi: Double = 0.95,
+                   k: Double = 1.5): (DataFrame, Long) = {
+    val (fenced, before) = nullOutliers(df, numericCols, lo, hi, k)
+    val (out, after) = imputeMedians(fenced, numericCols)
+    (if (categoricalDefaults.isEmpty) out else out.na.fill(categoricalDefaults), before - after)
   }
 }

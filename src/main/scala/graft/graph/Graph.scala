@@ -83,7 +83,7 @@ object Graph {
 
   /** Incremental transition edges — [[transitionEdges]]' per-ingest-batch
     * form (the d17/w18 "only the batch pays" pattern applied to the edge
-    * table, and the batch twin of `Streaming.transitionEdgesStream`):
+    * table):
     * merge one batch of events into a STANDING (src, dst, n_trans) edge
     * table using the per-user [[lastViews]] state to link transitions
     * ACROSS the batch boundary (without it, each batch's first view per

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.clean.Cleaning
 import graft.functions.Scalars
+import graft.observe.Metrics
 import graft.schema.WeatherSchema
 
 /** Ingestion + flattening for the weather pipeline — the Spark re-expression
@@ -66,12 +67,15 @@ object Ingest {
     *
     * Batch only: the cleaner's two 1-row statistics jobs (fences, then
     * post-nulling medians) run here, once, so every consumer of the
-    * returned frame is a scan plus a map-side projection.
+    * returned frame is a scan plus a map-side projection. The values the
+    * fence nulls, counted inside those two jobs, feed
+    * `weather_outliers_detected`.
     */
   def transform(raw: DataFrame): DataFrame = {
     val flat = flatten(raw)
-    val cleaned = Cleaning.twoPassClean(
+    val (cleaned, nulled) = Cleaning.twoPassClean(
       flat, WeatherSchema.numericCols, WeatherSchema.categoricalDefaults)
+    Metrics.inc(Metrics.OutliersDetected, nulled)
     Scalars.withTimeFeatures(cleaned, "timestamp")
       .withColumn("temp_range", Scalars.range(col("temp_max"), col("temp_min")))
   }

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,13 +10,10 @@ import org.apache.spark.sql.types._
   * IMAGE and AUDIO decode are REAL as of round 14 (javax.imageio PNG /
   * javax.sound WAV — both in the JDK's java.desktop, found by the
   * environment re-probe; see [[MediaCodec]] and the m5/m6/m7 oracled
-  * queries). Only VIDEO decode remains stubbed (`FakeDecode`, no
-  * ffmpeg/javacv in this environment) — and every piece of Spark
-  * plumbing around both is real and tested: the schema, the batched
-  * `mapPartitions` decode shape (the JVM analog of `mapInPandas`: one
-  * iterator in, one iterator out, per-partition setup amortized across
-  * the batch), frame sampling as a generator, and size-aware
-  * repartitioning so a few huge blobs can't skew a partition.
+  * queries). VIDEO has no decoder (no ffmpeg/javacv in this
+  * environment); the Spark plumbing around it is real and tested: the
+  * schema, frame sampling as a generator, and size-aware repartitioning
+  * so a few huge blobs can't skew a partition.
   *
   * Scale posture: blobs never pass through a shuffle unless the operation
   * needs it (decode is map-side only); metadata-only projections prune the
@@ -45,50 +42,6 @@ object Multimodal {
       StructField("sample_rate", IntegerType),
       StructField("duration_ms", LongType),
       StructField("format", StringType))))))
-
-  /** STUB decode — deterministic fake standing in for a real codec.
-    * Derives `dim` pseudo-features from the blob bytes with a rolling
-    * 64-bit hash; same bytes → same features, so specs can assert values.
-    * Swap the body for a real decoder (JNI/ImageIO/javacv) without touching
-    * any caller: the signature IS the contract.
-    */
-  object FakeDecode {
-    def features(bytes: Array[Byte], dim: Int): Array[Float] = {
-      var h = 1125899906842597L // deterministic seed
-      val out = new Array[Float](dim)
-      var i = 0
-      while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
-      var d = 0
-      while (d < dim) {
-        val x = h ^ (0x9E3779B97F4A7C15L * (d + 1))
-        val mixed = x ^ (x >>> 33)
-        out(d) = (mixed & 0xFFFF).toFloat / 0xFFFF.toFloat
-        d += 1
-      }
-      out
-    }
-  }
-
-  case class MediaFeatures(media_id: Long, kind: String, feature: Array[Float])
-
-  /** Batched decode: binary column → fixed-width feature vector, as a
-    * per-partition iterator transform (the `mapInPandas` batch shape on the
-    * JVM). Per-partition decoder setup would live before the iterator map;
-    * rows stream through without materializing the partition.
-    */
-  def decodeFeatures(media: DataFrame, dim: Int = 16): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "bytes")
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        // real decoder init goes here, once per partition
-        rows.map { case (id, kind, bytes) =>
-          MediaFeatures(id, kind,
-            FakeDecode.features(if (bytes == null) Array.emptyByteArray else bytes, dim))
-        }
-      }
-  }
 
   /** Frame sampling for video rows: emit `n` evenly-spaced pseudo-frames
     * per asset as (media_id, frame_idx, frame_ms). A real implementation
@@ -219,8 +172,7 @@ object Multimodal {
   // ------------------------------------------- REAL codec paths (r14)
   // The round-14 environment probe found javax.imageio (PNG/JPEG) and
   // javax.sound (WAV) present in the JDK — so the image and audio decode
-  // paths below are REAL codec round trips, not the FakeDecode stub
-  // (which remains only where no codec exists: video). Asset generation
+  // paths below are REAL codec round trips. Asset generation
   // is deterministic by id with SQL-replicable formulas (MediaCodec), so
   // the DuckDB oracle re-derives every published statistic from the
   // formulas while Spark reads it out of the decoded bytes — matching
@@ -723,8 +675,8 @@ object Multimodal {
     (result, cleanup)
   }
 
-  /** Streaming twin of [[incrementalPerceptualNew]] (the annSearchStream /
-    * HashLedger pattern at the perception rung): each arriving
+  /** Streaming twin of [[incrementalPerceptualNew]] (the HashLedger
+    * pattern at the perception rung): each arriving
     * micro-batch of media rows is gated against the standing perceptual
     * hash frame; `sink` receives the batch's surviving `media_id` frame.
     * Stateless per batch — results depend only on (batch, corpus), so

@@ -33,12 +33,11 @@ object ReportStore {
     *
     * Idempotent PER PERIOD: the period's rows land in a fresh directory
     * that the manifest then names as the period's source, so a replayed
-    * run (a restarted [[graft.streaming.Streaming.qualityDriftStream]]
-    * re-delivering a micro-batch under its own batch id) REPLACES its
-    * period instead of accumulating duplicate (period, check) rows that
-    * would double-count the trailing mean — also after a [[compact]]:
-    * a post-compact replay that CORRECTS a metric supersedes the
-    * compacted row.
+    * run (a restarted job re-appending a period it already wrote)
+    * REPLACES its period instead of accumulating duplicate (period,
+    * check) rows that would double-count the trailing mean — also after
+    * a [[compact]]: a post-compact replay that CORRECTS a metric
+    * supersedes the compacted row.
     */
   def append(report: DataFrame, path: String, period: String): Unit = synchronized {
     require(period.nonEmpty && !period.contains("/") && !period.contains("\\"),
@@ -82,17 +81,5 @@ object ReportStore {
     val dir = log.fresh("history")
     read(spark, log).coalesce(1).write.parquet(log.path(dir).toString)
     log.commit(s.copy(keys = s.keys.map { case (p, _) => p -> dir }))
-  }
-
-  /** Append `report` under `period`, then judge it against the stored
-    * trailing history: one [[append]] + one [[Checks.driftReport]] over
-    * the store — the per-run drift gate a curation pipeline calls where
-    * it called `Checks.run` alone before. Returns the drift report for
-    * the newly-appended period.
-    */
-  def appendAndDrift(report: DataFrame, path: String, period: String,
-                     maxAbsDelta: Double): DataFrame = {
-    append(report, path, period)
-    Checks.driftReport(load(report.sparkSession, path), maxAbsDelta)
   }
 }

@@ -41,9 +41,6 @@ object Similarity {
     when(na === 0 || nb === 0, lit(null)).otherwise(d / (na * nb))
   }
 
-  def l2Dist(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v))
-
   /** Pre-normalize an embedding column to unit length (null-safe: zero
     * vectors stay zero). For repeated-query workloads this converts every
     * cosine into a plain dot product — normalize the 100 TB corpus ONCE at

@@ -1,10 +1,10 @@
 package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.analyze.Analytics
 
-/** Output surface of the reference (SURVEY §2.1 S5/S8/S9/S10/S12),
+/** Output surface of the reference (SURVEY §2.1 S5/S8/S9/S10; S12, the
+  * nested analysis document, is [[graft.analyze.AnalysisDoc.render]]),
   * re-expressed as Spark writers. The canonical store is partitioned
   * parquet — `partitionBy(city, date)` is the scalable analog of the
   * reference's SQLite B-tree indexes on (city, date) (load.py:143-144):
@@ -30,16 +30,6 @@ object Sinks {
   /** S8: JSON-lines records sink (load.py:70-105's to_dict(records)). */
   def writeJson(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).json(path)
-
-  /** ORC sink (format-parity extension): the columnar alternative where a
-    * consumer's stack prefers ORC over parquet — same vectorized read,
-    * pushdown and partitioning behavior under Spark.
-    */
-  def writeOrc(df: DataFrame, path: String,
-               partitionCols: Seq[String] = Seq.empty): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).orc(path)
-  }
 
   /** S9 analog: partitioned parquet replaces the SQLite table + indexes.
     * Partition pruning on (city, date) is the index replacement that
@@ -139,14 +129,4 @@ object Sinks {
     spark.sql(s"SHOW TABLES LIKE '$pattern'").collect()
       .map(_.getAs[String]("tableName")).filterNot(keep)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-
-  /** S12: nested analysis-result JSON (analyze.py:292-306) — one JSON
-    * object per group assembled with struct/to_json, written as JSON lines.
-    * The reference's single nested dict is the collect()-free equivalent of
-    * grouping the whole result set; keys stay columns so downstream reads
-    * remain queryable.
-    */
-  def writeAnalysisJson(df: DataFrame, keyCol: String, path: String): Unit =
-    df.select(col(keyCol), to_json(struct(df.columns.filter(_ != keyCol).map(col): _*)).as("result"))
-      .write.mode(SaveMode.Overwrite).json(path)
 }

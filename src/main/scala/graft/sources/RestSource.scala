@@ -11,8 +11,8 @@ import graft.schema.WeatherSchema
   *
   * The transport is injected (`fetch: City => String`), which keeps the
   * retry/backoff semantics testable in a zero-egress environment and makes
-  * the production wiring (java.net.http / Kafka producer feeding
-  * graft.streaming.parquetStream's Kafka twin) a one-line swap.
+  * the production wiring (java.net.http / a Kafka producer feeding
+  * [[graft.streaming.StreamingPipeline]]'s wire source) a one-line swap.
   *
   * Retry semantics mirror the reference exactly: up to `retries` attempts,
   * fixed `backoffMs` between attempts, empty result on exhaustion

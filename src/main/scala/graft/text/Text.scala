@@ -1035,19 +1035,13 @@ object Text {
         ipv4Pattern, "<IP>").as("clean_text"))
   }
 
-  /** URL census for web-corpus curation: per-document URL count and the
-    * corpus-level domain distribution (the domain-mix report every crawl
-    * pipeline audits). RE2-safe patterns; the domain is the authority up
-    * to the first `/`, `?`, `#` or whitespace. One map-side extraction +
-    * one groupBy on the (low-cardinality) domain.
+  /** URL census for web-corpus curation: the corpus-level domain
+    * distribution (the domain-mix report every crawl pipeline audits).
+    * RE2-safe pattern; the domain is the authority up to the first `/`,
+    * `?`, `#` or whitespace. One map-side extraction + one groupBy on the
+    * (low-cardinality) domain.
     */
-  val urlPattern = "https?://[^\\s/?#]+[^\\s]*"
   val domainPattern = "https?://([^\\s/?#]+)"
-
-  def urlCounts(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-      size(regexp_extract_all(col(textCol), lit(urlPattern), lit(0)))
-        .cast("long").as("n_urls"))
 
   def domainCensus(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(regexp_extract_all(col(textCol), lit(domainPattern), lit(1)))

@@ -24,9 +24,10 @@ import org.apache.spark.sql.types.DoubleType
   * to Double children so the expression's dataType (and therefore the
   * resolved schema above it) is unchanged.
   *
-  * Enable per-session without rebuilding the session:
-  *   GraftOptimizations.install(spark)   // experimental.extraOptimizations
-  * or at session build time via GraftExtensions (injectOptimizerRule).
+  * Installed at session build time by [[GraftExtensions]]
+  * (`injectOptimizerRule`), so it runs in the operator-optimization batch,
+  * before Spark's `RewriteDistinctAggregates` expands a multi-distinct
+  * aggregate.
   */
 case class ApproxAggRewrite(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -69,13 +70,4 @@ case class ApproxAggRewrite(session: SparkSession) extends Rule[LogicalPlan] {
         ae.copy(aggregateFunction = HyperLogLogPlusPlus(c.children.head),
                 isDistinct = false)
     }
-}
-
-object GraftOptimizations {
-  /** Attach the rewrite to a live session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[ApproxAggRewrite]))
-      spark.experimental.extraOptimizations = existing :+ ApproxAggRewrite(spark)
-  }
 }

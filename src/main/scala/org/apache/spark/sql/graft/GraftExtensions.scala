@@ -15,9 +15,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * (a STATIC conf — it applies only when the first session of the JVM is
   * created; submit it with the job, don't set it on a live session), or
   * `SparkSession.builder.withExtensions(new GraftExtensions())` when a
-  * SparkContext already exists (GraftExtensionsSpec drives this path), or
-  * piecemeal on a live session via [[GraftFunctions.register]] +
-  * [[GraftOptimizations.install]].
+  * SparkContext already exists (GraftExtensionsSpec drives this path).
+  * The functions alone register on a live session via
+  * [[GraftFunctions.register]]; the [[ApproxAggRewrite]] rule is installed
+  * only here.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -15,18 +15,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, St
 import org.apache.spark.unsafe.types.UTF8String
 
 object SpaceSavingBuffer {
-  /** Reconstruct a summary from its (item, est) entries — the cross-JVM
-    * carrier for merge trees (e.g. streaming per-partition partials
-    * collected to a driver-held running summary). A partial with fewer
-    * than `capacity` entries reconstructs as not-full (absentBound 0),
-    * exactly the state it serialized from.
-    */
-  def fromEntries(capacity: Int, entries: Array[(String, Long)]): SpaceSavingBuffer = {
-    val b = new SpaceSavingBuffer(capacity)
-    b.rebuild(entries.sortBy { case (i, c) => (c, i) })
-    b
-  }
-
   /** One tracked item; nodes of equal count hang off the same bucket. */
   private[graft] final class Node(var item: String) {
     var bucket: Bucket = _

@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftOptimizations
 
+/** The rewrite as deployed: injected by `GraftExtensions` into a session's
+  * operator-optimization batch.
+  */
 class ApproxAggRewriteSpec extends SparkTestBase {
+  override lazy val spark = SparkTestBase.extensionSession
   import spark.implicits._
 
   private lazy val df = (1 to 1000).map(_.toDouble).toDF("v")
@@ -12,7 +15,6 @@ class ApproxAggRewriteSpec extends SparkTestBase {
     q.queryExecution.optimizedPlan.toString
 
   test("flag off: exact median/percentile/count-distinct untouched") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.approx.aggregates", "false")
     val plan = optimizedPlan(df.agg(median($"v"), percentile($"v", lit(0.95)),
       countDistinct($"v")))
@@ -21,7 +23,6 @@ class ApproxAggRewriteSpec extends SparkTestBase {
   }
 
   test("flag on: rewritten to sketches, results stay sane") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.approx.aggregates", "true")
     try {
       val q = df.agg(
@@ -48,7 +49,6 @@ class ApproxAggRewriteSpec extends SparkTestBase {
     // GK rank error on a 200-row group is ~0, so the approx answer must
     // land between the exact percentiles a few rank-percent either side
     // (covers both residual rank error and element-vs-interpolation).
-    GraftOptimizations.install(spark)
     val dir = "/root/testdata/sf0.001"
     def a19() = graft.Tables.events(spark, dir)
       .groupBy("event_type")
@@ -85,7 +85,6 @@ class ApproxAggRewriteSpec extends SparkTestBase {
   }
 
   test("schema is unchanged by the rewrite (Double in, Double out)") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.approx.aggregates", "true")
     try {
       val exact = df.agg(median($"v").as("m")).schema

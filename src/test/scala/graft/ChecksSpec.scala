@@ -105,32 +105,6 @@ class ChecksSpec extends SparkTestBase {
     assert(plan.linesIterator.count(_.trim.startsWith("+- LocalTableScan")) === 1)
   }
 
-  test("qualityMonitorStream reports per-batch and matches the batch suite") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double)]
-    val suite = Seq(Checks.rowCountAtLeast(2.0), Checks.minValue("_2", 0.0))
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, Boolean)]
-    val q = graft.streaming.Streaming.qualityMonitorStream(
-      mem.toDF(), suite) { rep =>
-      got ++= rep.collect().map(r => (r.getAs[Long]("batch_id"),
-        r.getAs[String]("check_name"), r.getAs[Double]("metric"),
-        r.getAs[Boolean]("passed")))
-      ()
-    }
-    try {
-      mem.addData((1L, 5.0), (2L, 7.0))
-      q.processAllAvailable()
-      mem.addData((3L, -1.0))
-      q.processAllAvailable()
-      val byBatch = got.groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4)).toSet).toMap
-      assert(byBatch.size === 2)
-      val Seq(b0, b1) = byBatch.keys.toSeq.sorted
-      // batch parity: each batch's report equals Checks.run on its rows
-      assert(byBatch(b0) === Set(("row_count", 2.0, true), ("min_value", 5.0, true)))
-      assert(byBatch(b1) === Set(("row_count", 1.0, false), ("min_value", -1.0, false)))
-    } finally q.stop()
-  }
-
   test("runByPeriod: period-local metrics, one grouped scan") {
     val ev = Seq(
       ("d1", Some(1.0)), ("d1", None), // completeness 0.5, min 1.0
@@ -173,7 +147,7 @@ class ChecksSpec extends SparkTestBase {
     assert(!d4.getBoolean(6) && d4.getDouble(4) > 0.02)
   }
 
-  test("ReportStore: append builds a history, appendAndDrift judges the newest " +
+  test("ReportStore: append builds a history, driftReport judges the newest " +
        "run, compact preserves rows and recovers from a mid-swap crash") {
     import graft.quality.ReportStore
     val path = java.nio.file.Files.createTempDirectory("graft_repstore").toString + "/s"
@@ -181,8 +155,8 @@ class ChecksSpec extends SparkTestBase {
       Seq(("completeness", "v", m)).toDF("check_name", "col_name", "metric")
     ReportStore.append(report(1.0), path, "2024-01-01")
     ReportStore.append(report(0.9), path, "2024-01-02")
-    val drift = ReportStore.appendAndDrift(report(0.95), path, "2024-01-03", 0.02)
-      .collect()
+    ReportStore.append(report(0.95), path, "2024-01-03")
+    val drift = Checks.driftReport(ReportStore.load(spark, path), 0.02).collect()
     assert(drift.length === 1)
     assert(drift(0).getDouble(3) === 0.95 && drift(0).getBoolean(6))
     assert(ReportStore.load(spark, path).count() === 3)
@@ -190,33 +164,6 @@ class ChecksSpec extends SparkTestBase {
     // committing operation is gated store-wide in StoreLogSpec)
     ReportStore.compact(spark, path)
     assert(ReportStore.load(spark, path).count() === 3)
-  }
-
-  test("qualityDriftStream: per-batch drift vs the stored trailing batches; " +
-       "first batch vacuous") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double)]
-    val store = java.nio.file.Files.createTempDirectory("graft_dstream").toString + "/s"
-    val suite = Seq(Checks.minValue("_2", 0.0))
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Option[Double], Boolean)]
-    val q = graft.streaming.Streaming.qualityDriftStream(
-      mem.toDF(), suite, store, maxAbsDelta = 1.0) { rep =>
-      got ++= rep.collect().map(r => (r.getAs[Long]("batch_id"),
-        r.getAs[Double]("metric"), Option(r.get(3)).map(_.asInstanceOf[Double]),
-        r.getAs[Boolean]("passed")))
-      ()
-    }
-    try {
-      mem.addData((1L, 5.0)); q.processAllAvailable()
-      mem.addData((2L, 5.5)); q.processAllAvailable()
-      mem.addData((3L, 9.0)); q.processAllAvailable()
-      assert(got.length === 3)
-      val inOrder = got.sortBy(_._1)
-      assert(inOrder(0)._3 === None && inOrder(0)._4, "first batch: vacuous pass")
-      assert(inOrder(1)._3 === Some(5.0) && inOrder(1)._4) // |5.5-5.0| <= 1
-      assert(inOrder(2)._3 === Some(5.25) && !inOrder(2)._4,
-        "third batch drifts beyond the bound vs mean(5.0, 5.5)")
-    } finally q.stop()
   }
 
   test("referential counts orphans and null child keys against the fraction") {
@@ -346,8 +293,8 @@ class ChecksSpec extends SparkTestBase {
     assert(ReportStore.load(spark, path).count() === 2,
       "replay after compact must replace the period, not duplicate it")
     // the drift mean sees each period once
-    val drift = ReportStore.appendAndDrift(report(0.95), path, "b000000000003", 0.05)
-      .collect()
+    ReportStore.append(report(0.95), path, "b000000000003")
+    val drift = Checks.driftReport(ReportStore.load(spark, path), 0.05).collect()
     assert(drift.length === 1)
     assert(drift(0).getDouble(4) === 0.01) // |0.95 - mean(1.0, 0.92)| rounded
     // the exact use case the per-period overwrite exists for: a

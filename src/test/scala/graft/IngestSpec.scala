@@ -90,4 +90,40 @@ class IngestSpec extends SparkTestBase {
     assert(agg.collect().toSet === fresh)
     assert(fresh.forall(r => r.getDouble(2) < 999.0), "the outlier was nulled and imputed")
   }
+
+  /** The numeric values outside the cleaner's fences (p05/p95 ± 1.5 ×
+    * their spread), counted apart from the cleaner: one percentile pass
+    * over the flat rows, then one count of the values outside.
+    */
+  private def fenceCount(raw: org.apache.spark.sql.DataFrame): Long = {
+    val flat = Ingest.flatten(raw)
+    val cols = WeatherSchema.numericCols
+    val q = cols.flatMap(c => Seq(percentile(col(c), lit(0.05)), percentile(col(c), lit(0.95))))
+    val b = flat.agg(q.head, q.tail: _*).collect()(0)
+    val outside = cols.zipWithIndex.map { case (c, i) =>
+      val (q1, q3) = (b.getDouble(2 * i), b.getDouble(2 * i + 1))
+      when(col(c) < q1 - 1.5 * (q3 - q1) || col(c) > q3 + 1.5 * (q3 - q1), 1L).otherwise(0L)
+    }.reduce(_ + _)
+    flat.agg(sum(outside)).collect()(0).getLong(0)
+  }
+
+  test("transform feeds weather_outliers_detected with each value the fence nulls") {
+    import graft.observe.Metrics
+    val polls = (0 until 30).map(i => goodEpoch.replace("\"temp\": 14.2", s"\"temp\": ${10 + i % 7}.5"))
+    def moved(raw: org.apache.spark.sql.DataFrame): Long = {
+      val before = Metrics.get(Metrics.OutliersDetected)
+      Ingest.transform(raw)
+      Metrics.get(Metrics.OutliersDetected) - before
+    }
+    // a wild temperature and a wild humidity on two more polls
+    val dirty = readRaw(polls ++ Seq(
+      goodEpoch.replace("\"temp\": 14.2", "\"temp\": 999.0"),
+      goodEpoch.replace("\"humidity\": 77", "\"humidity\": 5000")): _*)
+    val expected = fenceCount(dirty)
+    assert(expected === 2L)
+    assert(moved(dirty) === expected)
+    val clean = readRaw(polls: _*)
+    assert(fenceCount(clean) === 0L)
+    assert(moved(clean) === 0L)
+  }
 }

@@ -18,19 +18,6 @@ class MultimodalSpec extends SparkTestBase {
       Row(4L, "audio", null, meta(sr = 16000)))),
     Multimodal.mediaSchema)
 
-  test("decodeFeatures: deterministic fixed-width vectors, null-safe") {
-    val f = Multimodal.decodeFeatures(media, dim = 8).collect()
-      .map(m => m.media_id -> m.feature).toMap
-    assert(f.values.forall(_.length === 8))
-    assert(f(1L).toSeq === f(2L).toSeq)        // same bytes -> same features
-    assert(f(1L).toSeq !== f(3L).toSeq)        // different bytes differ
-    assert(f(4L).length === 8)                 // null bytes handled
-    // deterministic across runs
-    val again = Multimodal.decodeFeatures(media, dim = 8).collect()
-      .map(m => m.media_id -> m.feature).toMap
-    assert(again(1L).toSeq === f(1L).toSeq)
-  }
-
   test("blobDedup: identical bytes collapse to the min-id keeper; blob bytes never shuffle") {
     val out = Multimodal.blobDedup(media)
     val byKeeper = out.collect().map { r =>

@@ -2,9 +2,10 @@ package graft
 
 import java.sql.Timestamp
 import graft.analyze.Profiler
-import org.apache.spark.sql.graft.GraftOptimizations
 
 class ProfilerSpec extends SparkTestBase {
+  // approx mode needs the ApproxAggRewrite rule, which GraftExtensions injects
+  override lazy val spark = SparkTestBase.extensionSession
   import spark.implicits._
 
   private lazy val t = Seq(
@@ -31,7 +32,6 @@ class ProfilerSpec extends SparkTestBase {
   test("profile: column subset and approx mode") {
     // approx mode is the session's one exact→sketch switch: the
     // ApproxAggRewrite rule turns the profile's count(DISTINCT) into HLL
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.approx.aggregates", "true")
     try {
       val q = Profiler.profile(t, Seq("id"))
@@ -40,6 +40,12 @@ class ProfilerSpec extends SparkTestBase {
       assert(p.length === 1)
       // HLL estimate of 4 distinct longs is exact at this cardinality
       assert(p(0).getAs[Long]("n_distinct") === 4L)
+      // several columns: the rule runs before Spark's distinct-aggregate
+      // rewrite, so no exact count(DISTINCT) survives behind an Expand
+      val all = Profiler.profile(t).queryExecution.optimizedPlan
+      assert(all.collectFirst { case e: org.apache.spark.sql.catalyst.plans.logical.Expand => e }
+        .isEmpty, s"multi-column approx profile kept an Expand:\n$all")
+      assert(!all.toString.contains("count(distinct"))
     } finally spark.conf.set("spark.graft.approx.aggregates", "false")
   }
 

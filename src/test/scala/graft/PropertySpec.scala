@@ -291,9 +291,9 @@ class PropertySpec extends SparkTestBase {
     val df = rng.shuffle(dirty).zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
     val composed = graft.clean.Cleaning.imputeMedians(
-      graft.clean.Cleaning.nullOutliers(df, Seq("v")), Seq("v"))
+      graft.clean.Cleaning.nullOutliers(df, Seq("v"))._1, Seq("v"))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val fused = graft.clean.Cleaning.twoPassClean(df, Seq("v"))
+    val fused = graft.clean.Cleaning.twoPassClean(df, Seq("v"))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(fused === composed)
   }

@@ -49,16 +49,6 @@ class SinksSpec extends SparkTestBase {
     assert(new java.io.File(s"$p/city=london/date=2024-01-01").exists())
   }
 
-  test("S12 analysis JSON: nested result object per key") {
-    val p = tmp("analysis")
-    val agg = df.groupBy("city").agg(avg($"temperature").as("mean_temp"))
-    Sinks.writeAnalysisJson(agg, "city", p)
-    val back = spark.read.json(p)
-    assert(back.columns.sorted.toSeq === Seq("city", "result"))
-    val london = back.filter($"city" === "london").collect()(0).getAs[String]("result")
-    assert(london.contains("\"mean_temp\":11.0"))
-  }
-
   test("S9 literal parity: JDBC sink (embedded Derby) + post-write indexes") {
     val dbDir = java.nio.file.Files.createTempDirectory("graft_derby")
     val url = s"jdbc:derby:${dbDir}/weather;create=true"
@@ -75,20 +65,6 @@ class SinksSpec extends SparkTestBase {
       assert(idx.exists(_.toLowerCase.contains("idx_weather_data_city")))
       assert(idx.exists(_.toLowerCase.contains("idx_weather_data_date")))
     } finally conn.close()
-  }
-
-  test("ORC sink round-trips with partition pruning (format parity)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
-    val df = Seq(("london", "2024-01-01", 10.0), ("tokyo", "2024-01-01", 5.0),
-                 ("london", "2024-01-02", 12.0))
-      .toDF("city", "date", "temperature")
-    graft.sink.Sinks.writeOrc(df, dir, Seq("city"))
-    val back = spark.read.orc(dir)
-    assert(back.count() === 3)
-    assert(back.filter($"city" === "london").count() === 2)
-    // partition column prunes at the scan like the parquet sink
-    val plan = back.filter($"city" === "london").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(city"))
   }
 
   test("BucketedMirror: regenerated source data forces a rebuild, not stale reuse") {

@@ -427,14 +427,11 @@ class TextSpec extends SparkTestBase {
       "A second real sentence also survives the filter!")
   }
 
-  test("urlCounts and domainCensus: extraction, no-match docs, query strings stripped") {
+  test("domainCensus: extraction, no-match docs, query strings stripped") {
     val df = Seq(
       (1L, "read https://a.org/x and http://b.net/y?z=1 now"),
       (2L, "no links here"),
       (3L, "dup https://a.org/other")).toDF("id", "t")
-    val counts = Text.urlCounts(df, "id", "t").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(counts === Map(1L -> 2L, 2L -> 0L, 3L -> 1L))
     val census = Text.domainCensus(df, "t").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(census === Map("a.org" -> 2L, "b.net" -> 1L))
