@@ -38,6 +38,7 @@ object Pipeline {
     * re-reading sinks.
     */
   def run(spark: SparkSession, cfg: Config): Result = {
+    Metrics.install(spark)
     Metrics.inc(Metrics.PipelineRuns)
     try {
       // extract: in batch mode the "extract" phase is the scan itself; a

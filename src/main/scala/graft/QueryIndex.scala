@@ -1,10 +1,11 @@
 package graft
 
 /** Generator for `docs/QUERIES.md` — the user-facing index of the full
-  * registered query surface: one row per [[SparkEntry.queries]] entry
-  * with its family and how the driver checks it (independent DuckDB SQL,
-  * SQL replay over the query's own Spark-dumped candidate set, or
-  * rows-only with property gates). SURVEY §8 is the builder-facing
+  * registered query surface: one row per [[SparkEntry.registry]] query
+  * with its declared family and the kind of its declared oracle
+  * (independent DuckDB SQL, SQL replay over the query's own Spark-dumped
+  * candidate set, or rows-only with property gates), and one row per
+  * [[SparkEntry.families]] entry. SURVEY §8 is the builder-facing
   * ledger; this is the table a USER scans to find the operator and its
   * verification story.
   *
@@ -14,46 +15,22 @@ package graft
   * the registry (adding a query without regenerating fails the suite).
   */
 object QueryIndex {
+  import graft.query.{DumpReplay, Oracle, RowsOnly, Sql}
 
-  /** prefix → (family, implementation area, primary spec suites). */
-  val families: Seq[(String, String, String, String)] = Seq(
-    ("q", "TPC-H query shapes", "graft.analyze.Analytics, graft.joins.Joins", "PlanQualitySpec, JoinsSpec"),
-    ("a", "aggregation / statistics", "graft.analyze.Analytics, graft.analyze.Profiler", "AnalyticsSpec, IncrementalAggSpec, ProfilerSpec"),
-    ("w", "windows / sessions / lifecycle", "graft.analyze.Analytics, graft.analyze.Lifecycle", "AnalyticsSpec, LifecycleSpec"),
-    ("o", "ordering / top-k / set ops", "graft.analyze.Analytics, o.a.s.sql.graft.TopKExpressions", "AnalyticsSpec"),
-    ("j", "join strategies", "graft.joins.Joins, graft.sink.BucketedMirror", "JoinsSpec, PlanQualitySpec"),
-    ("c", "statistics-dependent cleaning", "graft.clean.Cleaning", "CleaningSpec"),
-    ("f", "scalar / date functions", "graft.functions.Scalars", "ScalarsSpec"),
-    ("t", "text analysis", "graft.text.Text", "TextSpec, RowsOnlyGateSpec, PropertySpec"),
-    ("d", "deduplication (exact / MinHash / SimHash / incremental)", "graft.dedup.Dedup, LshIndex, HashLedger", "DedupSpec, RowsOnlyGateSpec"),
-    ("s", "similarity search (brute / SRP / IVF / int8 / MMR)", "graft.sim.Similarity, SrpIndex, IvfIndex", "SimilaritySpec"),
-    ("e", "embedding near-dup + semantic dedup", "graft.dedup.Dedup (SRP path)", "DedupSpec"),
-    ("m", "multimodal (real codecs + perception dedup)", "graft.multimodal.Multimodal, MediaCodec", "MultimodalSpec"),
-    ("z", "data layout (z-order clustered mirror)", "graft.sink.ZOrder, o.a.s.sql.graft.ZOrderExpressions", "ZOrderSpec"),
-    ("er", "entity resolution (fuzzy record linkage)", "graft.er.EntityResolution", "EntityResolutionSpec"),
-    ("g", "link-graph analytics (PageRank / harmonic / degrees / triangles)", "graft.graph.Graph", "GraphSpec, GraphPropertySpec"),
-    ("ml", "relational GD quality classifier", "graft.ml.QualityClassifier", "QualityClassifierSpec"),
-    ("dq", "declarative data-quality suites", "graft.quality.Checks", "ChecksSpec"))
-
-  private def familyName(prefix: String): String =
-    families.find(_._1 == prefix).map(_._2).getOrElse(prefix)
-
-  /** How the driver's correctness gate checks this query. */
-  def oracleKind(q: String): String =
-    SparkEntry.oracleSql.get(q) match {
-      case None =>
-        "rows-only (hash/sketch-keyed output; property-gated in RowsOnlyGateSpec)"
-      case Some(sql) if sql.contains("_candidates/") =>
-        "DuckDB SQL replay over the query's own Spark-dumped candidate set"
-      case Some(_) =>
-        "independent DuckDB SQL on the parquet tables"
-    }
+  /** How the correctness gate checks a query with this oracle. */
+  def oracleKind(o: Oracle): String = o match {
+    case RowsOnly(_) =>
+      "rows-only (hash/sketch-keyed output; property-gated in RowsOnlyGateSpec)"
+    case DumpReplay(_) =>
+      "DuckDB SQL replay over the query's own Spark-dumped candidate set"
+    case Sql(_) =>
+      "independent DuckDB SQL on the parquet tables"
+  }
 
   def render: String = {
-    val qs = SparkEntry.queries.keySet
-    val oracled = qs.intersect(SparkEntry.oracleSql.keySet)
-    val dumpReplay = oracled.filter(q => SparkEntry.oracleSql(q).contains("_candidates/"))
-    val rowsOnly = qs -- oracled
+    val qs = SparkEntry.registry
+    val (rowsOnly, oracled) = qs.partition(_.oracle.isInstanceOf[RowsOnly])
+    val dumpReplay = qs.filter(_.oracle.isInstanceOf[DumpReplay])
     val sb = new StringBuilder
     sb.append("# Query surface index\n\n")
     sb.append("Generated by `sbt \"runMain graft.QueryIndex\"` from the\n")
@@ -68,17 +45,16 @@ object QueryIndex {
     sb.append("## Families\n\n")
     sb.append("| prefix | family | implementation | primary specs |\n")
     sb.append("|---|---|---|---|\n")
-    families.foreach { case (p, fam, impl, specs) =>
-      val n = qs.count(q => q.takeWhile(_ != '_').replaceAll("[0-9b]+$", "") == p)
-      sb.append(s"| `$p` ($n) | $fam | $impl | $specs |\n")
+    SparkEntry.families.foreach { f =>
+      sb.append(s"| `${f.prefix}` (${f.queries.size}) | ${f.title} | ${f.impl} | ${f.specs} |\n")
     }
     sb.append("\n## Queries\n\n")
     sb.append("| query | family | correctness check |\n")
     sb.append("|---|---|---|\n")
-    qs.toSeq.sorted.foreach { q =>
-      val p = q.takeWhile(_ != '_').replaceAll("[0-9b]+$", "")
-      sb.append(s"| `$q` | ${familyName(p)} | ${oracleKind(q)} |\n")
-    }
+    SparkEntry.families.flatMap(f => f.queries.map(_ -> f.title)).sortBy(_._1.name)
+      .foreach { case (q, title) =>
+        sb.append(s"| `${q.name}` | $title | ${oracleKind(q.oracle)} |\n")
+      }
     sb.toString
   }
 

@@ -21,8 +21,8 @@ object JsonEscape {
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // verify mode: the dump-replay oracles (d13..d16/e2/e3/s2/s4/s7/s8/
-    // t7) read the candidate dump their own query writes THIS run — so
+    // verify mode: the dump-replay oracles (`DumpReplay`) read the
+    // candidate dump their own query writes THIS run — so
     // Verify, and only Verify, turns the dump writes on. Bench and specs
     // run the pure plans (CandidateDumps scaladoc).
     CandidateDumps.enable()
@@ -104,11 +104,16 @@ object Verify {
     else
       System.err.println(s"[verify] all ${selected.size} selected queries produced output" +
         (if (skipped.nonEmpty) s" (${skipped.size} filtered out by SPARK_GRAFT_ONLY)" else ""))
-    // oracleSqlFor rebases the d12/d13/e2 candidate-dump paths onto THIS
-    // run's sf dir (identity at the driver's contract sf0.01)
-    val json = SparkEntry.oracleSqlFor(sfDir)
-      .map { case (k, v) => s"${JsonEscape(k)}: ${JsonEscape(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(sfDir))
     spark.stop()
   }
+
+  /** The text of `oracle_sql.json` for the tables in `sfDir`: every
+    * oracle, with the dump-replay ones reading this run's candidate dumps.
+    * ContractSpec pins its sf0.01 digest, so no refactor can change the SQL
+    * that DuckDB runs.
+    */
+  def oracleJson(sfDir: String): String =
+    SparkEntry.oracleSqlFor(sfDir)
+      .map { case (k, v) => s"${JsonEscape(k)}: ${JsonEscape(v)}" }.mkString("{", ",", "}")
 }

@@ -615,8 +615,8 @@ object Multimodal {
 
   /** Per-image packed 64-bit average-hash as a PUBLIC narrow frame
     * `(media_id, ahash)` — the perception-level content address. This is
-    * what a standing corpus persists so that incremental and streaming
-    * consumers never re-decode it (the pixel-digest-ledger posture one
+    * what a standing corpus persists so that incremental consumers
+    * ([[incrementalPerceptualNew]]) never re-decode it (the pixel-digest-ledger posture one
     * rung up the ladder): decode once, probe forever.
     */
   def packedImageHashes(images: DataFrame): DataFrame =
@@ -640,21 +640,7 @@ object Multimodal {
     */
   def incrementalPerceptualNew(batch: DataFrame, corpusHashes: DataFrame,
                                maxHamming: Int = 3,
-                               bucketCap: Int = graft.dedup.Dedup.defaultBucketCap): DataFrame =
-    incrementalPerceptualNewWithCleanup(batch, corpusHashes, maxHamming, bucketCap)._1
-
-  /** [[incrementalPerceptualNew]] plus an explicit release hook for the
-    * batch-hash localCheckpoint it pins: the one-shot form can leave the
-    * blocks to the ContextCleaner (one frame, freed on driver GC), but a
-    * LONG-RUNNING caller invoking this per micro-batch
-    * ([[perceptualGateStream]]) would accumulate pinned executor storage
-    * until GC happens to run — call the returned cleanup as soon as the
-    * result frame has been consumed.
-    */
-  private[graft] def incrementalPerceptualNewWithCleanup(
-      batch: DataFrame, corpusHashes: DataFrame,
-      maxHamming: Int = 3,
-      bucketCap: Int = graft.dedup.Dedup.defaultBucketCap): (DataFrame, () => Unit) = {
+                               bucketCap: Int = graft.dedup.Dedup.defaultBucketCap): DataFrame = {
     val b = packedHashes(batch).localCheckpoint() // one batch decode feeds probe + anti
     val bc = chunkedHashes(b.select("__h").distinct(), maxHamming)
     val cc = graft.dedup.Dedup.capBuckets(
@@ -664,38 +650,8 @@ object Multimodal {
     val near = bc.join(cc, Seq("chunk", "ckey"))
       .filter(bit_count(col("__h").bitwiseXOR(col("__ch"))) <= maxHamming)
       .select("__h").distinct()
-    val result = b.join(near, Seq("__h"), "left_anti").select("media_id")
-    val cleanup = () => b.queryExecution.analyzed match {
-      // free the checkpointed RDD's storage blocks without waiting for
-      // the ContextCleaner to notice the dereferenced RDD
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
-    (result, cleanup)
+    b.join(near, Seq("__h"), "left_anti").select("media_id")
   }
-
-  /** Streaming twin of [[incrementalPerceptualNew]] (the HashLedger
-    * pattern at the perception rung): each arriving
-    * micro-batch of media rows is gated against the standing perceptual
-    * hash frame; `sink` receives the batch's surviving `media_id` frame.
-    * Stateless per batch — results depend only on (batch, corpus), so
-    * the streamed union over batches equals the one-shot batch answer
-    * (the parity gate in MultimodalSpec).
-    */
-  def perceptualGateStream(corpusHashes: DataFrame, mediaStream: DataFrame,
-                           maxHamming: Int = 3)
-                          (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.Streaming.microBatches(mediaStream) { (batch, _) =>
-      if (!batch.isEmpty) {
-        // release each micro-batch's checkpoint blocks once the sink
-        // has consumed the frame — a long-running stream must not
-        // accumulate pinned executor storage until driver GC
-        val (result, cleanup) =
-          incrementalPerceptualNewWithCleanup(batch, corpusHashes, maxHamming)
-        try sink(result) finally cleanup()
-      }
-    }
 
   /** Animated-GIF table: one real multi-frame motion asset per doc id
     * (MediaCodec.encodeGif; frame count and colors formula-derived).

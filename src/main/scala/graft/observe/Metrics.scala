@@ -3,6 +3,7 @@ package graft.observe
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -134,25 +135,33 @@ object Metrics {
     httpServer.foreach(_.stop(0)); httpServer = None
   }
 
-  // weak keys: a stopped/dereferenced session must be collectable — a
-  // strong static map would leak every session a long-lived JVM creates
-  private val installed =
-    new java.util.WeakHashMap[SparkSession, (JobMetricsListener, StreamMetricsListener)]()
+  // weak keys: a stopped context or dereferenced session must be
+  // collectable — a strong static map would leak every one a long-lived
+  // JVM creates
+  private val jobListeners =
+    new java.util.WeakHashMap[SparkContext, JobMetricsListener]()
+  private val streamListeners =
+    new java.util.WeakHashMap[SparkSession, StreamMetricsListener]()
 
-  /** Install both listeners on a session. Truly idempotent: repeated calls
-    * on the same session return the already-registered pair instead of
-    * stacking duplicates that would double-count every event.
+  /** Install both listeners for a session; `Pipeline.run` and
+    * `StreamingPipeline.startRouted` call it. The job listener is keyed by
+    * the SparkContext, which every session on it shares, so a second
+    * session never adds a second listener that would count each job and
+    * task twice. The stream listener is keyed by the session, because
+    * `spark.streams` is per session. Idempotent.
     */
   def install(spark: SparkSession): (JobMetricsListener, StreamMetricsListener) =
-    installed.synchronized {
-      Option(installed.get(spark)).getOrElse {
-        val j = new JobMetricsListener
-        val st = new StreamMetricsListener
-        spark.sparkContext.addSparkListener(j)
-        spark.streams.addListener(st)
-        val pair = (j, st)
-        installed.put(spark, pair)
-        pair
-      }
+    synchronized {
+      val j = jobListeners.computeIfAbsent(spark.sparkContext, sc => {
+        val l = new JobMetricsListener
+        sc.addSparkListener(l)
+        l
+      })
+      val st = streamListeners.computeIfAbsent(spark, s => {
+        val l = new StreamMetricsListener
+        s.streams.addListener(l)
+        l
+      })
+      (j, st)
     }
 }

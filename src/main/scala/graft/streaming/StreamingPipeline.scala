@@ -97,6 +97,7 @@ object StreamingPipeline {
     */
   def startRouted(spark: SparkSession, cfg: Config,
                   drain: Boolean = false): Seq[StreamingQuery] = {
+    Metrics.install(spark)
     // the signature column rides along only when the near-dup branch
     // needs it (dropped again right after the dedup)
     val decodeCols = Seq(col("city"), col("timestamp").as("ts"), col("temperature")) ++

@@ -98,13 +98,31 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("query names follow the documented prefix convention") {
-    // the family registry IS the convention — a query whose parsed
-    // prefix has no QueryIndex.families row would render unlabelled
-    val prefixes = QueryIndex.families.map(_._1).toSet
-    SparkEntry.queries.keys.foreach { k =>
-      val p = k.takeWhile(_ != '_').replaceAll("[0-9b]+$", "")
-      assert(prefixes.contains(p), s"unexpected query name shape: $k")
+    // each query is declared in a family; its name is the family prefix,
+    // a number, then `_` and a description
+    for (f <- SparkEntry.families; q <- f.queries) {
+      val rest = q.name.stripPrefix(f.prefix)
+      assert(q.name.startsWith(f.prefix) && rest.headOption.exists(_.isDigit) &&
+        rest.contains('_'), s"${q.name} does not carry its family prefix `${f.prefix}`")
     }
+  }
+
+  test("registry names are unique") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.diff(names.distinct).isEmpty)
+    assert(SparkEntry.queries.size === names.size)
+    assert(SparkEntry.families.map(_.prefix).distinct.size === SparkEntry.families.size)
+  }
+
+  test("oracle_sql.json at sf0.01 is pinned") {
+    // every oracle's DuckDB text; the candidate-dump paths are absolute,
+    // so the working directory is replaced by a fixed token
+    val cwd = new java.io.File("").getAbsolutePath
+    val json = Verify.oracleJson(SparkEntry.contractDir).replace(cwd, "<cwd>")
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+    assert(sha === "b2653f5de1af9f60b5a33e4ad869e0cda2c6ca27669777310108cb9dc7db1134")
   }
 
   test("native expressions: codegen lives only in the shared kernel base") {

@@ -21,7 +21,7 @@ class EdgeIndexSpec extends SparkTestBase {
   test("ensure: cold build == inline derivation; warm ensure evaluates nothing " +
        "and rewrites nothing; catalog loss re-attaches without rebuild") {
     import graft.graph.EdgeIndex
-    val inline = SparkEntry.graphEdgesInline(spark, dir)
+    val inline = graft.query.GraphQueries.graphEdgesInline(spark, dir)
     EdgeIndex.drop(spark, dir, "spec")
     val idx1 = EdgeIndex.ensure(spark, dir, "spec", inline)
     val expected = edgeRows(inline)
@@ -51,7 +51,7 @@ class EdgeIndexSpec extends SparkTestBase {
   test("consumers ride the bucketed layout: a src aggregation over the index " +
        "plans no exchange, and pageRank through the index equals inline") {
     import graft.graph.EdgeIndex
-    val inline = SparkEntry.graphEdgesInline(spark, dir)
+    val inline = graft.query.GraphQueries.graphEdgesInline(spark, dir)
     EdgeIndex.drop(spark, dir, "spec2")
     val idx = EdgeIndex.ensure(spark, dir, "spec2", inline)
     val agg = idx.groupBy("src").agg(sum("n_trans").as("t"))

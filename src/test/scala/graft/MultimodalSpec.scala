@@ -512,36 +512,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(out.contains(22L), "novel perception must survive")
   }
 
-  test("perceptualGateStream: streamed union over micro-batches == one-shot batch answer") {
-    import graft.multimodal.MediaCodec
-    val dir = "/root/testdata/sf0.001"
-    // standing corpus: the seedMod-101 grid universe; arriving batches:
-    // the seedMod-61 fixture (perception overlap wherever a 61-seed hash
-    // lands within hamming 3 of a 101-seed hash)
-    val corpus = Multimodal.syntheticGridImageTable(spark, dir)
-      .filter(pmod($"media_id", lit(10)) =!= 0)
-    val corpusHashes = Multimodal.packedImageHashes(corpus).localCheckpoint()
-    val fresh = Multimodal.syntheticGridImageTable(spark, dir, seedMod = 61)
-      .filter(pmod($"media_id", lit(10)) === 0)
-    val staged = java.nio.file.Files.createTempDirectory("graft_percept_stream")
-    fresh.filter($"media_id" < 250).write.mode("overwrite")
-      .parquet(staged.resolve("p1").toString)
-    fresh.filter($"media_id" >= 250).write.mode("overwrite")
-      .parquet(staged.resolve("p2").toString)
-    val stream = spark.readStream.schema(fresh.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged.toString + "/*")
-    val got = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    val q = Multimodal.perceptualGateStream(corpusHashes, stream) { surv =>
-      surv.collect().foreach(r => got.add(r.getAs[Long]("media_id")))
-    }
-    try q.processAllAvailable() finally q.stop()
-    val expected = Multimodal.incrementalPerceptualNew(fresh, corpusHashes)
-      .collect().map(_.getAs[Long]("media_id")).toSet
-    import scala.jdk.CollectionConverters._
-    assert(got.asScala.toSet === expected)
-  }
-
   test("animated GIF: real frame-by-frame decode round-trips the formulas") {
     import graft.multimodal.MediaCodec
     Seq(0L, 3L, 7L, 42L).foreach { id =>
@@ -589,6 +559,41 @@ class MultimodalSpec extends SparkTestBase {
       .collect().map(r => r.getAs[Long]("media_id")).sorted
     assert(kept.toSeq === Seq(11L, 21L),
       "one first-seen keeper per novel content; corpus-known and repeats die")
+  }
+
+  test("MediaIngestPipeline: a batch replayed after a lost commit admits nothing twice") {
+    import graft.multimodal.{MediaCodec, MediaIngestPipeline}
+    val tmp = java.nio.file.Files.createTempDirectory("graft_media_replay")
+    val in = tmp.resolve("in"); val out = tmp.resolve("out"); val ck = tmp.resolve("ck")
+    // two files, two micro-batches: batch 1 holds a byte-variant of its
+    // own novel content 8, batch 2 another copy of 8 plus novel 9
+    Seq((10L, MediaCodec.encodePng(8L)), (11L, MediaCodec.encodePngVariant(8L)))
+      .toDF("media_id", "bytes").coalesce(1).write.parquet(in.resolve("f1").toString)
+    val b2 = Seq((20L, MediaCodec.encodePngVariant(8L)), (21L, MediaCodec.encodePng(9L)))
+      .toDF("media_id", "bytes")
+    b2.coalesce(1).write.parquet(in.resolve("f2").toString)
+    val cfg = MediaIngestPipeline.Config(
+      inputDir = in.toString + "/*", checkpointDir = ck.toString,
+      outputDir = out.toString, schema = b2.schema,
+      corpusDigests = Multimodal.imagePixelDigests(b2.limit(0)))
+    def run(): Unit = {
+      val q = MediaIngestPipeline.start(spark, cfg, drain = true)
+      q.awaitTermination()
+      q.exception.foreach(e => throw e)
+    }
+    def kept() = spark.read.parquet(out.toString).collect()
+      .map(r => r.getAs[Long]("media_id") -> r.getAs[String]("pixel_md5"))
+    run()
+    val before = kept()
+    assert(before.map(_._1).sorted.toSeq === Seq(10L, 21L))
+    // the crash window: batch 2 reached the sink, its commit entry did not;
+    // the restart replays that batch id
+    val lost = dropLastCommit(ck.toString)
+    run()
+    assert(lost.exists(), "the restart must replay and re-commit the batch")
+    val after = kept()
+    assert(after.length === before.length)
+    assert(after.map(_._2).distinct.length === after.length, "one keeper per novel content")
   }
 
   test("spreadBySize partitions by payload volume") {

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import graft.observe.Metrics
 
@@ -103,6 +103,35 @@ class PipelineSpec extends SparkTestBase {
     assert(gauge.getValue.asInstanceOf[Long] > 0L)
     Metrics.referenceNames.foreach(n =>
       assert(src.metricRegistry.getGauges.containsKey(n), s"gauge $n missing"))
+  }
+
+  test("metrics: two sessions on one context count each job once") {
+    Metrics.install(spark)
+    Metrics.install(spark.newSession())
+    val sc = spark.sparkContext
+    // a probe added after the metrics listeners, on the same queue: once it
+    // has seen a job end, so have they
+    val mine, done = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "metrics-probe"))
+          mine.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (mine.contains(e.jobId)) done.add(e.jobId)
+    }
+    sc.addSparkListener(probe)
+    def oneJob(): Long = {
+      sc.setJobGroup("metrics-probe", "one job")
+      try sc.parallelize(1 to 4, 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (done.size < mine.size && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(done.size === mine.size)
+      Metrics.get(Metrics.SparkJobsCompleted)
+    }
+    try {
+      val before = oneJob()
+      assert(oneJob() - before === 1L)
+    } finally sc.removeSparkListener(probe)
   }
 
   test("Prometheus HTTP exposition serves the reference metric names") {

@@ -502,19 +502,18 @@ class PlanQualitySpec extends SparkTestBase {
       "probe join must stay single-key on the bucket key")
   }
 
-  test("plan ledger: every ExplainAudit.ledger entry has a committed plan file") {
-    // the ledger's whole point is that every gated plan shape is diffable
-    // in review; round 8 shipped a ledger entry (j7) whose file was never
-    // generated — this pins both directions so the drift can't recur
+  test("plan ledger: default selection == committed plan files") {
+    // a no-argument ExplainAudit run refreshes exactly the committed
+    // ledger, and a plan file whose query was renamed or removed fails
+    // here instead of silently dropping out of every refresh
     val files = Option(new java.io.File("docs/plans").listFiles).toSeq.flatten
       .map(_.getName).filter(_.endsWith(".txt")).map(_.stripSuffix(".txt")).toSet
-    val missing = ExplainAudit.ledger.filterNot(files.contains)
-    assert(missing.isEmpty,
-      s"ledger entries without a committed plan file (run scripts/refresh_plans.sh): $missing")
-    val extra = files.filterNot(ExplainAudit.ledger.contains)
-    assert(extra.isEmpty, s"plan files no longer in the ledger: $extra")
-    ExplainAudit.ledger.foreach(q =>
-      assert(SparkEntry.queries.contains(q), s"ledger entry $q is not a registered query"))
+    assert(files.nonEmpty)
+    val selected = ExplainAudit.committed("docs/plans")
+    assert(selected.distinct.size === selected.size)
+    val unregistered = files -- SparkEntry.queries.keySet
+    assert(unregistered.isEmpty, s"plan files naming no registered query: $unregistered")
+    assert(selected.toSet === files)
   }
 
   test("BucketedMirror.bucketsFor: size-derived, power-of-two, floored") {

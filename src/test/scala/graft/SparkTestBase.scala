@@ -17,6 +17,19 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     */
   def committedLeaf(base: java.io.File, leaf: String): java.io.File =
     new java.io.File(base, StoreLog.open(spark, base).snapshot.leaves(leaf))
+
+  /** Deletes the newest entry of a query checkpoint's commit log, as a
+    * crash between a batch's sink write and its commit entry leaves it;
+    * returns the deleted entry's file.
+    */
+  def dropLastCommit(checkpoint: String): java.io.File = {
+    val commits = new java.io.File(checkpoint, "commits")
+    val last = commits.listFiles().filter(_.getName.forall(_.isDigit))
+      .maxBy(_.getName.toLong)
+    new java.io.File(commits, s".${last.getName}.crc").delete()
+    assert(last.delete(), s"could not delete $last")
+    last
+  }
 }
 
 object SparkTestBase {

@@ -99,6 +99,25 @@ class StreamingSpec extends SparkTestBase {
     assert(graft.observe.Metrics.get(graft.observe.Metrics.StreamWindowsWritten) > 0L)
   }
 
+  test("StreamingPipeline feeds stream metrics on a session never installed") {
+    val fresh = spark.newSession()
+    val base = java.nio.file.Files.createTempDirectory("graft_spipe_metrics")
+    val before = graft.observe.Metrics.get(graft.observe.Metrics.StreamBatchesCompleted)
+    val q = graft.streaming.StreamingPipeline.start(fresh,
+      graft.streaming.StreamingPipeline.Config(
+        checkpointDir = base.resolve("ckpt").toString,
+        outputDir = base.resolve("out").toString,
+        cities = Seq("London"), window = "10 minutes", lateness = "5 minutes",
+        maxPolls = 20),
+      drain = false)
+    try q.processAllAvailable() finally q.stop()
+    // progress events reach listeners asynchronously
+    val deadline = System.nanoTime() + 10000000000L
+    while (graft.observe.Metrics.get(graft.observe.Metrics.StreamBatchesCompleted) == before &&
+      System.nanoTime() < deadline) Thread.sleep(50)
+    assert(graft.observe.Metrics.get(graft.observe.Metrics.StreamBatchesCompleted) > before)
+  }
+
   test("streaming windowedAgg over real events parquet equals batch dailyAgg") {
     val dir = "/root/testdata/sf0.001"
     val batch = graft.Tables.events(spark, dir)
@@ -557,19 +576,6 @@ class StreamingSpec extends SparkTestBase {
       assert(windows.contains("2024-01-01 01:00:00.0")) // on-time window emitted
       assert(!windows.contains("2024-01-01 01:20:00.0")) // late event dropped
     } finally q.stop()
-  }
-
-  /** Deletes the newest entry of a query checkpoint's commit log, as a
-    * crash between a batch's sink write and its commit entry leaves it;
-    * returns the deleted entry's file.
-    */
-  private def dropLastCommit(checkpoint: String): java.io.File = {
-    val commits = new java.io.File(checkpoint, "commits")
-    val last = commits.listFiles().filter(_.getName.forall(_.isDigit))
-      .maxBy(_.getName.toLong)
-    new java.io.File(commits, s".${last.getName}.crc").delete()
-    assert(last.delete(), s"could not delete $last")
-    last
   }
 
   test("StreamingPipeline: a batch replayed after a lost commit entry writes " +

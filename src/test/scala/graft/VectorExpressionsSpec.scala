@@ -246,6 +246,38 @@ class VectorExpressionsSpec extends SparkTestBase {
     assert(out.map(_.getLong(0)).distinct.toSeq === Seq(1L))
   }
 
+  test("custom generators: same rows with codegen on and off") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(31)
+    val vecs: Seq[Seq[Any]] = (0 until 40).map(_ => Seq.fill(4)(rnd.nextGaussian())) ++ Seq(
+      null, Seq.empty, Seq(1.0, 2.0), Seq.fill(4)(0.0), Seq.fill(4)(Double.NaN),
+      Seq(Double.NaN, 1.0, 0.0, 2.0), Seq(Double.PositiveInfinity, 1.0, 0.0, -1.0),
+      Seq(1.0, null, 2.0, 3.0))
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("v", ArrayType(DoubleType, containsNull = true))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      vecs.zipWithIndex.map { case (v, i) => Row(i, v) }, 3), schema)
+    val cents = Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0),
+      Seq(0.0, 0.0, 1.0, 1.0), Seq(-1.0, -1.0, 0.0, 0.0))
+    // off = no whole-stage codegen and interpreted expression evaluation
+    def rows(codegen: Boolean): Seq[Seq[String]] = {
+      val confs = Map("spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
+      val prev = confs.keys.map(k => k -> spark.conf.get(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try Seq(
+        df.select($"id", VectorFunctions.srpBucketsNative($"v", 8, 3)),
+        df.select($"id", VectorFunctions.nearestCellsGenNative($"v", cents, 2)))
+        .map(_.collect().map(_.toString).toSeq.sorted)
+      finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+    val on = rows(codegen = true)
+    assert(on === rows(codegen = false))
+    // a null vector emits nothing; every other one nTables / nProbes rows
+    assert(on.map(_.size) === Seq(3, 2).map(_ * vecs.count(_ != null)))
+  }
+
   test("native expression participates in whole-stage codegen") {
     // literal input constant-folds to a LocalTableScan; use range so a
     // real projection stage exists
